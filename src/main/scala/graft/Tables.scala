@@ -30,10 +30,10 @@ object Tables {
     */
   private val MaxPlanMemo = 64
   private val planMemo =
-    new java.util.LinkedHashMap[(SparkSession, String, Long, Int, String),
+    new java.util.LinkedHashMap[(SparkSession, String, Long, Int, Spread),
         DataFrame](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String, Long, Int, String),
+          e: java.util.Map.Entry[(SparkSession, String, Long, Int, Spread),
             DataFrame]): Boolean = size > MaxPlanMemo
     }
 
@@ -41,9 +41,12 @@ object Tables {
     * spread width is baked into the built plan, so a session retuning
     * `spark.graft.spread.*` must miss the memo, not serve a stale width).
     */
-  private def spreadConf(spark: SparkSession): String =
-    spark.conf.getOption("spark.graft.spread.chunkBytes").getOrElse("") + "|" +
-      spark.conf.getOption("spark.graft.spread.weights").getOrElse("")
+  private final case class Spread(chunkBytes: Option[String],
+      weights: Option[String])
+
+  private def spreadConf(spark: SparkSession): Spread =
+    Spread(spark.conf.getOption("spark.graft.spread.chunkBytes"),
+      spark.conf.getOption("spark.graft.spread.weights"))
 
   /** Test hook: current plan-memo population (bounded-by-construction). */
   private[graft] def planMemoSize: Int =
@@ -298,15 +301,24 @@ object Tables {
     all.foreach(n => apply(spark, sfDir, n).createOrReplaceTempView(n))
     graft.GraftExtensions.register(spark)
     registeredDir.synchronized {
-      registeredDir.put(spark, sfDir + " " + spreadConf(spark))
+      registeredDir.put(spark, Registered(sfDir, spreadConf(spark)))
     }
+    registrations.incrementAndGet()
   }
+
+  /** What a session's views were registered from: the dir and the spread
+    * conf baked into their plans.
+    */
+  private final case class Registered(sfDir: String, spread: Spread)
+
+  /** Test hook: `registerAll` calls in this JVM. */
+  private[graft] val registrations = new java.util.concurrent.atomic.AtomicLong
 
   // Weak-keyed (ADVICE r3): a strong SparkSession key would pin every
   // session a long-lived multi-session service ever registered. Access is
   // synchronized on the map — WeakHashMap is not thread-safe.
   private val registeredDir =
-    new java.util.WeakHashMap[SparkSession, String]()
+    new java.util.WeakHashMap[SparkSession, Registered]()
 
   /** Once-per-session view registration — `registerAll` is idempotent but
     * re-resolves ten parquet footers per call, which the q_sql_* queries
@@ -323,7 +335,7 @@ object Tables {
   def ensureRegistered(spark: SparkSession, sfDir: String): Unit = {
     val hit = registeredDir.synchronized {
       Option(registeredDir.get(spark))
-        .contains(sfDir + " " + spreadConf(spark))
+        .contains(Registered(sfDir, spreadConf(spark)))
     }
     if (!hit || !spark.catalog.tableExists(all.head)) registerAll(spark, sfDir)
   }

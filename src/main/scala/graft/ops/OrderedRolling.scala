@@ -16,12 +16,10 @@ import org.apache.spark.sql.types.DoubleType
   * re-initializes the aggregate and re-accumulates the whole frame in
   * partition order FOR EVERY OUTPUT ROW (no streaming retract for
   * declarative aggregates). This op does the identical per-row
-  * re-accumulation with the identical update arithmetic — `Average`'s
-  * sum/count, `CentralMomentAgg`'s Welford recurrence (delta / deltaN /
-  * m2), `Covariance`'s co-moment recurrence, `Sum`'s null-seeded running
-  * sum — in the identical oldest→newest order, so every output double is
-  * bit-equal to the window's (OrderedRollingSpec pins this, null cases
-  * included). Per-row cost is O(frame · #rolls) — the same as WindowExec
+  * re-accumulation through [[RollingKernel]], the aggregates' update
+  * arithmetic in the identical oldest→newest order, so every output
+  * double is bit-equal to the window's (OrderedRollingSpec pins this,
+  * null cases included). Per-row cost is O(frame · #rolls) — the same as WindowExec
   * evaluating the same aggregates — but the sort parallelism is nParts
   * tiles instead of #keys tasks.
   *
@@ -123,51 +121,16 @@ object OrderedRolling {
           val xp = xPos(i); val yp = yPos(i)
           val take = math.min(roll.frame - 1, same)
           // frame = [ring tail of `take` rows] ++ [current row], oldest
-          // first — accumulate EXACTLY like the Spark aggregate would
+          // first — accumulated exactly like the Spark aggregate would
+          val base = ring.size - take
+          def slot(p: Int)(j: Int): Any =
+            if (j < take) ring(base + j)._2(p) else cur(p)
           out(i) = roll.func match {
-            case "avg" =>
-              var sum = 0.0; var cnt = 0L
-              def upd(vs: Array[Any]): Unit = {
-                val v = vs(xp)
-                if (v != null) { sum += v.asInstanceOf[Double]; cnt += 1L }
-              }
-              var j = ring.size - take
-              while (j < ring.size) { upd(ring(j)._2); j += 1 }
-              upd(cur)
-              if (cnt == 0L) null else sum / cnt
-            case "sum" =>
-              var sum = 0.0; var any = false
-              def upd(vs: Array[Any]): Unit = {
-                val v = vs(xp)
-                if (v != null) { sum += v.asInstanceOf[Double]; any = true }
-              }
-              var j = ring.size - take
-              while (j < ring.size) { upd(ring(j)._2); j += 1 }
-              upd(cur)
-              if (!any) null else sum
-            case "stddev_samp" =>
-              // CentralMomentAgg's Welford recurrence, verbatim:
-              // n' = n+1; delta = x - avg; deltaN = delta / n';
-              // avg' = avg + deltaN; m2' = m2 + delta * (delta - deltaN)
-              var n = 0.0; var avg = 0.0; var m2 = 0.0
-              def upd(vs: Array[Any]): Unit = {
-                val v = vs(xp)
-                if (v != null) {
-                  val x = v.asInstanceOf[Double]
-                  n += 1.0
-                  val delta = x - avg
-                  val deltaN = delta / n
-                  avg += deltaN
-                  m2 += delta * (delta - deltaN)
-                }
-              }
-              var j = ring.size - take
-              while (j < ring.size) { upd(ring(j)._2); j += 1 }
-              upd(cur)
-              // n<=1 -> null: StddevSamp's nullOnDivideByZero default
-              // (spark.sql.legacy.statisticalAggregate=false)
-              if (n <= 1.0) null
-              else math.sqrt(m2 / (n - 1.0))
+            case "avg" => RollingKernel.avg(take + 1, slot(xp))
+            case "sum" => RollingKernel.sum(take + 1, slot(xp))
+            case "stddev_samp" => RollingKernel.stddevSamp(take + 1, slot(xp))
+            case "covar_samp" =>
+              RollingKernel.covarSamp(take + 1, slot(xp), slot(yp))
             case "frame_array" =>
               // collect_list semantics over offsets skip..skip+frame-1
               // from the current row (offset 0 = current), bounded by the
@@ -185,32 +148,6 @@ object OrderedRolling {
                 off -= 1
               }
               buf.toSeq
-            case "covar_samp" =>
-              // Covariance's co-moment recurrence, verbatim (pairs with
-              // a null on EITHER side are skipped whole):
-              // n' = n+1; dx = x - xAvg; dy = y - yAvg;
-              // xAvg' = xAvg + dx/n'; yAvg' = yAvg + dy/n';
-              // ck' = ck + dx * (y - yAvg')
-              var n = 0.0; var xAvg = 0.0; var yAvg = 0.0; var ck = 0.0
-              def upd(vs: Array[Any]): Unit = {
-                val vx = vs(xp); val vy = vs(yp)
-                if (vx != null && vy != null) {
-                  val x = vx.asInstanceOf[Double]
-                  val y = vy.asInstanceOf[Double]
-                  n += 1.0
-                  val dx = x - xAvg
-                  val dy = y - yAvg
-                  xAvg += dx / n
-                  yAvg += dy / n
-                  ck += dx * (y - yAvg)
-                }
-              }
-              var j = ring.size - take
-              while (j < ring.size) { upd(ring(j)._2); j += 1 }
-              upd(cur)
-              // n<=1 -> null: CovSample's nullOnDivideByZero default
-              if (n <= 1.0) null
-              else ck / (n - 1.0)
           }
           i += 1
         }

@@ -23,12 +23,9 @@ object FeatureQueries extends QueryPack {
     * the SQL-view face (`q_sql_feature_frame`).
     */
   def frame26(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-        // cache: enhance() reads its input twice (window chain + the
-        // indicator mapPartitions pass) — one resample instead of two
-        val hourly = graft.CacheScope.retain(
-          resampleOhlcv(ev(s, dir), K, "ts", "event_id",
+        val hourly = resampleOhlcv(ev(s, dir), K, "ts", "event_id",
             "value", "value", 3600)
-            .withColumn("bucket_id", unix_timestamp(col("bucket_start"))))
+          .withColumn("bucket_id", unix_timestamp(col("bucket_start")))
         FeatureFrame.enhance(hourly, K, "bucket_start", "bucket_id")
           .select(col(K), col("bucket_start"),
             col("open"), col("high"), col("low"), col("close"),

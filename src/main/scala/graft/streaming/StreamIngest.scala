@@ -192,13 +192,18 @@ object StreamIngest {
     recoverSwaps(fs, statePath)
     val bucketOf = pmod(hash(keyCols.map(col): _*), lit(nBuckets))
     val bucketed = batch.withColumn("__bucket", bucketOf)
-    // O(nBuckets) driver list — bounded by config, not by data (J3 posture)
-    val touched = bucketed.select("__bucket").distinct()
-      .collect().map(_.getInt(0)).sorted
+    // O(nBuckets) collected list — bounded by config, not by data (J3
+    // posture). One map-side job: each task returns its own distinct
+    // buckets (distinct() would shuffle, two jobs under AQE).
+    val touched = bucketed.select(col("__bucket")).queryExecution.toRdd
+      .mapPartitions(rows => rows.map(_.getInt(0)).toSet.iterator)
+      .collect().distinct.sorted
     if (touched.isEmpty) return
+    // the merge projects state onto the batch's columns, so the batch's
+    // schema is the read schema: no Parquet schema-inference job
     val existing =
       if (fs.exists(new Path(statePath)))
-        Some(spark.read.parquet(statePath)
+        Some(spark.read.schema(bucketed.schema).parquet(statePath)
           .where(col("__bucket").isin(touched.map(Integer.valueOf): _*)))
       else None
     val all = existing.map(e =>
@@ -312,11 +317,40 @@ object StreamIngest {
   }
 
   /** Read the logical state written by [[lwwUpsertPartitioned]] (drops the
-    * internal bucket column).
+    * internal bucket column). The read schema comes from a state file's
+    * footer, read in this process: a bare `spark.read.parquet` runs a
+    * Spark job per call to infer it.
     */
   def readLwwState(spark: org.apache.spark.sql.SparkSession,
       statePath: String): DataFrame =
-    spark.read.parquet(statePath).drop("__bucket")
+    footerSchema(spark, statePath).fold(spark.read)(spark.read.schema)
+      .parquet(statePath).drop("__bucket")
+
+  /** The row schema Spark recorded in the footer of the first data file
+    * under `dir` — the schema a non-merging inference job would return
+    * (it too reads one file). None when there is no such file or footer
+    * entry; the caller then infers.
+    */
+  private def footerSchema(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    if (!fs.exists(root)) return None
+    val files = fs.listFiles(root, true)
+    Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+      .find(f => f.getName.endsWith(".parquet") &&
+        !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+      .flatMap { f =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+        try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+          // the key Spark's parquet writer stores its row schema under
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+          .map(DataType.fromJson).collect { case s: StructType => s }
+        finally reader.close()
+      }
+  }
 
   /** Streaming incremental aggregate maintenance for `foreachBatch`: the
     * continuous face of `q_r_incremental_rollup`. State is one row per

@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   * The recursion lives in ONE pure step function ([[IndicatorState.step]])
   * shared by two execution shapes:
   *  - batch: hash-repartition on the series key, sort each partition by
-  *    (key, ts, id), one streaming `mapPartitions` fold — O(1) state per
-  *    key, a 10^9-row key streams through one task without materializing;
+  *    (key, ts, id), one streaming `mapPartitions` fold ([[foldByKey]],
+  *    which [[FeatureFrame.enhance]] shares) — O(1) state per key, a
+  *    10^9-row key streams through one task without materializing;
   *  - streaming: `flatMapGroupsWithState` carrying the same state across
   *    micro-batches ([[graft.streaming.StatefulIndicators]]) — the batch
   *    and stream paths produce bit-identical output by construction.
@@ -110,6 +111,35 @@ object Indicators {
     }
   }
 
+  /** [[IndicatorState.step]] with the state carried in place: one key's
+    * recursion inside a sorted batch fold.
+    */
+  final class Stepper(p: Params) {
+    private var st = IndicatorState()
+    def apply(high: Double, low: Double, close: Double, volume: Double): Out = {
+      val (next, o) = IndicatorState.step(st, high, low, close, volume, p)
+      st = next
+      o
+    }
+  }
+
+  /** Maps one partition sorted by (key, ts, id) through per-key state:
+    * `fresh` starts a key's state at its first row, `step` advances it by
+    * one row. The batch folds of [[compute]] and
+    * [[FeatureFrame.enhance]] share this reset loop.
+    */
+  def foldByKey[R, S, O](rows: Iterator[R], keyOf: R => Any,
+      fresh: () => S)(step: (S, R) => O): Iterator[O] = {
+    var first = true
+    var curKey: Any = null
+    var st: S = null.asInstanceOf[S]
+    rows.map { r =>
+      val k = keyOf(r)
+      if (first || k != curKey) { first = false; curKey = k; st = fresh() }
+      step(st, r)
+    }
+  }
+
   /** Input contract for the sorted pass (public: Spark codegen must be able
     * to reach the encoder's accessors).
     */
@@ -148,13 +178,8 @@ object Indicators {
       .repartition(col("key"))
       .sortWithinPartitions(col("key"), col("ts"), col("id"))
       .mapPartitions { rows =>
-        var curKey: String = null
-        var st = IndicatorState()
-        rows.map { r =>
-          if (r.key != curKey) { curKey = r.key; st = IndicatorState() }
-          val (next, o) = IndicatorState.step(st, r.high, r.low, r.close,
-            r.volume, p)
-          st = next
+        foldByKey(rows, (r: In) => r.key, () => new Stepper(p)) { (s, r) =>
+          val o = s(r.high, r.low, r.close, r.volume)
           IndicatorRow(r.key, r.ts, r.id, r.close, o.rsi, o.macd,
             o.macd_signal, o.macd_diff, o.atr, o.ema_fast, o.ema_slow, o.obv)
         }

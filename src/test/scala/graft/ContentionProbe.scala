@@ -19,7 +19,6 @@ object ContentionProbe {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -54,6 +53,9 @@ object ContentionProbe {
       } catch { case _: Throwable => Thread.sleep(300) }
 
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // the shuffle width Bench ships: derived from the data size
+    spark.conf.set("spark.sql.shuffle.partitions",
+      SessionTuning.shufflePartitions(dir, cpus.toInt).toLong)
     // "--all": one-pass wall CENSUS over the whole surface, jobs-desc —
     // the serial-wall equivalent of the bench's slowest-queries list.
     val census = args.headOption.contains("--all")

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan shape assertions for the round-5 operators — the scale
@@ -10,6 +13,18 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanShapeSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.session
   private val dir = "/root/testdata/sf0.001"
+
+  /** Every physical node of `p`, through AQE wrappers, cached relations
+    * and subqueries.
+    */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = {
+    val kids = (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.inputPlan)
+      case s: InMemoryTableScanExec => Seq(s.relation.cachedPlan)
+      case o => o.children
+    }) ++ p.subqueries
+    p +: kids.flatMap(nodes)
+  }
 
   private def plan(q: String): String = {
     val p = SparkEntry.queries(q)(spark, dir)
@@ -340,16 +355,7 @@ class PlanShapeSpec extends AnyFunSuite {
       "q_w17_residual_volatility", "q_w_rolling_corr",
       "q_a7_error_metrics", "q_a9_grouped_metrics", "q_p_quantile_bins",
       "q_w13_windows")
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
-    def kids(p: SparkPlan): Seq[SparkPlan] = (p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.inputPlan)
-      case s: InMemoryTableScanExec => Seq(s.relation.cachedPlan)
-      case o => o.children
-    }) ++ p.subqueries
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(nodes)
     val offenders = orderedScanFamily.flatMap { name =>
       val p = SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan
       val hit = nodes(p).exists {
@@ -361,5 +367,23 @@ class PlanShapeSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"window node reappeared in the ordered-scan family: $offenders")
+  }
+
+  test("feature frame: one keyed pass — exactly one shuffle, no window, " +
+      "no join") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import spark.implicits._
+    val df = (0 until 60).map { i =>
+      val c = 100.0 + math.sin(i * 0.2)
+      (s"k${i % 3}", new java.sql.Timestamp(1704067200000L + 300000L * i),
+        1704067200L + 300L * i, c, c + 1.0, c - 1.0, c, 10.0 + i % 4)
+    }.toDF("k", "ts", "id", "open", "high", "low", "close", "volume")
+    val ns = nodes(graft.ts.FeatureFrame.enhance(df, "k", "ts", "id")
+      .queryExecution.executedPlan)
+    assert(ns.count(_.isInstanceOf[ShuffleExchangeLike]) == 1, ns.mkString("\n"))
+    assert(!ns.exists(_.isInstanceOf[WindowExec]), ns.mkString("\n"))
+    assert(!ns.exists(_.isInstanceOf[BaseJoinExec]), ns.mkString("\n"))
   }
 }

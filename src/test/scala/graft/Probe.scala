@@ -13,7 +13,6 @@ object Probe {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -25,6 +24,9 @@ object Probe {
       println(f"$name%-44s ${(System.nanoTime() - t0) / 1e9}%7.2f s  (n=$n)")
     }
     val dir = "/root/testdata/sf0.1"
+    // the shuffle width Bench ships: derived from the data size
+    spark.conf.set("spark.sql.shuffle.partitions",
+      SessionTuning.shufflePartitions(dir, cpus.toInt).toLong)
     Tables(spark, dir, "events").count()
     for (q <- Seq("q_a4_quantiles_approx", "q_a5_robust_scaler_approx",
         "q_p9_winsorize_approx", "q_a2_distinct_approx"); pass <- 1 to 2)

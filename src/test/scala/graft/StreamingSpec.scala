@@ -127,6 +127,87 @@ class StreamingSpec extends AnyFunSuite {
     assert(dirs.nonEmpty && dirs.length <= 8)
   }
 
+  test("live body: the third micro-batch through the five engine calls " +
+      "runs a fixed number of Spark jobs") {
+    import graft.serve.Serving
+    import graft.ts.FeatureFrame
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val root = tmpDir("live-body")
+    val prices = s"$root/prices"
+    val candles = s"$root/candles"
+    val iso = java.time.format.DateTimeFormatter.ofPattern(StreamIngest.IsoMicros)
+      .withZone(java.time.ZoneOffset.UTC)
+    val t0 = 1709287200L // 2024-03-01T10:00:00Z
+    var seq = 0L
+    // one 5-minute candle of two ticks per product, as producer envelopes
+    def candle(c: Int): Seq[String] =
+      for (p <- Seq("BTC-USD", "ETH-USD", "SOL-USD"); i <- 0 until 2) yield {
+        seq += 1
+        val t = iso.format(java.time.Instant.ofEpochSecond(t0 + 300L * c + 60L * i))
+        val px = 100.0 + p.length + math.sin(c * 0.3 + i)
+        s"""{"channel":"ticker","timestamp":"$t","seq":$seq,"events":[""" +
+          s"""{"type":"update","tickers":[{"type":"ticker","product_id":"$p",""" +
+          s""""price":"$px","volume_24h":"1000.0","time":"$t"}]}]}"""
+      }
+    // parse → LWW upsert → candles, each stage materialized as a live
+    // batch body does
+    def ingest(lines: Seq[String], batchId: Long): Unit = {
+      val raw = lines.toDF("value")
+      val parsed = StreamIngest.parseTickerEnvelopes(raw.select(col("value"),
+          get_json_object(col("value"), "$.seq").cast("long").as("seq")),
+        "value", Seq("seq")).persist()
+      parsed.count()
+      StreamIngest.lwwUpsertPartitioned(prices, Seq("product_id", "time"),
+        "seq", 4)(parsed, batchId)
+      parsed.unpersist()
+      StreamIngest.buildCandles(StreamIngest.readLwwState(spark, prices), 300,
+        None).write.mode("overwrite").parquet(candles)
+    }
+    // features → predictions → dual write
+    def serve(): Unit = {
+      val feats = FeatureFrame.enhance(spark.read.parquet(candles)
+          .withColumn("id", unix_seconds(col("start_time")))
+          .withColumn("volume", col("n_ticks").cast("double")),
+        "product_id", "start_time", "id").persist()
+      feats.count()
+      val preds = Serving.predictLatest(feats, "product_id", "start_time", "id",
+        "close", 16, 4, 300, "surrogate").persist()
+      preds.count()
+      Serving.dualWrite(preds, s"$root/predictions", s"$root/by_horizon")
+      preds.unpersist()
+      feats.unpersist()
+    }
+    // history past the 33-row warm-up and one 16-row window
+    ingest((0 until 60).flatMap(candle), 0L)
+    val group = "live-body-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    // the listener bus is asynchronous: drain it before reading the count
+    def drain(): Unit = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    sc.addSparkListener(listener)
+    val counts = try (1 to 3).map { b =>
+      drain()
+      jobs.set(0)
+      sc.setJobGroup(group, "live body")
+      try { ingest(candle(59 + b), b.toLong); serve() }
+      finally sc.clearJobGroup()
+      drain()
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+    assert(spark.read.parquet(s"$root/predictions").count() == 3 * 4)
+    // parse 3, upsert 3, candles 2, features 5, predict 4, dual write 2;
+    // job counts repeat exactly between runs, so any change is a real one
+    assert(counts.last == 19, s"jobs per batch: $counts")
+  }
+
   test("swap recovery: a bucket stranded in a retire dir by a mid-swap " +
       "crash is restored before the replayed batch reads state") {
     import org.apache.hadoop.fs.Path

@@ -66,4 +66,44 @@ class TablesMemoSpec extends AnyFunSuite {
     assert(Tables.planMemoSize <= 64,
       s"plan memo must stay bounded, got ${Tables.planMemoSize}")
   }
+
+  test("a second ensureRegistered on the same session and dir is a no-op") {
+    // one-row stand-ins for every table registerAll loads
+    val dir = java.nio.file.Files.createTempDirectory("tmemo_reg").toString
+    Tables.all.foreach { n =>
+      val df = n match {
+        case "events" => spark.range(1).selectExpr("id", "current_timestamp() AS ts")
+        case "embeddings" => spark.range(1)
+          .selectExpr(s"array_repeat(CAST(1.0 AS FLOAT), ${Tables.EmbeddingDim}) AS embedding")
+        case _ => spark.range(1).toDF()
+      }
+      df.write.parquet(s"$dir/$n.parquet")
+    }
+    Tables.ensureRegistered(spark, dir)
+    val before = Tables.registrations.get()
+    Tables.ensureRegistered(spark, dir)
+    assert(Tables.registrations.get() === before,
+      "the registration memo must hit for an unchanged dir and spread conf")
+    // a retuned spread conf is baked into the views: it must re-register
+    spark.conf.set("spark.graft.spread.chunkBytes", "1048576")
+    try {
+      Tables.ensureRegistered(spark, dir)
+      assert(Tables.registrations.get() === before + 1)
+    } finally spark.conf.unset("spark.graft.spread.chunkBytes")
+  }
+
+  test("no source file carries a NUL byte") {
+    // a 0x00 in a string literal is invisible in an editor and to
+    // `grep -P`, yet a memo key built with it never matches its lookup
+    val src = new java.io.File(sys.props("user.dir"), "src")
+    assert(src.isDirectory, s"run from the repository root: $src")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(files)
+      else Seq(f)
+    val all = files(src)
+    assert(all.exists(_.getName == "Tables.scala"))
+    val withNul = all.filter(f =>
+      java.nio.file.Files.readAllBytes(f.toPath).contains(0.toByte))
+    assert(withNul.isEmpty, withNul.mkString(", "))
+  }
 }
