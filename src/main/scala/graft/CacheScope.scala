@@ -19,22 +19,46 @@ import org.apache.spark.storage.StorageLevel
   * Frames are persisted MEMORY_AND_DISK — at corpus scale, spilling a
   * reused intermediate beats recomputing it, and storage never OOMs the
   * executor.
+  *
+  * The same boundary ends every request-scoped memo ([[memo]]). Its
+  * contract: keys are case classes extending [[Key]], one per memo site,
+  * never joined strings (a DataFrame field compares by reference, as
+  * Dataset does not override `equals`); a session's entries are evicted
+  * at its [[release]], the high-water auto-release included; and no entry
+  * is stored across a release: a value whose build overlapped a release
+  * of its session is returned but not kept, so the next call rebuilds.
+  * Memos meant to outlive a release (the plan, registration, size and
+  * dim memos) stay in `Tables`.
   */
 object CacheScope {
-  private final case class Entry(session: SparkSession, df: DataFrame,
-      onRelease: () => Unit)
-  private val live = scala.collection.mutable.ArrayBuffer.empty[Entry]
 
-  /** Session-churn guard (VERDICT r13 #3): registry entries hold STRONG
-    * session + frame references — they must, or release could not
+  /** A memo key whose entry holds a `V` (case-class equality). */
+  trait Key[V] extends Product
+
+  /** What one session holds until its next [[release]], which drops the
+    * whole object from [[scopes]]. A memo build stores into the Scope it
+    * started in, so a value built across a release lands in an
+    * unreachable object: the release closes the race by construction.
+    */
+  private final class Scope {
+    val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val memos = scala.collection.mutable.HashMap.empty[Key[_], Any]
+  }
+
+  /** Least-recently-retaining session first (the auto-release order). */
+  private val scopes =
+    scala.collection.mutable.LinkedHashMap.empty[SparkSession, Scope]
+
+  /** Session-churn guard (VERDICT r13 #3): scopes hold STRONG session +
+    * frame references — they must, or release could not
     * deterministically unpersist — so a caller that creates a session
     * per request and forgets [[release]] would grow this registry (and
-    * the memo tier wired to its callbacks) without bound. There is no
+    * its memo entries) without bound. There is no
     * session-closed signal to hook (child sessions are abandoned by
     * dropping references, and any weak-reference scheme is defeated by
     * the entry's own frame→session strong edge), so the guard is an
     * explicit high-water: when more than [[maxSessions]] distinct
-    * sessions hold live retains, [[retain]] auto-releases the
+    * sessions hold live scopes, [[retain]] auto-releases the
     * least-recently-RETAINING session's whole scope, loudly. Retains are
     * the only activity signal this registry sees: a long-lived session
     * that retained once at startup and has served reads ever since looks
@@ -57,14 +81,7 @@ object CacheScope {
   private[graft] val autoReleases =
     new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Insertion refreshed on every retain: iteration order = least-
-    * recently-retaining session first (the auto-release victim order).
-    */
-  private val touch =
-    scala.collection.mutable.LinkedHashMap.empty[SparkSession, Unit]
-
   /** Persist `df` and register it for the next [[release]] of its session.
-    * `onRelease` lets memoizing callers evict their lookup entry too.
     *
     * Idempotent on plan-identical frames: when a frame with the same
     * canonicalized plan is already cached (`df.storageLevel` does that
@@ -72,46 +89,70 @@ object CacheScope {
     * routinely retain a frame one of their building blocks already
     * retained (e.g. a pair miner's shingle index flowing into the
     * group-collapse queries), and re-persisting only emits a CacheManager
-    * "already cached" WARN per occurrence. The entry is still registered
-    * so `onRelease` callbacks fire at the scope boundary either way.
+    * "already cached" WARN per occurrence. The frame is still registered
+    * under this session, so the release refcount below sees it.
     */
-  def retain(df: DataFrame, onRelease: () => Unit = () => ()): DataFrame =
-    synchronized {
-      val cached =
-        if (df.storageLevel == StorageLevel.NONE)
-          df.persist(StorageLevel.MEMORY_AND_DISK)
-        else df
-      val sess = df.sparkSession
-      live += Entry(sess, cached, onRelease)
-      touch.remove(sess)
-      touch.put(sess, ())
-      var victim = // head = least-recently-retaining; never the current one
-        if (touch.size > maxSessions) touch.keysIterator.find(_ ne sess)
-        else None
-      while (victim.isDefined) {
-        autoReleases.incrementAndGet()
-        System.err.println(
-          s"[CacheScope] more than $maxSessions sessions hold live " +
-            "retains — auto-releasing the least-recently-RETAINING " +
-            "session's scope (a caller is creating sessions without " +
-            "calling CacheScope.release at its request boundary; its " +
-            "frames recompute if still in use)")
-        releaseLocked(victim.get)
-        victim =
-          if (touch.size > maxSessions) touch.keysIterator.find(_ ne sess)
-          else None
-      }
-      cached
+  def retain(df: DataFrame): DataFrame = synchronized {
+    val cached =
+      if (df.storageLevel == StorageLevel.NONE)
+        df.persist(StorageLevel.MEMORY_AND_DISK)
+      else df
+    touchLocked(df.sparkSession).frames += cached
+    cached
+  }
+
+  /** The value under `key` in `s`'s scope, else `build`'s result, kept
+    * until the next [[release]] of `s` unless one ran during the build.
+    * `build` runs outside the lock, so sessions never serialize and a
+    * build may call [[memo]] and [[retain]] itself. Concurrent misses on
+    * one key both build; the first value stored is returned to both.
+    */
+  def memo[V](s: SparkSession, key: Key[V])(build: => V): V = {
+    val (scope, hit) = synchronized {
+      val sc = scopes.getOrElse(s, touchLocked(s))
+      (sc, sc.memos.get(key))
     }
+    hit.getOrElse {
+      val v = build
+      synchronized(scope.memos.getOrElseUpdate(key, v))
+    }.asInstanceOf[V]
+  }
+
+  /** `s`'s scope (created if absent), moved to the most-recent end;
+    * above the high-water mark, auto-releases the oldest OTHER scopes.
+    */
+  private def touchLocked(s: SparkSession): Scope = {
+    val scope = scopes.remove(s).getOrElse(new Scope)
+    scopes.put(s, scope)
+    var victim = scopes.keysIterator.find(_ ne s) // the oldest other one
+    while (scopes.size > maxSessions && victim.isDefined) {
+      autoReleases.incrementAndGet()
+      System.err.println(
+        s"[CacheScope] more than $maxSessions sessions hold live " +
+          "retains — auto-releasing the least-recently-RETAINING " +
+          "session's scope (a caller is creating sessions without " +
+          "calling CacheScope.release at its request boundary; its " +
+          "frames recompute if still in use)")
+      releaseLocked(victim.get)
+      victim = scopes.keysIterator.find(_ ne s)
+    }
+    scope
+  }
 
   /** Test hook (ConcurrencySpec): live retained-frame count for `s` —
     * 0 after [[release]] proves per-session cleanup under concurrency.
     */
   private[graft] def liveCount(s: SparkSession): Int =
-    synchronized { live.count(_.session eq s) }
+    synchronized { scopes.get(s).fold(0)(_.frames.size) }
 
-  /** Test/probe hook: distinct sessions currently holding live retains. */
-  private[graft] def sessionCount: Int = synchronized { touch.size }
+  /** Test/probe hook: distinct sessions currently holding a scope. */
+  private[graft] def sessionCount: Int = synchronized { scopes.size }
+
+  /** Test/probe hooks: memo entries of `s`, and of every live scope. */
+  private[graft] def memoCount(s: SparkSession): Int =
+    synchronized { scopes.get(s).fold(0)(_.memos.size) }
+  private[graft] def memoCount: Int =
+    synchronized { scopes.valuesIterator.map(_.memos.size).sum }
 
   /** Observability for [[release]]'s fail-closed path (VERDICT r13 #4 /
     * ADVICE r13): a nonzero count means plan-identity comparison threw
@@ -130,7 +171,7 @@ object CacheScope {
       : Option[(DataFrame, DataFrame) => Boolean] = None
 
   /** Unpersist (blocking, so storage-empty assertions are deterministic)
-    * every frame registered under `s` and run the eviction callbacks.
+    * every frame registered under `s` and drop its memo entries.
     *
     * Plan-identical frames are REFERENCE-COUNTED across sessions (r13,
     * found by the sf0.01 whole-surface concurrency soak): Spark's
@@ -167,30 +208,27 @@ object CacheScope {
     */
   def release(s: SparkSession): Unit = synchronized { releaseLocked(s) }
 
-  private def releaseLocked(s: SparkSession): Unit = {
-    val (mine, rest) = live.partition(_.session eq s)
-    live.clear()
-    live ++= rest
-    touch.remove(s)
-    mine.foreach { e =>
-      val sharedElsewhere =
-        try {
-          val same = compareHookForTests.getOrElse {
-            (a: DataFrame, b: DataFrame) =>
-              a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed)
+  private def releaseLocked(s: SparkSession): Unit =
+    scopes.remove(s).foreach { scope =>
+      val rest = scopes.valuesIterator.flatMap(_.frames).toSeq
+      scope.frames.foreach { df =>
+        val sharedElsewhere =
+          try {
+            val same = compareHookForTests.getOrElse {
+              (a: DataFrame, b: DataFrame) =>
+                a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed)
+            }
+            rest.exists { o => (o eq df) || same(o, df) }
+          } catch {
+            case t: Throwable =>
+              compareFailures.incrementAndGet()
+              System.err.println(
+                "[CacheScope] plan-identity comparison threw during release" +
+                  s" — failing CLOSED (frame left cached): $t")
+              true
           }
-          rest.exists { o => (o.df eq e.df) || same(o.df, e.df) }
-        } catch {
-          case t: Throwable =>
-            compareFailures.incrementAndGet()
-            System.err.println(
-              "[CacheScope] plan-identity comparison threw during release" +
-                s" — failing CLOSED (frame left cached): $t")
-            true
-        }
-      if (!sharedElsewhere)
-        try e.df.unpersist(blocking = true) catch { case _: Throwable => () }
-      e.onRelease()
+        if (!sharedElsewhere)
+          try df.unpersist(blocking = true) catch { case _: Throwable => () }
+      }
     }
-  }
 }

@@ -36,8 +36,14 @@ package graft
   *   ~400k initial partitions, AQE coalescing takes it from there —
   *   tile-count consumers stay bounded separately via
   *   [[graft.ops.TiledScan.defaultTiles]]);
-  * - unknown size (non-local path, no listing): core count — the
-  *   pre-r15 status quo, never worse.
+  * - unknown size (the path does not resolve through the Hadoop
+  *   FileSystem): core count — the pre-r15 status quo, never worse.
+  *
+  * Bytes are sized through the Hadoop FileSystem
+  * ([[Tables.contentBytes]], the same sizing the table spread uses), so
+  * `hdfs://`, `s3a://` and `file:` URIs size like bare local paths. No
+  * session exists yet when the width is chosen, so a fresh Hadoop
+  * `Configuration` resolves the path.
   *
   * `SPARK_GRAFT_SHUFFLE_PARTITIONS` overrides for cluster profiles
   * (malformed value → ignored, derived width).
@@ -49,7 +55,8 @@ object SessionTuning {
   def shufflePartitions(sfDir: String, cpus: Int): Int =
     sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
       .flatMap(_.toIntOption).getOrElse {
-      val bytes = dirBytes(new java.io.File(sfDir))
+      val bytes = Tables.contentBytes(sfDir,
+        new org.apache.hadoop.conf.Configuration()).getOrElse(0L)
       if (bytes <= 0) cpus
       else {
         val fine = (bytes + FineChunk - 1) / FineChunk
@@ -57,8 +64,4 @@ object SessionTuning {
         math.max(1L, math.min(fine, cap)).toInt
       }
     }
-
-  private def dirBytes(f: java.io.File): Long =
-    if (f.isFile) f.length()
-    else Option(f.listFiles()).map(_.map(dirBytes).sum).getOrElse(0L)
 }

@@ -16,7 +16,8 @@ object Tables {
 
   /** r14 optimization (guide §1.2/§7.3 — driver-side work): assembling a
     * table frame costs 70–90 ms of DRIVER CPU (file listing, parquet
-    * footer/schema read, plan construction — measured by LoadCostProbe),
+    * footer/schema read, plan construction — measured at r14; a traced
+    * perfbench run reports it as `tables.load_ms`),
     * and the query surface re-creates each table's frame one to eight
     * times PER QUERY EXECUTION. The assembled frame is a LAZY plan:
     * reusing it recomputes from parquet on every action — nothing is
@@ -186,6 +187,18 @@ object Tables {
     catch { case _: java.io.IOException => 0L }
   }
 
+  /** Total content length under `path` (a file or a directory tree),
+    * through the Hadoop FileSystem, so `hdfs://`, `s3a://` and `file:`
+    * paths (and directory-style parquet) report their true length, where
+    * java.io.File returns 0 or 4K. None when the path does not resolve.
+    */
+  private[graft] def contentBytes(path: String,
+      conf: org.apache.hadoop.conf.Configuration): Option[Long] =
+    try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      Some(p.getFileSystem(conf).getContentSummary(p).getLength)
+    } catch { case scala.util.control.NonFatal(_) => None }
+
   /** The driver testdata ships ONE row group per file, so a bare scan is
     * one task no matter how many cores the session has — per-row map work
     * (JSON parse, language-ID, MinHash/SimHash/LSH signatures) and
@@ -262,19 +275,13 @@ object Tables {
 
   private def maybeParallelize(spark: SparkSession, df: DataFrame,
       path: String): DataFrame = {
-    // Size through the Hadoop FileSystem so hdfs:// and s3a:// paths (and
-    // directory-style parquet) report true content length — java.io.File
-    // returns 0/4K for those, which would force the repartition exactly
-    // where it must not happen. Unresolvable path → Long.MaxValue: the
-    // scan will fail with its own error, without adding a shuffle here.
-    // Keyed by (path, mtime stamp) so an in-place rewrite invalidates
-    // the memo (review r13) while repeat loads stay one cheap RPC.
-    val bytes = sizeCache.getOrElseUpdate((path, pathStamp(spark, path)), {
-      val p = new org.apache.hadoop.fs.Path(path)
-      try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getContentSummary(p).getLength
-      catch { case _: java.io.IOException => Long.MaxValue }
-    })
+    // Unresolvable path → Long.MaxValue: the scan will fail with its own
+    // error, without adding a shuffle here. Keyed by (path, mtime stamp)
+    // so an in-place rewrite invalidates the memo (review r13) while
+    // repeat loads stay one cheap RPC.
+    val bytes = sizeCache.getOrElseUpdate((path, pathStamp(spark, path)),
+      contentBytes(path, spark.sparkContext.hadoopConfiguration)
+        .getOrElse(Long.MaxValue))
     if (bytes < 32L * 1024 * 1024) {
       import org.apache.spark.sql.functions.{col, xxhash64}
       val name = path.split('/').last.stripSuffix(".parquet")

@@ -47,31 +47,6 @@ private[ops] object TiledScan {
       rows: RDD[Row], keyIdx: Seq[Int], valIdx: Seq[Int],
       inSchema: StructType, carry: Map[Int, Array[(Seq[Any], Array[Any])]])
 
-  /** r15 (guide §1.2 / VERDICT r14 #3): the ordered-scan family's fixed
-    * costs are memoized at two levels, per session, evicted at the
-    * [[graft.CacheScope.release]] boundary like every build-stage memo.
-    *
-    *  - [[rangedCache]]: the range-partitioned + tile-sorted + retained
-    *    frame and its pinned RDD, keyed by (session, (input-frame
-    *    REFERENCE, sort spec, nParts)). Most family members tile the
-    *    IDENTICAL input (the Tables plan memo hands every consumer the
-    *    same frame object) on the identical (key, ts, id) order, and
-    *    each was paying its own range-sample job + shuffle + sort to
-    *    build a layout another query in the scope had already built.
-    *    The key holds the DataFrame reference itself (reference
-    *    equality), not a plan fingerprint — two frames that merely look
-    *    alike never share a layout.
-    *  - [[prepCache]]: the full [[Prep]] (tails collect + carry fold)
-    *    keyed additionally by (valueCols, memory), so a repeat call
-    *    (the bench's min-of-2 second run, a composed consumer in one
-    *    scope) skips the carry-collect job too.
-    *
-    * Correctness is unchanged by sharing: every consumer of one memo
-    * entry hangs off the ONE RDD instance (the layout-pinning doc
-    * above), and an eviction between consumers just rebuilds at
-    * status-quo cost. Both maps are registered with [[graft.Memos]] so
-    * the churn probe observes boundedness.
-    */
   /** Default tile count for the ordered-scan family (and PrefixSum):
     * the session shuffle width, CAPPED at `spark.graft.tiles.max`
     * (default 4096). r15 made the shuffle width data-derived, which at
@@ -96,76 +71,59 @@ private[ops] object TiledScan {
     math.max(1, math.min(width, cap))
   }
 
-  private val rangedCache = graft.Memos.register(
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, (AnyRef, String)),
-        (DataFrame, RDD[Row])])
-  private val prepCache = graft.Memos.register(
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, (AnyRef, String)), Prep])
+  /** r15 (guide §1.2 / VERDICT r14 #3): the ordered-scan family's fixed
+    * costs are memoized at two levels in the session's
+    * [[graft.CacheScope]] scope, evicted at its release like every
+    * build-stage memo.
+    *
+    *  - [[Layout]]: the range-partitioned + tile-sorted + retained
+    *    frame's pinned RDD, keyed by the input frame by REFERENCE, the
+    *    key columns, the order expressions and nParts. Most family
+    *    members tile the IDENTICAL input (the Tables plan memo hands
+    *    every consumer the same frame object) on the identical (key, ts,
+    *    id) order, and each was paying its own range-sample job +
+    *    shuffle + sort to build a layout another query in the scope had
+    *    already built. Key and order columns are separate fields:
+    *    (keys=[a], order=[b]) sorts like (keys=[a,b], order=[]) but
+    *    indexes keys differently, so the two must never share an entry.
+    *  - [[PrepKey]]: the full [[Prep]] (tails collect + carry fold),
+    *    keyed additionally by (valueCols, memory), so a repeat call
+    *    (the bench's min-of-2 second run, a composed consumer in one
+    *    scope) skips the carry-collect job too.
+    *
+    * Correctness is unchanged by sharing: every consumer of one memo
+    * entry hangs off the ONE RDD instance (the layout-pinning doc
+    * above), and an eviction between consumers just rebuilds at
+    * status-quo cost.
+    */
+  private final case class Layout(df: DataFrame, keyCols: Seq[String],
+      orderCols: Seq[Column], nParts: Int)
+      extends graft.CacheScope.Key[RDD[Row]]
+  private final case class PrepKey(layout: Layout, valueCols: Seq[String],
+      memory: Int) extends graft.CacheScope.Key[Prep]
 
   def prepare(df: DataFrame, keyCols: Seq[String], orderCols: Seq[Column],
       valueCols: Seq[String], memory: Int, nParts: Int): Prep = {
-    val spark = df.sparkSession
-    // Injective key (review r15): every segment list is length-prefixed
-    // and unit-separated, so prepare(keys=[a], order=[b]) can never
-    // collide with prepare(keys=[a,b], order=[]) — they sort identically
-    // but index keys differently, and sharing a memo entry across that
-    // split would hand the second caller a Prep with the WRONG keyIdx
-    // (key runs not resetting at boundaries — wrong window values).
-    def seg(xs: Seq[String]) = xs.length + ":" + xs.mkString("\u001f")
-    val sortSpec = seg(keyCols) + "|" + seg(orderCols.map(_.toString)) +
-      "|" + nParts
-    val prepSpec = sortSpec + "\u001e" + seg(valueCols) + "|" + memory
-    val prepKey = (spark, (df: AnyRef, prepSpec))
-    val hit = prepCache.get(prepKey)
-    if (hit.isDefined) return hit.get
-    val prep = buildPrep(df, keyCols, orderCols, valueCols, memory,
-      nParts, sortSpec)
-    prepCache.put(prepKey, prep)
-    // Self-eviction guard (review r15): a high-water auto-release from
-    // ANOTHER session's retain can fire this scope's eviction callbacks
-    // between the build and the put above, which would leave this entry
-    // with no eviction hook — leaked past every future release. The
-    // release path unpersists the ranged frame, so a missing ranged
-    // entry (or one whose frame is no longer persisted) after the put
-    // means the sweep already ran: drop the entry again. The returned
-    // Prep stays valid for this caller (recompute-safe by the
-    // layout-pinning construction).
-    rangedCache.get((spark, (df: AnyRef, sortSpec))) match {
-      case Some((frame, _)) if frame.storageLevel !=
-          org.apache.spark.storage.StorageLevel.NONE => ()
-      case _ => prepCache.remove(prepKey)
-    }
-    prep
+    val layout = Layout(df, keyCols, orderCols, nParts)
+    graft.CacheScope.memo(df.sparkSession, PrepKey(layout, valueCols, memory))(
+      buildPrep(layout, valueCols, memory))
   }
 
-  private def buildPrep(df: DataFrame, keyCols: Seq[String],
-      orderCols: Seq[Column], valueCols: Seq[String], memory: Int,
-      nParts: Int, sortSpec: String): Prep = {
-    val spark = df.sparkSession
+  private def buildPrep(layout: Layout, valueCols: Seq[String],
+      memory: Int): Prep = {
+    val df = layout.df
     val inSchema = df.schema
     val valIdx = valueCols.map(inSchema.fieldIndex)
-    val keyIdx = keyCols.map(inSchema.fieldIndex)
+    val keyIdx = layout.keyCols.map(inSchema.fieldIndex)
 
-    val rKey = (spark, (df: AnyRef, sortSpec))
-    val (_, rows) = rangedCache.getOrElseUpdate(rKey, {
-      val sortCols = keyCols.map(col) ++ orderCols
-      val ranged = df.repartitionByRange(nParts, sortCols: _*)
+    val rows = graft.CacheScope.memo(df.sparkSession, layout) {
+      val sortCols = layout.keyCols.map(col) ++ layout.orderCols
+      val ranged = df.repartitionByRange(layout.nParts, sortCols: _*)
         .sortWithinPartitions(sortCols: _*)
-      // read twice (tails + main pass): one shuffle+sort, not two.
-      // Eviction drops BOTH memo levels: Prep entries hang off this
-      // frame's pinned RDD and must not outlive its scope.
-      val cached = graft.CacheScope.retain(ranged, onRelease = () => {
-        rangedCache.remove(rKey)
-        prepCache.keysIterator
-          .filter(k => (k._1 eq spark) && (k._2._1 eq df) &&
-            k._2._2.startsWith(sortSpec + "\u001e"))
-          .foreach(prepCache.remove)
-      })
-      // the ONE physical execution both jobs hang off (doc above)
-      (cached, cached.rdd)
-    })
+      // read twice (tails + main pass): one shuffle+sort, not two; the
+      // ONE physical execution both jobs hang off (doc above)
+      graft.CacheScope.retain(ranged).rdd
+    }
 
     // Per-tile trailing rows — O(nParts · memory) rows to the driver,
     // bounded and independent of data size (the PrefixSum-offsets

@@ -127,7 +127,8 @@ object ApproxQueries extends QueryPack {
         // r15: HLL++ through the binary-buffer form — Spark's built-in
         // declares 1,639 buffer attributes at rsd 0.01 and every task of
         // every execution paid ~1.3-2.3 s of data-independent projection
-        // plumbing over that width (measured in A2PhaseProbe; identical
+        // plumbing over that width (measured at r15, per-task executor
+        // time — the traced perfbench `per_query` task CPU; identical
         // at 100k and 10M rows). HllPlusPlusBinary delegates update/
         // merge/query verbatim to Spark's own HyperLogLogPlusPlusHelper
         // over one binary buffer: bit-identical estimates (HllBinarySpec

@@ -1117,39 +1117,23 @@ object CurationQueries extends QueryPack {
     * byte-identical weights, because the fit is deterministic by
     * construction (order-free quantized long sums). Memoized like
     * [[DedupQueries.minedGroups]]: built once per (session, dir), the
-    * retained feature frame's release callback evicts the entry, so the
     * memo dies at the CacheScope boundary with everything else. Stored
     * value: (feats frame, corpus n, per-step report rows, final
     * weights). Consumers compute identical results from identical
     * inputs — the oracle replays the full fit either way.
     */
-  private val qfFitCache = graft.Memos.register(
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String),
-        (org.apache.spark.sql.DataFrame, Long,
-          Seq[(Int, Double, Double, Double, Double, Double, Double)],
-          Array[Double])])
+  private type QfState = (org.apache.spark.sql.DataFrame, Long,
+    Seq[(Int, Double, Double, Double, Double, Double, Double)], Array[Double])
+  private final case class QfFit(dir: String)
+      extends graft.CacheScope.Key[QfState]
 
   private def qfFitted(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (org.apache.spark.sql.DataFrame, Long,
-        Seq[(Int, Double, Double, Double, Double, Double, Double)],
-        Array[Double]) = {
-    val st = qfFitCache.getOrElseUpdate((s, dir), {
-      val (feats, n) = qfFeatures(s, dir,
-        onRelease = () => qfFitCache.remove((s, dir)))
+      : QfState =
+    graft.CacheScope.memo(s, QfFit(dir)) {
+      val (feats, n) = qfFeatures(s, dir)
       val (rows, w) = qfFit(feats, n)
       (feats, n, rows, w)
-    })
-    // Self-eviction guard (review r15, the TiledScan.prepare argument):
-    // if a cross-session high-water auto-release fired this scope's
-    // callbacks between the retain and the memo insert, the entry above
-    // has no live eviction hook — a released (unpersisted) feats frame
-    // after the insert means exactly that; drop the entry so it cannot
-    // outlive the scope. The returned state stays valid (recompute-safe).
-    if (st._1.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      qfFitCache.remove((s, dir))
-    st
-  }
+    }
 
   /** Weak label + min-max-centered features for the quality-filter fit;
     * returns the retained feature frame and the corpus count. The
@@ -1157,8 +1141,7 @@ object CurationQueries extends QueryPack {
     * quantization is needed to keep both engines identical.
     */
   private def qfFeatures(s: org.apache.spark.sql.SparkSession,
-      dir: String, onRelease: () => Unit = () => ())
-      : (org.apache.spark.sql.DataFrame, Long) = {
+      dir: String): (org.apache.spark.sql.DataFrame, Long) = {
     val ntok = greatest(tokenCount(col("text")).cast("double"), lit(1.0))
     val raw = graft.CacheScope.retain(
       Tables(s, dir, "documents").select(
@@ -1185,7 +1168,7 @@ object CurationQueries extends QueryPack {
           + lit(1e-9)) - lit(0.5)).as(s"x$j")
     val feats = graft.CacheScope.retain(
       raw.select(col("doc_id"), col("y"), lit(1.0).as("x0"),
-        centered(1), centered(2), centered(3)), onRelease)
+        centered(1), centered(2), centered(3)))
     (feats, b.getLong(0))
   }
 

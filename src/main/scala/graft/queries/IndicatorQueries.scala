@@ -21,16 +21,14 @@ object IndicatorQueries extends QueryPack {
     * tri-plicating the shuffle — at 100 TB that's the difference between
     * one full pass and three.
     */
-  private val finalsCache =
-    graft.Memos.register(scala.collection.concurrent.TrieMap.empty[(SparkSession, String),
-      org.apache.spark.sql.DataFrame])
+  private final case class Finals(dir: String)
+      extends graft.CacheScope.Key[org.apache.spark.sql.DataFrame]
 
   private def finals(s: SparkSession, dir: String) =
-    finalsCache.getOrElseUpdate((s, dir),
+    graft.CacheScope.memo(s, Finals(dir))(
       graft.CacheScope.retain(
         Indicators.finals(Tables(s, dir, "events"), "event_type", "ts",
-          "event_id", "value"),
-        onRelease = () => finalsCache.remove((s, dir))))
+          "event_id", "value")))
 
   override def queries: Seq[Query] = Seq(
 

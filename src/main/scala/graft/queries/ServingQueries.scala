@@ -25,13 +25,12 @@ object ServingQueries extends QueryPack {
     * is cached per (session, dir) so q_j1 and q_j2 share one resample
     * pass instead of duplicating the fact-table scan.
     */
-  private val overlayCache =
-    graft.Memos.register(scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
+  private final case class Overlay(dir: String)
+      extends graft.CacheScope.Key[DataFrame]
 
   private def overlay(s: SparkSession, dir: String): DataFrame =
-    overlayCache.getOrElseUpdate((s, dir),
-      graft.CacheScope.retain(buildOverlay(s, dir),
-        onRelease = () => overlayCache.remove((s, dir))))
+    graft.CacheScope.memo(s, Overlay(dir))(
+      graft.CacheScope.retain(buildOverlay(s, dir)))
 
   private def buildOverlay(s: SparkSession, dir: String): DataFrame = {
     val candles = resampleOhlcv(ev(s, dir), K, "ts", "event_id",

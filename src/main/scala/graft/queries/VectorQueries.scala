@@ -31,13 +31,12 @@ object VectorQueries extends QueryPack {
     * query boundaries, so ReusedExchange could never dedupe it in-plan.
     * Columns: doc_id, r_dense, r_bm25, rrf; ≤20 rows.
     */
-  private val fusedCache =
-    graft.Memos.register(scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
+  private final case class FusedTop20(dir: String)
+      extends graft.CacheScope.Key[DataFrame]
 
   private def fusedTop20(s: SparkSession, dir: String): DataFrame =
-    fusedCache.getOrElseUpdate((s, dir),
-      graft.CacheScope.retain(buildFusedTop20(s, dir),
-        onRelease = () => fusedCache.remove((s, dir))))
+    graft.CacheScope.memo(s, FusedTop20(dir))(
+      graft.CacheScope.retain(buildFusedTop20(s, dir)))
 
   /** Memoized q_e_mmr_topk result per (session, dir): the unrolled
     * greedy plan is ~25 operators deep with per-round cached unions, so
@@ -46,8 +45,8 @@ object VectorQueries extends QueryPack {
     * materialized 5-row frame is the fusedTop20 discipline applied to
     * the selection cascade. Evicted by CacheScope.release.
     */
-  private val mmrCache =
-    graft.Memos.register(scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
+  private final case class MmrTopk(dir: String)
+      extends graft.CacheScope.Key[DataFrame]
 
   /** Hybrid retrieval: reciprocal-rank fusion (Cormack et al., k=60) of a
     * sparse BM25 leg and a dense cosine leg — the standard RAG first-stage
@@ -1769,11 +1768,12 @@ object VectorQueries extends QueryPack {
         // IterScope (r10, the r9-item-4 program): the unrolled greedy
         // rounds are ≤380-row frames, but AQE materialized every round's
         // stages as separate jobs — 55 serial driver walls for a 5-row
-        // result (ContentionProbe). The whole cascade runs with AQE off
-        // and materializes once here; 9 jobs after. The one corpus-sized
-        // step (the shortlist's cosine pass + heaps) is a single scan
-        // with no runtime re-planning decisions to lose.
-        mmrCache.getOrElseUpdate((s, dir),
+        // result (`per_query` jobs in a traced perfbench run). The whole
+        // cascade runs with AQE off and materializes once here; 9 jobs
+        // after. The one corpus-sized step (the shortlist's cosine pass +
+        // heaps) is a single scan with no runtime re-planning decisions
+        // to lose.
+        graft.CacheScope.memo(s, MmrTopk(dir))(
         graft.ops.IterScope.noAqe(s) {
         val q = broadcast(queryVec(s, dir).select(col("embedding").as("qv")))
         val short = graft.CacheScope.retain(
@@ -1807,8 +1807,7 @@ object VectorQueries extends QueryPack {
             .withColumn("pick_order", lit(i))
           sel = graft.CacheScope.retain(sel.union(pick))
         }
-        val res = graft.CacheScope.retain(sel.orderBy("pick_order"),
-          onRelease = () => mmrCache.remove((s, dir)))
+        val res = graft.CacheScope.retain(sel.orderBy("pick_order"))
         res.count()
         res
         })

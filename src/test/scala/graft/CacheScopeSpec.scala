@@ -1,7 +1,13 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+object CacheScopeSpec {
+  final case class FrameKey(tag: Any) extends CacheScope.Key[DataFrame]
+  final case class IntKey(tag: Any) extends CacheScope.Key[Int]
+}
 
 /** Cache lifecycle (VERDICT r2 #4): builder-retained caches must all drop
   * on CacheScope.release — no storage pinned after a run completes, and
@@ -9,37 +15,88 @@ import org.scalatest.funsuite.AnyFunSuite
   * next use.
   */
 class CacheScopeSpec extends AnyFunSuite {
+  import CacheScopeSpec._
   private lazy val spark = SparkSpec.session
   import spark.implicits._
 
-  test("retain caches, release unpersists everything and runs eviction callbacks") {
-    var evicted = false
-    val df = CacheScope.retain(
-      Seq(1, 2, 3).toDF("x"), onRelease = () => evicted = true)
+  test("retain caches, release unpersists everything and evicts memo entries") {
+    CacheScope.release(spark)
+    val df = CacheScope.memo(spark, FrameKey("x"))(
+      CacheScope.retain(Seq(1, 2, 3).toDF("x")))
     df.count()
     assert(df.storageLevel.useMemory || df.storageLevel.useDisk)
+    assert(CacheScope.memoCount(spark) == 1)
     CacheScope.release(spark)
-    assert(evicted)
+    assert(CacheScope.memoCount(spark) == 0, "the memo entry is evicted")
     assert(df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
   }
 
-  test("retain is idempotent on plan-identical frames: no double-persist, " +
-    "both eviction callbacks still fire on release") {
-    var evictions = 0
-    val base = Seq(1, 2, 3).toDF("x")
-    val first = CacheScope.retain(base, onRelease = () => evictions += 1)
+  test("plan-identical retains persist once; release evicts both memo entries") {
+    CacheScope.release(spark)
+    val first = CacheScope.memo(spark, FrameKey("first"))(
+      CacheScope.retain(Seq(1, 2, 3).toDF("x")))
     first.count()
     val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
     // same canonicalized plan: must NOT create a second cache entry (the
     // CacheManager would WARN "already cached" and ignore it anyway)
-    val again = CacheScope.retain(
-      Seq(1, 2, 3).toDF("x"), onRelease = () => evictions += 1)
+    val again = CacheScope.memo(spark, FrameKey("again"))(
+      CacheScope.retain(Seq(1, 2, 3).toDF("x")))
     again.count()
     assert(spark.sparkContext.getPersistentRDDs.keySet == persistedBefore,
       "plan-identical retain must not add a cache entry")
+    assert(CacheScope.memoCount(spark) == 2)
     CacheScope.release(spark)
-    assert(evictions == 2, "every registrant's callback fires on release")
+    assert(CacheScope.memoCount(spark) == 0,
+      "every entry over the shared frame is evicted on release")
     assert(first.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+  }
+
+  test("a memo build that releases its own session returns its value, " +
+    "stores nothing, and the next call rebuilds") {
+    val s = spark.newSession()
+    var builds = 0
+    def build(release: Boolean): Int = {
+      builds += 1
+      if (release) CacheScope.release(s) // stands in for a concurrent one
+      builds
+    }
+    assert(CacheScope.memo(s, IntKey("self"))(build(release = true)) == 1)
+    assert(CacheScope.memoCount(s) == 0,
+      "a value built across a release must not be stored")
+    assert(CacheScope.memo(s, IntKey("self"))(build(release = false)) == 2,
+      "the next call rebuilds")
+    assert(CacheScope.memo(s, IntKey("self"))(build(release = false)) == 2,
+      "a value built with no release in between is stored and served")
+    CacheScope.release(s)
+  }
+
+  test("a memo build during which another session's retain auto-releases " +
+    "this one stores nothing; the next call rebuilds") {
+    val saved = CacheScope.maxSessions
+    val (a, b) = (spark.newSession(), spark.newSession())
+    import b.implicits._
+    var builds = 0
+    def build(): Int = { // b's retain pushes a out of the cap of 1
+      builds += 1
+      CacheScope.retain((1 to (10 + builds)).toDF("x")).count()
+      builds
+    }
+    try {
+      CacheScope.maxSessions = 1
+      val auto0 = CacheScope.autoReleases.get()
+      assert(CacheScope.memo(a, IntKey("cross"))(build()) == 1)
+      assert(CacheScope.autoReleases.get() > auto0,
+        "b's retain must auto-release a's scope mid-build")
+      assert(CacheScope.memoCount(a) == 0,
+        "a value built across an auto-release must not be stored")
+      CacheScope.maxSessions = saved
+      assert(CacheScope.memo(a, IntKey("cross"))(build()) == 2,
+        "the next call rebuilds")
+      assert(CacheScope.memoCount(a) == 1)
+    } finally {
+      CacheScope.maxSessions = saved
+      Seq(a, b).foreach(CacheScope.release)
+    }
   }
 
   test("release keeps a plan-identical frame ANOTHER session still " +
@@ -103,7 +160,6 @@ class CacheScopeSpec extends AnyFunSuite {
     "(churn guard, r14 #3)") {
     val saved = CacheScope.maxSessions
     val sessions = (1 to 5).map(_ => spark.newSession())
-    val evicted = scala.collection.mutable.Set.empty[Int]
     try {
       CacheScope.maxSessions = 3
       val auto0 = CacheScope.autoReleases.get()
@@ -112,11 +168,13 @@ class CacheScopeSpec extends AnyFunSuite {
         import sq.implicits._
         // plan-distinct per session (distinct literal count) so refcount
         // sharing can't mask the eviction
-        val f = CacheScope.retain((1 to (100 + i)).toDF("x"),
-          onRelease = () => evicted += i)
+        val f = CacheScope.memo(s, FrameKey(i))(
+          CacheScope.retain((1 to (100 + i)).toDF("x")))
         f.count()
         f
       }
+      val evicted = sessions.indices.filter(i =>
+        CacheScope.memoCount(sessions(i)) == 0).toSet
       assert(CacheScope.sessionCount <= 3, "cap must hold")
       assert(CacheScope.autoReleases.get() == auto0 + 2,
         "two oldest scopes auto-released")

@@ -69,8 +69,8 @@ object ChurnProbe {
     }
     if (CacheScope.sessionCount != 0)
       fail(s"sessionCount ${CacheScope.sessionCount} != 0 after hygiene phase")
-    if (Memos.totalEntries != 0)
-      fail(s"memo entries ${Memos.totalEntries} != 0 after hygiene phase")
+    if (CacheScope.memoCount != 0)
+      fail(s"memo entries ${CacheScope.memoCount} != 0 after hygiene phase")
     if (root.sparkContext.getPersistentRDDs.nonEmpty)
       fail(s"${root.sparkContext.getPersistentRDDs.size} RDDs still pinned after hygiene phase")
     val heapAfterHygiene = usedHeapAfterGc()
@@ -88,7 +88,7 @@ object ChurnProbe {
       // abandoned: no release — the high-water guard must bound everything
     }
     val sessLive = CacheScope.sessionCount
-    val memoLive = Memos.totalEntries
+    val memoLive = CacheScope.memoCount
     val rddLive = root.sparkContext.getPersistentRDDs.size
     val autoFired = CacheScope.autoReleases.get() - auto0
     val heapAfterChurn = usedHeapAfterGc()
@@ -100,7 +100,7 @@ object ChurnProbe {
     if (sessLive > cap) fail(s"live sessions $sessLive exceed cap $cap")
     if (half > cap && autoFired == 0)
       fail("high-water guard never fired — the probe is vacuous")
-    // memo entries are keyed (session, dir): bounded by cap x families (3)
+    // memo entries live in session scopes: bounded by cap x families (3)
     if (memoLive > cap * 3) fail(s"memo entries $memoLive > ${cap * 3}")
     // retained frames per live session are a handful at sf0.001
     if (rddLive > cap * 8) fail(s"pinned RDDs $rddLive > ${cap * 8}")

@@ -17,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    both bucketed-layout queries (shared catalog table — the write race
   *    fixed in r13), the registered-view SQL surface, and the BPE
   *    driver-read fold. Every one of those paths crosses JVM-global state
-  *    (memo TrieMaps, CacheScope, the shared CacheManager/catalog,
+  *    (CacheScope and its memos, the shared CacheManager/catalog,
   *    IterScope's owner map).
   *  - Every thread fingerprints every result and compares it to the
   *    SEQUENTIAL single-session baseline computed first — concurrency

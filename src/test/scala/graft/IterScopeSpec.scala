@@ -122,7 +122,7 @@ class IterScopeSpec extends AnyFunSuite {
       val rows1 = first.collect().map(_.toString).sorted.toSeq
       assert(rows1.nonEmpty, s"$q must produce rows")
       CacheScope.release(spark)
-      // after release the memo entry is evicted (onRelease) — a rebuild
+      // after release the memo entry is evicted — a rebuild
       // must re-materialize and agree, and must be consumable even
       // though the first frame's cache blocks are gone
       val second = SparkEntry.queries(q)(spark, dir)

@@ -5,10 +5,18 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins the r15 data-derived shuffle width: grows with bytes (2 MiB
   * grain), independent of core count at small inputs (so low/high-core
   * runs compare task-for-task), capped into the guide's partition-size
-  * range at scale, and falls back to the core count when the input size
-  * is unknowable.
+  * range at scale, sizes URIs through the Hadoop FileSystem, and falls
+  * back to the core count when the input size is unknowable.
   */
 class SessionTuningSpec extends AnyFunSuite {
+
+  private def dirOf(bytes: Long): String = {
+    val d = java.nio.file.Files.createTempDirectory("stune").toFile
+    d.deleteOnExit()
+    val f = new java.io.RandomAccessFile(new java.io.File(d, "x.parquet"), "rw")
+    try f.setLength(bytes) finally f.close() // sparse: logical length only
+    d.getAbsolutePath
+  }
 
   test("width derives from data, not cores, at bench scale") {
     val at32 = SessionTuning.shufflePartitions("/root/testdata/sf0.1", 32)
@@ -21,13 +29,6 @@ class SessionTuningSpec extends AnyFunSuite {
   }
 
   test("mid band: width == cpus (enough data per core); scale band: bytes/256MiB") {
-    def dirOf(bytes: Long): String = {
-      val d = java.nio.file.Files.createTempDirectory("stune").toFile
-      d.deleteOnExit()
-      val f = new java.io.RandomAccessFile(new java.io.File(d, "x.parquet"), "rw")
-      try f.setLength(bytes) finally f.close() // sparse: logical length only
-      d.getAbsolutePath
-    }
     // 200 MB: fine = 100 chunks, cap = max(cpus, 1) = cpus — the mid band
     val mid = dirOf(200L * 1024 * 1024)
     assert(SessionTuning.shufflePartitions(mid, 32) === 32)
@@ -43,5 +44,15 @@ class SessionTuningSpec extends AnyFunSuite {
     assert(small <= big)
     assert(small >= 1)
     assert(SessionTuning.shufflePartitions("/no/such/dir", 32) === 32)
+  }
+
+  test("a file: URI sizes like the bare path (Hadoop FileSystem sizing)") {
+    val dir = dirOf(10L * 1024 * 1024) // 5 fine chunks, below 8 and 32 cpus
+    for (cpus <- Seq(8, 32); uri <- Seq(s"file:$dir", s"file://$dir/")) {
+      assert(SessionTuning.shufflePartitions(dir, cpus) === 5)
+      assert(SessionTuning.shufflePartitions(uri, cpus) === 5,
+        s"$uri must size like the bare path at $cpus cpus")
+    }
+    assert(SessionTuning.shufflePartitions("file:///no/such/dir", 32) === 32)
   }
 }
