@@ -6,9 +6,10 @@
 # only the sf0.01 whole-surface soak caught it. This script makes the
 # catching-scale soaks a standing, non-skippable round gate: it runs
 # ConcurrencyProbe AND RetryProbe at sf0.01 (plus the session-churn
-# endurance probe at its design scale) sequentially in fresh JVMs,
-# captures each probe's own pass/fail verdict, and emits a SCALE.md-ready
-# summary block. Any probe failure exits 1.
+# endurance probe, the degenerate-input sweep and the hostile-row sweep
+# at their design scale) sequentially in fresh JVMs, captures each
+# probe's own pass/fail verdict, and emits a SCALE.md-ready summary
+# block. Any probe failure exits 1.
 #
 # Usage: scripts/run_gates.sh            (from the repo root)
 #   env: GATES_SF_DIR   (default /root/testdata/sf0.01)
@@ -51,12 +52,26 @@ run_probe churn env SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 \
   SPARK_GRAFT_CPUS=8 \
   sbt -batch "Test/runMain graft.ChurnProbe"
 
+# the two sweeps read their own default tables (sf0.001)
+run_probe degenerate env -u SPARK_GRAFT_SF_DIR SPARK_GRAFT_CPUS=8 \
+  sbt -batch "Test/runMain graft.DegenerateProbe"
+
+run_probe hostile env -u SPARK_GRAFT_SF_DIR SPARK_GRAFT_CPUS=8 \
+  sbt -batch "Test/runMain graft.HostileInputProbe"
+
+# OK/FAIL line totals of a sweep probe's log
+totals() {
+  echo "$(grep -c '^OK ' "$OUT/$1.log") OK, $(grep -c '^FAIL ' "$OUT/$1.log") FAIL"
+}
+
 SUMMARY="$OUT/gates_summary.md"
 {
   echo "Round gates ($(date -u +%FT%TZ), HEAD $(git rev-parse --short HEAD), sf dir $SF_DIR, cpus $CPUS):"
   echo "- ConcurrencyProbe (8 sessions x full surface): $(grep -E '^=== ' "$OUT/concurrency.log" | tail -1 | sed 's/^=== //; s/ ===$//')"
   echo "- RetryProbe (clean vs chaos fingerprints): $(grep -E '^=== ' "$OUT/retry.log" | tail -1 | sed 's/^=== //; s/ ===$//')"
   echo "- ChurnProbe (sequential session endurance): $(grep -E '^CHURN-(OK|FAIL)' "$OUT/churn.log" | tail -1)"
+  echo "- DegenerateProbe (empty/one-row/mono-key tables x full surface): $(totals degenerate)"
+  echo "- HostileInputProbe (hostile rows x full surface): $(totals hostile)"
   if [ "$fail" -ne 0 ]; then echo "- VERDICT: GATE FAILURE (see $OUT/*.log)"; fi
 } | tee "$SUMMARY"
 

@@ -17,19 +17,8 @@ import org.apache.spark.sql.functions.{col, xxhash64, expr}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // r15: shuffle width derives from DATA SIZE (SessionTuning — the
-      // reduce-side twin of the size-aware scan spread), not from the
-      // core count; $SPARK_GRAFT_CPUS still drives master/parallelism
-      // exactly as the driver contract requires.
-      .config("spark.sql.shuffle.partitions",
-        SessionTuning.shufflePartitions(sfDir, cpus.toInt))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sfDir,
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // Warmup outside the timed region: JIT + codegen + parquet footer reads
     // would otherwise all land on whichever query runs first (alphabetical).
     Tables.all.foreach { t =>

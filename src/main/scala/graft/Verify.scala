@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,16 +9,8 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // r15: data-derived shuffle width (see SessionTuning/Bench)
-      .config("spark.sql.shuffle.partitions",
-        SessionTuning.shufflePartitions(sfDir, cpus.toInt))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sfDir,
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // Single config source for the embedding dim (ADVICE r12): the env
     // var the oracle harness reads drives the engine conf too, so engine
     // and DuckDB oracle can never validate different row sets. The

@@ -11,7 +11,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
   * puts ~20 TB on one task). This op is the PrefixSum discipline
   * ([[PrefixSum]]) applied to lag:
   *
-  *  1. `repartitionByRange` on (key ++ order) — tiles partition the
+  *  1. a [[TiledScan]] layout on (key ++ order) — tiles partition the
   *     global (key, order) sort order, so same-key rows are contiguous
   *     ACROSS tiles and a key's rows can span many tiles;
   *  2. one streaming `mapPartitions` pass per tile keeps a ring buffer of

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 
 /** Distributed NTILE over grouped, ordered data — without one-task-per-key.
@@ -9,19 +8,17 @@ import org.apache.spark.sql.types.IntegerType
   * `ntile(b) OVER (PARTITION BY key ORDER BY …)` sorts every key's rows in
   * ONE task; with a low-cardinality key (5 event types at the 100× probe:
   * 22.3× ratio, 19.9 s) the whole input serializes onto #keys cores.
-  * NTILE needs only (per-key rank, per-key count) — both computable on
-  * range-partitioned tiles, the [[PrefixSum]] shape:
+  * NTILE needs only (per-key rank, per-key count) — both computable on a
+  * [[TiledScan]] layout over (keyCols, orderCols):
   *
-  *  1. `repartitionByRange` on (keyCols ++ orderCols) — tiles tile the
-  *     global (key, order) sequence; `sortWithinPartitions` orders each.
-  *  2. per-(tile, key) row counts — O(nParts + #keys) rows (a key spans
-  *     contiguous tiles under the range partitioner), a bounded documented
-  *     driver read like PrefixSum's tile totals — fold into per-(tile,
-  *     key) rank offsets and per-key totals, broadcast back.
-  *  3. one streaming `mapPartitions` pass: rank = offset + running
-  *     within-tile count, bucket from the standard SQL NTILE arithmetic
-  *     (n = q·b + rem: first `rem` buckets take q+1 rows) — integer-exact,
-  *     so the assignment is bit-identical to the window's on any engine.
+  *  1. per-(tile, key) row counts — O(nParts + #keys) rows (a key spans
+  *     contiguous tiles under the range partitioner), a bounded driver
+  *     read — fold into per-(tile, key) rank offsets and per-key totals,
+  *     broadcast back.
+  *  2. one streaming pass: rank = offset + running within-tile count,
+  *     bucket from the standard SQL NTILE arithmetic (n = q·b + rem:
+  *     first `rem` buckets take q+1 rows) — integer-exact, so the
+  *     assignment is bit-identical to the window's on any engine.
   *
   * Callers must make (keyCols ++ orderCols) a strict total order (tie-break
   * on a unique id) — same contract as the window form needs for an
@@ -30,12 +27,12 @@ import org.apache.spark.sql.types.IntegerType
 object OrderedNtile {
 
   /** `maxKeys` caps the driver-side (tile, key) count read: the fold in
-    * step 2 holds O(#keys + nParts) rows in driver memory, which is fine
+    * step 1 holds O(#keys + nParts) rows in driver memory, which is fine
     * for the grouping keys this op exists for (single-digit event-type
     * domains) but unbounded for an arbitrary key. The TRANSFER itself is
     * bounded, not just checked after the fact: a counts-only pre-job
     * (O(nParts) longs to the driver — one run-count per tile, read off
-    * the same pinned cached RDD the entry job uses) fails fast when the
+    * the layout the entry job uses) fails fast when the
     * global run total exceeds the cap, BEFORE any (tile, key) entry is
     * collected; a per-task require backstops the entry job itself.
     * Callers with genuinely high-cardinality keys don't need this op at
@@ -51,18 +48,7 @@ object OrderedNtile {
     val nParts = nPartsOpt.getOrElse(TiledScan.defaultTiles(spark))
     val inSchema = df.schema
     val keyIdx = keyCols.map(inSchema.fieldIndex)
-    val sortCols = keyCols.map(col) ++ orderCols
-
-    val ranged = df.repartitionByRange(nParts, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-    // counts read + binning pass share ONE execution of the range shuffle
-    // (CacheScope discipline: the consuming action's driver releases) —
-    // and, load-bearing since r14, ONE RDD instance: both jobs key tiles
-    // by partition id, so they must see the same layout even if the cache
-    // is evicted between them (TiledScan's layout-pinning doc — the same
-    // frozen-ShuffleDependency argument applies verbatim).
-    val cached = graft.CacheScope.retain(ranged)
-    val rows0 = cached.rdd
+    val rows = TiledScan.layout(df, keyCols, orderCols, nParts)
 
     val maxRows = maxKeys.toLong + nParts
     val capMsg =
@@ -71,67 +57,48 @@ object OrderedNtile {
         "makes sense for low-cardinality keys; with this many distinct " +
         "keys the plain ntile window is already parallel (or raise " +
         "maxKeys if driver memory allows)"
+    // A sorted tile holds each of its keys as ONE contiguous run; a key
+    // spans contiguous tiles under the range partitioner, so all tiles
+    // together hold at most #keys + nParts - 1 runs.
+    def keyRuns(it: Iterator[Row]): Iterator[(List[Any], Long)] = {
+      val keys = it.map(r => keyIdx.map(r.get).toList).buffered
+      Iterator.continually(keys).takeWhile(_.hasNext).map { ks =>
+        val k = ks.next(); var n = 1L
+        while (ks.hasNext && ks.head == k) { ks.next(); n += 1L }
+        (k, n)
+      }
+    }
     // Counts-only pre-job: one run-count long per tile to the driver —
     // trivially bounded at O(nParts) — so the cap fails fast BEFORE any
     // (tile, key) entry is materialized or shipped. A per-task require
     // alone cannot bound the SUM across tasks (each task sees only its
     // own runs: nParts tasks could each stay under the cap while the
-    // collect receives nParts x maxRows entries — the blowup the removed
-    // plan-side LIMIT used to bound). Reads the same pinned cached RDD as
-    // the entry job, so the extra pass is a cache scan, and the layouts
-    // agree by construction.
-    val runCounts: Array[Long] = rows0.mapPartitionsWithIndex { (_, it) =>
-      var runs = 0L
-      var cur: List[Any] = null
-      it.foreach { r =>
-        val k = keyIdx.map(r.get).toList
-        if (k != cur) { runs += 1L; cur = k }
-      }
-      Iterator.single(runs)
-    }.collect()
+    // collect receives nParts x maxRows entries).
+    val runCounts =
+      TiledScan.perTile(rows)(keyRuns(_).foldLeft(0L)((n, _) => n + 1))
     require(runCounts.sum <= maxRows, capMsg)
-
-    // O(nParts + #keys) driver read: per-(tile, key) row counts, emitted
-    // as one entry per contiguous same-key run (the tile is sorted, so a
-    // key is exactly one run). A key spans contiguous tiles under the
-    // range partitioner, so the result has at most #keys + nParts - 1
-    // rows. The pre-job above already bounded the global total; the
-    // per-task require is defense-in-depth only.
-    val counts: Array[(Int, List[Any], Long)] =
-      rows0.mapPartitionsWithIndex { (pid, it) =>
-        val buf = scala.collection.mutable.ArrayBuffer
-          .empty[(Int, List[Any], Long)]
-        var cur: List[Any] = null
-        var n = 0L
-        it.foreach { r =>
-          val k = keyIdx.map(r.get).toList
-          if (k != cur) {
-            if (cur != null) buf += ((pid, cur, n))
-            require(buf.size <= maxRows, capMsg)
-            cur = k; n = 0L
-          }
-          n += 1L
-        }
-        if (cur != null) buf += ((pid, cur, n))
-        buf.iterator
-      }.collect()
-    require(counts.length <= maxRows, capMsg)
-    val totals: Map[List[Any], Long] =
-      counts.groupBy(_._2).map { case (k, rs) => k -> rs.map(_._3).sum }
-    // rank offset of (tile, key) = rows of that key in earlier tiles
-    val offsets: Map[(Int, List[Any]), Long] = counts
-      .groupBy(_._2).flatMap { case (k, rs) =>
-        var run = 0L
-        rs.sortBy(_._1).map { case (pid, _, c) =>
-          val off = run; run += c; (pid, k) -> off
-        }
-      }
-    val bc = spark.sparkContext.broadcast((offsets, totals))
+    // O(nParts + #keys) driver read: each tile's (key, row count) runs.
+    // The pre-job above already bounded the global total; the per-task
+    // require is defense-in-depth only.
+    val runs = TiledScan.perTile(rows)(keyRuns(_).zipWithIndex.map {
+      case (run, i) => require(i < maxRows, capMsg); run
+    }.toArray)
+    require(runs.map(_.length.toLong).sum <= maxRows, capMsg)
+    // rank offset of (tile, key) = rows of that key in earlier tiles;
+    // `seen` ends as the per-key totals
+    val seen = scala.collection.mutable.HashMap.empty[List[Any], Long]
+    val offsets: Map[(Int, List[Any]), Long] = (for {
+      (tile, pid) <- runs.iterator.zipWithIndex
+      (k, c) <- tile.iterator
+    } yield {
+      val off = seen.getOrElse(k, 0L); seen(k) = off + c; (pid, k) -> off
+    }).toMap
+    val bc = spark.sparkContext.broadcast((offsets, seen.toMap))
 
     val outSchema = inSchema.add(binCol, IntegerType, nullable = false)
-    // binning pass over the SAME rows0 RDD the counts came from (layout
-    // pin) — the mapPartitionsWithIndex pid is the offsets map's key
-    val binned = rows0.mapPartitionsWithIndex { (pid, rows) =>
+    // binning pass over the layout the counts came from (TiledScan's
+    // layout pinning): the mapPartitionsWithIndex pid is the offsets key
+    val binned = rows.mapPartitionsWithIndex { (pid, rows) =>
       val (offs, tots) = bc.value
       var curKey: List[Any] = null
       var local = 0L; var off = 0L; var n = 0L

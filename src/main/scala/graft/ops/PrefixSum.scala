@@ -1,7 +1,9 @@
 package graft.ops
 
+import java.math.BigDecimal
+
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
-import org.apache.spark.sql.types.{DecimalType, StructType}
+import org.apache.spark.sql.types.DecimalType
 
 /** Distributed exact prefix sum (running total) over a globally-ordered
   * frame — WITHOUT a zero-partition window.
@@ -10,18 +12,15 @@ import org.apache.spark.sql.types.{DecimalType, StructType}
   * to one partition (Spark warns "No Partition Defined for Window
   * operation"). Over a per-key aggregate that is O(#keys) rows — fatal at
   * 100 TB key cardinalities (every customer of a 100 TB order book on one
-  * task). This op is the classic two-phase scan instead:
+  * task). This op is the classic two-phase scan instead, on a
+  * [[TiledScan]] layout with no key columns and the sort columns as
+  * order:
   *
-  *  1. `repartitionByRange` on the sort keys — Spark's range partitioner
-  *     guarantees every row of partition i sorts before every row of
-  *     partition i+1, so partitions tile the global order; a
-  *     `sortWithinPartitions` makes each tile internally ordered.
-  *  2. one streaming `mapPartitions` pass computes the within-tile running
-  *     sum in exact java BigDecimal (O(1) state, no shuffle, the
-  *     Indicators.compute posture).
-  *  3. the per-tile totals — O(#partitions) rows, a bounded documented
-  *     driver read like the VectorSearch codebooks — become prefix
-  *     offsets, broadcast back and added map-side.
+  *  1. one per-tile collect of each tile's decimal total — O(#tiles)
+  *     values, a bounded driver read — folded into prefix offsets and
+  *     broadcast back;
+  *  2. one streaming pass over the same tiles adds `offset + within-tile
+  *     running sum` in exact java BigDecimal (O(1) state, no shuffle).
   *
   * Exactness: decimal addition is associative, the range partitioner
   * preserves the strict total order of `sortCols` (callers must make the
@@ -34,22 +33,17 @@ object PrefixSum {
     * in the strict total order of `sortCols`, and returns the grand total
     * alongside (it falls out of the same per-tile offsets fold — callers
     * needing `cum / total` shares skip both a second corpus aggregate and
-    * the `SUM() OVER ()` whole-frame window). The input stays distributed:
-    * `nParts`-way range partitioning, one pass per partition. `valueCol`
-    * must be a non-null DecimalType column (aggregate outputs are).
-    * `nParts` ≤ 0 (the default) derives the tile count from the session
-    * shuffle width (r15 — data-derived via SessionTuning, so tiny
-    * inputs stop paying 32 tiles of per-task overhead); any explicit
-    * positive value is honored unchanged. Exactness holds at every
-    * width (decimal associativity — PrefixSumSpec sweeps widths).
+    * the `SUM() OVER ()` whole-frame window). Nulls are skipped the way
+    * `SUM(v) OVER (ORDER BY …)` skips them: the running total is null
+    * until the first non-null value, and the grand total is the sum of
+    * the non-null values (zero when there are none). `nPartsOpt` sets the
+    * tile count, default [[TiledScan.defaultTiles]]; exactness holds at
+    * every width (decimal associativity — PrefixSumSpec sweeps widths).
     */
   def runningDecimalSum(df: DataFrame, valueCol: String, cumCol: String,
-      sortCols: Seq[Column], nParts: Int = 0)
-      : (DataFrame, java.math.BigDecimal) = {
+      sortCols: Seq[Column], nPartsOpt: Option[Int] = None)
+      : (DataFrame, BigDecimal) = {
     val spark = df.sparkSession
-    // defaultTiles, not the raw shuffle width: the per-tile offsets read
-    // must stay a bounded driver read at any corpus size (TiledScan doc)
-    val width = if (nParts > 0) nParts else TiledScan.defaultTiles(spark)
     val inSchema = df.schema
     val valIdx = inSchema.fieldIndex(valueCol)
     val scale = inSchema(valIdx).dataType match {
@@ -57,68 +51,42 @@ object PrefixSum {
       case t => throw new IllegalArgumentException(
         s"runningDecimalSum needs a DecimalType value column, got $t")
     }
-    val cumType = DecimalType(38, scale)
 
     // r15 (guide §1.2 / VERDICT r14 #2): retain the INPUT before the range
-    // partitioner touches it — repartitionByRange runs a separate sampling
-    // job over its child to pick bounds, so an un-retained input subtree
-    // (here: a full per-key aggregate over the fact table) executed TWICE,
-    // once for the sample and once for the shuffle map stage. The input is
-    // an O(#keys) aggregate, so the cache is bounded like the offsets read.
+    // partitioner touches it — the layout's range shuffle runs a separate
+    // sampling job over its child to pick bounds, so an un-retained input
+    // subtree (here: a full per-key aggregate over the fact table)
+    // executed TWICE, once for the sample and once for the shuffle map
+    // stage. The input is an O(#keys) aggregate, so the cache is bounded
+    // like the offsets read.
     val input = graft.CacheScope.retain(df)
-    val ranged = input.repartitionByRange(width, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-    val midSchema = new StructType(
-      inSchema.add("__within", cumType, nullable = false).fields)
-    val withWithin = ranged.mapPartitions { rows =>
-      var acc = java.math.BigDecimal.ZERO
-      rows.map { r =>
-        acc = acc.add(r.getDecimal(valIdx))
-        Row.fromSeq(r.toSeq :+ acc.setScale(scale))
-      }
-    }(Encoders.row(midSchema))
+    val rows = TiledScan.layout(input, Nil, sortCols,
+      nPartsOpt.getOrElse(TiledScan.defaultTiles(spark)))
 
-    // Retained so the driver-side totals read and the main pass share ONE
-    // execution of the range shuffle + cumsum pass (CacheScope discipline:
-    // whoever drives the consuming action releases at its boundary) — and
-    // ONE RDD instance: both jobs key tiles by partition id, so the
-    // layout must hold even if the cache is evicted between them
-    // (TiledScan's layout-pinning doc; the frozen-ShuffleDependency
-    // argument applies verbatim).
-    val cached = graft.CacheScope.retain(withWithin)
-    val rows0 = cached.rdd
-    val withinIdx = inSchema.length
+    // offsets(p) = total of the tiles before p (null while every value so
+    // far is null); the last entry is the grand total
+    val totals = TiledScan.perTile(rows)(_.foldLeft(null: BigDecimal) {
+      (acc, r) => plus(acc, r.getDecimal(valIdx))
+    })
+    val offsets = totals.scanLeft(null: BigDecimal)(plus)
+    val bc = spark.sparkContext.broadcast(offsets)
 
-    // O(nParts) rows to the driver: the prefix offset of tile p is the sum
-    // of all tiles' totals before p (empty tiles simply never appear).
-    // Tile total = the tile's LAST running-sum value — the cumsum over the
-    // whole tile — which is exact for mixed-sign values too (unlike
-    // max(__within), which PrefixSumSpec's mixed-sign property rejects).
-    val totals = rows0.mapPartitionsWithIndex { (pid, it) =>
-      var last: java.math.BigDecimal = null
-      it.foreach(r => last = r.getDecimal(withinIdx))
-      if (last == null) Iterator.empty
-      else Iterator.single((pid, last))
-    }.collect().sortBy(_._1)
-    var running = java.math.BigDecimal.ZERO
-    val offsets = totals.map { case (pid, tot) =>
-      val off = running; running = running.add(tot); (pid, off)
-    }
-    val bc = spark.sparkContext.broadcast(offsets.toMap)
-
-    // map-side offset add over the SAME rows0 RDD (layout pin) — the
-    // broadcast join on __pid this replaces carried the same values, with
-    // an extra column and a replan hazard
-    val outSchema = new StructType(
-      inSchema.add(cumCol, cumType, nullable = true).fields)
-    val summed = rows0.mapPartitionsWithIndex { (pid, it) =>
-      val off = bc.value.getOrElse(pid, java.math.BigDecimal.ZERO)
+    val outSchema =
+      inSchema.add(cumCol, DecimalType(38, scale), nullable = true)
+    val summed = rows.mapPartitionsWithIndex { (pid, it) =>
+      var acc = bc.value(pid)
       it.map { r =>
-        val cum = off.add(r.getDecimal(withinIdx)).setScale(scale)
-        Row.fromSeq(r.toSeq.init :+ cum)
+        acc = plus(acc, r.getDecimal(valIdx))
+        val cum = if (acc == null) null else acc.setScale(scale)
+        Row.fromSeq(r.toSeq :+ cum)
       }
     }
     val out = spark.createDataset(summed)(Encoders.row(outSchema))
-    (out, running.setScale(scale))
+    (out, Option(offsets.last).getOrElse(BigDecimal.ZERO).setScale(scale))
   }
+
+  /** Null-skipping decimal addition (`Row.getDecimal` gives null for a
+    * null cell): null only when both sides are. */
+  private def plus(a: BigDecimal, b: BigDecimal): BigDecimal =
+    if (a == null) b else if (b == null) a else a.add(b)
 }

@@ -111,7 +111,7 @@ class LayoutPinSpec extends AnyFunSuite {
           .cast(DecimalType(38, 2)))
         .orderBy("id").collect().toSeq
       val (out, total) = PrefixSum.runningDecimalSum(
-        df, "v", "cum", Seq(col("id")), nParts = 16)
+        df, "v", "cum", Seq(col("id")), nPartsOpt = Some(16))
       evict(route)
       val got = out.orderBy("id").collect().toSeq
       CacheScope.release(spark)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.OrderedLag
+import graft.ops.{OrderedLag, OrderedNtile, PrefixSum}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -69,6 +69,72 @@ class OpMemoSpec extends AnyFunSuite {
     assert(byAB.forall(_.isNullAt(3)), "one row per (a, b) group: no lag")
     CacheScope.release(spark)
     assert(CacheScope.memoCount(spark) === 0)
+  }
+
+  test("two withNtile calls on one frame share one layout entry; the " +
+      "second runs no range-sample job") {
+    import org.apache.spark.scheduler.{SparkListener,
+      SparkListenerStageSubmitted}
+    CacheScope.release(spark)
+    // 3 input partitions against 8 tiles: a stage of 3 tasks scans the
+    // input — the range partitioner's sampling job or the shuffle that
+    // builds the layout; a reused layout runs neither
+    val df = spark.range(0, 600, 1, 3)
+      .selectExpr("concat('k', id % 4) AS key", "id AS seq")
+    val group = "opmemo-ntile"
+    val inputStages = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (Option(e.properties).exists(
+              _.getProperty("spark.jobGroup.id") == group) &&
+            e.stageInfo.numTasks == 3)
+          inputStages.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    // the listener bus is asynchronous: drain it before reading the count
+    def drain(): Unit = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    // build + consume one call; returns its rows and its input scans
+    def bins(buckets: Int): (Seq[String], Int) = {
+      drain(); inputStages.set(0)
+      sc.setJobGroup(group, "ntile")
+      val rows = try OrderedNtile.withNtile(df, Seq("key"), Seq(col("seq")),
+          buckets, "bin", nPartsOpt = Some(8)).collect().map(_.toString).toSeq
+        finally sc.clearJobGroup()
+      drain()
+      (rows.sorted, inputStages.get)
+    }
+    def window(buckets: Int) = df.withColumn("bin", ntile(buckets).over(
+        Window.partitionBy("key").orderBy(col("seq"))))
+      .collect().map(_.toString).toSeq.sorted
+    sc.addSparkListener(listener)
+    val ((first, firstScans), (second, secondScans)) =
+      try (bins(4), bins(7)) finally sc.removeSparkListener(listener)
+    assert(firstScans >= 2, "the first call samples and shuffles the input")
+    assert(secondScans === 0, "the second call must reuse the layout")
+    assert(CacheScope.memoCount(spark) === 1, "one layout entry for both")
+    assert(first === window(4))
+    assert(second === window(7))
+    CacheScope.release(spark)
+    assert(CacheScope.memoCount(spark) === 0)
+  }
+
+  test("runningDecimalSum's layout entry is evicted by release") {
+    import spark.implicits._
+    CacheScope.release(spark)
+    val base = CacheScope.memoCount
+    val df = (1 to 50).map(i => (i.toLong, BigDecimal(i) / 4)).toDF("k", "v")
+      .selectExpr("k", "CAST(v AS DECIMAL(12, 2)) AS v")
+    val (cum, total) = PrefixSum.runningDecimalSum(df, "v", "cum",
+      Seq(col("k")), nPartsOpt = Some(4))
+    assert(CacheScope.memoCount === base + 1, "one layout entry")
+    assert(cum.count() === 50)
+    assert(total.compareTo(new java.math.BigDecimal("318.75")) === 0)
+    CacheScope.release(spark)
+    assert(CacheScope.memoCount === base,
+      "release must evict the prefix sum's layout entry")
   }
 
   test("quality-filter fit memo: one fit serves fit/apply/calibration, release evicts") {

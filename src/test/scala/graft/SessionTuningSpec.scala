@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * grain), independent of core count at small inputs (so low/high-core
   * runs compare task-for-task), capped into the guide's partition-size
   * range at scale, sizes URIs through the Hadoop FileSystem, and falls
-  * back to the core count when the input size is unknowable.
+  * back to the core count when the input size is unknowable. The tile
+  * count the ordered-scan core takes from that width is capped at 4096.
   */
 class SessionTuningSpec extends AnyFunSuite {
 
@@ -54,5 +55,18 @@ class SessionTuningSpec extends AnyFunSuite {
         s"$uri must size like the bare path at $cpus cpus")
     }
     assert(SessionTuning.shufflePartitions("file:///no/such/dir", 32) === 32)
+  }
+
+  test("default tile count: the shuffle width, capped at 4096") {
+    // conf reads only: no job, no task
+    val spark = SparkSpec.session
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "400000")
+      assert(ops.TiledScan.defaultTiles(spark) === 4096)
+      spark.conf.set(key, "7")
+      assert(ops.TiledScan.defaultTiles(spark) === 7)
+    } finally spark.conf.set(key, prev)
   }
 }
