@@ -64,14 +64,22 @@ totals() {
   echo "$(grep -c '^OK ' "$OUT/$1.log") OK, $(grep -c '^FAIL ' "$OUT/$1.log") FAIL"
 }
 
+# slowest OK query of a sweep probe's log (a stalled query shows here
+# without reading the log): "[<shape>] <query> <seconds> s"
+slowest() {
+  awk '/^OK / { s = $(NF - 1) + 0; if (q == "" || s > m) {
+      m = s; q = $2; for (i = 3; i <= NF - 3; i++) q = q " " $i } }
+    END { if (q != "") printf "slowest OK %s %.2f s", q, m }' "$OUT/$1.log"
+}
+
 SUMMARY="$OUT/gates_summary.md"
 {
   echo "Round gates ($(date -u +%FT%TZ), HEAD $(git rev-parse --short HEAD), sf dir $SF_DIR, cpus $CPUS):"
   echo "- ConcurrencyProbe (8 sessions x full surface): $(grep -E '^=== ' "$OUT/concurrency.log" | tail -1 | sed 's/^=== //; s/ ===$//')"
   echo "- RetryProbe (clean vs chaos fingerprints): $(grep -E '^=== ' "$OUT/retry.log" | tail -1 | sed 's/^=== //; s/ ===$//')"
   echo "- ChurnProbe (sequential session endurance): $(grep -E '^CHURN-(OK|FAIL)' "$OUT/churn.log" | tail -1)"
-  echo "- DegenerateProbe (empty/one-row/mono-key tables x full surface): $(totals degenerate)"
-  echo "- HostileInputProbe (hostile rows x full surface): $(totals hostile)"
+  echo "- DegenerateProbe (empty/one-row/mono-key tables x full surface): $(totals degenerate); $(slowest degenerate)"
+  echo "- HostileInputProbe (hostile rows x full surface): $(totals hostile); $(slowest hostile)"
   if [ "$fail" -ne 0 ]; then echo "- VERDICT: GATE FAILURE (see $OUT/*.log)"; fi
 } | tee "$SUMMARY"
 

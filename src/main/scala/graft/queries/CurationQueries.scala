@@ -38,7 +38,17 @@ object CurationQueries extends QueryPack {
         s"transform(sequence(1, size(__toks) - ${n - 1}), i -> $mk)"))
   }
 
-  private val emailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
+  private[graft] val emailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
+
+  /** `emailRe` for Java's backtracking matcher: a match may start only
+    * where the previous one ended (`\G`) or at a local-part boundary. A
+    * leftmost match always starts there anyway (one char earlier in the
+    * same local-part run matches too, up to the same end), so counts and
+    * replacements are unchanged; the bare pattern retries every offset
+    * of a long `@`-less token, quadratic in its length. The DuckDB oracle
+    * keeps `emailRe` (RE2 scans in linear time).
+    */
+  private[graft] val emailScanRe = "(?:\\G|(?<![A-Za-z0-9._%+-]))" + emailRe
 
   /** Spark-side greedy leftmost-first BPE merge fold: replace adjacent
     * (`a`, `b`) symbol pairs in the array expression `arr` with their
@@ -188,10 +198,10 @@ object CurationQueries extends QueryPack {
         val aug = concat(col("text"), lit(" contact user"),
           col("doc_id").cast("string"),
           lit("@example.com ref "), (col("doc_id") * 7919).cast("string"))
-        val noEmail = regexp_replace(aug, emailRe, "<EMAIL>")
+        val noEmail = regexp_replace(aug, emailScanRe, "<EMAIL>")
         docs(s, dir).select(
           col("doc_id"),
-          regexp_count(aug, lit(emailRe)).as("n_emails"),
+          regexp_count(aug, lit(emailScanRe)).as("n_emails"),
           regexp_count(noEmail, lit(numRe)).as("n_longnums"),
           regexp_replace(noEmail, numRe, "<NUM>").as("scrubbed"))
           .orderBy("doc_id")

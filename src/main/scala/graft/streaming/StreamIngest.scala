@@ -20,7 +20,9 @@ import org.apache.spark.sql.types._
   *  - last-writer-wins keyed upsert sink for `foreachBatch`: checkpointed
   *    offsets + key-deduped state make redelivery and micro-batch replay
   *    idempotent (T2 — the parquet equivalent of the reference's
-  *    Cassandra PK upsert);
+  *    Cassandra PK upsert); state is key-hash bucketed and a batch
+  *    rewrites only the buckets it touches, the store the incremental
+  *    rollup shares;
   *  - optional ticker→candle builder: tumbling event-time window with
   *    watermark (T3/T4 — the one stateful streaming op the survey adds).
   *
@@ -119,7 +121,8 @@ object StreamIngest {
         col("__c.close").cast("double").as("close"),
         col("__c.volume").cast("double").as("volume"))
 
-  /** K2/K3/T2: last-writer-wins keyed parquet upsert for `foreachBatch`.
+  /** K2/K3/T2: last-writer-wins keyed parquet upsert for `foreachBatch`
+    * (the parquet equivalent of the reference's Cassandra PK upsert).
     *
     * State invariant: one row per key, the one with the highest `seqCol`
     * (Kafka offset / emit sequence — per-key total order). Replayed
@@ -127,94 +130,71 @@ object StreamIngest {
     * already reflected in the state is a no-op, which together with
     * checkpointed source offsets gives effective exactly-once to storage.
     *
-    * Test-scale implementation: rewrite state to a temp dir and swap.
-    * On a real deployment the same contract is one `MERGE INTO` against a
-    * transactional table format, or an overwrite of only the key-hash
-    * partitions present in the batch — the calling convention (this
-    * function inside `foreachBatch`) is identical.
-    */
-  def lwwUpsert(statePath: String, keyCols: Seq[String], seqCol: String)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val fs = new Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverSwaps(fs, statePath)
-    val state = new Path(statePath)
-    val existing =
-      if (fs.exists(state)) Some(spark.read.parquet(statePath)) else None
-    val all = existing.map(batch.unionByName(_)).getOrElse(batch)
-    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col(seqCol).desc)
-    val next = all
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
-      .drop("__rn")
-    val tmp = new Path(statePath + s"__tmp_$batchId")
-    next.write.mode("overwrite").parquet(tmp.toString)
-    // retire-then-replace, never delete-then-rename (ADVICE r9): the old
-    // state moves ASIDE (checked rename), the new state moves IN, and
-    // only then does the retired copy drop — a crash or false rename at
-    // any point leaves either the old or the new state recoverable
-    // ([[recoverSwaps]] above restores a retired dir whose replacement
-    // never landed).
-    if (fs.exists(state)) {
-      val retired = new Path(statePath + s"__retireall_$batchId")
-      require(fs.rename(state, retired),
-        s"state swap: rename $state -> $retired returned false")
-      require(fs.rename(tmp, state),
-        s"state swap: rename $tmp -> $state returned false")
-      fs.delete(retired, true)
-    } else {
-      require(fs.rename(tmp, state),
-        s"state swap: rename $tmp -> $state returned false")
-    }
-  }
-
-  /** The at-scale body for the same `foreachBatch` contract as
-    * [[lwwUpsert]]: state is hash-partitioned on the key into `nBuckets`
-    * directories, and a micro-batch rewrites ONLY the buckets its keys
-    * touch (staged write + per-bucket rename swap) after an LWW merge against just
+    * State is hash-partitioned on the key into `nBuckets` directories,
+    * and a micro-batch rewrites ONLY the buckets its keys touch (staged
+    * write + per-bucket rename swap) after an LWW merge against just
     * those buckets' current rows — per-batch I/O is O(touched buckets),
     * not O(state), which is what lets a keyed upsert absorb a firehose
-    * against a 100 TB table. Same replay-idempotence: re-upserting rows
-    * already in state is a no-op. On a transactional table format the
+    * against a 100 TB table. On a transactional table format the
     * identical contract is one `MERGE INTO`; this is the plain-parquet
     * equivalent (the MERGE slot documented in SCALE.md).
     *
     * State layout: `statePath/__bucket=N/` parquet files with an extra
     * `__bucket` partition column; readers either drop it or read through
-    * [[readLwwState]].
+    * [[readLwwState]]. `nBuckets` is fixed for the life of a state dir:
+    * another count rehashes every key into a different bucket.
     */
   def lwwUpsertPartitioned(statePath: String, keyCols: Seq[String],
-      seqCol: String, nBuckets: Int)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
+      seqCol: String, nBuckets: Int)(batch: DataFrame, batchId: Long): Unit =
+    upsertTouchedBuckets(statePath, keyCols, nBuckets, batch, batchId) {
+      (incoming, state, touched) =>
+        val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col(seqCol).desc)
+        val next = state.fold(incoming)(incoming.unionByName(_))
+          .withColumn("__rn", row_number().over(w))
+          .where(col("__rn") === 1)
+          .drop("__rn")
+        Some((next, touched))
+    }
+
+  /** The touched-bucket core under both keyed sinks: recovers an
+    * interrupted swap, tags `rows` with their `__bucket`, finds the
+    * buckets they touch and reads just those buckets' state, then stages
+    * and swaps whatever `merge` returns.
+    *
+    * `merge(incoming, state, touched)` gets `rows` plus `__bucket`, the
+    * touched buckets' current rows projected onto the same columns (None
+    * before the first batch) and the sorted touched bucket ids. It
+    * returns the merged rows, which carry `__bucket`, and the buckets to
+    * swap, or None to write nothing.
+    */
+  private def upsertTouchedBuckets(statePath: String, keyCols: Seq[String],
+      nBuckets: Int, rows: DataFrame, batchId: Long)(
+      merge: (DataFrame, Option[DataFrame], Seq[Int]) =>
+        Option[(DataFrame, Seq[Int])]): Unit = {
+    val spark = rows.sparkSession
     val fs = new Path(statePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverSwaps(fs, statePath)
-    val bucketOf = pmod(hash(keyCols.map(col): _*), lit(nBuckets))
-    val bucketed = batch.withColumn("__bucket", bucketOf)
+    val incoming = rows.withColumn("__bucket",
+      pmod(hash(keyCols.map(col): _*), lit(nBuckets)))
     // O(nBuckets) collected list — bounded by config, not by data (J3
     // posture). One map-side job: each task returns its own distinct
     // buckets (distinct() would shuffle, two jobs under AQE).
-    val touched = bucketed.select(col("__bucket")).queryExecution.toRdd
-      .mapPartitions(rows => rows.map(_.getInt(0)).toSet.iterator)
-      .collect().distinct.sorted
+    val touched = incoming.select(col("__bucket")).queryExecution.toRdd
+      .mapPartitions(it => it.map(_.getInt(0)).toSet.iterator)
+      .collect().distinct.sorted.toSeq
     if (touched.isEmpty) return
-    // the merge projects state onto the batch's columns, so the batch's
+    // the merge projects state onto the incoming columns, so their
     // schema is the read schema: no Parquet schema-inference job
-    val existing =
+    val state =
       if (fs.exists(new Path(statePath)))
-        Some(spark.read.schema(bucketed.schema).parquet(statePath)
-          .where(col("__bucket").isin(touched.map(Integer.valueOf): _*)))
+        Some(spark.read.schema(incoming.schema).parquet(statePath)
+          .where(col("__bucket").isin(touched.map(Integer.valueOf): _*))
+          .select(incoming.columns.map(col): _*))
       else None
-    val all = existing.map(e =>
-      bucketed.unionByName(e.select(bucketed.columns.map(col): _*)))
-      .getOrElse(bucketed)
-    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col(seqCol).desc)
-    val next = all
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
-      .drop("__rn")
-    stageAndSwapBuckets(fs, statePath, next, touched, batchId)
+    merge(incoming, state, touched).foreach { case (merged, buckets) =>
+      stageAndSwapBuckets(fs, statePath, merged, buckets, batchId)
+    }
   }
 
   /** Stage `staged` (bucket-partitioned) to a sibling temp dir, then
@@ -271,16 +251,14 @@ object StreamIngest {
     fs.delete(tmp, true)
   }
 
-  /** Crash recovery for the sibling-dir swap protocols, run at every
+  /** Crash recovery for the sibling-dir swap protocol, run at every
     * writer entry BEFORE the state is read (the upsert/rollup merge reads
     * state, so a bucket left in a retire dir by a mid-swap crash must be
     * restored first or the replayed merge would silently drop its rows):
     *  - `__retire_<batch>/__bucket=N` whose live bucket is MISSING →
     *    restored (the crash hit between the two renames); whose live
     *    bucket exists → obsolete copy, dropped;
-    *  - `__retireall_<batch>` (whole-state swap, [[lwwUpsert]]) →
-    *    restored if the state dir is missing, dropped otherwise;
-    *  - orphaned `__stage_`/`__tmp_` dirs → dropped (their batch replays
+    *  - orphaned `__stage_` dirs → dropped (their batch replays
     *    wholesale; the partial staging output is garbage).
     * Readers ([[readLwwState]]/[[readRollupState]]) stay read-only: a
     * read during the crash window sees the documented some-buckets-old
@@ -304,13 +282,7 @@ object StreamIngest {
           }
         }
         fs.delete(st.getPath, true)
-      } else if (nm.startsWith(base + "__retireall_")) {
-        if (!fs.exists(state))
-          require(fs.rename(st.getPath, state),
-            s"swap recovery: rename ${st.getPath} -> $state returned false")
-        else fs.delete(st.getPath, true)
-      } else if (nm.startsWith(base + "__stage_") ||
-          nm.startsWith(base + "__tmp_")) {
+      } else if (nm.startsWith(base + "__stage_")) {
         fs.delete(st.getPath, true)
       }
     }
@@ -394,11 +366,6 @@ object StreamIngest {
     */
   def rollupUpsertPartitioned(statePath: String, keyCols: Seq[String],
       valueCol: String, nBuckets: Int)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val fs = new Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverSwaps(fs, statePath)
-    val bucketOf = pmod(hash(keyCols.map(col): _*), lit(nBuckets))
     // integer cents: exact, order-free, schema-stable across merges
     // (DECIMAL sums widen per merge level; LongType does not). The
     // per-row cent conversion goes through DECIMAL(18,2) — HALF_UP on
@@ -420,32 +387,14 @@ object StreamIngest {
           .cast("long")).as("sum_cents"),
         min(col(valueCol)).as("mn"),
         max(col(valueCol)).as("mx"))
-      .withColumn("__bucket", bucketOf)
       .withColumn("__applied_batch", lit(batchId))
       .persist()
-    try {
-      // O(nBuckets) driver list — bounded by config, not by data
-      val touched = partial.select("__bucket").distinct()
-        .collect().map(_.getInt(0)).sorted
-      if (touched.isEmpty) return
-      // Also persisted: the touched buckets' state feeds the fence
-      // collect AND the merge — one parquet scan, not two. (Correctness
-      // no longer rides on this cache: the staged-swap write below is
-      // fully materialized before any old file is deleted.)
-      val existing =
-        if (fs.exists(new Path(statePath)))
-          Some(spark.read.parquet(statePath)
-            .where(col("__bucket").isin(touched.map(Integer.valueOf): _*))
-            .persist())
-        else None
-      try {
+    try upsertTouchedBuckets(statePath, keyCols, nBuckets, partial, batchId) {
+      (incoming, state, touched) =>
         // replay fence — per-bucket last-applied batchIds (O(touched))
-        val bucketMax: Map[Int, Long] = existing match {
-          case None => Map.empty
-          case Some(e) => e.groupBy("__bucket")
-            .agg(max(col("__applied_batch")).as("b"))
-            .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-        }
+        val bucketMax: Map[Int, Long] = state.fold(Map.empty[Int, Long])(
+          _.groupBy("__bucket").agg(max(col("__applied_batch")))
+            .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
         // batchId REGRESSION = a fresh checkpoint pointed at an old state
         // dir: every batch would silently fence as "already applied".
         // Fail fast instead (the checkpoint-lineage contract above).
@@ -458,42 +407,44 @@ object StreamIngest {
             "every batch). Point the query at its original checkpoint, " +
             "or start a new state dir.")
         // buckets that already merged THIS batchId (replay) are done
-        val fencedBuckets = bucketMax.filter(_._2 == batchId).keySet
-        val live = touched.filterNot(fencedBuckets)
-        if (live.isEmpty) return
-        val liveCol = (c: Column) => c.isin(live.map(Integer.valueOf): _*)
-        val incoming = partial.where(liveCol(col("__bucket")))
-        val merged = existing.map(e =>
-            incoming.unionByName(e.where(liveCol(col("__bucket")))
-              .select(incoming.columns.map(col): _*)))
-          .getOrElse(incoming)
-          .groupBy(keyCols.map(col): _*)
+        val live = touched.filterNot(bucketMax.filter(_._2 == batchId).keySet)
+        if (live.isEmpty) None
+        else Some((state.fold(incoming)(incoming.unionByName(_))
+          .where(col("__bucket").isin(live.map(Integer.valueOf): _*))
+          // the bucket is a function of the key: grouping by it too keeps
+          // each key's group whole and carries the column through
+          .groupBy((keyCols :+ "__bucket").map(col): _*)
           .agg(
             sum(col("n")).as("n"),
             sum(col("sum_cents")).as("sum_cents"),
             min(col("mn")).as("mn"),
             max(col("mx")).as("mx"),
-            max(col("__applied_batch")).as("__applied_batch"))
-          .withColumn("__bucket", bucketOf)
-        stageAndSwapBuckets(fs, statePath, merged, live, batchId)
-      } finally existing.foreach(_.unpersist())
+            max(col("__applied_batch")).as("__applied_batch")), live))
     } finally partial.unpersist()
   }
 
   /** Read the logical rollup state written by [[rollupUpsertPartitioned]]
-    * (drops the bucket and fence columns).
+    * (drops the bucket and fence columns), through the same footer-schema
+    * read as [[readLwwState]].
     */
   def readRollupState(spark: org.apache.spark.sql.SparkSession,
       statePath: String): DataFrame =
-    spark.read.parquet(statePath).drop("__bucket", "__applied_batch")
+    readLwwState(spark, statePath).drop("__applied_batch")
 
   /** True iff the spark-sql-kafka connector is on the classpath. */
   def kafkaConnectorAvailable: Boolean =
     scala.util.Try(Class.forName(
       "org.apache.spark.sql.kafka010.KafkaSourceProvider")).isSuccess
 
+  /** Bucket count of the Kafka ingest's LWW state — the live path's
+    * count. A constant: under another count every key rehashes, so a
+    * batch would merge against the wrong bucket and miss the key's row.
+    */
+  private val KafkaStateBuckets = 4
+
   /** S2/S3 + K2/K3 + K7 + T7: the production ingest wiring — Kafka source
-    * from earliest offsets, envelope/candle parse, checkpointed LWW upsert.
+    * from earliest offsets, envelope/candle parse, checkpointed LWW upsert
+    * into `KafkaStateBuckets` buckets.
     * The LWW sequence is the KAFKA OFFSET (per-partition total order, which
     * with per-product_id partition routing is a per-key total order) — NOT
     * the event time: a redelivered correction carries the same timestamp
@@ -523,7 +474,8 @@ object StreamIngest {
         col("offset").as("__seq")) // per-key LWW total order
     val parsed = parseTickerEnvelopes(raw, "json", keep = Seq("__seq"))
     parsed.writeStream
-      .foreachBatch(lwwUpsert(statePath, Seq("product_id", "time"), "__seq") _)
+      .foreachBatch(lwwUpsertPartitioned(statePath, Seq("product_id", "time"),
+        "__seq", KafkaStateBuckets) _)
       .option("checkpointLocation", checkpoint)
       .start()
   }

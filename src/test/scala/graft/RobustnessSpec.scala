@@ -230,6 +230,35 @@ class RobustnessSpec extends AnyFunSuite {
     CacheScope.release(spark)
   }
 
+  test("PII scrub: the anchored email scan counts and replaces exactly " +
+    "what the plain pattern does, and one 100k-char token stays linear") {
+    import graft.queries.CurationQueries.{emailRe, emailScanRe}
+    val plain = java.util.regex.Pattern.compile(emailRe)
+    val scan = java.util.regex.Pattern.compile(emailScanRe)
+    def count(p: java.util.regex.Pattern, t: String) = {
+      val m = p.matcher(t); var n = 0; while (m.find()) n += 1; n
+    }
+    val rnd = new scala.util.Random(11)
+    val alphabet = "ab1.-_%+@@ x!"
+    val adjacent = Seq("a@b.com1x@c.org", "a@b.coma@b.com", "x.y@z.io.w@v.io",
+      "a@b.cc@d.ee", "..a@b.cc", "@@a.bc", "a@b.c", "-a@b.cc_", "",
+      "text contact user7@example.com ref 55433")
+    val cases = adjacent ++ Iterator.fill(200000)(
+      Iterator.fill(rnd.nextInt(24))(alphabet(rnd.nextInt(alphabet.length)))
+        .mkString)
+    val diffs = cases.filter(t => count(plain, t) != count(scan, t) ||
+      plain.matcher(t).replaceAll("<EMAIL>") != scan.matcher(t).replaceAll("<EMAIL>"))
+    assert(diffs.isEmpty, s"patterns disagree on: ${diffs.take(5)}")
+
+    val dir = docsDir((1L, s"lead ${"x" * 100000} tail", "en", "a", 100010L))
+    val t0 = System.nanoTime()
+    val row = SparkEntry.queries("q_t_pii_scrub")(spark, dir).collect().head
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(row.getAs[Int]("n_emails") == 1)
+    assert(row.getAs[String]("scrubbed").endsWith("contact <EMAIL> ref <NUM>"))
+    assert(secs < 60.0, s"PII scrub over a 100k-char token took $secs s")
+  }
+
   test("healthReport over a zero-row metrics slice reports degraded with " +
     "null ratios, not an ANSI divide-by-zero (r12g class 3)") {
     val m = spark.createDataFrame(

@@ -20,6 +20,34 @@ class StreamingSpec extends AnyFunSuite {
       |{"type":"ticker","product_id":"BTC-USD","price":"50000.5","volume_24h":"123.25","time":"2024-03-01T09:59:58.500000Z"},
       |{"type":"ticker","product_id":"ETH-USD","price":"3000.25","volume_24h":"456.5"}]}]}""".stripMargin.replaceAll("\n", "")
 
+  /** Spark jobs submitted by each of `runs` calls `body(1)`..`body(runs)`,
+    * counted through a job-group listener.
+    */
+  private def jobsPerRun(group: String, runs: Int)(body: Int => Unit): Seq[Int] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    // the listener bus is asynchronous: drain it before reading the count
+    def drain(): Unit = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    sc.addSparkListener(listener)
+    try (1 to runs).map { r =>
+      drain()
+      jobs.set(0)
+      sc.setJobGroup(group, group)
+      try body(r) finally sc.clearJobGroup()
+      drain()
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("parseTickerEnvelopes: explode, cast, and missing-time patch") {
     val df = Seq(env1).toDF("payload")
     val out = StreamIngest.parseTickerEnvelopes(df, "payload")
@@ -51,8 +79,8 @@ class StreamingSpec extends AnyFunSuite {
     val ms = MemoryStream[(String, Long, Double, Long)] // (product, start, close, seq)
     val q = ms.toDF().toDF("product_id", "start_time", "close", "seq")
       .writeStream
-      .foreachBatch(StreamIngest.lwwUpsert(state,
-        Seq("product_id", "start_time"), "seq") _)
+      .foreachBatch(StreamIngest.lwwUpsertPartitioned(state,
+        Seq("product_id", "start_time"), "seq", 4) _)
       .option("checkpointLocation", tmpDir("lww-ckpt"))
       .start()
     ms.addData(("BTC", 100L, 1.0, 1L), ("BTC", 200L, 2.0, 2L))
@@ -61,7 +89,7 @@ class StreamingSpec extends AnyFunSuite {
     ms.addData(("BTC", 100L, 1.5, 3L), ("BTC", 200L, 2.0, 2L))
     q.processAllAvailable()
     q.stop()
-    val got = spark.read.parquet(state)
+    val got = StreamIngest.readLwwState(spark, state)
       .select("start_time", "close").as[(Long, Double)].collect().toMap
     assert(got == Map(100L -> 1.5, 200L -> 2.0))
   }
@@ -70,11 +98,15 @@ class StreamingSpec extends AnyFunSuite {
     val state = tmpDir("lww-replay") + "/t"
     val batch = Seq(("BTC", 1L, 10.0, 5L), ("ETH", 1L, 20.0, 6L))
       .toDF("product_id", "start_time", "close", "seq")
-    StreamIngest.lwwUpsert(state, Seq("product_id", "start_time"), "seq")(batch, 0L)
-    val before = spark.read.parquet(state).orderBy("product_id").collect().toSeq
+    StreamIngest.lwwUpsertPartitioned(state, Seq("product_id", "start_time"),
+      "seq", 4)(batch, 0L)
+    val before = StreamIngest.readLwwState(spark, state).orderBy("product_id")
+      .collect().toSeq
     // simulate checkpoint-recovery replay of the same batch
-    StreamIngest.lwwUpsert(state, Seq("product_id", "start_time"), "seq")(batch, 0L)
-    val after = spark.read.parquet(state).orderBy("product_id").collect().toSeq
+    StreamIngest.lwwUpsertPartitioned(state, Seq("product_id", "start_time"),
+      "seq", 4)(batch, 0L)
+    val after = StreamIngest.readLwwState(spark, state).orderBy("product_id")
+      .collect().toSeq
     assert(before == after && before.size == 2)
   }
 
@@ -131,7 +163,6 @@ class StreamingSpec extends AnyFunSuite {
       "runs a fixed number of Spark jobs") {
     import graft.serve.Serving
     import graft.ts.FeatureFrame
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val root = tmpDir("live-body")
     val prices = s"$root/prices"
     val candles = s"$root/candles"
@@ -179,29 +210,9 @@ class StreamingSpec extends AnyFunSuite {
     }
     // history past the 33-row warm-up and one 16-row window
     ingest((0 until 60).flatMap(candle), 0L)
-    val group = "live-body-jobs"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
+    val counts = jobsPerRun("live-body-jobs", 3) { b =>
+      ingest(candle(59 + b), b.toLong); serve()
     }
-    val sc = spark.sparkContext
-    // the listener bus is asynchronous: drain it before reading the count
-    def drain(): Unit = {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    }
-    sc.addSparkListener(listener)
-    val counts = try (1 to 3).map { b =>
-      drain()
-      jobs.set(0)
-      sc.setJobGroup(group, "live body")
-      try { ingest(candle(59 + b), b.toLong); serve() }
-      finally sc.clearJobGroup()
-      drain()
-      jobs.get
-    } finally sc.removeSparkListener(listener)
     assert(spark.read.parquet(s"$root/predictions").count() == 3 * 4)
     // parse 3, upsert 3, candles 2, features 5, predict 4, dual write 2;
     // job counts repeat exactly between runs, so any change is a real one
@@ -237,26 +248,6 @@ class StreamingSpec extends AnyFunSuite {
       .select("k", "v").as[(String, Double)].collect().toSet
     assert(got == Set(("a", 1.5), ("b", 2.0), ("c", 3.0)))
     assert(!fs.exists(retire) && !fs.exists(stage))
-  }
-
-  test("swap recovery: whole-state lwwUpsert restores a retired state " +
-      "dir and drops the orphaned tmp") {
-    import org.apache.hadoop.fs.Path
-    val state = tmpDir("lww-recover-all") + "/t"
-    val up = StreamIngest.lwwUpsert(state, Seq("k"), "seq") _
-    up(Seq(("a", 1.0, 1L), ("b", 2.0, 2L)).toDF("k", "v", "seq"), 0L)
-    val fs = new Path(state)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // crash window between rename(state -> retireall) and rename(tmp ->
-    // state): the whole state dir is aside, a stale tmp lingers
-    assert(fs.rename(new Path(state), new Path(state + "__retireall_1")))
-    fs.mkdirs(new Path(state + "__tmp_1"))
-    up(Seq(("b", 9.0, 3L)).toDF("k", "v", "seq"), 1L)
-    val got = spark.read.parquet(state)
-      .select("k", "v").as[(String, Double)].collect().toSet
-    assert(got == Set(("a", 1.0), ("b", 9.0)))
-    assert(!fs.exists(new Path(state + "__retireall_1")) &&
-      !fs.exists(new Path(state + "__tmp_1")))
   }
 
   test("partitioned rollup upsert: stream-maintained aggregates equal the " +
@@ -329,6 +320,24 @@ class StreamingSpec extends AnyFunSuite {
     val got = StreamIngest.readRollupState(spark, state)
       .select("k", "n").as[(String, Long)].collect().toSet
     assert(got == Set(("a", 1L)))
+  }
+
+  test("partitioned rollup upsert: a steady-state batch runs a fixed " +
+      "number of Spark jobs") {
+    val state = tmpDir("rollup-jobs") + "/t"
+    val up = StreamIngest.rollupUpsertPartitioned(state,
+      Seq("k"), "v", nBuckets = 4) _
+    def batch(b: Int) =
+      (0 until 24).map(i => (s"k${i % 8}", b + i * 0.25)).toDF("k", "v")
+    up(batch(0), 0L)
+    val counts = jobsPerRun("rollup-jobs", 3)(b => up(batch(b), b.toLong))
+    assert(StreamIngest.readRollupState(spark, state)
+      .select("k", "n").as[(String, Long)].collect().toSet ==
+      (0 until 8).map(i => (s"k$i", 4L * 3)).toSet)
+    // touched-bucket collect 3 (the partial's groupBy, its cache stage,
+    // the map-side collect), replay fence 2, staged merge write 2; job
+    // counts repeat exactly between runs, so any change is a real one
+    assert(counts.last == 7, s"jobs per batch: $counts")
   }
 
   test("observability: per-batch observed ingest metrics equal batch " +
@@ -1017,21 +1026,21 @@ class StreamingSpec extends AnyFunSuite {
           StreamIngest.parseCandleTs(col("start")).as("start_time"),
           col("close").cast("double").as("close"), col("seq"))
         .writeStream
-        .foreachBatch(StreamIngest.lwwUpsert(state,
-          Seq("product_id", "start_time"), "seq") _)
+        .foreachBatch(StreamIngest.lwwUpsertPartitioned(state,
+          Seq("product_id", "start_time"), "seq", 4) _)
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
     }
     run()
-    assert(spark.read.parquet(state).count() == 2)
+    assert(StreamIngest.readLwwState(spark, state).count() == 2)
     // second file arrives while "down"; restart from the same checkpoint
     writeFile("b2.json", Seq(
       """{"product_id":"BTC","start":"200","close":"2.5","seq":3}""",
       """{"product_id":"ETH","start":"100","close":"9.0","seq":4}"""))
     run()
-    val got = spark.read.parquet(state)
+    val got = StreamIngest.readLwwState(spark, state)
       .select("product_id", "close").as[(String, Double)].collect().toSet
     assert(got == Set(("BTC", 1.0), ("BTC", 2.5), ("ETH", 9.0)))
   }
@@ -1250,8 +1259,8 @@ class StreamingSpec extends AnyFunSuite {
     val state = tmpDir("t6-state") + "/t"
     val q = ms.toDF().toDF("product_id", "start_time", "close", "seq")
       .writeStream
-      .foreachBatch(StreamIngest.lwwUpsert(state,
-        Seq("product_id", "start_time"), "seq") _)
+      .foreachBatch(StreamIngest.lwwUpsertPartitioned(state,
+        Seq("product_id", "start_time"), "seq", 4) _)
       .option("checkpointLocation", tmpDir("t6-ckpt"))
       .trigger(Trigger.ProcessingTime("1 second"))
       .start()
@@ -1260,7 +1269,7 @@ class StreamingSpec extends AnyFunSuite {
     ms.addData(("BTC", 2L, 6.0, 2L))
     q.processAllAvailable()
     q.stop()
-    assert(spark.read.parquet(state).count() == 2)
+    assert(StreamIngest.readLwwState(spark, state).count() == 2)
   }
 
   test("rows-to-frame adapter builds a typed frame from driver rows (S7)") {
