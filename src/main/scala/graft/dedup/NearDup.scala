@@ -368,7 +368,20 @@ object NearDup {
     */
   def incrementalWinnow(corpus: DataFrame, delta: DataFrame, idCol: String,
       textCol: String, k: Int, w: Int, minShared: Long,
-      stopDf: Long): DataFrame = {
+      stopDf: Long): DataFrame =
+    winnowPipeline(corpus, delta, idCol, textCol, k, w, minShared, stopDf)(
+      identity)._3
+
+  /** The gate's pipeline, shared by [[incrementalWinnow]] and
+    * [[incrementalWinnowGated]]: returns the batch fingerprints, the stop
+    * list and the candidate pairs. `pin` wraps the batch fingerprints and
+    * the stop list: identity for the ungated form, a persist for the gated
+    * form, whose report reads both again.
+    */
+  private def winnowPipeline(corpus: DataFrame, delta: DataFrame,
+      idCol: String, textCol: String, k: Int, w: Int, minShared: Long,
+      stopDf: Long)(pin: DataFrame => DataFrame)
+      : (DataFrame, DataFrame, DataFrame) = {
     import graft.functions.TextHashes.winnow_fingerprints
     def fps(df: DataFrame) = df.select(col(idCol),
       explode(winnow_fingerprints(col(textCol), k, w)).as("fp"))
@@ -381,10 +394,10 @@ object NearDup {
     // its keep only when the reused subtree is NOT plan-identical
     // across references (docShingles' capped index, the CC pair list).
     val fpC = fps(corpus)
-    val fpD = fps(delta)
-    val hot = fpC.unionByName(fpD).groupBy("fp")
+    val fpD = pin(fps(delta))
+    val hot = pin(fpC.unionByName(fpD).groupBy("fp")
       .agg(count(lit(1)).as("df"))
-      .where(col("df") > stopDf).select("fp")
+      .where(col("df") > stopDf).select("fp"))
     val coldC = fpC.join(broadcast(hot), Seq("fp"), "left_anti")
     val coldD = fpD.join(broadcast(hot), Seq("fp"), "left_anti")
     val candCorpus = coldC.alias("c")
@@ -393,10 +406,11 @@ object NearDup {
     val candBatch = coldD.alias("a").join(coldD.alias("b"),
         col("a.fp") === col("b.fp") && col(s"a.$idCol") < col(s"b.$idCol"))
       .select(col(s"b.$idCol").as("new_doc"), col(s"a.$idCol").as("dup_of"))
-    candCorpus.unionByName(candBatch)
+    val pairs = candCorpus.unionByName(candBatch)
       .groupBy("new_doc", "dup_of")
       .agg(count(lit(1)).as("n_shared"))
       .where(col("n_shared") >= minShared)
+    (fpD, hot, pairs)
   }
 
   /** Per-batch winnow-gate suppression metrics (VERDICT r10 #2): what the
@@ -430,31 +444,11 @@ object NearDup {
   def incrementalWinnowGated(corpus: DataFrame, delta: DataFrame,
       idCol: String, textCol: String, k: Int, w: Int, minShared: Long,
       stopDf: Long): (DataFrame, WinnowGateMetrics) = {
-    import graft.functions.TextHashes.winnow_fingerprints
     import org.apache.spark.storage.StorageLevel
-    def fps(df: DataFrame) = df.select(col(idCol),
-      explode(winnow_fingerprints(col(textCol), k, w)).as("fp"))
-    val fpC = fps(corpus)
-    val fpD = fps(delta).persist(StorageLevel.MEMORY_AND_DISK)
-    val hot = fpC.unionByName(fpD).groupBy("fp")
-      .agg(count(lit(1)).as("df"))
-      .where(col("df") > stopDf).select("fp")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val (fpD, hot, pairs) = winnowPipeline(corpus, delta, idCol, textCol,
+      k, w, minShared, stopDf)(_.persist(StorageLevel.MEMORY_AND_DISK))
     try {
-      val coldC = fpC.join(broadcast(hot), Seq("fp"), "left_anti")
-      val coldD = fpD.join(broadcast(hot), Seq("fp"), "left_anti")
-      val candCorpus = coldC.alias("c")
-        .join(broadcast(coldD).alias("nw"), col("c.fp") === col("nw.fp"))
-        .select(col(s"nw.$idCol").as("new_doc"),
-          col(s"c.$idCol").as("dup_of"))
-      val candBatch = coldD.alias("a").join(coldD.alias("b"),
-          col("a.fp") === col("b.fp") && col(s"a.$idCol") < col(s"b.$idCol"))
-        .select(col(s"b.$idCol").as("new_doc"), col(s"a.$idCol").as("dup_of"))
-      val out = graft.CacheScope.retain(
-        candCorpus.unionByName(candBatch)
-          .groupBy("new_doc", "dup_of")
-          .agg(count(lit(1)).as("n_shared"))
-          .where(col("n_shared") >= minShared))
+      val out = graft.CacheScope.retain(pairs)
       val pairsMined = out.count()
       val r = fpD
         .join(broadcast(hot.withColumn("__stop", lit(1L))), Seq("fp"), "left")

@@ -222,17 +222,7 @@ object Relational extends QueryPack {
       doc = "SURVEY §2.4 A2: exact distinct; partial-agg dedup map-side before shuffle"),
 
     // ---- per-key data-availability summary (reference A3) ----
-    Query(
-      "q_summary_availability",
-      (s, dir) =>
-        Tables(s, dir, "events")
-          .groupBy("event_type")
-          .agg(min(col("ts")).as("min_ts"), max(col("ts")).as("max_ts"),
-               count(lit(1)).as("n"))
-          .orderBy("event_type"),
-      Some("""SELECT event_type, MIN(ts) AS min_ts, MAX(ts) AS max_ts, COUNT(*) AS n
-             |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
-      doc = "SURVEY §2.4 A3: MIN/MAX/COUNT availability summary"),
+    availability,
 
     // ---- top-k (TakeOrderedAndProject) ----
     Query(
@@ -513,108 +503,10 @@ object Relational extends QueryPack {
         "self-joins; the conversion report an events warehouse serves"),
 
     // ---- SCD Type-2 dimension build from a change log ----
-    Query(
-      "q_r_scd2",
-      (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        // Slowly-changing-dimension (type 2) build: collapse each user's
-        // event stream to the intervals over which the tracked attribute
-        // (event_type) held, with valid_from/valid_to/version/is_current.
-        // Change detection (lag) and interval close (lead) + versioning
-        // (row_number) all ride ONE user_id partition — one shuffle, one
-        // sort, shared by both windows (the change filter preserves the
-        // sort, so no re-sort for the second window). Ties broken by
-        // event_id for a deterministic history.
-        val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-        val chg = Tables(s, dir, "events")
-          .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-          .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-          .where(col("prev_type").isNull || col("prev_type") =!= col("event_type"))
-        chg.select(
-          col("user_id"), col("event_type"),
-          col("ts").as("valid_from"),
-          lead(col("ts"), 1).over(w).as("valid_to"),
-          row_number().over(w).cast("long").as("version"),
-          lead(col("ts"), 1).over(w).isNull.as("is_current"))
-      },
-      Some("""WITH o AS (
-             |  SELECT user_id, ts, event_id, event_type,
-             |    lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-             |      AS prev_type
-             |  FROM events),
-             |c AS (
-             |  SELECT user_id, ts, event_id, event_type FROM o
-             |  WHERE prev_type IS NULL OR prev_type <> event_type)
-             |SELECT user_id, event_type, ts AS valid_from,
-             |  lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to,
-             |  row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS version,
-             |  lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-             |    AS is_current
-             |FROM c""".stripMargin),
-      doc = "SCD Type-2 dimension build: per-key attribute-change intervals " +
-        "(valid_from/valid_to/version/is_current) from the raw event log — " +
-        "lag change-detect, lead interval-close, row_number versioning all " +
-        "share ONE key-partitioned sort (one shuffle total); the dimension-" +
-        "history op every warehouse load needs, output O(#changes) not O(#events)"),
+    scd2,
 
     // ---- batch MERGE/upsert: delta batch into accumulated snapshot ----
-    Query(
-      "q_r_merge_upsert",
-      (s, dir) => {
-        // MERGE a bounded ingest batch (delta window) into the accumulated
-        // per-(user, event_type) latest-state snapshot: matched -> update
-        // (LWW), delta-only -> insert, snapshot-only -> carryover. ONE
-        // scan, ONE shuffle: both sides collapse in the same groupBy via
-        // conditional struct-max (argmax by (ts, event_id) — field order
-        // makes the max the latest row, event_id the deterministic tie-
-        // break), then a row-wise coalesce picks the winning row whole.
-        // The naive form is two self-reads + a full-outer join (three
-        // shuffles); at 100 TB the single-pass shape also never carries
-        // more than one struct per key per side through the exchange.
-        val t1 = lit("2024-01-04 00:00:00").cast("timestamp")
-        val t2 = lit("2024-01-06 00:00:00").cast("timestamp")
-        val st = struct(col("ts"), col("event_id"), col("value"))
-        val m = Tables(s, dir, "events")
-          .where(col("ts") < t2)
-          .groupBy(col("user_id"), col("event_type"))
-          .agg(
-            max(when(col("ts") < t1, st)).as("b"),
-            max(when(col("ts") >= t1, st)).as("d"))
-        m.withColumn("w", coalesce(col("d"), col("b")))
-          .select(
-            col("user_id"), col("event_type"),
-            col("w.value").as("last_value"),
-            col("w.ts").as("last_ts"),
-            when(col("d").isNull, lit("carryover"))
-              .when(col("b").isNull, lit("insert"))
-              .otherwise(lit("update")).as("change_type"))
-      },
-      Some("""WITH r AS (
-             |  SELECT user_id, event_type, ts, value,
-             |    (ts < TIMESTAMP '2024-01-04 00:00:00') AS is_base,
-             |    row_number() OVER (
-             |      PARTITION BY user_id, event_type,
-             |        (ts < TIMESTAMP '2024-01-04 00:00:00')
-             |      ORDER BY ts DESC, event_id DESC) AS rn
-             |  FROM events WHERE ts < TIMESTAMP '2024-01-06 00:00:00'),
-             |b AS (SELECT * FROM r WHERE rn = 1 AND is_base),
-             |d AS (SELECT * FROM r WHERE rn = 1 AND NOT is_base)
-             |SELECT COALESCE(d.user_id, b.user_id) AS user_id,
-             |  COALESCE(d.event_type, b.event_type) AS event_type,
-             |  CASE WHEN d.user_id IS NOT NULL THEN d.value ELSE b.value END
-             |    AS last_value,
-             |  CASE WHEN d.user_id IS NOT NULL THEN d.ts ELSE b.ts END AS last_ts,
-             |  CASE WHEN d.user_id IS NULL THEN 'carryover'
-             |       WHEN b.user_id IS NULL THEN 'insert'
-             |       ELSE 'update' END AS change_type
-             |FROM d FULL JOIN b
-             |  ON d.user_id = b.user_id AND d.event_type = b.event_type""".stripMargin),
-      doc = "batch MERGE/upsert (LWW): one ingest-batch delta merged into the " +
-        "accumulated per-key latest-state snapshot, rows tagged insert/update/" +
-        "carryover — single scan, single shuffle via conditional struct-max " +
-        "argmax per side + row-wise coalesce, vs the naive 3-shuffle " +
-        "read-twice-full-outer-join; the incremental-table-maintenance op " +
-        "behind every warehouse MERGE INTO"),
+    mergeUpsert,
 
     // ---- referential-integrity audit (FK orphan scan) ----
     Query(
@@ -688,376 +580,22 @@ object Relational extends QueryPack {
         "pre-publish data-quality gate a warehouse load runs"),
 
     // ---- rolling active users (DAU + trailing-7-day WAU) ----
-    Query(
-      "q_a_active_users",
-      (s, dir) => {
-        // DAU and trailing-7-day WAU per day. Rolling COUNT(DISTINCT) has
-        // no mergeable partial state, so the scale shape is: collapse to
-        // distinct (day, user) FIRST (the one big shuffle, combiner-
-        // friendly), then explode each presence row into the ≤7 target
-        // days it makes active — bounded ×7 fanout on the already-
-        // collapsed frame — and count rows per target day (rows are
-        // (user, target) distinct by construction... a user present on 2
-        // source days can hit one target twice, so a second distinct on
-        // (user, target) guards it). Never a per-day self-join, never a
-        // window buffering user sets.
-        // r14 optimization, second cut (guide §2.4): ONE linear chain.
-        // The first r14 cut retained the distinct collapse for its three
-        // consumers (dau, max-day, ×7 explode) and joined their results;
-        // this folds all three into the explode chain itself — each
-        // (user, day) coverage row carries a presence flag (off = 0), so
-        // dau = Σ present and wau7 = the group count fall out of the SAME
-        // day-level aggregate. `dau > 0` keeps exactly the days the old
-        // dau-side inner join kept (a day is in dau iff ≥1 user present),
-        // and the old max-day guard was redundant after that join (every
-        // activity day is ≤ the max activity day). 2 joins + 1 agg branch
-        // + the cache round-trip → 0 joins, one pass, no retained frame.
-        Tables(s, dir, "events")
-          .select(to_date(col("ts")).as("d"), col("user_id")).distinct()
-          .select(col("user_id"),
-            explode(sequence(lit(0), lit(6))).as("off"), col("d"))
-          .groupBy(col("user_id"), date_add(col("d"), col("off")).as("day"))
-          .agg(max(when(col("off") === 0, 1).otherwise(0)).as("present"))
-          .groupBy("day")
-          .agg(sum(col("present")).as("dau"), count(lit(1)).as("wau7"))
-          .where(col("dau") > 0)
-          // date32 parquet reads back as python date objects while the
-          // DuckDB side lands as datetime64 — emit TIMESTAMP on both
-          .select(col("day").cast("timestamp").as("day"), col("dau"),
-            col("wau7"))
-      },
-      Some("""WITH au AS (
-             |  SELECT DISTINCT CAST(ts AS DATE) AS d, user_id FROM events),
-             |dau AS (SELECT d, COUNT(*) AS dau FROM au GROUP BY d),
-             |cov AS (
-             |  SELECT DISTINCT user_id, d + CAST(off AS INTEGER) AS day
-             |  FROM au, (SELECT unnest(range(7)) AS off) offs),
-             |wau AS (
-             |  SELECT day, COUNT(*) AS wau7 FROM cov
-             |  WHERE day <= (SELECT MAX(d) FROM au) GROUP BY day)
-             |SELECT CAST(dau.d AS TIMESTAMP) AS day, dau.dau, wau.wau7
-             |FROM dau JOIN wau ON dau.d = wau.day""".stripMargin),
-      doc = "rolling active users: DAU + trailing-7-day WAU per day — " +
-        "collapse to distinct (day, user) first, then a bounded x7 explode " +
-        "of presence rows + per-day count, instead of a rolling " +
-        "COUNT(DISTINCT) window (unmergeable state) or per-day self-joins; " +
-        "the engagement report every events warehouse serves"),
+    activeUsers,
 
     // ---- retention cohort matrix (first-seen week x week offset) ----
-    Query(
-      "q_a_retention_cohorts",
-      (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        // Classic retention triangle: cohort = user's first-seen ISO week;
-        // for each (cohort_week, week_offset) the distinct users still
-        // active, plus the rate vs cohort size. Collapse to distinct
-        // (user, week) first; the cohort week is a min-window over the
-        // SAME user_id partition (no second shuffle vs the join-back
-        // form); after that each (user, week) row maps to exactly one
-        // (cohort, offset) cell so count(*) IS count-distinct-users. The
-        // cohort size rides a cohort-partitioned window instead of a
-        // self-join on the offset-0 row.
-        val uw = Tables(s, dir, "events")
-          .select(col("user_id"),
-            to_date(date_trunc("week", col("ts"))).as("w")).distinct()
-        val cw = uw.withColumn("cohort_week",
-          min(col("w")).over(Window.partitionBy("user_id")))
-        val cells = cw
-          .select(col("cohort_week"),
-            (datediff(col("w"), col("cohort_week")) / lit(7)).cast("long")
-              .as("week_offset"))
-          .groupBy("cohort_week", "week_offset")
-          .agg(count(lit(1)).as("n_active"))
-        cells
-          .withColumn("cohort_size",
-            max(when(col("week_offset") === 0, col("n_active")))
-              .over(Window.partitionBy("cohort_week")))
-          .select(col("cohort_week").cast("timestamp").as("cohort_week"),
-            col("week_offset"), col("n_active"), col("cohort_size"),
-            (round(col("n_active") / col("cohort_size"), 4) + lit(0.0))
-              .as("retention"))
-      },
-      Some("""WITH uw AS (
-             |  SELECT DISTINCT user_id, date_trunc('week', ts) AS w FROM events),
-             |cw AS (
-             |  SELECT user_id, w,
-             |    MIN(w) OVER (PARTITION BY user_id) AS cohort_week
-             |  FROM uw),
-             |cells AS (
-             |  SELECT cohort_week,
-             |    CAST(date_diff('day', cohort_week, w) / 7 AS BIGINT)
-             |      AS week_offset,
-             |    COUNT(*) AS n_active
-             |  FROM cw GROUP BY 1, 2)
-             |SELECT CAST(cohort_week AS TIMESTAMP) AS cohort_week,
-             |  week_offset, n_active,
-             |  MAX(CASE WHEN week_offset = 0 THEN n_active END)
-             |    OVER (PARTITION BY cohort_week) AS cohort_size,
-             |  ROUND(n_active * 1.0 /
-             |    MAX(CASE WHEN week_offset = 0 THEN n_active END)
-             |      OVER (PARTITION BY cohort_week), 4) + 0.0 AS retention
-             |FROM cells""".stripMargin),
-      doc = "retention cohort triangle (first-seen week x week offset, " +
-        "distinct active users + rate vs cohort size): distinct (user, week) " +
-        "collapse, cohort via min-window on the SAME user partition (no " +
-        "join-back), cohort size via a cohort-partitioned window (no offset-0 " +
-        "self-join) — two shuffles total for the product-analytics staple"),
+    retentionCohorts,
 
     // ---- last-touch revenue attribution ----
-    Query(
-      "q_a_attribution",
-      (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        // Last-touch attribution: each purchase's value is credited to
-        // the last non-purchase event type the user produced before it
-        // (the "channel"); purchases with no prior touch go to
-        // '(direct)'. ONE user_id-partitioned window (running last-
-        // ignoreNulls — O(1) state per row, no per-purchase self-join
-        // back into the history), then a ≤#channels aggregate. Revenue
-        // sums run in DECIMAL: exact and order-independent under Spark's
-        // varying partial-agg order (the VWAP discipline); the share
-        // denominator rides a whole-frame window over the tiny result.
-        val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val rev = Tables(s, dir, "events")
-          .select(col("user_id"), col("ts"), col("event_id"),
-            col("event_type"), col("value"))
-          .withColumn("channel",
-            last(when(col("event_type") =!= "purchase", col("event_type")),
-              ignoreNulls = true).over(w))
-          .where(col("event_type") === "purchase")
-          .groupBy(coalesce(col("channel"), lit("(direct)")).as("channel"))
-          .agg(count(lit(1)).as("n_purchases"),
-            // ledger guard: out-of-DECIMAL-range values are
-            // domain-invalid -> null (see q_a_vwap; HostileInputProbe)
-            sum(when(abs(col("value")) < lit(1e24), col("value"))
-              .cast(DecimalType(28, 4))).cast("double")
-              .as("revenue"))
-        // limit(1024) is the channel-domain contract made VISIBLE TO THE
-        // PLAN: channels come from the event_type enum (+ '(direct)'), a
-        // handful of values, so the limit is a no-op on data — but it
-        // puts a row-bounding node under the whole-frame share window,
-        // so PlanShapeSpec's global-window sweep proves the bound
-        // instead of taking it on faith (r9 verdict item 5).
-        rev.limit(1024).withColumn("revenue_share",
-          (round(col("revenue") /
-            sum(col("revenue")).over(Window.partitionBy()), 6) + lit(0.0)))
-      },
-      Some("""WITH a AS (
-             |  SELECT user_id, ts, event_id, event_type, value,
-             |    last_value(CASE WHEN event_type <> 'purchase'
-             |        THEN event_type END IGNORE NULLS)
-             |      OVER (PARTITION BY user_id ORDER BY ts, event_id
-             |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-             |      AS channel
-             |  FROM events),
-             |r AS (
-             |  SELECT COALESCE(channel, '(direct)') AS channel,
-             |    COUNT(*) AS n_purchases,
-             |    CAST(SUM(CAST(CASE WHEN ABS(value) < 1e24 THEN value END
-             |      AS DECIMAL(28,4))) AS DOUBLE) AS revenue
-             |  FROM a WHERE event_type = 'purchase' GROUP BY 1)
-             |SELECT channel, n_purchases, revenue,
-             |  ROUND(revenue / SUM(revenue) OVER (), 6) + 0.0 AS revenue_share
-             |FROM r""".stripMargin),
-      doc = "last-touch revenue attribution (purchase value credited to the " +
-        "user's most recent prior non-purchase event type): one running " +
-        "last-ignoreNulls window on the user partition — O(1) state per row, " +
-        "no per-purchase history self-join — then a <=#channels DECIMAL " +
-        "aggregate (order-independent sums); the marketing-analytics staple"),
+    attribution,
 
     // ---- ABC / Pareto revenue classification ----
-    Query(
-      "q_a_abc_pareto",
-      (s, dir) => {
-        // Pareto/ABC analysis: customers ranked by revenue, classified by
-        // cumulative revenue share (A ≤ 80 %, B ≤ 95 %, C rest). The
-        // running total over the per-customer aggregate is a DISTRIBUTED
-        // prefix sum (ops/PrefixSum: range-partition on the rank order,
-        // one streaming pass per tile, O(#partitions) offsets broadcast
-        // back) — a zero-partition `SUM OVER (ORDER BY)` window here
-        // would move every customer of a 100 TB order book to ONE task
-        // (the PlanShapeSpec global-window sweep pins that out). Sums are
-        // DECIMAL (exact, order-independent) and decimal addition is
-        // associative, so offset+within is bit-equal to the
-        // single-partition window's cumsum; the share division happens in
-        // DOUBLE on identical exact inputs, so both engines compare
-        // identical values at the class cuts. The grand total falls out
-        // of the same offsets fold — no second pass, no SUM() OVER ().
-        val rev = Tables(s, dir, "orders")
-          .groupBy(col("o_custkey"))
-          .agg(sum(dec2(col("o_totalprice"))).as("rev"))
-        val (cum, total) = graft.ops.PrefixSum.runningDecimalSum(
-          rev, "rev", "cum", Seq(col("rev").desc, col("o_custkey")))
-        val classed = cum
-          .withColumn("share",
-            col("cum").cast("double") / lit(total).cast("double"))
-          .withColumn("abc_class",
-            when(col("share") <= 0.80, "A")
-              .when(col("share") <= 0.95, "B").otherwise("C"))
-        classed.groupBy("abc_class")
-          .agg(count(lit(1)).as("n_customers"),
-            sum(col("rev")).cast("double").as("class_revenue"),
-            (round(max(col("share")), 6) + lit(0.0)).as("cum_share_max"))
-          .orderBy("abc_class")
-      },
-      Some("""WITH rev AS (
-             |  SELECT o_custkey,
-             |    SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
-             |  FROM orders GROUP BY o_custkey),
-             |classed AS (
-             |  SELECT o_custkey, rev,
-             |    CAST(SUM(rev) OVER (ORDER BY rev DESC, o_custkey
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-             |      / CAST(SUM(rev) OVER () AS DOUBLE) AS share
-             |  FROM rev),
-             |tagged AS (
-             |  SELECT *, CASE WHEN share <= 0.80 THEN 'A'
-             |                 WHEN share <= 0.95 THEN 'B'
-             |                 ELSE 'C' END AS abc_class
-             |  FROM classed)
-             |SELECT abc_class, COUNT(*) AS n_customers,
-             |  CAST(SUM(rev) AS DOUBLE) AS class_revenue,
-             |  ROUND(MAX(share), 6) + 0.0 AS cum_share_max
-             |FROM tagged GROUP BY abc_class ORDER BY abc_class""".stripMargin),
-      doc = "ABC/Pareto revenue classification (A <= 80 %, B <= 95 % " +
-        "cumulative share): the global-ordered window runs over the per-" +
-        "customer AGGREGATE (O(#customers) after one partial-agg shuffle), " +
-        "never the fact rows; DECIMAL-exact sums make the double share " +
-        "comparisons engine-identical at the class cuts"),
+    abcPareto,
 
     // ---- conversion latency (first view -> first purchase) ----
-    Query(
-      "q_a_time_to_convert",
-      (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        // Time-to-convert report: per user, latency from first view to
-        // first purchase AT/AFTER it (the funnel dependency), then exact
-        // latency percentiles + conversion counts. Same one-shuffle
-        // stacked-window shape as q_a_funnel_steps — the whole user
-        // history folds on one user_id partition, the percentile runs
-        // over the O(#converted-users) latency frame.
-        val w = Window.partitionBy("user_id")
-        val perUser = Tables(s, dir, "events")
-          .select(col("user_id"), col("ts"), col("event_type"))
-          .withColumn("tv",
-            min(when(col("event_type") === "view", col("ts"))).over(w))
-          .groupBy("user_id")
-          .agg(first("tv").as("tv"),
-            min(when(col("event_type") === "purchase"
-              && col("ts") >= col("tv"), col("ts"))).as("tp"))
-        perUser
-          .select(col("tv"), col("tp"),
-            (unix_timestamp(col("tp")) - unix_timestamp(col("tv")))
-              .as("lat_s"))
-          .agg(
-            count(lit(1)).as("n_users"),
-            sum(col("tv").isNotNull.cast("long")).as("n_viewed"),
-            sum(col("lat_s").isNotNull.cast("long")).as("n_converted"),
-            (round(expr("percentile(lat_s, 0.5)"), 4) + lit(0.0))
-              .as("p50_latency_s"),
-            (round(expr("percentile(lat_s, 0.9)"), 4) + lit(0.0))
-              .as("p90_latency_s"),
-            (round(max(col("lat_s")), 4) + lit(0.0)).as("max_latency_s"))
-      },
-      Some("""WITH s AS (
-             |  SELECT user_id, ts, event_type,
-             |    MIN(CASE WHEN event_type = 'view' THEN ts END)
-             |      OVER (PARTITION BY user_id) AS tv
-             |  FROM events),
-             |u AS (
-             |  SELECT user_id, ANY_VALUE(tv) AS tv,
-             |    MIN(CASE WHEN event_type = 'purchase' AND ts >= tv THEN ts END)
-             |      AS tp
-             |  FROM s GROUP BY user_id),
-             |l AS (
-             |  SELECT tv, tp,
-             |    CAST(floor(epoch(tp)) AS BIGINT)
-             |      - CAST(floor(epoch(tv)) AS BIGINT) AS lat_s
-             |  FROM u)
-             |SELECT COUNT(*) AS n_users,
-             |  CAST(SUM(CASE WHEN tv IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-             |    AS n_viewed,
-             |  CAST(SUM(CASE WHEN lat_s IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-             |    AS n_converted,
-             |  ROUND(quantile_cont(lat_s, 0.5), 4) + 0.0 AS p50_latency_s,
-             |  ROUND(quantile_cont(lat_s, 0.9), 4) + 0.0 AS p90_latency_s,
-             |  ROUND(MAX(lat_s), 4) + 0.0 AS max_latency_s
-             |FROM l""".stripMargin),
-      doc = "conversion-latency report (first view -> first qualifying " +
-        "purchase): stacked same-partition windows fold each user's history " +
-        "in ONE user_id shuffle (the funnel shape), exact percentiles run " +
-        "over the O(#converted) latency frame — time-to-convert is the " +
-        "metric growth teams pair with the funnel"),
+    timeToConvert,
 
     // ---- incremental materialized-rollup maintenance ----
-    Query(
-      "q_r_incremental_rollup",
-      (s, dir) => {
-        // Materialized-view maintenance with decomposable aggregates: a
-        // standing per-(event_type, hour-of-day) rollup (count / exact
-        // DECIMAL sum / min / max over everything before the cutoff) is
-        // REFRESHED by merging the delta batch's partial aggregates —
-        // counts and sums add, mins min, maxes max — instead of
-        // re-scanning history. The plan stages the two partial frames
-        // explicitly (groupBy side+key, then merge by key), which is
-        // exactly what a nightly refresh persists: level-1 rows ARE the
-        // standing table; refresh cost is O(delta scan) + O(#keys) merge
-        // at any history size. The oracle recomputes from the FULL table
-        // in one pass, so the driver's hash equality is the maintenance
-        // contract itself: merge(standing, delta) == recompute(all).
-        // COUNT(DISTINCT ...) is deliberately absent — it has no exact
-        // mergeable partial state; the sketch family (HLL: q_a2 twin,
-        // streaming DAU) is the incremental answer for distincts.
-        val cutoff = lit("2024-01-04 00:00:00").cast("timestamp")
-        val partials = Tables(s, dir, "events")
-          .groupBy((col("ts") < cutoff).as("is_base"), col("event_type"),
-            hour(col("ts")).as("hod"))
-          .agg(
-            count(lit(1)).as("n"),
-            // ledger guard (see q_a_vwap): out-of-range -> null, both engines
-            sum(when(abs(col("value")) < lit(1e16), col("value"))
-              .cast("decimal(18,2)")).as("sv"),
-            // guarded-row ledger (ADVICE r12): min/max still see extreme
-            // values the sum excludes — count the exclusions so a row
-            // like (max=1.7e308, sum-without-it) is self-explaining, and
-            // the report is internally consistent. Mergeable (sum of
-            // counts), so the incremental contract is unchanged.
-            count(when(col("value").isNotNull &&
-              !(abs(col("value")) < lit(1e16)), lit(1))).as("nx"),
-            min(col("value")).as("mn"),
-            max(col("value")).as("mx"))
-        partials
-          .groupBy("event_type", "hod")
-          .agg(
-            count(lit(1)).as("n_partials"),
-            sum(col("n")).as("n_events"),
-            round(sum(col("sv")).cast("double"), 2).as("sum_value"),
-            sum(col("nx")).as("n_sum_excluded"),
-            min(col("mn")).as("min_value"),
-            max(col("mx")).as("max_value"))
-          .orderBy("event_type", "hod")
-      },
-      Some("""SELECT event_type, CAST(hour(ts) AS INT) AS hod,
-             |  COUNT(DISTINCT (ts < TIMESTAMP '2024-01-04 00:00:00'))
-             |    AS n_partials,
-             |  COUNT(*) AS n_events,
-             |  ROUND(CAST(SUM(CAST(CASE WHEN ABS(value) < 1e16 THEN value END
-             |    AS DECIMAL(18,2))) AS DOUBLE), 2)
-             |    + 0.0 AS sum_value,
-             |  COUNT(CASE WHEN value IS NOT NULL
-             |    AND NOT (ABS(value) < 1e16) THEN 1 END) AS n_sum_excluded,
-             |  MIN(value) AS min_value, MAX(value) AS max_value
-             |FROM events GROUP BY 1, 2 ORDER BY event_type, hod""".stripMargin),
-      doc = "incremental materialized-rollup maintenance: the standing " +
-        "per-(event_type, hour) rollup refreshed by MERGING the delta's " +
-        "partial aggregates (counts/sums add, mins min, maxes max — " +
-        "DECIMAL-exact so merge order can't drift the sum) while the " +
-        "oracle recomputes from the full table — hash equality IS the " +
-        "merge==recompute contract; refresh cost O(delta)+O(#keys), " +
-        "never O(history); distincts are excluded by design (no exact " +
-        "mergeable partial) — the HLL sketch family is their incremental " +
-        "path"),
+    incrementalRollup,
 
     // ---- bucketed layout: the SURVEY §4 sort-elimination row, done ----
     Query(
@@ -1130,4 +668,487 @@ object Relational extends QueryPack {
         "time; tier cuts and revenue use DECIMAL-exact sums (the VWAP " +
         "discipline) so boundary users can't flip between engines")
   )
+
+  // ---- queries SqlQueries also serves under a q_sql_* name: one value,
+  // body and oracle, registered by both packs ----
+
+  private[queries] val availability: Query = Query(
+    "q_summary_availability",
+    (s, dir) =>
+      Tables(s, dir, "events")
+        .groupBy("event_type")
+        .agg(min(col("ts")).as("min_ts"), max(col("ts")).as("max_ts"),
+             count(lit(1)).as("n"))
+        .orderBy("event_type"),
+    Some("""SELECT event_type, MIN(ts) AS min_ts, MAX(ts) AS max_ts, COUNT(*) AS n
+           |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    doc = "SURVEY §2.4 A3: MIN/MAX/COUNT availability summary")
+
+  private[queries] val scd2: Query = Query(
+    "q_r_scd2",
+    (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
+      // Slowly-changing-dimension (type 2) build: collapse each user's
+      // event stream to the intervals over which the tracked attribute
+      // (event_type) held, with valid_from/valid_to/version/is_current.
+      // Change detection (lag) and interval close (lead) + versioning
+      // (row_number) all ride ONE user_id partition — one shuffle, one
+      // sort, shared by both windows (the change filter preserves the
+      // sort, so no re-sort for the second window). Ties broken by
+      // event_id for a deterministic history.
+      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+      val chg = Tables(s, dir, "events")
+        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+        .withColumn("prev_type", lag(col("event_type"), 1).over(w))
+        .where(col("prev_type").isNull || col("prev_type") =!= col("event_type"))
+      chg.select(
+        col("user_id"), col("event_type"),
+        col("ts").as("valid_from"),
+        lead(col("ts"), 1).over(w).as("valid_to"),
+        row_number().over(w).cast("long").as("version"),
+        lead(col("ts"), 1).over(w).isNull.as("is_current"))
+    },
+    Some("""WITH o AS (
+           |  SELECT user_id, ts, event_id, event_type,
+           |    lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+           |      AS prev_type
+           |  FROM events),
+           |c AS (
+           |  SELECT user_id, ts, event_id, event_type FROM o
+           |  WHERE prev_type IS NULL OR prev_type <> event_type)
+           |SELECT user_id, event_type, ts AS valid_from,
+           |  lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to,
+           |  row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS version,
+           |  lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
+           |    AS is_current
+           |FROM c""".stripMargin),
+    doc = "SCD Type-2 dimension build: per-key attribute-change intervals " +
+      "(valid_from/valid_to/version/is_current) from the raw event log — " +
+      "lag change-detect, lead interval-close, row_number versioning all " +
+      "share ONE key-partitioned sort (one shuffle total); the dimension-" +
+      "history op every warehouse load needs, output O(#changes) not O(#events)")
+
+  private[queries] val mergeUpsert: Query = Query(
+    "q_r_merge_upsert",
+    (s, dir) => {
+      // MERGE a bounded ingest batch (delta window) into the accumulated
+      // per-(user, event_type) latest-state snapshot: matched -> update
+      // (LWW), delta-only -> insert, snapshot-only -> carryover. ONE
+      // scan, ONE shuffle: both sides collapse in the same groupBy via
+      // conditional struct-max (argmax by (ts, event_id) — field order
+      // makes the max the latest row, event_id the deterministic tie-
+      // break), then a row-wise coalesce picks the winning row whole.
+      // The naive form is two self-reads + a full-outer join (three
+      // shuffles); at 100 TB the single-pass shape also never carries
+      // more than one struct per key per side through the exchange.
+      val t1 = lit("2024-01-04 00:00:00").cast("timestamp")
+      val t2 = lit("2024-01-06 00:00:00").cast("timestamp")
+      val st = struct(col("ts"), col("event_id"), col("value"))
+      val m = Tables(s, dir, "events")
+        .where(col("ts") < t2)
+        .groupBy(col("user_id"), col("event_type"))
+        .agg(
+          max(when(col("ts") < t1, st)).as("b"),
+          max(when(col("ts") >= t1, st)).as("d"))
+      m.withColumn("w", coalesce(col("d"), col("b")))
+        .select(
+          col("user_id"), col("event_type"),
+          col("w.value").as("last_value"),
+          col("w.ts").as("last_ts"),
+          when(col("d").isNull, lit("carryover"))
+            .when(col("b").isNull, lit("insert"))
+            .otherwise(lit("update")).as("change_type"))
+    },
+    Some("""WITH r AS (
+           |  SELECT user_id, event_type, ts, value,
+           |    (ts < TIMESTAMP '2024-01-04 00:00:00') AS is_base,
+           |    row_number() OVER (
+           |      PARTITION BY user_id, event_type,
+           |        (ts < TIMESTAMP '2024-01-04 00:00:00')
+           |      ORDER BY ts DESC, event_id DESC) AS rn
+           |  FROM events WHERE ts < TIMESTAMP '2024-01-06 00:00:00'),
+           |b AS (SELECT * FROM r WHERE rn = 1 AND is_base),
+           |d AS (SELECT * FROM r WHERE rn = 1 AND NOT is_base)
+           |SELECT COALESCE(d.user_id, b.user_id) AS user_id,
+           |  COALESCE(d.event_type, b.event_type) AS event_type,
+           |  CASE WHEN d.user_id IS NOT NULL THEN d.value ELSE b.value END
+           |    AS last_value,
+           |  CASE WHEN d.user_id IS NOT NULL THEN d.ts ELSE b.ts END AS last_ts,
+           |  CASE WHEN d.user_id IS NULL THEN 'carryover'
+           |       WHEN b.user_id IS NULL THEN 'insert'
+           |       ELSE 'update' END AS change_type
+           |FROM d FULL JOIN b
+           |  ON d.user_id = b.user_id AND d.event_type = b.event_type""".stripMargin),
+    doc = "batch MERGE/upsert (LWW): one ingest-batch delta merged into the " +
+      "accumulated per-key latest-state snapshot, rows tagged insert/update/" +
+      "carryover — single scan, single shuffle via conditional struct-max " +
+      "argmax per side + row-wise coalesce, vs the naive 3-shuffle " +
+      "read-twice-full-outer-join; the incremental-table-maintenance op " +
+      "behind every warehouse MERGE INTO")
+
+  private[queries] val activeUsers: Query = Query(
+    "q_a_active_users",
+    (s, dir) => {
+      // DAU and trailing-7-day WAU per day. Rolling COUNT(DISTINCT) has
+      // no mergeable partial state, so the scale shape is: collapse to
+      // distinct (day, user) FIRST (the one big shuffle, combiner-
+      // friendly), then explode each presence row into the ≤7 target
+      // days it makes active — bounded ×7 fanout on the already-
+      // collapsed frame — and count rows per target day (rows are
+      // (user, target) distinct by construction... a user present on 2
+      // source days can hit one target twice, so a second distinct on
+      // (user, target) guards it). Never a per-day self-join, never a
+      // window buffering user sets.
+      // r14 optimization, second cut (guide §2.4): ONE linear chain.
+      // The first r14 cut retained the distinct collapse for its three
+      // consumers (dau, max-day, ×7 explode) and joined their results;
+      // this folds all three into the explode chain itself — each
+      // (user, day) coverage row carries a presence flag (off = 0), so
+      // dau = Σ present and wau7 = the group count fall out of the SAME
+      // day-level aggregate. `dau > 0` keeps exactly the days the old
+      // dau-side inner join kept (a day is in dau iff ≥1 user present),
+      // and the old max-day guard was redundant after that join (every
+      // activity day is ≤ the max activity day). 2 joins + 1 agg branch
+      // + the cache round-trip → 0 joins, one pass, no retained frame.
+      Tables(s, dir, "events")
+        .select(to_date(col("ts")).as("d"), col("user_id")).distinct()
+        .select(col("user_id"),
+          explode(sequence(lit(0), lit(6))).as("off"), col("d"))
+        .groupBy(col("user_id"), date_add(col("d"), col("off")).as("day"))
+        .agg(max(when(col("off") === 0, 1).otherwise(0)).as("present"))
+        .groupBy("day")
+        .agg(sum(col("present")).as("dau"), count(lit(1)).as("wau7"))
+        .where(col("dau") > 0)
+        // date32 parquet reads back as python date objects while the
+        // DuckDB side lands as datetime64 — emit TIMESTAMP on both
+        .select(col("day").cast("timestamp").as("day"), col("dau"),
+          col("wau7"))
+    },
+    Some("""WITH au AS (
+           |  SELECT DISTINCT CAST(ts AS DATE) AS d, user_id FROM events),
+           |dau AS (SELECT d, COUNT(*) AS dau FROM au GROUP BY d),
+           |cov AS (
+           |  SELECT DISTINCT user_id, d + CAST(off AS INTEGER) AS day
+           |  FROM au, (SELECT unnest(range(7)) AS off) offs),
+           |wau AS (
+           |  SELECT day, COUNT(*) AS wau7 FROM cov
+           |  WHERE day <= (SELECT MAX(d) FROM au) GROUP BY day)
+           |SELECT CAST(dau.d AS TIMESTAMP) AS day, dau.dau, wau.wau7
+           |FROM dau JOIN wau ON dau.d = wau.day""".stripMargin),
+    doc = "rolling active users: DAU + trailing-7-day WAU per day — " +
+      "collapse to distinct (day, user) first, then a bounded x7 explode " +
+      "of presence rows + per-day count, instead of a rolling " +
+      "COUNT(DISTINCT) window (unmergeable state) or per-day self-joins; " +
+      "the engagement report every events warehouse serves")
+
+  private[queries] val retentionCohorts: Query = Query(
+    "q_a_retention_cohorts",
+    (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
+      // Classic retention triangle: cohort = user's first-seen ISO week;
+      // for each (cohort_week, week_offset) the distinct users still
+      // active, plus the rate vs cohort size. Collapse to distinct
+      // (user, week) first; the cohort week is a min-window over the
+      // SAME user_id partition (no second shuffle vs the join-back
+      // form); after that each (user, week) row maps to exactly one
+      // (cohort, offset) cell so count(*) IS count-distinct-users. The
+      // cohort size rides a cohort-partitioned window instead of a
+      // self-join on the offset-0 row.
+      val uw = Tables(s, dir, "events")
+        .select(col("user_id"),
+          to_date(date_trunc("week", col("ts"))).as("w")).distinct()
+      val cw = uw.withColumn("cohort_week",
+        min(col("w")).over(Window.partitionBy("user_id")))
+      val cells = cw
+        .select(col("cohort_week"),
+          (datediff(col("w"), col("cohort_week")) / lit(7)).cast("long")
+            .as("week_offset"))
+        .groupBy("cohort_week", "week_offset")
+        .agg(count(lit(1)).as("n_active"))
+      cells
+        .withColumn("cohort_size",
+          max(when(col("week_offset") === 0, col("n_active")))
+            .over(Window.partitionBy("cohort_week")))
+        .select(col("cohort_week").cast("timestamp").as("cohort_week"),
+          col("week_offset"), col("n_active"), col("cohort_size"),
+          (round(col("n_active") / col("cohort_size"), 4) + lit(0.0))
+            .as("retention"))
+    },
+    Some("""WITH uw AS (
+           |  SELECT DISTINCT user_id, date_trunc('week', ts) AS w FROM events),
+           |cw AS (
+           |  SELECT user_id, w,
+           |    MIN(w) OVER (PARTITION BY user_id) AS cohort_week
+           |  FROM uw),
+           |cells AS (
+           |  SELECT cohort_week,
+           |    CAST(date_diff('day', cohort_week, w) / 7 AS BIGINT)
+           |      AS week_offset,
+           |    COUNT(*) AS n_active
+           |  FROM cw GROUP BY 1, 2)
+           |SELECT CAST(cohort_week AS TIMESTAMP) AS cohort_week,
+           |  week_offset, n_active,
+           |  MAX(CASE WHEN week_offset = 0 THEN n_active END)
+           |    OVER (PARTITION BY cohort_week) AS cohort_size,
+           |  ROUND(n_active * 1.0 /
+           |    MAX(CASE WHEN week_offset = 0 THEN n_active END)
+           |      OVER (PARTITION BY cohort_week), 4) + 0.0 AS retention
+           |FROM cells""".stripMargin),
+    doc = "retention cohort triangle (first-seen week x week offset, " +
+      "distinct active users + rate vs cohort size): distinct (user, week) " +
+      "collapse, cohort via min-window on the SAME user partition (no " +
+      "join-back), cohort size via a cohort-partitioned window (no offset-0 " +
+      "self-join) — two shuffles total for the product-analytics staple")
+
+  private[queries] val attribution: Query = Query(
+    "q_a_attribution",
+    (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
+      // Last-touch attribution: each purchase's value is credited to
+      // the last non-purchase event type the user produced before it
+      // (the "channel"); purchases with no prior touch go to
+      // '(direct)'. ONE user_id-partitioned window (running last-
+      // ignoreNulls — O(1) state per row, no per-purchase self-join
+      // back into the history), then a ≤#channels aggregate. Revenue
+      // sums run in DECIMAL: exact and order-independent under Spark's
+      // varying partial-agg order (the VWAP discipline); the share
+      // denominator rides a whole-frame window over the tiny result.
+      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val rev = Tables(s, dir, "events")
+        .select(col("user_id"), col("ts"), col("event_id"),
+          col("event_type"), col("value"))
+        .withColumn("channel",
+          last(when(col("event_type") =!= "purchase", col("event_type")),
+            ignoreNulls = true).over(w))
+        .where(col("event_type") === "purchase")
+        .groupBy(coalesce(col("channel"), lit("(direct)")).as("channel"))
+        .agg(count(lit(1)).as("n_purchases"),
+          // ledger guard: out-of-DECIMAL-range values are
+          // domain-invalid -> null (see q_a_vwap; HostileInputProbe)
+          sum(when(abs(col("value")) < lit(1e24), col("value"))
+            .cast(DecimalType(28, 4))).cast("double")
+            .as("revenue"))
+      // limit(1024) is the channel-domain contract made VISIBLE TO THE
+      // PLAN: channels come from the event_type enum (+ '(direct)'), a
+      // handful of values, so the limit is a no-op on data — but it
+      // puts a row-bounding node under the whole-frame share window,
+      // so PlanShapeSpec's global-window sweep proves the bound
+      // instead of taking it on faith (r9 verdict item 5).
+      rev.limit(1024).withColumn("revenue_share",
+        (round(col("revenue") /
+          sum(col("revenue")).over(Window.partitionBy()), 6) + lit(0.0)))
+    },
+    Some("""WITH a AS (
+           |  SELECT user_id, ts, event_id, event_type, value,
+           |    last_value(CASE WHEN event_type <> 'purchase'
+           |        THEN event_type END IGNORE NULLS)
+           |      OVER (PARTITION BY user_id ORDER BY ts, event_id
+           |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+           |      AS channel
+           |  FROM events),
+           |r AS (
+           |  SELECT COALESCE(channel, '(direct)') AS channel,
+           |    COUNT(*) AS n_purchases,
+           |    CAST(SUM(CAST(CASE WHEN ABS(value) < 1e24 THEN value END
+           |      AS DECIMAL(28,4))) AS DOUBLE) AS revenue
+           |  FROM a WHERE event_type = 'purchase' GROUP BY 1)
+           |SELECT channel, n_purchases, revenue,
+           |  ROUND(revenue / SUM(revenue) OVER (), 6) + 0.0 AS revenue_share
+           |FROM r""".stripMargin),
+    doc = "last-touch revenue attribution (purchase value credited to the " +
+      "user's most recent prior non-purchase event type): one running " +
+      "last-ignoreNulls window on the user partition — O(1) state per row, " +
+      "no per-purchase history self-join — then a <=#channels DECIMAL " +
+      "aggregate (order-independent sums); the marketing-analytics staple")
+
+  private[queries] val abcPareto: Query = Query(
+    "q_a_abc_pareto",
+    (s, dir) => {
+      // Pareto/ABC analysis: customers ranked by revenue, classified by
+      // cumulative revenue share (A ≤ 80 %, B ≤ 95 %, C rest). The
+      // running total over the per-customer aggregate is a DISTRIBUTED
+      // prefix sum (ops/PrefixSum: range-partition on the rank order,
+      // one streaming pass per tile, O(#partitions) offsets broadcast
+      // back) — a zero-partition `SUM OVER (ORDER BY)` window here
+      // would move every customer of a 100 TB order book to ONE task
+      // (the PlanShapeSpec global-window sweep pins that out). Sums are
+      // DECIMAL (exact, order-independent) and decimal addition is
+      // associative, so offset+within is bit-equal to the
+      // single-partition window's cumsum; the share division happens in
+      // DOUBLE on identical exact inputs, so both engines compare
+      // identical values at the class cuts. The grand total falls out
+      // of the same offsets fold — no second pass, no SUM() OVER ().
+      val rev = Tables(s, dir, "orders")
+        .groupBy(col("o_custkey"))
+        .agg(sum(dec2(col("o_totalprice"))).as("rev"))
+      val (cum, total) = graft.ops.PrefixSum.runningDecimalSum(
+        rev, "rev", "cum", Seq(col("rev").desc, col("o_custkey")))
+      val classed = cum
+        .withColumn("share",
+          col("cum").cast("double") / lit(total).cast("double"))
+        .withColumn("abc_class",
+          when(col("share") <= 0.80, "A")
+            .when(col("share") <= 0.95, "B").otherwise("C"))
+      classed.groupBy("abc_class")
+        .agg(count(lit(1)).as("n_customers"),
+          sum(col("rev")).cast("double").as("class_revenue"),
+          (round(max(col("share")), 6) + lit(0.0)).as("cum_share_max"))
+        .orderBy("abc_class")
+    },
+    Some("""WITH rev AS (
+           |  SELECT o_custkey,
+           |    SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
+           |  FROM orders GROUP BY o_custkey),
+           |classed AS (
+           |  SELECT o_custkey, rev,
+           |    CAST(SUM(rev) OVER (ORDER BY rev DESC, o_custkey
+           |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
+           |      / CAST(SUM(rev) OVER () AS DOUBLE) AS share
+           |  FROM rev),
+           |tagged AS (
+           |  SELECT *, CASE WHEN share <= 0.80 THEN 'A'
+           |                 WHEN share <= 0.95 THEN 'B'
+           |                 ELSE 'C' END AS abc_class
+           |  FROM classed)
+           |SELECT abc_class, COUNT(*) AS n_customers,
+           |  CAST(SUM(rev) AS DOUBLE) AS class_revenue,
+           |  ROUND(MAX(share), 6) + 0.0 AS cum_share_max
+           |FROM tagged GROUP BY abc_class ORDER BY abc_class""".stripMargin),
+    doc = "ABC/Pareto revenue classification (A <= 80 %, B <= 95 % " +
+      "cumulative share): the global-ordered window runs over the per-" +
+      "customer AGGREGATE (O(#customers) after one partial-agg shuffle), " +
+      "never the fact rows; DECIMAL-exact sums make the double share " +
+      "comparisons engine-identical at the class cuts")
+
+  private[queries] val timeToConvert: Query = Query(
+    "q_a_time_to_convert",
+    (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
+      // Time-to-convert report: per user, latency from first view to
+      // first purchase AT/AFTER it (the funnel dependency), then exact
+      // latency percentiles + conversion counts. Same one-shuffle
+      // stacked-window shape as q_a_funnel_steps — the whole user
+      // history folds on one user_id partition, the percentile runs
+      // over the O(#converted-users) latency frame.
+      val w = Window.partitionBy("user_id")
+      val perUser = Tables(s, dir, "events")
+        .select(col("user_id"), col("ts"), col("event_type"))
+        .withColumn("tv",
+          min(when(col("event_type") === "view", col("ts"))).over(w))
+        .groupBy("user_id")
+        .agg(first("tv").as("tv"),
+          min(when(col("event_type") === "purchase"
+            && col("ts") >= col("tv"), col("ts"))).as("tp"))
+      perUser
+        .select(col("tv"), col("tp"),
+          (unix_timestamp(col("tp")) - unix_timestamp(col("tv")))
+            .as("lat_s"))
+        .agg(
+          count(lit(1)).as("n_users"),
+          sum(col("tv").isNotNull.cast("long")).as("n_viewed"),
+          sum(col("lat_s").isNotNull.cast("long")).as("n_converted"),
+          (round(expr("percentile(lat_s, 0.5)"), 4) + lit(0.0))
+            .as("p50_latency_s"),
+          (round(expr("percentile(lat_s, 0.9)"), 4) + lit(0.0))
+            .as("p90_latency_s"),
+          (round(max(col("lat_s")), 4) + lit(0.0)).as("max_latency_s"))
+    },
+    Some("""WITH s AS (
+           |  SELECT user_id, ts, event_type,
+           |    MIN(CASE WHEN event_type = 'view' THEN ts END)
+           |      OVER (PARTITION BY user_id) AS tv
+           |  FROM events),
+           |u AS (
+           |  SELECT user_id, ANY_VALUE(tv) AS tv,
+           |    MIN(CASE WHEN event_type = 'purchase' AND ts >= tv THEN ts END)
+           |      AS tp
+           |  FROM s GROUP BY user_id),
+           |l AS (
+           |  SELECT tv, tp,
+           |    CAST(floor(epoch(tp)) AS BIGINT)
+           |      - CAST(floor(epoch(tv)) AS BIGINT) AS lat_s
+           |  FROM u)
+           |SELECT COUNT(*) AS n_users,
+           |  CAST(SUM(CASE WHEN tv IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+           |    AS n_viewed,
+           |  CAST(SUM(CASE WHEN lat_s IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+           |    AS n_converted,
+           |  ROUND(quantile_cont(lat_s, 0.5), 4) + 0.0 AS p50_latency_s,
+           |  ROUND(quantile_cont(lat_s, 0.9), 4) + 0.0 AS p90_latency_s,
+           |  ROUND(MAX(lat_s), 4) + 0.0 AS max_latency_s
+           |FROM l""".stripMargin),
+    doc = "conversion-latency report (first view -> first qualifying " +
+      "purchase): stacked same-partition windows fold each user's history " +
+      "in ONE user_id shuffle (the funnel shape), exact percentiles run " +
+      "over the O(#converted) latency frame — time-to-convert is the " +
+      "metric growth teams pair with the funnel")
+
+  private[queries] val incrementalRollup: Query = Query(
+    "q_r_incremental_rollup",
+    (s, dir) => {
+      // Materialized-view maintenance with decomposable aggregates: a
+      // standing per-(event_type, hour-of-day) rollup (count / exact
+      // DECIMAL sum / min / max over everything before the cutoff) is
+      // REFRESHED by merging the delta batch's partial aggregates —
+      // counts and sums add, mins min, maxes max — instead of
+      // re-scanning history. The plan stages the two partial frames
+      // explicitly (groupBy side+key, then merge by key), which is
+      // exactly what a nightly refresh persists: level-1 rows ARE the
+      // standing table; refresh cost is O(delta scan) + O(#keys) merge
+      // at any history size. The oracle recomputes from the FULL table
+      // in one pass, so the oracle's hash equality is the maintenance
+      // contract itself: merge(standing, delta) == recompute(all).
+      // COUNT(DISTINCT ...) is deliberately absent — it has no exact
+      // mergeable partial state; the sketch family (HLL: q_a2 twin,
+      // streaming DAU) is the incremental answer for distincts.
+      val cutoff = lit("2024-01-04 00:00:00").cast("timestamp")
+      val partials = Tables(s, dir, "events")
+        .groupBy((col("ts") < cutoff).as("is_base"), col("event_type"),
+          hour(col("ts")).as("hod"))
+        .agg(
+          count(lit(1)).as("n"),
+          // ledger guard (see q_a_vwap): out-of-range -> null, both engines
+          sum(when(abs(col("value")) < lit(1e16), col("value"))
+            .cast("decimal(18,2)")).as("sv"),
+          // guarded-row ledger (ADVICE r12): min/max still see extreme
+          // values the sum excludes — count the exclusions so a row
+          // like (max=1.7e308, sum-without-it) is self-explaining, and
+          // the report is internally consistent. Mergeable (sum of
+          // counts), so the incremental contract is unchanged.
+          count(when(col("value").isNotNull &&
+            !(abs(col("value")) < lit(1e16)), lit(1))).as("nx"),
+          min(col("value")).as("mn"),
+          max(col("value")).as("mx"))
+      partials
+        .groupBy("event_type", "hod")
+        .agg(
+          count(lit(1)).as("n_partials"),
+          sum(col("n")).as("n_events"),
+          round(sum(col("sv")).cast("double"), 2).as("sum_value"),
+          sum(col("nx")).as("n_sum_excluded"),
+          min(col("mn")).as("min_value"),
+          max(col("mx")).as("max_value"))
+        .orderBy("event_type", "hod")
+    },
+    Some("""SELECT event_type, CAST(hour(ts) AS INT) AS hod,
+           |  COUNT(DISTINCT (ts < TIMESTAMP '2024-01-04 00:00:00'))
+           |    AS n_partials,
+           |  COUNT(*) AS n_events,
+           |  ROUND(CAST(SUM(CAST(CASE WHEN ABS(value) < 1e16 THEN value END
+           |    AS DECIMAL(18,2))) AS DOUBLE), 2)
+           |    + 0.0 AS sum_value,
+           |  COUNT(CASE WHEN value IS NOT NULL
+           |    AND NOT (ABS(value) < 1e16) THEN 1 END) AS n_sum_excluded,
+           |  MIN(value) AS min_value, MAX(value) AS max_value
+           |FROM events GROUP BY 1, 2 ORDER BY event_type, hod""".stripMargin),
+    doc = "incremental materialized-rollup maintenance: the standing " +
+      "per-(event_type, hour) rollup refreshed by MERGING the delta's " +
+      "partial aggregates (counts/sums add, mins min, maxes max — " +
+      "DECIMAL-exact so merge order can't drift the sum) while the " +
+      "oracle recomputes from the full table — hash equality IS the " +
+      "merge==recompute contract; refresh cost O(delta)+O(#keys), " +
+      "never O(history); distincts are excluded by design (no exact " +
+      "mergeable partial) — the HLL sketch family is their incremental " +
+      "path")
 }

@@ -47,17 +47,7 @@ object SamplingQueries extends QueryPack {
 
   override def queries: Seq[Query] = Seq(
 
-    Query(
-      "q_s_stratified_sample",
-      (s, dir) =>
-        ev(s, dir)
-          .where(keyHash(col("event_id")) < thrExpr)
-          .select(col("event_id"), col("event_type"), col("value")),
-      Some(s"""SELECT event_id, event_type, value FROM events
-              |WHERE ${keyHashSql("event_id")} < ($thrSql)""".stripMargin),
-      doc = "deterministic stratified sample: per-stratum keep rates via an " +
-        "integer Lehmer hash of the key — reproducible (no rand()), map-only, " +
-        "pushed into the scan stage; the training-data mix knob"),
+    stratifiedSample,
 
     Query(
       "q_s_sample_rates",
@@ -372,4 +362,17 @@ object SamplingQueries extends QueryPack {
         "— no global sort; per-phase doc/token budgets for a clean-first " +
         "dataloader schedule")
   )
+
+  // SqlQueries also serves this value as q_sql_stratified_sample.
+  private[queries] val stratifiedSample: Query = Query(
+    "q_s_stratified_sample",
+    (s, dir) =>
+      ev(s, dir)
+        .where(keyHash(col("event_id")) < thrExpr)
+        .select(col("event_id"), col("event_type"), col("value")),
+    Some(s"""SELECT event_id, event_type, value FROM events
+            |WHERE ${keyHashSql("event_id")} < ($thrSql)""".stripMargin),
+    doc = "deterministic stratified sample: per-stratum keep rates via an " +
+      "integer Lehmer hash of the key — reproducible (no rand()), map-only, " +
+      "pushed into the scan stage; the training-data mix knob")
 }

@@ -1,13 +1,18 @@
 package graft.queries
 
 import graft.{Query, QueryPack, Tables}
-import org.apache.spark.sql.functions._
 
-/** S8: the Grafana-style text-SQL entry surface. Each query here is ONE
-  * SQL string executed verbatim by BOTH engines — `spark.sql` over the
-  * registered temp views and DuckDB over the same parquet — proving the
-  * dashboard path (§3.3: parse → Catalyst analyze/optimize → pruned scan)
-  * end-to-end, not just the DataFrame API.
+/** S8: the Grafana-style text-SQL entry surface. Each query written here
+  * is ONE SQL string executed verbatim by BOTH engines — `spark.sql` over
+  * the registered temp views and DuckDB over the same parquet — proving
+  * the dashboard path (§3.3: parse → Catalyst analyze/optimize → pruned
+  * scan) end-to-end, not just the DataFrame API.
+  *
+  * The ten aliases at the end are not SQL text: each is a DataFrame
+  * query's own `Query` value (body and oracle) registered under its
+  * `q_sql_*` dashboard name. SQL text and the DataFrame API go through
+  * the same Catalyst optimizer, so a second body of the same query would
+  * only be a second place for a fix to land.
   */
 object SqlQueries extends QueryPack {
 
@@ -31,11 +36,6 @@ object SqlQueries extends QueryPack {
         |ORDER BY ts DESC, event_id DESC LIMIT 50""".stripMargin,
       doc = "S8/S5: latest-N retrieval as shared SQL text — " +
         "TakeOrderedAndProject, no full sort"),
-
-    sqlQuery("q_sql_availability",
-      """SELECT event_type, MIN(ts) AS min_ts, MAX(ts) AS max_ts, COUNT(*) AS n
-        |FROM events GROUP BY event_type""".stripMargin,
-      doc = "S8/A3: availability summary as shared SQL text"),
 
     sqlQuery("q_sql_topk_orders",
       """SELECT o_orderkey, o_totalprice FROM orders
@@ -155,122 +155,6 @@ object SqlQueries extends QueryPack {
         "SQL text — registry functions expand to the map-only codegen'd " +
         "expressions, so a dashboard user curates without any Scala"),
 
-    // S8 × sampling pillar: the deterministic stratified sample from pure
-    // SQL text — key_hash from the registry, integer thresholds inline
-    Query("q_sql_stratified_sample",
-      (s, dir) => {
-        Tables.ensureRegistered(s, dir)
-        s.sql(
-          """SELECT event_id, event_type, value FROM events
-            |WHERE key_hash(event_id) <
-            |  (CASE event_type WHEN 'purchase' THEN 1073741823
-            |        WHEN 'view' THEN 536870911
-            |        WHEN 'click' THEN 214748364 ELSE 107374182 END)""".stripMargin)
-      },
-      Some(s"""SELECT event_id, event_type, value FROM events
-              |WHERE ${graft.functions.KeyHash.sql("event_id")} <
-              |  (CASE event_type WHEN 'purchase' THEN 1073741823
-              |        WHEN 'view' THEN 536870911
-              |        WHEN 'click' THEN 214748364 ELSE 107374182 END)""".stripMargin),
-      doc = "S8 x sampling pillar: the reproducible per-stratum sample as " +
-        "pure SQL text — the registered Lehmer key_hash keeps the decision " +
-        "a pure function of the key (no rand()), map-only in the scan stage"),
-
-    sqlQuery("q_sql_scd2",
-      """WITH o AS (
-        |  SELECT user_id, ts, event_id, event_type,
-        |    lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |      AS prev_type
-        |  FROM events),
-        |c AS (
-        |  SELECT user_id, ts, event_id, event_type FROM o
-        |  WHERE prev_type IS NULL OR prev_type <> event_type)
-        |SELECT user_id, event_type, ts AS valid_from,
-        |  lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to,
-        |  CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |    AS BIGINT) AS version,
-        |  lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-        |    AS is_current
-        |FROM c""".stripMargin,
-      doc = "S8 x warehouse pillar: the SCD Type-2 dimension build as ONE " +
-        "shared SQL text (ANSI window syntax, verbatim in both engines) — " +
-        "lag change-detect + lead interval-close + row_number versioning on " +
-        "one key-partitioned sort; dashboards can rebuild dimension history " +
-        "without Scala"),
-
-    Query("q_sql_active_users",
-      (s, dir) => {
-        Tables.ensureRegistered(s, dir)
-        // S8 x analytics pillar: the engagement report from text SQL. Same
-        // plan shape as q_a_active_users (distinct presence collapse, then
-        // a bounded x7 explode) — only the lateral-sequence syntax differs
-        // per dialect, so the oracle carries DuckDB's unnest(range(7)).
-        // r14 (guide §2.4): ONE linear chain instead of three references
-        // to the inlined `au` CTE (dau branch, cov branch, MAX(d) scalar
-        // subquery — Spark inlines CTEs, so each was its own scan+distinct
-        // subtree) joined at the end. The ×7 explode groups per
-        // (user, day) carrying a presence flag (off = 0), so dau =
-        // Σ present and wau7 = the group count fall out of the SAME
-        // day-level aggregate; `HAVING dau > 0` keeps exactly the days
-        // the old dau-side inner join kept (a day is in dau iff ≥1 user
-        // was present), and the old `day <= MAX(d)` guard was redundant
-        // after that join (every dau day is ≤ the max activity day).
-        // 3 au subtrees + 2 joins + 1 subquery → 1 subtree, 0 joins.
-        s.sql(
-          """WITH au AS (
-            |  SELECT DISTINCT CAST(ts AS DATE) AS d, user_id FROM events),
-            |uc AS (
-            |  SELECT user_id, date_add(d, off) AS day,
-            |    MAX(CASE WHEN off = 0 THEN 1 ELSE 0 END) AS present
-            |  FROM (SELECT user_id, d, explode(sequence(0, 6)) AS off FROM au)
-            |  GROUP BY user_id, date_add(d, off))
-            |SELECT CAST(day AS TIMESTAMP) AS day, SUM(present) AS dau,
-            |  COUNT(*) AS wau7
-            |FROM uc GROUP BY day HAVING SUM(present) > 0""".stripMargin)
-      },
-      Some("""WITH au AS (
-             |  SELECT DISTINCT CAST(ts AS DATE) AS d, user_id FROM events),
-             |dau AS (SELECT d, COUNT(*) AS dau FROM au GROUP BY d),
-             |cov AS (
-             |  SELECT DISTINCT user_id, d + CAST(off AS INTEGER) AS day
-             |  FROM au, (SELECT unnest(range(7)) AS off) offs),
-             |wau AS (
-             |  SELECT day, COUNT(*) AS wau7 FROM cov
-             |  WHERE day <= (SELECT MAX(d) FROM au) GROUP BY day)
-             |SELECT CAST(dau.d AS TIMESTAMP) AS day, dau.dau, wau.wau7
-             |FROM dau JOIN wau ON dau.d = wau.day""".stripMargin),
-      doc = "S8 x analytics pillar: DAU + trailing-7-day WAU from pure SQL " +
-        "text — distinct (day,user) collapse then the bounded x7 presence " +
-        "explode, never a rolling COUNT(DISTINCT) window; dialect differs " +
-        "only in the lateral sequence (explode(sequence) vs unnest(range))"),
-
-    sqlQuery("q_sql_merge_upsert",
-      """WITH r AS (
-        |  SELECT user_id, event_type, ts, value,
-        |    (ts < TIMESTAMP '2024-01-04 00:00:00') AS is_base,
-        |    row_number() OVER (
-        |      PARTITION BY user_id, event_type,
-        |        (ts < TIMESTAMP '2024-01-04 00:00:00')
-        |      ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM events WHERE ts < TIMESTAMP '2024-01-06 00:00:00'),
-        |b AS (SELECT * FROM r WHERE rn = 1 AND is_base),
-        |d AS (SELECT * FROM r WHERE rn = 1 AND NOT is_base)
-        |SELECT COALESCE(d.user_id, b.user_id) AS user_id,
-        |  COALESCE(d.event_type, b.event_type) AS event_type,
-        |  CASE WHEN d.user_id IS NOT NULL THEN d.value ELSE b.value END
-        |    AS last_value,
-        |  CASE WHEN d.user_id IS NOT NULL THEN d.ts ELSE b.ts END AS last_ts,
-        |  CASE WHEN d.user_id IS NULL THEN 'carryover'
-        |       WHEN b.user_id IS NULL THEN 'insert'
-        |       ELSE 'update' END AS change_type
-        |FROM d FULL JOIN b
-        |  ON d.user_id = b.user_id AND d.event_type = b.event_type""".stripMargin,
-      doc = "S8 x warehouse pillar: the batch MERGE/upsert as ONE shared " +
-        "ANSI text (window argmax per side + full join), verbatim in both " +
-        "engines — the DataFrame twin q_r_merge_upsert fuses the two sides " +
-        "into one conditional struct-max scan; this is the same result from " +
-        "a dashboard's SQL console"),
-
     sqlQuery("q_sql_fk_audit",
       """WITH lo AS (
         |  SELECT l.l_orderkey AS ckey, o.o_orderkey AS pkey
@@ -299,276 +183,6 @@ object SqlQueries extends QueryPack {
         "ANSI text — parent sides collapse to DISTINCT key sets inside the " +
         "text, so Catalyst still sizes broadcast vs shuffle-hash on the key " +
         "set; the pre-publish integrity gate runnable from any SQL console"),
-
-    sqlQuery("q_sql_abc_pareto",
-      // The two-phase distributed prefix sum (ops/PrefixSum) expressed in
-      // pure ANSI text, so the SQL twin carries the SAME scale shape as
-      // the DataFrame query instead of a zero-partition `SUM OVER (ORDER
-      // BY)` that moves every customer of a 100 TB order book to one task
-      // (r9 verdict item 1 — this text used to be PlanShapeSpec's last
-      // global-window allowlist entry):
-      //   1. `b`: a VALUE-RANGE bucket computed from the sort key itself
-      //      (64 equal revenue slices via scalar-subquery MIN/MAX — no
-      //      NTILE, which would be the same global window in disguise).
-      //      Monotone in (rev DESC): equal revs share a bucket, higher
-      //      revs never land in a later bucket, so bucket order IS the
-      //      global order.
-      //   2. `bs`/`off`: per-bucket DECIMAL sums (one partial-agg
-      //      shuffle), then the running offset over the ≤64-row bucket
-      //      frame — the one remaining whole-frame window, bounded by
-      //      the explicit LIMIT the sweep can see.
-      //   3. `cum`: within-bucket running sums under PARTITION BY bkt
-      //      (64-way parallel), plus the broadcast offset join. Decimal
-      //      addition is associative and exact, so offset+within is
-      //      bit-equal to the single-window cumsum on both engines.
-      // r14 (guide §2.4/§7.2): the bucket cut's MIN/MAX and the share's
-      // grand total used to be FOUR scalar subqueries — Spark plans each
-      // as its own full orders scan + rev aggregation + SinglePartition
-      // exchange (the AQE-final plan showed orders aggregated to rev 4x;
-      // ReuseSubquery did not dedupe the two textually-identical MAXes).
-      // One `ext` CTE computes mx/mn/tot in a single 1-row pass over rev
-      // and rides a broadcast cross join; tot = CAST(SUM(rev) AS DOUBLE)
-      // equals the old direct orders total EXACTLY (DECIMAL addition is
-      // associative — per-customer sums re-sum to the same decimal before
-      // the one cast). 5 orders passes → 3 (b-side rev, bs-side rev, ext).
-      """WITH rev AS (
-        |  SELECT o_custkey,
-        |    SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
-        |  FROM orders GROUP BY o_custkey),
-        |ext AS (
-        |  SELECT CAST(MAX(rev) AS DOUBLE) AS mx, CAST(MIN(rev) AS DOUBLE) AS mn,
-        |    CAST(SUM(rev) AS DOUBLE) AS tot
-        |  FROM rev),
-        |b AS (
-        |  SELECT o_custkey, rev, tot,
-        |    CAST(LEAST(63.0, GREATEST(0.0, FLOOR(
-        |      64.0 * (mx - CAST(rev AS DOUBLE))
-        |      / GREATEST(1e-9, mx - mn)))) AS INT)
-        |      AS bkt
-        |  FROM rev CROSS JOIN ext),
-        |bs AS (
-        |  SELECT bkt, SUM(rev) AS brev
-        |  FROM b GROUP BY bkt ORDER BY bkt LIMIT 64),
-        |off AS (
-        |  SELECT bkt,
-        |    COALESCE(SUM(brev) OVER (ORDER BY bkt
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off0
-        |  FROM bs),
-        |cum AS (
-        |  SELECT b.o_custkey, b.rev, b.tot,
-        |    o.off0 + SUM(b.rev) OVER (PARTITION BY b.bkt
-        |      ORDER BY b.rev DESC, b.o_custkey
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM b JOIN off o ON b.bkt = o.bkt),
-        |tagged AS (
-        |  SELECT o_custkey, rev,
-        |    CAST(cum AS DOUBLE) / tot AS share
-        |  FROM cum),
-        |classed AS (
-        |  SELECT *, CASE WHEN share <= 0.80 THEN 'A'
-        |                 WHEN share <= 0.95 THEN 'B'
-        |                 ELSE 'C' END AS abc_class
-        |  FROM tagged)
-        |SELECT abc_class, COUNT(*) AS n_customers,
-        |  CAST(SUM(rev) AS DOUBLE) AS class_revenue,
-        |  ROUND(MAX(share), 6) + 0.0 AS cum_share_max
-        |FROM classed GROUP BY abc_class ORDER BY abc_class""".stripMargin,
-      doc = "S8 x analytics pillar: ABC/Pareto classification as ONE shared " +
-        "ANSI text carrying the DataFrame twin's two-phase prefix-sum " +
-        "shape — value-range buckets from scalar-subquery MIN/MAX, " +
-        "per-bucket DECIMAL sums, a LIMIT-bounded ≤64-row offset window, " +
-        "64-way-parallel within-bucket cumsums; DECIMAL-exact sums keep " +
-        "the class cuts engine-identical"),
-
-    Query("q_sql_retention_cohorts",
-      (s, dir) => {
-        Tables.ensureRegistered(s, dir)
-        // S8 x analytics pillar: the retention triangle from text SQL —
-        // same two-shuffle plan as the DataFrame twin; only the
-        // week-difference function differs per dialect (datediff vs
-        // date_diff('day', ...)).
-        s.sql(
-          """WITH uw AS (
-            |  SELECT DISTINCT user_id,
-            |    CAST(date_trunc('week', ts) AS DATE) AS w FROM events),
-            |cw AS (
-            |  SELECT user_id, w,
-            |    MIN(w) OVER (PARTITION BY user_id) AS cohort_week
-            |  FROM uw),
-            |cells AS (
-            |  SELECT cohort_week,
-            |    CAST(datediff(w, cohort_week) / 7 AS BIGINT) AS week_offset,
-            |    COUNT(*) AS n_active
-            |  FROM cw GROUP BY 1, 2)
-            |SELECT CAST(cohort_week AS TIMESTAMP) AS cohort_week,
-            |  week_offset, n_active,
-            |  MAX(CASE WHEN week_offset = 0 THEN n_active END)
-            |    OVER (PARTITION BY cohort_week) AS cohort_size,
-            |  CAST(ROUND(n_active * 1.0 /
-            |    MAX(CASE WHEN week_offset = 0 THEN n_active END)
-            |      OVER (PARTITION BY cohort_week), 4) AS DOUBLE) AS retention
-            |FROM cells""".stripMargin)
-      },
-      Some("""WITH uw AS (
-             |  SELECT DISTINCT user_id, date_trunc('week', ts) AS w FROM events),
-             |cw AS (
-             |  SELECT user_id, w,
-             |    MIN(w) OVER (PARTITION BY user_id) AS cohort_week
-             |  FROM uw),
-             |cells AS (
-             |  SELECT cohort_week,
-             |    CAST(date_diff('day', cohort_week, w) / 7 AS BIGINT)
-             |      AS week_offset,
-             |    COUNT(*) AS n_active
-             |  FROM cw GROUP BY 1, 2)
-             |SELECT CAST(cohort_week AS TIMESTAMP) AS cohort_week,
-             |  week_offset, n_active,
-             |  MAX(CASE WHEN week_offset = 0 THEN n_active END)
-             |    OVER (PARTITION BY cohort_week) AS cohort_size,
-             |  ROUND(n_active * 1.0 /
-             |    MAX(CASE WHEN week_offset = 0 THEN n_active END)
-             |      OVER (PARTITION BY cohort_week), 4) + 0.0 AS retention
-             |FROM cells""".stripMargin),
-      doc = "S8 x analytics pillar: the retention cohort triangle from pure " +
-        "SQL text — distinct (user, week) collapse, cohort via min-window " +
-        "on the user partition, size via a cohort-partitioned window (two " +
-        "shuffles, no self-joins); dialect differs only in the day-diff " +
-        "function"),
-
-    Query("q_sql_time_to_convert",
-      (s, dir) => {
-        Tables.ensureRegistered(s, dir)
-        // S8 x analytics pillar: the conversion-latency report from text
-        // SQL — same one-shuffle stacked-window fold as the DataFrame
-        // twin; dialect differs in the exact-percentile function
-        // (percentile vs quantile_cont) and epoch extraction.
-        s.sql(
-          """WITH s AS (
-            |  SELECT user_id, ts, event_type,
-            |    MIN(CASE WHEN event_type = 'view' THEN ts END)
-            |      OVER (PARTITION BY user_id) AS tv
-            |  FROM events),
-            |u AS (
-            |  SELECT user_id, ANY_VALUE(tv) AS tv,
-            |    MIN(CASE WHEN event_type = 'purchase' AND ts >= tv THEN ts END)
-            |      AS tp
-            |  FROM s GROUP BY user_id),
-            |l AS (
-            |  SELECT tv, tp,
-            |    unix_timestamp(tp) - unix_timestamp(tv) AS lat_s
-            |  FROM u)
-            |SELECT COUNT(*) AS n_users,
-            |  CAST(SUM(CASE WHEN tv IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-            |    AS n_viewed,
-            |  CAST(SUM(CASE WHEN lat_s IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-            |    AS n_converted,
-            |  ROUND(percentile(lat_s, 0.5), 4) + 0.0 AS p50_latency_s,
-            |  ROUND(percentile(lat_s, 0.9), 4) + 0.0 AS p90_latency_s,
-            |  CAST(ROUND(MAX(lat_s), 4) AS DOUBLE) AS max_latency_s
-            |FROM l""".stripMargin)
-      },
-      Some("""WITH s AS (
-             |  SELECT user_id, ts, event_type,
-             |    MIN(CASE WHEN event_type = 'view' THEN ts END)
-             |      OVER (PARTITION BY user_id) AS tv
-             |  FROM events),
-             |u AS (
-             |  SELECT user_id, ANY_VALUE(tv) AS tv,
-             |    MIN(CASE WHEN event_type = 'purchase' AND ts >= tv THEN ts END)
-             |      AS tp
-             |  FROM s GROUP BY user_id),
-             |l AS (
-             |  SELECT tv, tp,
-             |    CAST(floor(epoch(tp)) AS BIGINT)
-             |      - CAST(floor(epoch(tv)) AS BIGINT) AS lat_s
-             |  FROM u)
-             |SELECT COUNT(*) AS n_users,
-             |  CAST(SUM(CASE WHEN tv IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-             |    AS n_viewed,
-             |  CAST(SUM(CASE WHEN lat_s IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-             |    AS n_converted,
-             |  ROUND(quantile_cont(lat_s, 0.5), 4) + 0.0 AS p50_latency_s,
-             |  ROUND(quantile_cont(lat_s, 0.9), 4) + 0.0 AS p90_latency_s,
-             |  CAST(ROUND(MAX(lat_s), 4) AS DOUBLE) AS max_latency_s
-             |FROM l""".stripMargin),
-      doc = "S8 x analytics pillar: conversion latency (first view -> first " +
-        "qualifying purchase) from pure SQL text — one user_id shuffle via " +
-        "stacked same-partition windows, exact percentiles over the " +
-        "O(#converted) frame; dialect differs only in the percentile and " +
-        "epoch functions"),
-
-    Query("q_sql_attribution",
-      (s, dir) => {
-        Tables.ensureRegistered(s, dir)
-        // S8 x analytics pillar: last-touch attribution from text SQL —
-        // same single running-window plan as the DataFrame twin; the
-        // engines place IGNORE NULLS differently (after the call in
-        // Spark, inside the argument list in DuckDB).
-        s.sql(
-          """WITH a AS (
-            |  SELECT user_id, ts, event_id, event_type, value,
-            |    last_value(CASE WHEN event_type <> 'purchase'
-            |        THEN event_type END) IGNORE NULLS
-            |      OVER (PARTITION BY user_id ORDER BY ts, event_id
-            |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-            |      AS channel
-            |  FROM events),
-            |r AS (
-            |  SELECT COALESCE(channel, '(direct)') AS channel,
-            |    COUNT(*) AS n_purchases,
-            |    CAST(SUM(CAST(value AS DECIMAL(28,4))) AS DOUBLE) AS revenue
-            |  FROM a WHERE event_type = 'purchase' GROUP BY 1
-            |  LIMIT 1024)
-            |SELECT channel, n_purchases, revenue,
-            |  ROUND(revenue / SUM(revenue) OVER (), 6) + 0.0 AS revenue_share
-            |FROM r""".stripMargin)
-      },
-      Some("""WITH a AS (
-             |  SELECT user_id, ts, event_id, event_type, value,
-             |    last_value(CASE WHEN event_type <> 'purchase'
-             |        THEN event_type END IGNORE NULLS)
-             |      OVER (PARTITION BY user_id ORDER BY ts, event_id
-             |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-             |      AS channel
-             |  FROM events),
-             |r AS (
-             |  SELECT COALESCE(channel, '(direct)') AS channel,
-             |    COUNT(*) AS n_purchases,
-             |    CAST(SUM(CAST(value AS DECIMAL(28,4))) AS DOUBLE) AS revenue
-             |  FROM a WHERE event_type = 'purchase' GROUP BY 1)
-             |SELECT channel, n_purchases, revenue,
-             |  ROUND(revenue / SUM(revenue) OVER (), 6) + 0.0 AS revenue_share
-             |FROM r""".stripMargin),
-      doc = "S8 x analytics pillar: last-touch attribution from pure SQL " +
-        "text — one running last-ignoreNulls window on the user partition " +
-        "+ a <=#channels DECIMAL aggregate, same plan as the DataFrame " +
-        "twin; the texts differ only in where the engines accept IGNORE " +
-        "NULLS"),
-
-    sqlQuery("q_sql_incremental_rollup",
-      """WITH p AS (
-        |  SELECT (ts < TIMESTAMP '2024-01-04 00:00:00') AS is_base,
-        |    event_type, CAST(hour(ts) AS INT) AS hod,
-        |    COUNT(*) AS n,
-        |    SUM(CAST(CASE WHEN ABS(value) < 1e16 THEN value END
-        |      AS DECIMAL(18,2))) AS sv,
-        |    COUNT(CASE WHEN value IS NOT NULL
-        |      AND NOT (ABS(value) < 1e16) THEN 1 END) AS nx,
-        |    MIN(value) AS mn, MAX(value) AS mx
-        |  FROM events GROUP BY 1, 2, 3)
-        |SELECT event_type, hod,
-        |  COUNT(*) AS n_partials,
-        |  CAST(SUM(n) AS BIGINT) AS n_events,
-        |  ROUND(CAST(SUM(sv) AS DOUBLE), 2) + 0.0 AS sum_value,
-        |  CAST(SUM(nx) AS BIGINT) AS n_sum_excluded,
-        |  MIN(mn) AS min_value, MAX(mx) AS max_value
-        |FROM p GROUP BY 1, 2 ORDER BY event_type, hod""".stripMargin,
-      doc = "S8 x analytics pillar: incremental rollup maintenance as ONE " +
-        "shared ANSI text — the partial CTE is the persisted standing " +
-        "table, the outer merge adds counts and DECIMAL-exact sums and " +
-        "folds mins/maxes; both engines run the same two-level plan, and " +
-        "the DataFrame twin's oracle separately proves merge == " +
-        "full-recompute"),
 
     Query("q_sql_bucketed_activity",
       (s, dir) => {
@@ -611,6 +225,19 @@ object SqlQueries extends QueryPack {
         "ride the scan's bucket hash + on-disk order with zero Exchange/" +
         "Sort exactly as the DataFrame twin does (BucketedLayoutSpec " +
         "asserts the text plan too); oracle is the plain-parquet twin " +
-        "text — the layout changes cost, never answers")
+        "text — the layout changes cost, never answers"),
+
+    // DataFrame queries a dashboard reaches under a q_sql_* name: the
+    // same Query value (body and oracle), renamed.
+    Relational.availability.copy(name = "q_sql_availability"),
+    SamplingQueries.stratifiedSample.copy(name = "q_sql_stratified_sample"),
+    Relational.scd2.copy(name = "q_sql_scd2"),
+    Relational.activeUsers.copy(name = "q_sql_active_users"),
+    Relational.mergeUpsert.copy(name = "q_sql_merge_upsert"),
+    Relational.abcPareto.copy(name = "q_sql_abc_pareto"),
+    Relational.retentionCohorts.copy(name = "q_sql_retention_cohorts"),
+    Relational.timeToConvert.copy(name = "q_sql_time_to_convert"),
+    Relational.attribution.copy(name = "q_sql_attribution"),
+    Relational.incrementalRollup.copy(name = "q_sql_incremental_rollup")
   )
 }

@@ -2,8 +2,7 @@ package graft.streaming
 
 import graft.ts.Indicators
 import graft.ts.Indicators.{In, IndicatorRow, IndicatorState, Params}
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Incremental technical indicators over a live stream — the stateful
@@ -48,16 +47,4 @@ object StatefulIndicators {
       }
   }
 
-  /** Convenience: untyped frame in, typed stream out. */
-  def attachFrame(df: DataFrame, key: String, ts: String, id: String,
-      high: String, low: String, close: String, volume: String,
-      p: Params = Params()): Dataset[IndicatorRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    attach(df.select(
-      col(key).cast("string").as("key"), col(ts).cast("timestamp").as("ts"),
-      col(id).cast("long").as("id"), col(high).cast("double").as("high"),
-      col(low).cast("double").as("low"), col(close).cast("double").as("close"),
-      col(volume).cast("double").as("volume")).as[In], p)
-  }
 }

@@ -391,10 +391,21 @@ object StreamIngest {
       .persist()
     try upsertTouchedBuckets(statePath, keyCols, nBuckets, partial, batchId) {
       (incoming, state, touched) =>
-        // replay fence — per-bucket last-applied batchIds (O(touched))
+        // replay fence — per-bucket last-applied batchIds (O(touched)).
+        // One map-side job, like the touched-bucket collect: each task
+        // returns its own per-bucket maxima; the collect merges them.
         val bucketMax: Map[Int, Long] = state.fold(Map.empty[Int, Long])(
-          _.groupBy("__bucket").agg(max(col("__applied_batch")))
-            .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
+          _.select(col("__bucket"), col("__applied_batch"))
+            .queryExecution.toRdd
+            .mapPartitions { it =>
+              val m = scala.collection.mutable.HashMap.empty[Int, Long]
+              it.filterNot(_.isNullAt(1)).foreach { r =>
+                val b = r.getInt(0)
+                m(b) = math.max(m.getOrElse(b, Long.MinValue), r.getLong(1))
+              }
+              m.iterator
+            }
+            .collect().groupMapReduce(_._1)(_._2)(math.max))
         // batchId REGRESSION = a fresh checkpoint pointed at an old state
         // dir: every batch would silently fence as "already applied".
         // Fail fast instead (the checkpoint-lineage contract above).

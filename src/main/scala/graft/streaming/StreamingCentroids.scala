@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Incremental per-cell centroid maintenance over an embedding stream —
@@ -69,21 +68,4 @@ object StreamingCentroids {
       }
   }
 
-  /** Untyped convenience: assigns cells with the codegen'd BestCell over
-    * `centroids`, then maintains running means per cell.
-    */
-  def attachFrame(df: DataFrame, vecCol: String,
-      centroids: Array[(Long, Array[Float])]): Dataset[CellCentroid] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val assigned = df.select(
-      graft.functions.VectorExpressions.best_cell(
-        col(vecCol), centroids.map(_._2), centroids.map(_._1)).as("cell"),
-      col(vecCol).cast("array<double>").as("vec"))
-    // empty quantizer (empty corpus slice at seed time): best_cell
-    // assigns null, and VecIn's `cell: Long` is non-nullable — filter
-    // the unassignable rows instead of tripping the encoder; the
-    // degenerate-slice contract (no cells -> no centroids to maintain)
-    attach(assigned.where(col("cell").isNotNull).as[VecIn])
-  }
 }

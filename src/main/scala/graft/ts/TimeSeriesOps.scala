@@ -91,13 +91,6 @@ object TimeSeriesOps {
     first(c, ignoreNulls = true)
       .over(w.rowsBetween(0, Window.unboundedFollowing))
 
-  // ---- P10: sentinel scrubbing -------------------------------------------
-  def zeroToNull(c: Column): Column = when(c === 0.0, lit(null)).otherwise(c)
-
-  def nonFiniteToNull(c: Column): Column =
-    when(isnan(c) || c === Double.PositiveInfinity ||
-      c === Double.NegativeInfinity, lit(null)).otherwise(c)
-
   // ---- P11: rolling-median fill -------------------------------------------
   /** exact rolling median over the trailing n rows (pandas rolling(n).median
     * with min_periods=1); used to patch null volume rows.

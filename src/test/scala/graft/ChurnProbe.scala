@@ -34,15 +34,10 @@ object ChurnProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val n = sys.env.getOrElse("GRAFT_CHURN_SESSIONS", "1000").toInt
-    val root = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    root.sparkContext.setLogLevel("ERROR")
+    val root = GraftSession.local(cpus, cpus, "ERROR")
 
     // every session: a cheap retained ordered-scan query; every 25th: the
     // memoized build families too (session-keyed memo entries — the

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Whole-surface concurrency soak (the wide form of [[ConcurrencySpec]]):
   * N sessions run the ENTIRE query surface concurrently against one
@@ -20,15 +19,10 @@ import org.apache.spark.sql.SparkSession
   */
 object ConcurrencyProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val nThreads = sys.env.getOrElse("GRAFT_SOAK_THREADS", "8").toInt
-    val root = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    root.sparkContext.setLogLevel("ERROR")
+    val root = GraftSession.local(cpus, cpus, "ERROR")
 
     val names = SparkEntry.queries.keys.toSeq.sorted
     println(s"== sequential baseline: ${names.size} queries ==")

@@ -19,18 +19,11 @@ object ExplainDump {
     val label = args.head
     val names = args.tail
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r14")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      // r15: mirror Bench's data-derived shuffle width so dumped plans
-      // carry the widths the bench actually runs with
-      .config("spark.sql.shuffle.partitions",
-        SessionTuning.shufflePartitions(sfDir, cpus.toInt))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // Bench's session: the data-derived shuffle width, so dumped plans
+    // carry the widths the bench actually runs with
+    val spark = GraftSession.local(sfDir, cpus)
     Files.createDirectories(Paths.get(outDir))
     names.foreach { q =>
       val df = SparkEntry.queries(q)(spark, sfDir)

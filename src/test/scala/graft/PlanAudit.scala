@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only plan audit (Test scope): prints condensed physical plans of
   * scale-sensitive queries so shuffle/join/pushdown shape is reviewable.
@@ -8,12 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4, 4, "ERROR")
     val dir = "/root/testdata/sf0.01"
     val interesting = Seq("q_e_cosine_topk", "q_e_ann_lsh_topk",
       "q_p9_winsorize", "q_scan_range", "q_latest_n",

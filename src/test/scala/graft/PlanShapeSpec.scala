@@ -242,8 +242,7 @@ class PlanShapeSpec extends AnyFunSuite {
     "q_t_quality_filter_calibration" -> "1-row score-range aggregate",
     // r14: q_{a,sql}_active_users dropped off this list — the one-chain
     // restructure removed their max-day broadcast entirely
-    "q_a_active_users_approx" -> "1-row max-day scalar, sketch twin",
-    "q_sql_abc_pareto" -> "1-row min/max/total extremes aggregate (r14)")
+    "q_a_active_users_approx" -> "1-row max-day scalar, sketch twin")
 
   test("GLOBAL: no query plans a CartesianProduct, and " +
       "BroadcastNestedLoopJoin appears only at named, bounded sites") {
@@ -281,11 +280,11 @@ class PlanShapeSpec extends AnyFunSuite {
     // cumsum — now the distributed ops/PrefixSum.
     // EMPTY as of r10, and the point is that it stays that way: every
     // domain-bounded frame now carries its bound IN THE PLAN (an explicit
-    // limit over the tiny aggregate — q_a_attribution, q_sql_attribution,
-    // q_s_shard_manifest), and q_sql_abc_pareto's text carries the
-    // two-phase prefix-sum shape itself (value-range buckets + a
-    // LIMIT-bounded offset window). A new entry here needs a reason the
-    // bound genuinely cannot be expressed in the plan.
+    // limit over the tiny aggregate — q_a_attribution, also served as
+    // q_sql_attribution, and q_s_shard_manifest), and q_sql_abc_pareto is
+    // q_a_abc_pareto's own definition, so it runs the same distributed
+    // prefix sum. A new entry here needs a reason the bound genuinely
+    // cannot be expressed in the plan.
     val globalWindowAllowed: Map[String, String] = Map.empty
     import org.apache.spark.sql.execution._
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec

@@ -18,7 +18,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *  2. no `q_sql_*` result schema contains a DecimalType column unless
   *     its twin has one too (and for twinless queries, none at all) —
   *     DECIMAL belongs INSIDE exact-sum arithmetic, always CAST back to
-  *     DOUBLE at the output boundary (`q_sql_abc_pareto` idiom).
+  *     DOUBLE at the output boundary (`q_sql_tpch_q1` idiom).
+  *
+  * The ten `aliases` below are not text SQL: each is a DataFrame query's
+  * own `Query` value under a `q_sql_*` name, and a third case pins that
+  * (same `run` function, byte-identical oracle), so the two names cannot
+  * drift apart again.
   *
   * Mostly schema-only: the plans are analyzed, not executed, so the
   * sweep is cheap against the sf0.001 fixtures — with one exception:
@@ -54,6 +59,19 @@ class SchemaParitySpec extends AnyFunSuite {
     "q_sql_feature_frame" -> "q_feature_frame_26",
     "q_sql_dedup_groups" -> "q_d_dedup_groups")
 
+  /** q_sql_* name → the DataFrame query whose definition it reuses. */
+  private val aliases: Map[String, String] = Map(
+    "q_sql_availability" -> "q_summary_availability",
+    "q_sql_stratified_sample" -> "q_s_stratified_sample",
+    "q_sql_scd2" -> "q_r_scd2",
+    "q_sql_active_users" -> "q_a_active_users",
+    "q_sql_merge_upsert" -> "q_r_merge_upsert",
+    "q_sql_abc_pareto" -> "q_a_abc_pareto",
+    "q_sql_retention_cohorts" -> "q_a_retention_cohorts",
+    "q_sql_time_to_convert" -> "q_a_time_to_convert",
+    "q_sql_attribution" -> "q_a_attribution",
+    "q_sql_incremental_rollup" -> "q_r_incremental_rollup")
+
   /** q_sql_* with NO DataFrame twin (pure-SQL surface: TPC-H text, the
     * native-expression demos): the expected output schema is pinned as a
     * literal instead — same drift protection, no twin to diff against.
@@ -87,6 +105,26 @@ class SchemaParitySpec extends AnyFunSuite {
     val missing = (twins.keySet ++ twins.values ++ pinned.keySet)
       .filterNot(all.contains)
     assert(missing.isEmpty, s"unknown query names in twin map: $missing")
+  }
+
+  test("each q_sql_* alias reuses its DataFrame twin's definition: same " +
+      "run function, byte-identical oracle; fk_audit stays two queries") {
+    def oracleBytes(q: String): Option[Seq[Byte]] =
+      SparkEntry.oracleSql.get(q).map(_.getBytes("UTF-8").toSeq)
+    val split = aliases.toSeq.sorted.flatMap { case (sqlQ, dfQ) =>
+      val sameRun = SparkEntry.queries(sqlQ) eq SparkEntry.queries(dfQ)
+      val sameOracle = oracleBytes(dfQ).isDefined &&
+        oracleBytes(sqlQ) == oracleBytes(dfQ)
+      if (sameRun && sameOracle) None
+      else Some(s"$sqlQ vs $dfQ: same run=$sameRun, same oracle=$sameOracle")
+    }
+    assert(split.isEmpty, "aliases with a second definition:\n" +
+      split.mkString("\n"))
+    // q_sql_fk_audit projects 4 of q_r_fk_audit's 6 columns: a distinct
+    // query, not an alias
+    assert(SparkEntry.queries("q_sql_fk_audit") ne
+      SparkEntry.queries("q_r_fk_audit"))
+    assert(oracleBytes("q_sql_fk_audit") != oracleBytes("q_r_fk_audit"))
   }
 
   test("every q_sql_* query has a twin or a pinned schema (no unguarded " +

@@ -26,15 +26,9 @@ import org.apache.spark.sql.functions.{col, xxhash64, expr}
 object SweepProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_SWEEP_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus, cpus)
 
     case class Config(label: String, sets: Seq[(String, String)])
     val configs: Seq[Config] = sys.env.getOrElse("SPARK_GRAFT_SWEEP", "base")
