@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, xxhash64, expr}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col, count, expr, lit,
+  row_number, xxhash64}
 
 /** Per-round benchmark: runs every declared query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Each query is forced to FULL materialization by
@@ -19,29 +20,11 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local(sfDir,
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
-    // Warmup outside the timed region: JIT + codegen + parquet footer reads
-    // would otherwise all land on whichever query runs first (alphabetical).
-    Tables.all.foreach { t =>
-      try Tables(spark, sfDir, t).count() catch { case _: Throwable => () }
-    }
-    try {
-      import org.apache.spark.sql.expressions.Window
-      val w = spark.range(20000).selectExpr("id % 37 AS k", "id AS v")
-      val dim = spark.range(37).selectExpr("id AS k", "id * 2 AS d")
-      w.groupBy("k").agg(expr("sum(v) s"), expr("min_by(v, v) m"))
-        .join(org.apache.spark.sql.functions.broadcast(dim), "k")
-        .select(col("k"), col("s"),
-          org.apache.spark.sql.functions.row_number().over(
-            Window.partitionBy("k").orderBy("s")).as("rn"))
-        .collect()
-    } catch { case _: Throwable => () }
+    warmup(spark, sfDir)
 
-    def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def runOnce(fn: (SparkSession, String) => DataFrame): Double = {
       val t0 = System.nanoTime()
-      val df = fn(spark, sfDir)
-      // bit_xor: order-insensitive reduce, no ANSI sum-overflow risk
-      df.select(xxhash64(df.columns.map(col): _*).as("__h"))
-        .agg(expr("bit_xor(__h)")).collect()
+      materialize(fn(spark, sfDir))
       (System.nanoTime() - t0) / 1e9
     }
 
@@ -126,5 +109,33 @@ object Bench {
       .getOrElse(Seq.empty)
     println(compactLine(kept, timed.size - kept.size))
     spark.stop()
+  }
+
+  /** Forces `df` to FULL materialization — xxhash64 over every output
+    * column, reduced with bit_xor (order-insensitive, no ANSI
+    * sum-overflow risk) — and returns its row count.
+    */
+  def materialize(df: DataFrame): Long =
+    df.select(xxhash64(df.columns.map(col): _*).as("__h"))
+      .agg(expr("bit_xor(__h)"), count(lit(1)))
+      .head.getLong(1)
+
+  /** Warmup outside the timed region: JIT + codegen + parquet footer reads
+    * would otherwise all land on whichever query runs first (alphabetical).
+    */
+  def warmup(spark: SparkSession, sfDir: String): Unit = {
+    Tables.all.foreach { t =>
+      try Tables(spark, sfDir, t).count() catch { case _: Throwable => () }
+    }
+    try {
+      import org.apache.spark.sql.expressions.Window
+      val w = spark.range(20000).selectExpr("id % 37 AS k", "id AS v")
+      val dim = spark.range(37).selectExpr("id AS k", "id * 2 AS d")
+      w.groupBy("k").agg(expr("sum(v) s"), expr("min_by(v, v) m"))
+        .join(broadcast(dim), "k")
+        .select(col("k"), col("s"),
+          row_number().over(Window.partitionBy("k").orderBy("s")).as("rn"))
+        .collect()
+    } catch { case _: Throwable => () }
   }
 }

@@ -161,32 +161,16 @@ object ApproxQueries extends QueryPack {
 
     Query(
       "q_s_curriculum_phases_approx",
-      (s, dir) => {
-        import graft.text.TextAnalysis
-        // the declared 100 TB path for q_s_curriculum_phases: the tercile
-        // cut fit uses the mergeable quantile sketch instead of exact
-        // percentile (which buffers every quality value — measured 8× at
-        // 10×); assignment and report are unchanged map-only/partial-agg
-        val q = Tables(s, dir, "documents").select(col("doc_id"),
-          round(TextAnalysis.qualityScore("text"), 4).as("quality"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"))
-        val cuts = broadcast(q.agg(
+      // the declared 100 TB path for q_s_curriculum_phases: the tercile
+      // cut fit uses the mergeable quantile sketch instead of exact
+      // percentile (which buffers every quality value — measured 8× at
+      // 10×); assignment and report are unchanged map-only/partial-agg
+      (s, dir) => SamplingQueries.curriculumPhases(s, dir)(q => q.agg(
           expr(s"approx_percentile(quality, array(0.3333333333333333, " +
             s"0.6666666666666666), $Accuracy)").as("__c"))
-          .select(
-            (round(element_at(col("__c"), 1), 4) + lit(0.0)).as("c33"),
-            (round(element_at(col("__c"), 2), 4) + lit(0.0)).as("c66")))
-        q.crossJoin(cuts)
-          .select(col("quality"), col("n_tokens"),
-            when(col("quality") >= col("c66"), lit(1))
-              .when(col("quality") >= col("c33"), lit(2))
-              .otherwise(lit(3)).as("phase"))
-          .groupBy("phase")
-          .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"),
-            (round(min("quality"), 4) + lit(0.0)).as("q_min"),
-            (round(max("quality"), 4) + lit(0.0)).as("q_max"))
-          .orderBy("phase")
-      },
+        .select(
+          (round(element_at(col("__c"), 1), 4) + lit(0.0)).as("c33"),
+          (round(element_at(col("__c"), 2), 4) + lit(0.0)).as("c66"))),
       None,
       doc = "curriculum phases at scale: ONE quantile sketch fits both " +
         "tercile cuts (O(1e4·log n) state, merges map-side) — the " +

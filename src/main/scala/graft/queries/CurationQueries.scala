@@ -111,6 +111,31 @@ object CurationQueries extends QueryPack {
       .collect().headOption
       .map(r => (r.getAs[String]("a"), r.getAs[String]("b"),
         r.getAs[Long]("freq")))
+
+  /** Up to two greedy BPE merge rounds over a (syms, wf) word frame: each
+    * round's winner (a, b, freq), the second counted over the first's
+    * merge — fewer when no pair is left to merge.
+    */
+  private def bpeRounds(words: org.apache.spark.sql.DataFrame)
+      : Seq[(String, String, Long)] =
+    bpeTopPair(words).toSeq.flatMap { case r1 @ (a1, b1, _) =>
+      r1 +: bpeTopPair(words.select(
+        expr(bpeFoldLit("syms", a1, b1)).as("syms"), col("wf"))).toSeq
+    }
+
+  /** Oracle twin of [[bpeRounds]] over the symbol CTE `s0`: pair counts
+    * `p1`/`p2`, winners `t1`/`t2`, and the round-1 merge `s1`.
+    */
+  private val bpeRoundCtes =
+    s"""p1 AS (SELECT syms[i] AS a, syms[i+1] AS b, CAST(SUM(wf) AS BIGINT) AS freq
+       |       FROM s0, unnest(range(1, len(syms))) AS u(i) GROUP BY 1, 2),
+       |t1 AS (SELECT a, b, freq FROM p1 ORDER BY freq DESC, a, b LIMIT 1),
+       |s1 AS (SELECT ${bpeMergeSql("syms", "t1.a", "t1.b")} AS syms, wf
+       |       FROM s0, t1),
+       |p2 AS (SELECT syms[i] AS a, syms[i+1] AS b, CAST(SUM(wf) AS BIGINT) AS freq
+       |       FROM s1, unnest(range(1, len(syms))) AS u(i) GROUP BY 1, 2),
+       |t2 AS (SELECT a, b, freq FROM p2 ORDER BY freq DESC, a, b LIMIT 1)""".stripMargin
+
   private val numRe = "[0-9]{4,}"
 
   override def queries: Seq[Query] = Seq(
@@ -270,23 +295,13 @@ object CurationQueries extends QueryPack {
     Query(
       "q_t_pack_efficiency",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         // The audit face of sequence packing: per (source, shard, pack)
         // doc and token counts + fill ratio against the 256 budget. A doc
         // that straddles a boundary counts in the pack where it STARTS
         // (the greedy-fill contract), so fill_ratio > 1 is expected and
         // honest — the report a packing run ships with. Same
         // (source, KeyHash-shard) keying as q_t_sequence_pack.
-        val shard = pmod(graft.functions.KeyHash.column(col("doc_id")),
-          lit(8L))
-        val w = Window.partitionBy("source", "shard").orderBy("doc_id")
-          .rowsBetween(Window.unboundedPreceding, -1)
-        docs(s, dir)
-          .select(col("doc_id"), col("source"),
-            tokenCount(col("text")).as("n_tokens"))
-          .withColumn("shard", shard)
-          .withColumn("cum_before",
-            coalesce(sum("n_tokens").over(w), lit(0L)))
+        TextQueries.packedDocs(s, dir)
           .withColumn("pack_id", expr("cum_before DIV 256"))
           .groupBy("source", "shard", "pack_id")
           .agg(count(lit(1)).as("n_docs"),
@@ -297,17 +312,7 @@ object CurationQueries extends QueryPack {
               .as("fill_ratio"))
           .orderBy("source", "shard", "pack_id")
       },
-      Some(s"""WITH tc AS (
-             |  SELECT doc_id, source,
-             |    ${graft.functions.KeyHash.sql("doc_id")} % 8 AS shard,
-             |    CASE WHEN length(trim(text)) = 0 THEN 0
-             |         ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_tokens
-             |  FROM documents),
-             |c AS (
-             |  SELECT doc_id, source, shard, n_tokens,
-             |    COALESCE(SUM(n_tokens) OVER (PARTITION BY source, shard ORDER BY doc_id
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-             |  FROM tc)
+      Some(s"""WITH ${TextQueries.packCtes}
              |SELECT source, shard, CAST(cum_before // 256 AS BIGINT) AS pack_id,
              |  COUNT(*) AS n_docs,
              |  CAST(SUM(n_tokens) AS BIGINT) AS pack_tokens,
@@ -383,14 +388,8 @@ object CurationQueries extends QueryPack {
               .select(expr(
                 "transform(sequence(1, length(tok)), i -> substring(tok, i, 1))")
                 .as("syms"), col("wf")))
-          val rows = bpeTopPair(words) match {
-            case None => Seq.empty[(Int, String, String, String, Long)]
-            case Some((a1, b1, f1)) =>
-              val merged = words.select(
-                expr(bpeFoldLit("syms", a1, b1)).as("syms"), col("wf"))
-              (1, a1, b1, a1 + b1, f1) +: bpeTopPair(merged).toSeq
-                .map { case (a2, b2, f2) => (2, a2, b2, a2 + b2, f2) }
-          }
+          val rows = bpeRounds(words).zipWithIndex
+            .map { case ((a, b, f), i) => (i + 1, a, b, a + b, f) }
           // the merge table IS the training output — driver-resident by
           // nature (O(rounds) rows), returned as a local frame
           import s.implicits._
@@ -404,14 +403,7 @@ object CurationQueries extends QueryPack {
               |       WHERE regexp_matches(tok, '^[a-z]+$$') AND length(tok) <= $MaxPretokenChars GROUP BY 1),
               |s0 AS (SELECT list_transform(range(1, length(tok) + 1),
               |         i -> substr(tok, i, 1)) AS syms, wf FROM w0),
-              |p1 AS (SELECT syms[i] AS a, syms[i+1] AS b, CAST(SUM(wf) AS BIGINT) AS freq
-              |       FROM s0, unnest(range(1, len(syms))) AS u(i) GROUP BY 1, 2),
-              |t1 AS (SELECT a, b, freq FROM p1 ORDER BY freq DESC, a, b LIMIT 1),
-              |s1 AS (SELECT ${bpeMergeSql("syms", "t1.a", "t1.b")} AS syms, wf
-              |       FROM s0, t1),
-              |p2 AS (SELECT syms[i] AS a, syms[i+1] AS b, CAST(SUM(wf) AS BIGINT) AS freq
-              |       FROM s1, unnest(range(1, len(syms))) AS u(i) GROUP BY 1, 2),
-              |t2 AS (SELECT a, b, freq FROM p2 ORDER BY freq DESC, a, b LIMIT 1)
+              |$bpeRoundCtes
               |SELECT 1 AS round, a, b, a || b AS merged, freq FROM t1
               |UNION ALL SELECT 2, a, b, a || b, freq FROM t2 ORDER BY round""".stripMargin),
       doc = "BPE training, two full rounds: max-frequency pair (ties " +
@@ -452,20 +444,8 @@ object CurationQueries extends QueryPack {
           // inlined as literals (r12, see q_t_bpe_train) — the returned
           // audit plan is cached-vocab scan -> map-only double fold ->
           // one groupBy(source), not a broadcast cascade (19 jobs -> ~5)
-          val fitted = bpeTopPair(words).flatMap { case (a1, b1, _) =>
-            val merged = words.select(
-              expr(bpeFoldLit("syms", a1, b1)).as("syms"), col("wf"))
-            bpeTopPair(merged).map { case (a2, b2, _) => (a1, b1, a2, b2) }
-          }
-          fitted match {
-            case None =>
-              // no minable pair in round 1 or 2: the pre-r12 plan
-              // (crossJoin with an EMPTY broadcast winner) returned an
-              // empty frame — keep that contract, schema-stable
-              s.range(0).select(lit("").as("source"), lit(0L).as("n_words"),
-                lit(0L).as("n_chars"), lit(0L).as("n_symbols"),
-                lit(0.0).as("compression"))
-            case Some((a1, b1, a2, b2)) =>
+          bpeRounds(words) match {
+            case Seq((a1, b1, _), (a2, b2, _)) =>
               wordsSrc
                 .select(col("source"), col("wf"),
                   length(col("tok")).as("chars"),
@@ -479,6 +459,13 @@ object CurationQueries extends QueryPack {
                     / sum(col("nsym") * col("wf")), 4) + lit(0.0))
                     .as("compression"))
                 .orderBy("source")
+            case _ =>
+              // no minable pair in round 1 or 2: the pre-r12 plan
+              // (crossJoin with an EMPTY broadcast winner) returned an
+              // empty frame — keep that contract, schema-stable
+              s.range(0).select(lit("").as("source"), lit(0L).as("n_words"),
+                lit(0L).as("n_chars"), lit(0L).as("n_symbols"),
+                lit(0.0).as("compression"))
           }
         }
       },
@@ -492,14 +479,7 @@ object CurationQueries extends QueryPack {
            |       WHERE regexp_matches(tok, '^[a-z]+$$') AND length(tok) <= $MaxPretokenChars GROUP BY 1, 2),
            |w0 AS (SELECT tok, CAST(SUM(wf) AS BIGINT) AS wf FROM w0s GROUP BY 1),
            |s0 AS (SELECT $symsOfTok AS syms, wf FROM w0),
-           |p1 AS (SELECT syms[i] AS a, syms[i+1] AS b, CAST(SUM(wf) AS BIGINT) AS freq
-           |       FROM s0, unnest(range(1, len(syms))) AS u(i) GROUP BY 1, 2),
-           |t1 AS (SELECT a, b, freq FROM p1 ORDER BY freq DESC, a, b LIMIT 1),
-           |s1 AS (SELECT ${bpeMergeSql("syms", "t1.a", "t1.b")} AS syms, wf
-           |       FROM s0, t1),
-           |p2 AS (SELECT syms[i] AS a, syms[i+1] AS b, CAST(SUM(wf) AS BIGINT) AS freq
-           |       FROM s1, unnest(range(1, len(syms))) AS u(i) GROUP BY 1, 2),
-           |t2 AS (SELECT a, b, freq FROM p2 ORDER BY freq DESC, a, b LIMIT 1),
+           |$bpeRoundCtes,
            |ap AS (SELECT source, wf, length(tok) AS chars,
            |         len(${bpeMergeSql(
             bpeMergeSql(symsOfTok, "t1.a", "t1.b"), "t2.a", "t2.b")}) AS nsym

@@ -204,12 +204,73 @@ object DedupQueries extends QueryPack {
        |    THEN (CAST(1 AS BIGINT) << i) ELSE CAST(0 AS BIGINT) END)),
        |  (a, x) -> a + x) AS simhash FROM th)""".stripMargin
 
-  private[queries] val jaccardTail =
+  private val jaccardTail =
     """SELECT i.doc_a, i.doc_b,
       |  ROUND(i.cnt * 1.0 / (sa.n_sh + sb.n_sh - i.cnt), 4) AS jaccard
       |FROM inter i JOIN sz sa ON i.doc_a = sa.doc_id
       |             JOIN sz sb ON i.doc_b = sb.doc_id
       |WHERE ROUND(i.cnt * 1.0 / (sa.n_sh + sb.n_sh - i.cnt), 4) >= 0.5""".stripMargin
+
+  /** Winnowing fingerprints, k = 16 chars, w = 8: rolling char-window
+    * hashes `h`, window minima `wn`, distinct (doc_id, fp) rows `fp0` —
+    * replays [[graft.functions.TextHashes]]'s `winnow_fingerprints`.
+    */
+  private val winnowFpCtes =
+    """h AS (SELECT doc_id,
+      |    CASE WHEN length(text) < 16 THEN CAST([] AS BIGINT[])
+      |    ELSE list_transform(range(1, length(text) - 16 + 2), i ->
+      |      list_reduce(list_prepend(CAST(0 AS BIGINT),
+      |        list_transform(range(i, i + 16), c -> CAST(ord(text[c]) AS BIGINT))),
+      |        (a, x) -> (a * 31 + x) % 2147483647)) END AS hs
+      |  FROM documents),
+      |wn AS (SELECT doc_id,
+      |    CASE WHEN len(hs) = 0 THEN CAST([] AS BIGINT[])
+      |         WHEN len(hs) <= 8 THEN [list_min(hs)]
+      |         ELSE list_transform(range(1, len(hs) - 8 + 2),
+      |                j -> list_min(hs[j : j + 7])) END AS wins
+      |  FROM h),
+      |fp0 AS (SELECT DISTINCT doc_id, unnest(wins) AS fp FROM wn)""".stripMargin
+
+  /** Shared-shingle counts per doc pair over `d` — the inverted-index
+    * self-join of [[graft.dedup.NearDup.exactJaccardPairs]].
+    */
+  private[queries] val shingleInterCte =
+    """inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS cnt
+      |          FROM d a JOIN d b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+      |          GROUP BY 1, 2)""".stripMargin
+
+  /** Oracle twin of [[minedPairs]]: the capped miner's pair list as CTE
+    * `pairs` (doc_a, doc_b, jaccard).
+    */
+  private[queries] val minedPairsCtes =
+    s"""${cappedShingleCtes(64)},
+       |$shingleInterCte,
+       |pairs AS ($jaccardTail)""".stripMargin
+
+  /** Oracle twin of [[graft.dedup.NearDup.connectedComponents]] over the
+    * pairs CTE `pairs` (id columns `a`, `b`): the undirected `edges`, the
+    * min-label closure `reach(node, lbl)` (the query opens `WITH
+    * RECURSIVE`) and, with `groups`, `grp(node, group_id)`. A query that
+    * defines CTEs between the edge list and the closure composes the
+    * three parts itself.
+    */
+  private[queries] def ccEdgesCte(pairs: String, a: String, b: String): String =
+    s"""edges AS (SELECT $a AS src, $b AS dst FROM $pairs
+       |          UNION SELECT $b, $a FROM $pairs)""".stripMargin
+
+  private[queries] val ccReachCte =
+    """reach(node, lbl) AS (
+      |  SELECT src, src FROM edges
+      |  UNION
+      |  SELECT ed.dst, r.lbl FROM reach r JOIN edges ed ON ed.src = r.node)""".stripMargin
+
+  private[queries] val ccGroupCte =
+    "grp AS (SELECT node, MIN(lbl) AS group_id FROM reach GROUP BY node)"
+
+  private[queries] def ccCtes(pairs: String, a: String, b: String,
+      groups: Boolean = false): String =
+    (Seq(ccEdgesCte(pairs, a, b), ccReachCte) ++
+      (if (groups) Seq(ccGroupCte) else Nil)).mkString(",\n")
 
   override def queries: Seq[Query] = Seq(
 
@@ -230,9 +291,7 @@ object DedupQueries extends QueryPack {
         NearDup.exactJaccardPairs(docs(s, dir), "doc_id", "text", 3, 0.5)
           .orderBy("doc_a", "doc_b"),
       Some(s"""WITH $shingleCtes,
-              |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS cnt
-              |          FROM d a JOIN d b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              |          GROUP BY 1, 2)
+              |$shingleInterCte
               |$jaccardTail
               |ORDER BY doc_a, doc_b""".stripMargin),
       doc = "exact word-3-gram Jaccard >= 0.5 via inverted shingle index — pairs " +
@@ -260,17 +319,8 @@ object DedupQueries extends QueryPack {
             (col("node") === col("group_id")).cast("int").as("is_canonical"))
           .orderBy("doc_id")
       },
-      Some(s"""WITH RECURSIVE ${cappedShingleCtes(64)},
-              |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS cnt
-              |          FROM d a JOIN d b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              |          GROUP BY 1, 2),
-              |pairs AS ($jaccardTail),
-              |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-              |          UNION SELECT doc_b, doc_a FROM pairs),
-              |reach(node, lbl) AS (
-              |  SELECT src, src FROM edges
-              |  UNION
-              |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node)
+      Some(s"""WITH RECURSIVE $minedPairsCtes,
+              |${ccCtes("pairs", "doc_a", "doc_b")}
               |SELECT node AS doc_id, MIN(lbl) AS group_id,
               |  CAST(node = MIN(lbl) AS INT) AS is_canonical
               |FROM reach GROUP BY node
@@ -296,12 +346,7 @@ object DedupQueries extends QueryPack {
       },
       Some(s"""WITH RECURSIVE $minhashCtes,
               |mh_pairs AS ($jaccardTail),
-              |edges AS (SELECT doc_a AS src, doc_b AS dst FROM mh_pairs
-              |          UNION SELECT doc_b, doc_a FROM mh_pairs),
-              |reach(node, lbl) AS (
-              |  SELECT src, src FROM edges
-              |  UNION
-              |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node)
+              |${ccCtes("mh_pairs", "doc_a", "doc_b")}
               |SELECT node AS doc_id, MIN(lbl) AS group_id,
               |  CAST(node = MIN(lbl) AS INT) AS is_canonical
               |FROM reach GROUP BY node
@@ -383,11 +428,7 @@ object DedupQueries extends QueryPack {
           .agg(count(lit(1)).as("n_pairs"))
           .orderBy("source_lo", "source_hi")
       },
-      Some(s"""WITH ${cappedShingleCtes(64)},
-              |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS cnt
-              |          FROM d a JOIN d b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              |          GROUP BY 1, 2),
-              |pairs AS ($jaccardTail)
+      Some(s"""WITH $minedPairsCtes
               |SELECT LEAST(da.source, db.source) AS source_lo,
               |  GREATEST(da.source, db.source) AS source_hi,
               |  COUNT(*) AS n_pairs
@@ -406,9 +447,7 @@ object DedupQueries extends QueryPack {
           maxDocsPerShingle = Some(64))
           .orderBy("doc_a", "doc_b"),
       Some(s"""WITH ${cappedShingleCtes(64)},
-              |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS cnt
-              |          FROM d a JOIN d b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              |          GROUP BY 1, 2)
+              |$shingleInterCte
               |SELECT i.doc_a, i.doc_b,
               |  ROUND(i.cnt * 1.0 / sa.n_sh, 4) + 0.0 AS cont_a,
               |  ROUND(i.cnt * 1.0 / sb.n_sh, 4) + 0.0 AS cont_b
@@ -637,20 +676,7 @@ object DedupQueries extends QueryPack {
           .where(col("n_shared") >= 3)
           .orderBy("doc_a", "doc_b")
       },
-      Some("""WITH h AS (SELECT doc_id,
-             |    CASE WHEN length(text) < 16 THEN CAST([] AS BIGINT[])
-             |    ELSE list_transform(range(1, length(text) - 16 + 2), i ->
-             |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |        list_transform(range(i, i + 16), c -> CAST(ord(text[c]) AS BIGINT))),
-             |        (a, x) -> (a * 31 + x) % 2147483647)) END AS hs
-             |  FROM documents),
-             |wn AS (SELECT doc_id,
-             |    CASE WHEN len(hs) = 0 THEN CAST([] AS BIGINT[])
-             |         WHEN len(hs) <= 8 THEN [list_min(hs)]
-             |         ELSE list_transform(range(1, len(hs) - 8 + 2),
-             |                j -> list_min(hs[j : j + 7])) END AS wins
-             |  FROM h),
-             |fp0 AS (SELECT DISTINCT doc_id, unnest(wins) AS fp FROM wn),
+      Some(s"""WITH $winnowFpCtes,
              |fp AS (SELECT f.doc_id, f.fp FROM fp0 f
              |       JOIN (SELECT fp FROM fp0 GROUP BY fp
              |             HAVING COUNT(*) <= 64) ok USING (fp))
@@ -693,20 +719,7 @@ object DedupQueries extends QueryPack {
                 .otherwise(lit("batch")))
             .orderBy("new_doc", "dup_of"))
       },
-      Some("""WITH h AS (SELECT doc_id,
-             |    CASE WHEN length(text) < 16 THEN CAST([] AS BIGINT[])
-             |    ELSE list_transform(range(1, length(text) - 16 + 2), i ->
-             |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |        list_transform(range(i, i + 16), c -> CAST(ord(text[c]) AS BIGINT))),
-             |        (a, x) -> (a * 31 + x) % 2147483647)) END AS hs
-             |  FROM documents),
-             |wn AS (SELECT doc_id,
-             |    CASE WHEN len(hs) = 0 THEN CAST([] AS BIGINT[])
-             |         WHEN len(hs) <= 8 THEN [list_min(hs)]
-             |         ELSE list_transform(range(1, len(hs) - 8 + 2),
-             |                j -> list_min(hs[j : j + 7])) END AS wins
-             |  FROM h),
-             |fp0 AS (SELECT DISTINCT doc_id, unnest(wins) AS fp FROM wn),
+      Some(s"""WITH $winnowFpCtes,
              |fpc AS (SELECT doc_id, fp FROM fp0 WHERE doc_id < 400),
              |fpd AS (SELECT doc_id, fp FROM fp0 WHERE doc_id >= 400),
              |hot AS (SELECT fp FROM fp0 GROUP BY fp HAVING COUNT(*) > 64),
@@ -754,18 +767,8 @@ object DedupQueries extends QueryPack {
             (round(col("n_removable") / col("n_corpus"), 6) + lit(0.0))
               .as("savings_frac"))
       },
-      Some(s"""WITH RECURSIVE ${cappedShingleCtes(64)},
-              |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS cnt
-              |          FROM d a JOIN d b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              |          GROUP BY 1, 2),
-              |pairs AS ($jaccardTail),
-              |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-              |          UNION SELECT doc_b, doc_a FROM pairs),
-              |reach(node, lbl) AS (
-              |  SELECT src, src FROM edges
-              |  UNION
-              |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
-              |grp AS (SELECT node, MIN(lbl) AS group_id FROM reach GROUP BY node),
+      Some(s"""WITH RECURSIVE $minedPairsCtes,
+              |${ccCtes("pairs", "doc_a", "doc_b", groups = true)},
               |gsz AS (SELECT group_id, COUNT(*) AS sz FROM grp GROUP BY 1),
               |n AS (SELECT COUNT(*) AS n_corpus FROM documents),
               |g AS (SELECT COUNT(*) AS n_groups,
@@ -798,17 +801,8 @@ object DedupQueries extends QueryPack {
                 |FROM dedup_groups GROUP BY group_id HAVING COUNT(*) >= 2
                 |ORDER BY group_size DESC, group_id LIMIT 20""".stripMargin)
       },
-      Some(s"""WITH RECURSIVE ${cappedShingleCtes(64)},
-              |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS cnt
-              |          FROM d a JOIN d b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              |          GROUP BY 1, 2),
-              |pairs AS ($jaccardTail),
-              |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-              |          UNION SELECT doc_b, doc_a FROM pairs),
-              |reach(node, lbl) AS (
-              |  SELECT src, src FROM edges
-              |  UNION
-              |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
+      Some(s"""WITH RECURSIVE $minedPairsCtes,
+              |${ccCtes("pairs", "doc_a", "doc_b")},
               |grp AS (SELECT node AS doc_id, MIN(lbl) AS group_id
               |        FROM reach GROUP BY node)
               |SELECT group_id, COUNT(*) AS group_size,
@@ -881,13 +875,8 @@ object DedupQueries extends QueryPack {
              |         FROM edges e JOIN $prev p ON e.src = p.node GROUP BY 1) s
              |        ON d.src = s.dst)""".stripMargin
         }
-        s"""WITH RECURSIVE ${cappedShingleCtes(64)},
-           |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS cnt
-           |          FROM d a JOIN d b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           |          GROUP BY 1, 2),
-           |pairs AS ($jaccardTail),
-           |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-           |          UNION SELECT doc_b, doc_a FROM pairs),
+        s"""WITH RECURSIVE $minedPairsCtes,
+           |${ccEdgesCte("pairs", "doc_a", "doc_b")},
            |deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY 1),
            |n AS (SELECT COUNT(*) AS n FROM deg),
            |pr0 AS (SELECT src AS node, deg, CAST($U // n.n AS BIGINT) AS pr
@@ -895,11 +884,8 @@ object DedupQueries extends QueryPack {
            |${iter(1)},
            |${iter(2)},
            |${iter(3)},
-           |reach(node, lbl) AS (
-           |  SELECT src, src FROM edges
-           |  UNION
-           |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
-           |grp AS (SELECT node, MIN(lbl) AS group_id FROM reach GROUP BY node),
+           |$ccReachCte,
+           |$ccGroupCte,
            |r AS (SELECT g.group_id, g.node, p.pr,
            |        ROW_NUMBER() OVER (PARTITION BY g.group_id
            |                           ORDER BY p.pr DESC, g.node) AS rn
@@ -953,18 +939,8 @@ object DedupQueries extends QueryPack {
               .as("n_straddling_groups"))
           .orderBy("split")
       },
-      Some(s"""WITH RECURSIVE ${cappedShingleCtes(64)},
-              |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS cnt
-              |          FROM d a JOIN d b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              |          GROUP BY 1, 2),
-              |pairs AS ($jaccardTail),
-              |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-              |          UNION SELECT doc_b, doc_a FROM pairs),
-              |reach(node, lbl) AS (
-              |  SELECT src, src FROM edges
-              |  UNION
-              |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
-              |grp AS (SELECT node, MIN(lbl) AS group_id FROM reach GROUP BY node),
+      Some(s"""WITH RECURSIVE $minedPairsCtes,
+              |${ccCtes("pairs", "doc_a", "doc_b", groups = true)},
               |a AS (SELECT dd.doc_id, COALESCE(g.group_id, dd.doc_id) AS split_key
               |      FROM documents dd LEFT JOIN grp g ON g.node = dd.doc_id),
               |s AS (SELECT doc_id, split_key,

@@ -187,14 +187,11 @@ object FeatureQueries extends QueryPack {
       "q_w17_residual_volatility",
       (s, dir) => {
         // same ordered-scan rationale as q_w16 above (was 15.6x at the
-        // 100x probe as a 5-key window); lr replicates logReturns with
-        // OrderedLag's prev, lr2 is materialized so the rolling avg
-        // re-accumulates the identical per-row input the window saw
-        import graft.ops.{OrderedLag, OrderedRolling}
-        val lagged = OrderedLag.withLags(ev(s, dir), Seq(K),
-            Seq(col("ts"), col("event_id")), "value", Seq("prev" -> 1))
-          .withColumn("lr", when(col("value") > 0.0 && col("prev") > 0.0,
-            log(col("value") / col("prev"))))
+        // 100x probe as a 5-key window); lr2 is materialized so the
+        // rolling avg re-accumulates the identical per-row input the
+        // window saw
+        import graft.ops.OrderedRolling
+        val lagged = TimeSeriesQueries.logReturnFrame(s, dir)
           .where(col("lr").isNotNull)
           .withColumn("lr2", pow(col("lr"), 2))
         OrderedRolling.withRollups(lagged, Seq(K),
@@ -203,12 +200,7 @@ object FeatureQueries extends QueryPack {
           .select(col(K), col("event_id"),
             (round(sqrt(col("__v")), 6) + lit(0.0)).as("resid_vol_24"))
       },
-      Some("""WITH r AS (
-             |  SELECT event_type, event_id, ts,
-             |    CASE WHEN value > 0 AND LAG(value) OVER w > 0
-             |         THEN LN(value / LAG(value) OVER w) END AS lr
-             |  FROM events
-             |  WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id))
+      Some(s"""WITH ${TimeSeriesQueries.logReturnCte}
              |SELECT event_type, event_id,
              |  ROUND(SQRT(AVG(lr * lr) OVER (PARTITION BY event_type ORDER BY ts, event_id
              |    ROWS BETWEEN 23 PRECEDING AND CURRENT ROW)), 6) + 0.0 AS resid_vol_24

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Query, QueryPack, Tables}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deterministic training-data sampling — the knob a pretraining sweep
@@ -44,6 +44,32 @@ object SamplingQueries extends QueryPack {
   private val thrSql =
     """CASE event_type WHEN 'purchase' THEN 1073741823 WHEN 'view' THEN 536870911
       |     WHEN 'click' THEN 214748364 ELSE 107374182 END""".stripMargin
+
+  /** The quality curriculum over `documents`: `fit` turns the
+    * (doc_id, quality, n_tokens) frame into the 1-row tercile cut frame
+    * (c33, c66), which is broadcast; assignment is then MAP-ONLY —
+    * deliberately not ntile over a global window, which would sort the
+    * corpus on one partition (the scale trap a naive curriculum
+    * implementation has). Report = the per-phase doc/token budget a
+    * curriculum dataloader consumes; phase 1 = cleanest.
+    */
+  private[queries] def curriculumPhases(s: SparkSession, dir: String)(
+      fit: DataFrame => DataFrame): DataFrame = {
+    import graft.text.TextAnalysis
+    val q = Tables(s, dir, "documents").select(col("doc_id"),
+      round(TextAnalysis.qualityScore("text"), 4).as("quality"),
+      TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"))
+    q.crossJoin(broadcast(fit(q)))
+      .select(col("quality"), col("n_tokens"),
+        when(col("quality") >= col("c66"), lit(1))
+          .when(col("quality") >= col("c33"), lit(2))
+          .otherwise(lit(3)).as("phase"))
+      .groupBy("phase")
+      .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"),
+        (round(min("quality"), 4) + lit(0.0)).as("q_min"),
+        (round(max("quality"), 4) + lit(0.0)).as("q_max"))
+      .orderBy("phase")
+  }
 
   override def queries: Seq[Query] = Seq(
 
@@ -317,33 +343,12 @@ object SamplingQueries extends QueryPack {
 
     Query(
       "q_s_curriculum_phases",
-      (s, dir) => {
-        import graft.text.TextAnalysis
-        // 3-phase quality curriculum (clean-first): phase cut points are
-        // the corpus quality terciles fitted as exact interpolated
-        // percentiles and broadcast as a 1-row frame; assignment is then
-        // MAP-ONLY — deliberately not ntile over a global window, which
-        // would sort the corpus on one partition (the scale trap a naive
-        // curriculum implementation has). Report = the per-phase
-        // doc/token budget a curriculum dataloader consumes; phase 1 =
-        // cleanest.
-        val q = Tables(s, dir, "documents").select(col("doc_id"),
-          round(TextAnalysis.qualityScore("text"), 4).as("quality"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"))
-        val cuts = broadcast(q.agg(
-          (round(expr("percentile(quality, 1.0/3)"), 4) + lit(0.0)).as("c33"),
-          (round(expr("percentile(quality, 2.0/3)"), 4) + lit(0.0)).as("c66")))
-        q.crossJoin(cuts)
-          .select(col("quality"), col("n_tokens"),
-            when(col("quality") >= col("c66"), lit(1))
-              .when(col("quality") >= col("c33"), lit(2))
-              .otherwise(lit(3)).as("phase"))
-          .groupBy("phase")
-          .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"),
-            (round(min("quality"), 4) + lit(0.0)).as("q_min"),
-            (round(max("quality"), 4) + lit(0.0)).as("q_max"))
-          .orderBy("phase")
-      },
+      // 3-phase quality curriculum (clean-first): phase cut points are
+      // the corpus quality terciles fitted as exact interpolated
+      // percentiles
+      (s, dir) => curriculumPhases(s, dir)(q => q.agg(
+        (round(expr("percentile(quality, 1.0/3)"), 4) + lit(0.0)).as("c33"),
+        (round(expr("percentile(quality, 2.0/3)"), 4) + lit(0.0)).as("c66"))),
       Some(s"""WITH q AS (SELECT doc_id, ROUND(${TextQueries.qualityExprSql}, 4) AS quality,
               |         CAST(${TextQueries.nTokSql} AS BIGINT) AS n_tokens
               |       FROM documents),

@@ -85,9 +85,9 @@ object TextQueries extends QueryPack {
     * +1-inside-the-log IDF) over a (doc_id, text) frame: per-doc
     * (n_terms, bm25) for the given query terms, UNORDERED — callers add
     * their own top-k. Composed verbatim by `q_t_bm25_topk` and the
-    * hybrid-RRF sparse leg (`VectorQueries.q_e_hybrid_rrf`); the paired
-    * DuckDB oracles replay the same CTE chain, so a change here must land
-    * in both oracle texts too. Scale shape: doc lengths are a MAP-ONLY
+    * hybrid-RRF sparse leg (`VectorQueries.q_e_hybrid_rrf`); both
+    * DuckDB oracles replay it through [[bm25Ctes]], so a change here must
+    * land there too. Scale shape: doc lengths are a MAP-ONLY
     * size() over the token array (`len > 0` keeps parity with the
     * explode+groupBy shape the oracles replay, which never emits a
     * zero-token doc — no corpus-sized token shuffle, no cache); only tf
@@ -134,6 +134,62 @@ object TextQueries extends QueryPack {
               / (col("tot_len") * lit(1.0) / col("n_docs"))))), 4)
           + lit(0.0)).as("bm25"))
   }
+
+  /** Oracle twin of [[bm25PerDoc]]'s statistics for the fixed query terms
+    * ('join', 'vector', 'stream') over the `documents` rows matching
+    * `where` (an SQL suffix, may be empty): tokens `tk`, doc lengths
+    * `lens`, corpus stats `st`, term frequencies `tf` and `idf`.
+    */
+  private[queries] def bm25Ctes(where: String): String =
+    raw"""tk AS (SELECT doc_id, unnest(list_filter(
+         |         string_split_regex(lower(trim(text)), '\s+'), t -> t <> '')) AS tok
+         |       FROM documents$where),
+         |lens AS (SELECT doc_id, COUNT(*) AS len FROM tk GROUP BY 1),
+         |st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
+         |         CAST(SUM(len) AS BIGINT) AS tot_len FROM lens),
+         |tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM tk
+         |       WHERE tok IN ('join', 'vector', 'stream') GROUP BY 1, 2),
+         |idf AS (SELECT tok,
+         |          ROUND(ln((n_docs - df + 0.5) / (df + 0.5) + 1.0), 6) + 0.0 AS idf
+         |        FROM (SELECT tok, COUNT(*) AS df FROM tf GROUP BY 1), st)""".stripMargin
+
+  /** Contiguous greedy packing state: within each (source, shard) —
+    * shard = KeyHash(doc_id) mod 8, because source cardinality alone may
+    * be TINY (a 10B-doc source would otherwise become ONE sort partition)
+    * — `cum_before` = the tokens before the doc in doc_id order, so
+    * `cum_before DIV budget` is its bin. Packing needs only A
+    * deterministic order per shard, not a global one, so sub-sharding is
+    * free parallelism: window sort cost is bounded per shard at any
+    * corpus size, nShards is the knob.
+    */
+  private[queries] def packedDocs(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val shard = pmod(graft.functions.KeyHash.column(col("doc_id")), lit(8L))
+    val w = Window.partitionBy("source", "shard").orderBy("doc_id")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    Tables(s, dir, "documents")
+      .select(col("doc_id"), col("source"),
+        tokenCount(col("text")).as("n_tokens"))
+      .withColumn("shard", shard)
+      .withColumn("cum_before", coalesce(sum("n_tokens").over(w), lit(0L)))
+  }
+
+  /** Oracle twin of [[packedDocs]]: `tc` (doc_id, source, shard,
+    * n_tokens) and `c`, which adds `cum_before`.
+    */
+  private[queries] val packCtes =
+    s"""tc AS (
+       |  SELECT doc_id, source,
+       |    ${graft.functions.KeyHash.sql("doc_id")} % 8 AS shard,
+       |    CASE WHEN length(trim(text)) = 0 THEN 0
+       |         ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_tokens
+       |  FROM documents),
+       |c AS (
+       |  SELECT doc_id, source, shard, n_tokens,
+       |    COALESCE(SUM(n_tokens) OVER (PARTITION BY source, shard ORDER BY doc_id
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
+       |  FROM tc)""".stripMargin
 
   private[queries] val cmsOracleSql: String =
     s"""WITH tok AS (
@@ -236,40 +292,12 @@ object TextQueries extends QueryPack {
 
     Query(
       "q_t_sequence_pack",
-      (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        // Contiguous greedy packing: within each (source, shard) — shard =
-        // KeyHash(doc_id) mod 8, because source cardinality alone may be
-        // TINY (a 10B-doc source would otherwise become ONE sort
-        // partition) — bin = floor(tokens-before-me / budget). Packing
-        // needs only A deterministic order per shard, not a global one,
-        // so sub-sharding is free parallelism: window sort cost is
-        // bounded per shard at any corpus size, nShards is the knob.
-        val shard = pmod(graft.functions.KeyHash.column(col("doc_id")),
-          lit(8L))
-        val w = Window.partitionBy("source", "shard").orderBy("doc_id")
-          .rowsBetween(Window.unboundedPreceding, -1)
-        Tables(s, dir, "documents")
-          .select(col("doc_id"), col("source"),
-            tokenCount(col("text")).as("n_tokens"))
-          .withColumn("shard", shard)
-          .withColumn("cum_before",
-            coalesce(sum("n_tokens").over(w), lit(0L)))
+      (s, dir) =>
+        packedDocs(s, dir)
           .select(col("doc_id"), col("source"), col("shard"),
             col("n_tokens"),
-            expr("cum_before DIV 256").as("pack_id"))
-      },
-      Some(s"""WITH tc AS (
-             |  SELECT doc_id, source,
-             |    ${graft.functions.KeyHash.sql("doc_id")} % 8 AS shard,
-             |    CASE WHEN length(trim(text)) = 0 THEN 0
-             |         ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_tokens
-             |  FROM documents),
-             |c AS (
-             |  SELECT doc_id, source, shard, n_tokens,
-             |    COALESCE(SUM(n_tokens) OVER (PARTITION BY source, shard ORDER BY doc_id
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-             |  FROM tc)
+            expr("cum_before DIV 256").as("pack_id")),
+      Some(s"""WITH $packCtes
              |SELECT doc_id, source, shard, n_tokens,
              |  CAST(cum_before // 256 AS BIGINT) AS pack_id
              |FROM c""".stripMargin),
@@ -620,9 +648,7 @@ object TextQueries extends QueryPack {
               |    MIN(doc_id) OVER (PARTITION BY md5(text)) AS canon
               |  FROM documents),
               |${DedupQueries.cappedShingleCtes(64)},
-              |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS cnt
-              |          FROM d a JOIN d b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              |          GROUP BY 1, 2),
+              |${DedupQueries.shingleInterCte},
               |nd AS (SELECT i.doc_b FROM inter i
               |       JOIN sz sa ON i.doc_a = sa.doc_id JOIN sz sb ON i.doc_b = sb.doc_id
               |       WHERE ROUND(i.cnt * 1.0 / (sa.n_sh + sb.n_sh - i.cnt), 4) >= 0.5)
@@ -710,17 +736,7 @@ object TextQueries extends QueryPack {
           .orderBy(col("bm25").desc, col("doc_id"))
           .limit(20)
       },
-      Some("""WITH tk AS (SELECT doc_id, unnest(list_filter(
-             |         string_split_regex(lower(trim(text)), '\s+'), t -> t <> '')) AS tok
-             |       FROM documents),
-             |lens AS (SELECT doc_id, COUNT(*) AS len FROM tk GROUP BY 1),
-             |st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-             |         CAST(SUM(len) AS BIGINT) AS tot_len FROM lens),
-             |tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM tk
-             |       WHERE tok IN ('join', 'vector', 'stream') GROUP BY 1, 2),
-             |idf AS (SELECT tok,
-             |          ROUND(ln((n_docs - df + 0.5) / (df + 0.5) + 1.0), 6) + 0.0 AS idf
-             |        FROM (SELECT tok, COUNT(*) AS df FROM tf GROUP BY 1), st)
+      Some(s"""WITH ${bm25Ctes("")}
              |SELECT t.doc_id, CAST(COUNT(*) AS BIGINT) AS n_terms,
              |  ROUND(SUM(i.idf * t.tf * 2.2
              |    / (t.tf + 1.2 * (0.25 + 0.75 * l.len
@@ -821,19 +837,11 @@ object TextQueries extends QueryPack {
               |    MIN(doc_id) OVER (PARTITION BY md5(text)) AS canon
               |  FROM documents),
               |${DedupQueries.cappedShingleCtes(64)},
-              |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS cnt
-              |          FROM d a JOIN d b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              |          GROUP BY 1, 2),
+              |${DedupQueries.shingleInterCte},
               |pairs AS (SELECT i.doc_a, i.doc_b FROM inter i
               |          JOIN sz sa ON i.doc_a = sa.doc_id JOIN sz sb ON i.doc_b = sb.doc_id
               |          WHERE ROUND(i.cnt * 1.0 / (sa.n_sh + sb.n_sh - i.cnt), 4) >= 0.5),
-              |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-              |          UNION SELECT doc_b, doc_a FROM pairs),
-              |reach(node, lbl) AS (
-              |  SELECT src, src FROM edges
-              |  UNION
-              |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
-              |grp AS (SELECT node, MIN(lbl) AS group_id FROM reach GROUP BY node)
+              |${DedupQueries.ccCtes("pairs", "doc_a", "doc_b", groups = true)}
               |SELECT doc_id, source, n_tokens, ROUND(quality, 4) + 0.0 AS quality
               |FROM scored LEFT JOIN grp ON scored.doc_id = grp.node
               |WHERE doc_id = canon

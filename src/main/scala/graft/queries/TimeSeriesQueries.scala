@@ -23,6 +23,38 @@ object TimeSeriesQueries extends QueryPack {
   private def ev(s: SparkSession, dir: String) = Tables(s, dir, "events")
   private def w = keyedOrder(K, "ts", "event_id")
 
+  /** Events with `prev`, the series' previous value by the ordered scan
+    * (the q_w4 rationale: a partitionBy(event_type) window sorts on
+    * #event_types tasks), and `lr`, the guarded log return — logReturns
+    * replicated exactly, null on non-positive ticks.
+    */
+  private[queries] def logReturnFrame(s: SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    graft.ops.OrderedLag.withLags(ev(s, dir), Seq(K),
+        Seq(col("ts"), col("event_id")), "value", Seq("prev" -> 1))
+      .withColumn("lr", when(col("value") > 0.0 && col("prev") > 0.0,
+        log(col("value") / col("prev"))))
+
+  /** Oracle twin of [[logReturnFrame]]: `r(event_type, event_id, ts, lr)`. */
+  private[queries] val logReturnCte =
+    """r AS (
+      |  SELECT event_type, event_id, ts,
+      |    CASE WHEN value > 0 AND LAG(value) OVER w > 0
+      |         THEN LN(value / LAG(value) OVER w) END AS lr
+      |  FROM events
+      |  WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id))""".stripMargin
+
+  /** Oracle of the OHLCV candles per event_type over `interval` buckets,
+    * computed directly from the raw ticks.
+    */
+  private def ohlcvSql(interval: String): String =
+    s"""SELECT event_type, time_bucket(INTERVAL 1 $interval, ts) AS bucket_start,
+       |  first(value ORDER BY ts, event_id) AS open,
+       |  MAX(value) AS high, MIN(value) AS low,
+       |  last(value ORDER BY ts, event_id) AS close,
+       |  ROUND(SUM(value), 2) AS volume, COUNT(*) AS n_rows
+       |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+
   override def queries: Seq[Query] = Seq(
 
     // ---- W1: log returns ----
@@ -124,23 +156,14 @@ object TimeSeriesQueries extends QueryPack {
         // ordered-scan form; NO filter on null lr — null rows occupy
         // frame slots without contributing, exactly the window's (and
         // OrderedRolling's pinned) null semantics
-        import graft.ops.{OrderedLag, OrderedRolling}
-        val lagged = OrderedLag.withLags(ev(s, dir), Seq(K),
-            Seq(col("ts"), col("event_id")), "value", Seq("prev" -> 1))
-          .withColumn("lr", when(col("value") > 0.0 && col("prev") > 0.0,
-            log(col("value") / col("prev"))))
-        OrderedRolling.withRollups(lagged, Seq(K),
+        import graft.ops.OrderedRolling
+        OrderedRolling.withRollups(logReturnFrame(s, dir), Seq(K),
             Seq(col("ts"), col("event_id")),
             Seq(OrderedRolling.Roll("__v12", "stddev_samp", 12, "lr")))
           .select(col("event_type"), col("event_id"),
             round(col("__v12"), 4).as("volatility_12"))
       },
-      Some("""WITH r AS (
-             |  SELECT event_type, event_id, ts,
-             |    CASE WHEN value > 0 AND LAG(value) OVER w > 0
-             |         THEN LN(value / LAG(value) OVER w) END AS lr
-             |  FROM events
-             |  WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id))
+      Some(s"""WITH $logReturnCte
              |SELECT event_type, event_id,
              |  ROUND(STDDEV_SAMP(lr) OVER (PARTITION BY event_type ORDER BY ts, event_id
              |    ROWS BETWEEN 11 PRECEDING AND CURRENT ROW), 4) AS volatility_12
@@ -177,12 +200,7 @@ object TimeSeriesQueries extends QueryPack {
           round(col("volume"), 2).as("volume"), col("n_rows"))
           .orderBy("event_type", "bucket_start")
       },
-      Some("""SELECT event_type, time_bucket(INTERVAL 1 DAY, ts) AS bucket_start,
-             |  first(value ORDER BY ts, event_id) AS open,
-             |  MAX(value) AS high, MIN(value) AS low,
-             |  last(value ORDER BY ts, event_id) AS close,
-             |  ROUND(SUM(value), 2) AS volume, COUNT(*) AS n_rows
-             |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+      Some(ohlcvSql("DAY")),
       doc = "SURVEY A1: pandas resample().agg(first/max/min/last/sum) — min_by/max_by on (ts,id) struct for order determinism; partial agg map-side"),
 
     // ---- A1 rollup cascade: coarse candles from fine candles ----
@@ -201,12 +219,7 @@ object TimeSeriesQueries extends QueryPack {
             round(col("volume"), 2).as("volume"), col("n_rows"))
           .orderBy("event_type", "bucket_start")
       },
-      Some("""SELECT event_type, time_bucket(INTERVAL 1 HOUR, ts) AS bucket_start,
-             |  first(value ORDER BY ts, event_id) AS open,
-             |  MAX(value) AS high, MIN(value) AS low,
-             |  last(value ORDER BY ts, event_id) AS close,
-             |  ROUND(SUM(value), 2) AS volume, COUNT(*) AS n_rows
-             |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+      Some(ohlcvSql("HOUR")),
       doc = "A1 rollup cascade: hourly candles composed from 5-minute " +
         "candles, oracle computes hourly directly from raw — hash equality " +
         "= lossless pre-aggregation (open/close via min_by/max_by on the " +

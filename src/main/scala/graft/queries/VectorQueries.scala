@@ -89,6 +89,151 @@ object VectorQueries extends QueryPack {
       .limit(20)
   }
 
+  /** Oracle twin of [[buildFusedTop20]]'s two retrieval legs: the dense
+    * cosine top-50 ranked as `dr(doc_id, r_dense)` and the BM25 top-50
+    * ranked as `br(doc_id, r_bm25)`, doc 0 (the query) excluded from both.
+    */
+  private val ragLegCtes: String =
+    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+       |q AS (SELECT emb AS qv FROM e WHERE vec_id = 0),
+       |dense AS (SELECT e.vec_id AS doc_id,
+       |            ROUND(list_cosine_similarity(e.emb, q.qv), 6) + 0.0 AS sim
+       |          FROM e, q WHERE e.vec_id <> 0
+       |          ORDER BY sim DESC, doc_id LIMIT 50),
+       |dr AS (SELECT doc_id,
+       |         CAST(ROW_NUMBER() OVER (ORDER BY sim DESC, doc_id) AS BIGINT) AS r_dense
+       |       FROM dense),
+       |${TextQueries.bm25Ctes(" WHERE doc_id <> 0")},
+       |bm AS (SELECT t.doc_id,
+       |         ROUND(SUM(i.idf * t.tf * 2.2
+       |           / (t.tf + 1.2 * (0.25 + 0.75 * l.len
+       |               / (tot_len * 1.0 / n_docs)))), 4) + 0.0 AS bm25
+       |       FROM tf t JOIN idf i USING (tok) JOIN lens l USING (doc_id), st
+       |       GROUP BY t.doc_id ORDER BY bm25 DESC, doc_id LIMIT 50),
+       |br AS (SELECT doc_id,
+       |         CAST(ROW_NUMBER() OVER (ORDER BY bm25 DESC, doc_id) AS BIGINT) AS r_bm25
+       |       FROM bm)""".stripMargin
+
+  /** Cosine-scored LSH self-pairs (vec_a < vec_b, `sim`) over the
+    * embeddings: 4 bands × 12 bits, bucket-join candidates, deduplicated
+    * across bands — each caller applies its own `sim` threshold.
+    */
+  private def lshSelfPairs(s: SparkSession, dir: String): DataFrame = {
+    import graft.functions.VectorExpressions.cosine_sim
+    val banded = VectorSearch.withLshBands(emb(s, dir), "embedding",
+      nBands = 4, bitsPerBand = 12)
+    banded.alias("a").join(banded.alias("b"),
+        col("a.band") === col("b.band") &&
+          col("a.band_val") === col("b.band_val") &&
+          col("a.vec_id") < col("b.vec_id"))
+      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
+        (round(cosine_sim(col("a.embedding"), col("b.embedding")), 6) + lit(0.0))
+          .as("sim"))
+      .dropDuplicates("vec_a", "vec_b")
+  }
+
+  /** Recall@10 of an index's top-10 (a `vec_id` frame) against the exact
+    * brute-force top-10 for the query vector: (k, n_hits, recall). Both
+    * sides are 10-row top-k frames, so the semi-join and the 1-row report
+    * cost nothing next to the two scans at any corpus size.
+    */
+  private def recallAt10(s: SparkSession, dir: String,
+      index: DataFrame): DataFrame =
+    VectorSearch.cosineTopK(
+        emb(s, dir).where(col("vec_id") =!= 0), queryVec(s, dir),
+        "vec_id", "embedding", 10)
+      .select(col("vec_id"))
+      .join(index.select(col("vec_id")), Seq("vec_id"), "left_semi")
+      .agg(count(lit(1)).as("n_hits"))
+      .select(lit(10).as("k"), col("n_hits"),
+        (round(col("n_hits") / 10.0, 4) + lit(0.0)).as("recall"))
+
+  /** Oracle twin of [[recallAt10]]: the exact top-10 CTE over `e` and
+    * `q`, and the report over the index's top-10 CTE `index`.
+    */
+  private val exactTop10Cte =
+    """exact AS (SELECT e.vec_id,
+      |            ROUND(list_cosine_similarity(e.emb, q.qv), 6) + 0.0 AS sim
+      |          FROM e, q WHERE e.vec_id <> 0
+      |          ORDER BY sim DESC, e.vec_id LIMIT 10)""".stripMargin
+  private def recallAt10Sql(index: String): String =
+    s"""SELECT 10 AS k, CAST(COUNT(*) AS BIGINT) AS n_hits,
+       |  ROUND(COUNT(*) / 10.0, 4) + 0.0 AS recall
+       |FROM exact WHERE vec_id IN (SELECT vec_id FROM $index)""".stripMargin
+
+  /** All-but-the-top fit over `e`'s `emb` (array<double>, dim 64): the
+    * float32-quantized mean `mu` and the dominant direction `x` of the
+    * mean-centered cloud after 3 power iterations (x ← normalize(CᵀC x)),
+    * each a retained 1-row frame. Retaining them is ~free and makes each
+    * fit pass execute once: without it the query-vector branch and every
+    * later round re-run the whole fit subtree (measured 5.9× at 10×).
+    */
+  private def abttFit(s: SparkSession, e: DataFrame): (DataFrame, DataFrame) = {
+    val muF = graft.CacheScope.retain(
+      e.select(posexplode(col("emb")).as(Seq("j", "v")))
+        .groupBy("j").agg(avg("v").cast("float").cast("double").as("m"))
+        .agg(expr("transform(array_sort(collect_list(struct(j, m))), s -> s.m)")
+          .as("mu")))
+    var xF = s.range(1).select(expr(
+      """transform(sequence(0, 63), j -> CASE WHEN j = 0
+        |  THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END)"""
+        .stripMargin).as("x"))
+    for (_ <- 1 to 3) {
+      val d = e.crossJoin(broadcast(muF)).crossJoin(broadcast(xF))
+        .select(col("emb"), col("mu"), expr(abttDotX).as("dot"))
+      val y = d.select(posexplode(expr(
+        "transform(sequence(0, 63), j -> dot * (emb[j] - mu[j]))"))
+        .as(Seq("j", "p")))
+        .groupBy("j").agg(sum("p").cast("float").cast("double").as("y"))
+      xF = graft.CacheScope.retain(
+        y.agg(expr(
+          "transform(array_sort(collect_list(struct(j, y))), s -> s.y)")
+          .as("yv"))
+          .select(expr(
+            // nullif: a zero-norm iterate (single-row or all-identical
+            // corpus — the mean-centered cloud is exactly 0) yields a
+            // null direction instead of an ANSI DIVIDE_BY_ZERO; the
+            // oracle mirrors with NULLIF (DegenerateProbe)
+            """transform(yv, v -> round(v / nullif(round(sqrt(
+              |  aggregate(transform(yv, w -> w * w), CAST(0 AS DOUBLE),
+              |    (a, b) -> a + b)), 6), CAST(0 AS DOUBLE)), 6))"""
+              .stripMargin).as("x")))
+    }
+    (muF, xF)
+  }
+
+  /** Per-row dot of the centered `emb` with the direction `x`. */
+  private val abttDotX = "aggregate(transform(sequence(0, 63), " +
+    "j -> (emb[j] - mu[j]) * x[j]), CAST(0 AS DOUBLE), (a, v) -> a + v)"
+
+  /** Oracle twin of [[abttFit]]: `e`, the mean `mu`, and the iterates
+    * `x0` … `x3` (each round's `d`/`y`/`x` CTEs).
+    */
+  private val abttFitCtes: String = {
+    def xiter(i: Int): String = {
+      val prev = s"x${i - 1}"
+      s"""d$i AS (SELECT e.emb, mu.mu,
+         |      list_reduce(list_prepend(0.0, list_transform(range(0, 64),
+         |        j -> (e.emb[j+1] - mu.mu[j+1]) * $prev.x[j+1])), (a, v) -> a + v) AS dot
+         |    FROM e, mu, $prev),
+         |y$i AS (SELECT j, CAST(CAST(SUM(dot * (emb[j] - mu[j])) AS REAL) AS DOUBLE) AS y
+         |    FROM d$i, (SELECT unnest(range(1, 65)) AS j) GROUP BY j),
+         |x$i AS (SELECT list_transform(yv, v -> ROUND(v / NULLIF(ROUND(sqrt(
+         |      list_reduce(list_prepend(0.0, list_transform(yv, w -> w*w)),
+         |        (a,b) -> a+b)), 6), 0.0), 6)) AS x
+         |    FROM (SELECT list(y ORDER BY j) AS yv FROM y$i))""".stripMargin
+    }
+    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+       |mu0 AS (SELECT j, CAST(CAST(AVG(emb[j]) AS REAL) AS DOUBLE) AS m
+       |        FROM e, (SELECT unnest(range(1, 65)) AS j) GROUP BY j),
+       |mu AS (SELECT list(m ORDER BY j) AS mu FROM mu0),
+       |x0 AS (SELECT list_transform(range(0, 64),
+       |         j -> CASE WHEN j = 0 THEN 1.0 ELSE 0.0 END) AS x),
+       |${xiter(1)},
+       |${xiter(2)},
+       |${xiter(3)}""".stripMargin
+  }
+
   /** One Lloyd round as DuckDB CTEs, replaying
     * [[graft.vector.VectorSearch.trainCentroids]] exactly:
     * assignment = per-row argmax cosine against `c{i-1}` (ties → lowest
@@ -225,6 +370,45 @@ object VectorQueries extends QueryPack {
        |    (a,x) -> a + x) > 0 THEN (CAST(1 AS BIGINT) << i) ELSE CAST(0 AS BIGINT) END)),
        |  (a,x) -> a + x)""".stripMargin
 
+  /** SemDeDup's seeded quantizer over the embeddings: `e`, the 16 seed
+    * centroids `cents` (vec_id < 16) and each vector's best `cell` in
+    * `asg` (ties → lowest cid) — replays [[graft.vector.VectorSearch]]'s
+    * seedCentroids + BestCell assignment.
+    */
+  private val semDedupCellCtes: String =
+    """e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+      |cents AS (SELECT vec_id AS cid, emb AS cemb FROM e WHERE vec_id < 16),
+      |asg AS (SELECT e.vec_id, e.emb,
+      |         (SELECT c.cid FROM cents c
+      |          ORDER BY list_cosine_similarity(e.emb, c.cemb) DESC, c.cid
+      |          LIMIT 1) AS cell
+      |       FROM e)""".stripMargin
+
+  /** LSH-banded ANN probe (4 bands × 8 bits) over `e`: signatures `sig`,
+    * `bands`, the query's bands `qb` and `cand(vec_id, emb)`, every
+    * non-query vector sharing a band with vec 0 — replays the candidate
+    * stage of [[graft.vector.VectorSearch.annTopK]].
+    */
+  private val annLshCandCtes: String =
+    s"""sig AS (SELECT vec_id, emb, ${sigSql(32, "emb")} AS s FROM e),
+       |bands AS (SELECT vec_id, emb, band, (s >> (8*band)) & 255 AS bv
+       |          FROM sig, (SELECT unnest(range(0, 4)) AS band)),
+       |qb AS (SELECT band, bv FROM bands WHERE vec_id = 0),
+       |cand AS (SELECT DISTINCT b.vec_id, b.emb
+       |         FROM bands b JOIN qb ON b.band = qb.band AND b.bv = qb.bv
+       |         WHERE b.vec_id <> 0)""".stripMargin
+
+  /** Oracle twin of [[lshSelfPairs]]'s candidates (4 bands × 12 bits)
+    * over `e`: `cand(vec_a, vec_b)`, every vec_a < vec_b sharing a band.
+    */
+  private val lshPairCandCtes: String =
+    s"""sig AS (SELECT vec_id, emb, ${sigSql(48, "emb")} AS s FROM e),
+       |bands AS (SELECT vec_id, band, (s >> (12*band)) & 4095 AS bv
+       |          FROM sig, (SELECT unnest(range(0, 4)) AS band)),
+       |cand AS (SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
+       |         FROM bands a JOIN bands b ON a.band = b.band AND a.bv = b.bv
+       |                      AND a.vec_id < b.vec_id)""".stripMargin
+
   override def queries: Seq[Query] = Seq(
 
     Query(
@@ -263,13 +447,7 @@ object VectorQueries extends QueryPack {
           emb(s, dir).where(col("vec_id") =!= 0), queryVec(s, dir),
           "vec_id", "embedding", 10, nBands = 4, bitsPerBand = 8),
       Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-              |sig AS (SELECT vec_id, emb, ${sigSql(32, "emb")} AS s FROM e),
-              |bands AS (SELECT vec_id, emb, band, (s >> (8*band)) & 255 AS bv
-              |          FROM sig, (SELECT unnest(range(0, 4)) AS band)),
-              |qb AS (SELECT band, bv FROM bands WHERE vec_id = 0),
-              |cand AS (SELECT DISTINCT b.vec_id, b.emb
-              |         FROM bands b JOIN qb ON b.band = qb.band AND b.bv = qb.bv
-              |         WHERE b.vec_id <> 0),
+              |$annLshCandCtes,
               |q AS (SELECT emb AS qv FROM e WHERE vec_id = 0)
               |SELECT c.vec_id, ROUND(list_cosine_similarity(c.emb, q.qv), 6) + 0.0 AS sim
               |FROM cand c, q
@@ -307,19 +485,9 @@ object VectorQueries extends QueryPack {
     Query(
       "q_e_embed_dedup_groups",
       (s, dir) => {
-        import graft.functions.VectorExpressions.cosine_sim
         // same pair miner as q_e_embed_neardup_pairs, then the transitive
         // group collapse — semantic dedup on the embedding modality
-        val banded = VectorSearch.withLshBands(emb(s, dir), "embedding",
-          nBands = 4, bitsPerBand = 12)
-        val pairs = banded.alias("a").join(banded.alias("b"),
-            col("a.band") === col("b.band") &&
-              col("a.band_val") === col("b.band_val") &&
-              col("a.vec_id") < col("b.vec_id"))
-          .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-            (round(cosine_sim(col("a.embedding"), col("b.embedding")), 6) + lit(0.0))
-              .as("sim"))
-          .dropDuplicates("vec_a", "vec_b")
+        val pairs = lshSelfPairs(s, dir)
           // 0.45, not the pair-mining 0.3: grouping at a loose threshold
           // chains semantically-unrelated vectors into one sprawling
           // component (transitive closure amplifies a loose pairwise
@@ -330,22 +498,12 @@ object VectorQueries extends QueryPack {
           .orderBy("vec_id")
       },
       Some(s"""WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-             |sig AS (SELECT vec_id, emb, ${sigSql(48, "emb")} AS s FROM e),
-             |bands AS (SELECT vec_id, band, (s >> (12*band)) & 4095 AS bv
-             |          FROM sig, (SELECT unnest(range(0, 4)) AS band)),
-             |cand AS (SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-             |         FROM bands a JOIN bands b ON a.band = b.band AND a.bv = b.bv
-             |                      AND a.vec_id < b.vec_id),
+             |$lshPairCandCtes,
              |pairs AS (SELECT c.vec_a, c.vec_b
              |          FROM cand c JOIN e ea ON ea.vec_id = c.vec_a
              |                      JOIN e eb ON eb.vec_id = c.vec_b
              |          WHERE ROUND(list_cosine_similarity(ea.emb, eb.emb), 6) + 0.0 >= 0.45),
-             |edges AS (SELECT vec_a AS src, vec_b AS dst FROM pairs
-             |          UNION SELECT vec_b, vec_a FROM pairs),
-             |reach(node, lbl) AS (
-             |  SELECT src, src FROM edges
-             |  UNION
-             |  SELECT ed.dst, r.lbl FROM reach r JOIN edges ed ON ed.src = r.node)
+             |${DedupQueries.ccCtes("pairs", "vec_a", "vec_b")}
              |SELECT node AS vec_id, MIN(lbl) AS group_id
              |FROM reach GROUP BY node
              |ORDER BY vec_id""".stripMargin),
@@ -516,31 +674,17 @@ object VectorQueries extends QueryPack {
         // cost in quality, next to q_e_pq_recall (codes only) and
         // q_e_ann_recall (LSH). Same semi-join-overlap shape; the
         // oracle reuses the production IVF-PQ CTE chain verbatim.
-        val exact = VectorSearch.cosineTopK(
-            emb(s, dir).where(col("vec_id") =!= 0), queryVec(s, dir),
-            "vec_id", "embedding", 10)
-          .select(col("vec_id"))
-        val ivfpq = VectorSearch.ivfPqTopK(
-            emb(s, dir).where(col("vec_id") =!= 0), queryVec(s, dir),
-            "vec_id", "embedding", k = 10, nCells = 16, nProbe = 4,
-            nCodes = 16, rerank = 32)
-          .select(col("vec_id"))
-        exact.join(ivfpq, Seq("vec_id"), "left_semi")
-          .agg(count(lit(1)).as("n_hits"))
-          .select(lit(10).as("k"), col("n_hits"),
-            (round(col("n_hits") / 10.0, 4) + lit(0.0)).as("recall"))
+        recallAt10(s, dir, VectorSearch.ivfPqTopK(
+          emb(s, dir).where(col("vec_id") =!= 0), queryVec(s, dir),
+          "vec_id", "embedding", k = 10, nCells = 16, nProbe = 4,
+          nCodes = 16, rerank = 32))
       },
       Some(s"""WITH $ivfPqCtes,
               |ivfpq AS (SELECT s.vec_id,
               |            ROUND(list_cosine_similarity(s.emb, q.qv), 6) + 0.0 AS sim
               |          FROM short s, q ORDER BY sim DESC, s.vec_id LIMIT 10),
-              |exact AS (SELECT e.vec_id,
-              |            ROUND(list_cosine_similarity(e.emb, q.qv), 6) + 0.0 AS sim
-              |          FROM e, q WHERE e.vec_id <> 0
-              |          ORDER BY sim DESC, e.vec_id LIMIT 10)
-              |SELECT 10 AS k, CAST(COUNT(*) AS BIGINT) AS n_hits,
-              |  ROUND(COUNT(*) / 10.0, 4) + 0.0 AS recall
-              |FROM exact WHERE vec_id IN (SELECT vec_id FROM ivfpq)""".stripMargin),
+              |$exactTop10Cte
+              |${recallAt10Sql("ivfpq")}""".stripMargin),
       doc = "IVF-PQ recall@10 eval: exact top-10 vs the composed tier's " +
         "top-10 — measures what cell pruning AND residual quantization " +
         "together cost in quality (the nProbe/nCodes/rerank tuner); the " +
@@ -579,19 +723,11 @@ object VectorQueries extends QueryPack {
           .orderBy("cell")
       },
       Some(s"""WITH RECURSIVE ${DedupQueries.cappedShingleCtes(64)},
-              |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS cnt
-              |          FROM d a JOIN d b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              |          GROUP BY 1, 2),
+              |${DedupQueries.shingleInterCte},
               |pairs AS (SELECT i.doc_a, i.doc_b FROM inter i
               |          JOIN sz sa ON i.doc_a = sa.doc_id JOIN sz sb ON i.doc_b = sb.doc_id
               |          WHERE ROUND(i.cnt * 1.0 / (sa.n_sh + sb.n_sh - i.cnt), 4) >= 0.5),
-              |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-              |          UNION SELECT doc_b, doc_a FROM pairs),
-              |reach(node, lbl) AS (
-              |  SELECT src, src FROM edges
-              |  UNION
-              |  SELECT ed.dst, r.lbl FROM reach r JOIN edges ed ON ed.src = r.node),
-              |grp AS (SELECT node, MIN(lbl) AS group_id FROM reach GROUP BY node),
+              |${DedupQueries.ccCtes("pairs", "doc_a", "doc_b", groups = true)},
               |canon AS (SELECT doc_id FROM documents LEFT JOIN grp ON doc_id = grp.node
               |          WHERE node IS NULL OR doc_id = group_id),
               |kept AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
@@ -718,28 +854,12 @@ object VectorQueries extends QueryPack {
 
     Query(
       "q_e_embed_neardup_pairs",
-      (s, dir) => {
-        import graft.functions.VectorExpressions.cosine_sim
-        val banded = VectorSearch.withLshBands(emb(s, dir), "embedding",
-          nBands = 4, bitsPerBand = 12)
-        banded.alias("a").join(banded.alias("b"),
-            col("a.band") === col("b.band") &&
-              col("a.band_val") === col("b.band_val") &&
-              col("a.vec_id") < col("b.vec_id"))
-          .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-            (round(cosine_sim(col("a.embedding"), col("b.embedding")), 6) + lit(0.0))
-              .as("sim"))
-          .dropDuplicates("vec_a", "vec_b")
+      (s, dir) =>
+        lshSelfPairs(s, dir)
           .where(col("sim") >= 0.3)
-          .orderBy("vec_a", "vec_b")
-      },
+          .orderBy("vec_a", "vec_b"),
       Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-              |sig AS (SELECT vec_id, emb, ${sigSql(48, "emb")} AS s FROM e),
-              |bands AS (SELECT vec_id, band, (s >> (12*band)) & 4095 AS bv
-              |          FROM sig, (SELECT unnest(range(0, 4)) AS band)),
-              |cand AS (SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-              |         FROM bands a JOIN bands b ON a.band = b.band AND a.bv = b.bv
-              |                      AND a.vec_id < b.vec_id)
+              |$lshPairCandCtes
               |SELECT c.vec_a, c.vec_b,
               |  ROUND(list_cosine_similarity(ea.emb, eb.emb), 6) + 0.0 AS sim
               |FROM cand c JOIN e ea ON ea.vec_id = c.vec_a
@@ -778,22 +898,11 @@ object VectorQueries extends QueryPack {
             (col("node") === col("group_id")).as("keep"))
           .orderBy("vec_id")
       },
-      Some("""WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-             |cents AS (SELECT vec_id AS cid, emb AS cemb FROM e WHERE vec_id < 16),
-             |asg AS (SELECT e.vec_id, e.emb,
-             |         (SELECT c.cid FROM cents c
-             |          ORDER BY list_cosine_similarity(e.emb, c.cemb) DESC, c.cid
-             |          LIMIT 1) AS cell
-             |       FROM e),
+      Some(s"""WITH RECURSIVE $semDedupCellCtes,
              |pairs AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
              |          FROM asg a JOIN asg b ON a.cell = b.cell AND a.vec_id < b.vec_id
              |          WHERE ROUND(list_cosine_similarity(a.emb, b.emb), 6) + 0.0 >= 0.45),
-             |edges AS (SELECT vec_a AS src, vec_b AS dst FROM pairs
-             |          UNION SELECT vec_b, vec_a FROM pairs),
-             |reach(node, lbl) AS (
-             |  SELECT src, src FROM edges
-             |  UNION
-             |  SELECT ed.dst, r.lbl FROM reach r JOIN edges ed ON ed.src = r.node)
+             |${DedupQueries.ccCtes("pairs", "vec_a", "vec_b")}
              |SELECT node AS vec_id, MIN(lbl) AS group_id,
              |  node = MIN(lbl) AS keep
              |FROM reach GROUP BY node ORDER BY vec_id""".stripMargin),
@@ -827,13 +936,7 @@ object VectorQueries extends QueryPack {
             when(col("dup_of") < 400, lit("corpus")).otherwise(lit("batch")))
           .orderBy("new_vec", "dup_of")
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-             |cents AS (SELECT vec_id AS cid, emb AS cemb FROM e WHERE vec_id < 16),
-             |asg AS (SELECT e.vec_id, e.emb,
-             |         (SELECT c.cid FROM cents c
-             |          ORDER BY list_cosine_similarity(e.emb, c.cemb) DESC, c.cid
-             |          LIMIT 1) AS cell
-             |       FROM e),
+      Some(s"""WITH $semDedupCellCtes,
              |cand AS (SELECT d.vec_id AS new_vec, c.vec_id AS dup_of,
              |           ROUND(list_cosine_similarity(d.emb, c.emb), 6) + 0.0 AS sim
              |         FROM asg c JOIN asg d ON c.cell = d.cell
@@ -859,41 +962,20 @@ object VectorQueries extends QueryPack {
         // ANN quality eval: recall@10 of the LSH-banded index against
         // exact brute-force top-10 for the held-out query vector — the
         // metric that decides band/bit parameters before an index ships.
-        // Both sides are top-k frames (10 rows each); the join and the
-        // 1-row report are driver-negligible at any corpus size, and the
-        // expensive inputs are the same plans the production queries run.
-        val exact = VectorSearch.cosineTopK(
-            emb(s, dir).where(col("vec_id") =!= 0), queryVec(s, dir),
-            "vec_id", "embedding", 10)
-          .select(col("vec_id"))
-        val ann = VectorSearch.annTopK(
-            emb(s, dir).where(col("vec_id") =!= 0), queryVec(s, dir),
-            "vec_id", "embedding", 10, nBands = 4, bitsPerBand = 8)
-          .select(col("vec_id"))
-        exact.join(ann, Seq("vec_id"), "left_semi")
-          .agg(count(lit(1)).as("n_hits"))
-          .select(lit(10).as("k"), col("n_hits"),
-            (round(col("n_hits") / 10.0, 4) + lit(0.0)).as("recall"))
+        // The expensive inputs are the same plans the production queries
+        // run.
+        recallAt10(s, dir, VectorSearch.annTopK(
+          emb(s, dir).where(col("vec_id") =!= 0), queryVec(s, dir),
+          "vec_id", "embedding", 10, nBands = 4, bitsPerBand = 8))
       },
       Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
               |q AS (SELECT emb AS qv FROM e WHERE vec_id = 0),
-              |exact AS (SELECT e.vec_id,
-              |            ROUND(list_cosine_similarity(e.emb, q.qv), 6) + 0.0 AS sim
-              |          FROM e, q WHERE e.vec_id <> 0
-              |          ORDER BY sim DESC, e.vec_id LIMIT 10),
-              |sig AS (SELECT vec_id, emb, ${sigSql(32, "emb")} AS s FROM e),
-              |bands AS (SELECT vec_id, emb, band, (s >> (8*band)) & 255 AS bv
-              |          FROM sig, (SELECT unnest(range(0, 4)) AS band)),
-              |qb AS (SELECT band, bv FROM bands WHERE vec_id = 0),
-              |cand AS (SELECT DISTINCT b.vec_id, b.emb
-              |         FROM bands b JOIN qb ON b.band = qb.band AND b.bv = qb.bv
-              |         WHERE b.vec_id <> 0),
+              |$exactTop10Cte,
+              |$annLshCandCtes,
               |ann AS (SELECT c.vec_id,
               |          ROUND(list_cosine_similarity(c.emb, q.qv), 6) + 0.0 AS sim
               |        FROM cand c, q ORDER BY sim DESC, c.vec_id LIMIT 10)
-              |SELECT 10 AS k, CAST(COUNT(*) AS BIGINT) AS n_hits,
-              |  ROUND(COUNT(*) / 10.0, 4) + 0.0 AS recall
-              |FROM exact WHERE vec_id IN (SELECT vec_id FROM ann)""".stripMargin),
+              |${recallAt10Sql("ann")}""".stripMargin),
       doc = "ANN recall@10 eval: exact brute-force top-10 vs the LSH-banded " +
         "index's top-10, semi-join overlap count — the parameter-tuning " +
         "metric (bands × bits vs recall) an index build reports before " +
@@ -907,30 +989,16 @@ object VectorQueries extends QueryPack {
         // semi-join-overlap shape as q_e_ann_recall; the oracle reuses
         // the production PQ CTE chain verbatim, so the eval certifies
         // exactly the plan the index serves.
-        val exact = VectorSearch.cosineTopK(
-            emb(s, dir).where(col("vec_id") =!= 0), queryVec(s, dir),
-            "vec_id", "embedding", 10)
-          .select(col("vec_id"))
-        val pq = VectorSearch.pqTopK(
-            emb(s, dir).where(col("vec_id") =!= 0), queryVec(s, dir),
-            "vec_id", "embedding", k = 10, nCodes = 16, rerank = 32)
-          .select(col("vec_id"))
-        exact.join(pq, Seq("vec_id"), "left_semi")
-          .agg(count(lit(1)).as("n_hits"))
-          .select(lit(10).as("k"), col("n_hits"),
-            (round(col("n_hits") / 10.0, 4) + lit(0.0)).as("recall"))
+        recallAt10(s, dir, VectorSearch.pqTopK(
+          emb(s, dir).where(col("vec_id") =!= 0), queryVec(s, dir),
+          "vec_id", "embedding", k = 10, nCodes = 16, rerank = 32))
       },
       Some(s"""WITH $pqCtes,
               |pq AS (SELECT s.vec_id,
               |         ROUND(list_cosine_similarity(s.emb, q.qv), 6) + 0.0 AS sim
               |       FROM short s, q ORDER BY sim DESC, s.vec_id LIMIT 10),
-              |exact AS (SELECT e.vec_id,
-              |            ROUND(list_cosine_similarity(e.emb, q.qv), 6) + 0.0 AS sim
-              |          FROM e, q WHERE e.vec_id <> 0
-              |          ORDER BY sim DESC, e.vec_id LIMIT 10)
-              |SELECT 10 AS k, CAST(COUNT(*) AS BIGINT) AS n_hits,
-              |  ROUND(COUNT(*) / 10.0, 4) + 0.0 AS recall
-              |FROM exact WHERE vec_id IN (SELECT vec_id FROM pq)""".stripMargin),
+              |$exactTop10Cte
+              |${recallAt10Sql("pq")}""".stripMargin),
       doc = "PQ recall@10 eval: exact top-10 vs the product-quantized " +
         "index's top-10, semi-join overlap — the codebook-size/rerank-depth " +
         "tuning metric for the quantized tier; the oracle reuses the " +
@@ -1237,35 +1305,7 @@ object VectorQueries extends QueryPack {
       // the ≤20-row cached frame (persisted block order is not a contract).
       (s, dir) => fusedTop20(s, dir)
         .orderBy(col("rrf").desc, col("doc_id")),
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-             |q AS (SELECT emb AS qv FROM e WHERE vec_id = 0),
-             |dense AS (SELECT e.vec_id AS doc_id,
-             |            ROUND(list_cosine_similarity(e.emb, q.qv), 6) + 0.0 AS sim
-             |          FROM e, q WHERE e.vec_id <> 0
-             |          ORDER BY sim DESC, doc_id LIMIT 50),
-             |dr AS (SELECT doc_id,
-             |         CAST(ROW_NUMBER() OVER (ORDER BY sim DESC, doc_id) AS BIGINT) AS r_dense
-             |       FROM dense),
-             |tk AS (SELECT doc_id, unnest(list_filter(
-             |         string_split_regex(lower(trim(text)), '\s+'), t -> t <> '')) AS tok
-             |       FROM documents WHERE doc_id <> 0),
-             |lens AS (SELECT doc_id, COUNT(*) AS len FROM tk GROUP BY 1),
-             |st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-             |         CAST(SUM(len) AS BIGINT) AS tot_len FROM lens),
-             |tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM tk
-             |       WHERE tok IN ('join', 'vector', 'stream') GROUP BY 1, 2),
-             |idf AS (SELECT tok,
-             |          ROUND(ln((n_docs - df + 0.5) / (df + 0.5) + 1.0), 6) + 0.0 AS idf
-             |        FROM (SELECT tok, COUNT(*) AS df FROM tf GROUP BY 1), st),
-             |bm AS (SELECT t.doc_id,
-             |         ROUND(SUM(i.idf * t.tf * 2.2
-             |           / (t.tf + 1.2 * (0.25 + 0.75 * l.len
-             |               / (tot_len * 1.0 / n_docs)))), 4) + 0.0 AS bm25
-             |       FROM tf t JOIN idf i USING (tok) JOIN lens l USING (doc_id), st
-             |       GROUP BY t.doc_id ORDER BY bm25 DESC, doc_id LIMIT 50),
-             |br AS (SELECT doc_id,
-             |         CAST(ROW_NUMBER() OVER (ORDER BY bm25 DESC, doc_id) AS BIGINT) AS r_bm25
-             |       FROM bm)
+      Some(s"""WITH $ragLegCtes
              |SELECT COALESCE(dr.doc_id, br.doc_id) AS doc_id, dr.r_dense, br.r_bm25,
              |  ROUND(COALESCE(1.0/(60 + dr.r_dense), 0) + COALESCE(1.0/(60 + br.r_bm25), 0), 6) + 0.0 AS rrf
              |FROM dr FULL JOIN br ON dr.doc_id = br.doc_id
@@ -1304,35 +1344,7 @@ object VectorQueries extends QueryPack {
           .withColumn("kept", col("cum_tokens") <= 256)
           .orderBy("rank")
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-             |q AS (SELECT emb AS qv FROM e WHERE vec_id = 0),
-             |dense AS (SELECT e.vec_id AS doc_id,
-             |            ROUND(list_cosine_similarity(e.emb, q.qv), 6) + 0.0 AS sim
-             |          FROM e, q WHERE e.vec_id <> 0
-             |          ORDER BY sim DESC, doc_id LIMIT 50),
-             |dr AS (SELECT doc_id,
-             |         CAST(ROW_NUMBER() OVER (ORDER BY sim DESC, doc_id) AS BIGINT) AS r_dense
-             |       FROM dense),
-             |tk AS (SELECT doc_id, unnest(list_filter(
-             |         string_split_regex(lower(trim(text)), '\s+'), t -> t <> '')) AS tok
-             |       FROM documents WHERE doc_id <> 0),
-             |lens AS (SELECT doc_id, COUNT(*) AS len FROM tk GROUP BY 1),
-             |st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-             |         CAST(SUM(len) AS BIGINT) AS tot_len FROM lens),
-             |tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM tk
-             |       WHERE tok IN ('join', 'vector', 'stream') GROUP BY 1, 2),
-             |idf AS (SELECT tok,
-             |          ROUND(ln((n_docs - df + 0.5) / (df + 0.5) + 1.0), 6) + 0.0 AS idf
-             |        FROM (SELECT tok, COUNT(*) AS df FROM tf GROUP BY 1), st),
-             |bm AS (SELECT t.doc_id,
-             |         ROUND(SUM(i.idf * t.tf * 2.2
-             |           / (t.tf + 1.2 * (0.25 + 0.75 * l.len
-             |               / (tot_len * 1.0 / n_docs)))), 4) + 0.0 AS bm25
-             |       FROM tf t JOIN idf i USING (tok) JOIN lens l USING (doc_id), st
-             |       GROUP BY t.doc_id ORDER BY bm25 DESC, doc_id LIMIT 50),
-             |br AS (SELECT doc_id,
-             |         CAST(ROW_NUMBER() OVER (ORDER BY bm25 DESC, doc_id) AS BIGINT) AS r_bm25
-             |       FROM bm),
+      Some(raw"""WITH $ragLegCtes,
              |fused AS (SELECT COALESCE(dr.doc_id, br.doc_id) AS doc_id,
              |            ROUND(COALESCE(1.0/(60 + dr.r_dense), 0)
              |              + COALESCE(1.0/(60 + br.r_bm25), 0), 6) + 0.0 AS rrf
@@ -1383,35 +1395,7 @@ object VectorQueries extends QueryPack {
             || coalesce(col("in_bm2510"), lit(false)), 0L)
             .otherwise(1L)).as("fusion_only"))
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-             |q AS (SELECT emb AS qv FROM e WHERE vec_id = 0),
-             |dense AS (SELECT e.vec_id AS doc_id,
-             |            ROUND(list_cosine_similarity(e.emb, q.qv), 6) + 0.0 AS sim
-             |          FROM e, q WHERE e.vec_id <> 0
-             |          ORDER BY sim DESC, doc_id LIMIT 50),
-             |dr AS (SELECT doc_id,
-             |         CAST(ROW_NUMBER() OVER (ORDER BY sim DESC, doc_id) AS BIGINT) AS r_dense
-             |       FROM dense),
-             |tk AS (SELECT doc_id, unnest(list_filter(
-             |         string_split_regex(lower(trim(text)), '\s+'), t -> t <> '')) AS tok
-             |       FROM documents WHERE doc_id <> 0),
-             |lens AS (SELECT doc_id, COUNT(*) AS len FROM tk GROUP BY 1),
-             |st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-             |         CAST(SUM(len) AS BIGINT) AS tot_len FROM lens),
-             |tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM tk
-             |       WHERE tok IN ('join', 'vector', 'stream') GROUP BY 1, 2),
-             |idf AS (SELECT tok,
-             |          ROUND(ln((n_docs - df + 0.5) / (df + 0.5) + 1.0), 6) + 0.0 AS idf
-             |        FROM (SELECT tok, COUNT(*) AS df FROM tf GROUP BY 1), st),
-             |bm AS (SELECT t.doc_id,
-             |         ROUND(SUM(i.idf * t.tf * 2.2
-             |           / (t.tf + 1.2 * (0.25 + 0.75 * l.len
-             |               / (tot_len * 1.0 / n_docs)))), 4) + 0.0 AS bm25
-             |       FROM tf t JOIN idf i USING (tok) JOIN lens l USING (doc_id), st
-             |       GROUP BY t.doc_id ORDER BY bm25 DESC, doc_id LIMIT 50),
-             |br AS (SELECT doc_id,
-             |         CAST(ROW_NUMBER() OVER (ORDER BY bm25 DESC, doc_id) AS BIGINT) AS r_bm25
-             |       FROM bm),
+      Some(s"""WITH $ragLegCtes,
              |fused AS (SELECT COALESCE(dr.doc_id, br.doc_id) AS doc_id,
              |            dr.r_dense, br.r_bm25,
              |            ROUND(COALESCE(1.0/(60 + dr.r_dense), 0)
@@ -1453,43 +1437,9 @@ object VectorQueries extends QueryPack {
         // once here; plan-identical retains serve rebuilds from cache.
         graft.ops.IterScope.noAqe(s) {
         val e = emb(s, dir).select(col("embedding").cast("array<double>").as("emb"))
-        // retain the 1-row/64-double fit frames (see q_e_abtt_topk note:
-        // without this every later round re-runs the earlier rounds'
-        // corpus passes through the nested plan)
-        val muF = graft.CacheScope.retain(
-          e.select(posexplode(col("emb")).as(Seq("j", "v")))
-            .groupBy("j").agg(avg("v").cast("float").cast("double").as("m"))
-            .agg(expr("transform(array_sort(collect_list(struct(j, m))), s -> s.m)")
-              .as("mu")))
-        val dotX = "aggregate(transform(sequence(0, 63), " +
-          "j -> (emb[j] - mu[j]) * x[j]), CAST(0 AS DOUBLE), (a, v) -> a + v)"
-        var xF = s.range(1).select(expr(
-          """transform(sequence(0, 63), j -> CASE WHEN j = 0
-            |  THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END)"""
-            .stripMargin).as("x"))
-        for (_ <- 1 to 3) {
-          val d = e.crossJoin(broadcast(muF)).crossJoin(broadcast(xF))
-            .select(col("emb"), col("mu"), expr(dotX).as("dot"))
-          val y = d.select(posexplode(expr(
-            "transform(sequence(0, 63), j -> dot * (emb[j] - mu[j]))"))
-            .as(Seq("j", "p")))
-            .groupBy("j").agg(sum("p").cast("float").cast("double").as("y"))
-          xF = graft.CacheScope.retain(
-            y.agg(expr(
-              "transform(array_sort(collect_list(struct(j, y))), s -> s.y)")
-              .as("yv"))
-              .select(expr(
-                // nullif: a zero-norm iterate (single-row or all-identical
-                // corpus — the mean-centered cloud is exactly 0) yields a
-                // null direction instead of an ANSI DIVIDE_BY_ZERO; the
-                // oracle mirrors with NULLIF (DegenerateProbe)
-                """transform(yv, v -> round(v / nullif(round(sqrt(
-                  |  aggregate(transform(yv, w -> w * w), CAST(0 AS DOUBLE),
-                  |    (a, b) -> a + b)), 6), CAST(0 AS DOUBLE)), 6))"""
-                  .stripMargin).as("x")))
-        }
+        val (muF, xF) = abttFit(s, e)
         val st = e.crossJoin(broadcast(muF)).crossJoin(broadcast(xF))
-          .select(expr(dotX).as("dot"),
+          .select(expr(abttDotX).as("dot"),
             expr("aggregate(transform(sequence(0, 63), " +
               "j -> (emb[j] - mu[j]) * (emb[j] - mu[j])), " +
               "CAST(0 AS DOUBLE), (a, v) -> a + v)").as("n2"))
@@ -1509,42 +1459,19 @@ object VectorQueries extends QueryPack {
         res
         }
       },
-      Some {
-        def xiter(i: Int): String = {
-          val prev = s"x${i - 1}"
-          s"""d$i AS (SELECT e.emb, mu.mu,
-             |      list_reduce(list_prepend(0.0, list_transform(range(0, 64),
-             |        j -> (e.emb[j+1] - mu.mu[j+1]) * $prev.x[j+1])), (a, v) -> a + v) AS dot
-             |    FROM e, mu, $prev),
-             |y$i AS (SELECT j, CAST(CAST(SUM(dot * (emb[j] - mu[j])) AS REAL) AS DOUBLE) AS y
-             |    FROM d$i, (SELECT unnest(range(1, 65)) AS j) GROUP BY j),
-             |x$i AS (SELECT list_transform(yv, v -> ROUND(v / NULLIF(ROUND(sqrt(
-             |      list_reduce(list_prepend(0.0, list_transform(yv, w -> w*w)),
-             |        (a,b) -> a+b)), 6), 0.0), 6)) AS x
-             |    FROM (SELECT list(y ORDER BY j) AS yv FROM y$i))""".stripMargin
-        }
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-           |mu0 AS (SELECT j, CAST(CAST(AVG(emb[j]) AS REAL) AS DOUBLE) AS m
-           |        FROM e, (SELECT unnest(range(1, 65)) AS j) GROUP BY j),
-           |mu AS (SELECT list(m ORDER BY j) AS mu FROM mu0),
-           |x0 AS (SELECT list_transform(range(0, 64),
-           |         j -> CASE WHEN j = 0 THEN 1.0 ELSE 0.0 END) AS x),
-           |${xiter(1)},
-           |${xiter(2)},
-           |${xiter(3)},
-           |fin AS (SELECT
-           |      list_reduce(list_prepend(0.0, list_transform(range(0, 64),
-           |        j -> (e.emb[j+1] - mu.mu[j+1]) * x3.x[j+1])), (a, v) -> a + v) AS dot,
-           |      list_reduce(list_prepend(0.0, list_transform(range(0, 64),
-           |        j -> (e.emb[j+1] - mu.mu[j+1]) * (e.emb[j+1] - mu.mu[j+1]))), (a, v) -> a + v) AS n2
-           |    FROM e, mu, x3),
-           |st AS (SELECT CAST(CAST(SUM(dot*dot) AS REAL) AS DOUBLE) AS num,
-           |              CAST(CAST(SUM(n2) AS REAL) AS DOUBLE) AS den FROM fin)
-           |SELECT CAST(j - 1 AS INT) AS dim, ROUND(mu.mu[j], 6) + 0.0 AS mu,
-           |  x3.x[j] + 0.0 AS loading,
-           |  ROUND(st.num / NULLIF(st.den, 0.0), 6) + 0.0 AS var_frac
-           |FROM (SELECT unnest(range(1, 65)) AS j), mu, x3, st ORDER BY dim""".stripMargin
-      },
+      Some(s"""WITH $abttFitCtes,
+              |fin AS (SELECT
+              |      list_reduce(list_prepend(0.0, list_transform(range(0, 64),
+              |        j -> (e.emb[j+1] - mu.mu[j+1]) * x3.x[j+1])), (a, v) -> a + v) AS dot,
+              |      list_reduce(list_prepend(0.0, list_transform(range(0, 64),
+              |        j -> (e.emb[j+1] - mu.mu[j+1]) * (e.emb[j+1] - mu.mu[j+1]))), (a, v) -> a + v) AS n2
+              |    FROM e, mu, x3),
+              |st AS (SELECT CAST(CAST(SUM(dot*dot) AS REAL) AS DOUBLE) AS num,
+              |              CAST(CAST(SUM(n2) AS REAL) AS DOUBLE) AS den FROM fin)
+              |SELECT CAST(j - 1 AS INT) AS dim, ROUND(mu.mu[j], 6) + 0.0 AS mu,
+              |  x3.x[j] + 0.0 AS loading,
+              |  ROUND(st.num / NULLIF(st.den, 0.0), 6) + 0.0 AS var_frac
+              |FROM (SELECT unnest(range(1, 65)) AS j), mu, x3, st ORDER BY dim""".stripMargin),
       doc = "all-but-the-top step 1: dominant principal direction of the " +
         "mean-centered embedding cloud (3 power iterations unrolled " +
         "in-plan, float32-quantized corpus sums, ordered-fold dots, " +
@@ -1571,46 +1498,11 @@ object VectorQueries extends QueryPack {
         graft.ops.IterScope.noAqe(s) {
         val e = emb(s, dir)
           .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-        // mu and every iterate are 1-row/64-double frames: retaining them
-        // is ~free and makes each fit pass execute ONCE (without it the
-        // query-vector branch and every later round re-run the whole fit
-        // subtree — measured 5.9× at 10× before, map-only after)
-        val muF = graft.CacheScope.retain(
-          e.select(posexplode(col("emb")).as(Seq("j", "v")))
-            .groupBy("j").agg(avg("v").cast("float").cast("double").as("m"))
-            .agg(expr("transform(array_sort(collect_list(struct(j, m))), s -> s.m)")
-              .as("mu")))
-        val dotX = "aggregate(transform(sequence(0, 63), " +
-          "j -> (emb[j] - mu[j]) * x[j]), CAST(0 AS DOUBLE), (a, v) -> a + v)"
-        var xF = s.range(1).select(expr(
-          """transform(sequence(0, 63), j -> CASE WHEN j = 0
-            |  THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END)"""
-            .stripMargin).as("x"))
-        for (_ <- 1 to 3) {
-          val d = e.crossJoin(broadcast(muF)).crossJoin(broadcast(xF))
-            .select(col("emb"), col("mu"), expr(dotX).as("dot"))
-          val y = d.select(posexplode(expr(
-            "transform(sequence(0, 63), j -> dot * (emb[j] - mu[j]))"))
-            .as(Seq("j", "p")))
-            .groupBy("j").agg(sum("p").cast("float").cast("double").as("y"))
-          xF = graft.CacheScope.retain(
-            y.agg(expr(
-              "transform(array_sort(collect_list(struct(j, y))), s -> s.y)")
-              .as("yv"))
-              .select(expr(
-                // nullif: a zero-norm iterate (single-row or all-identical
-                // corpus — the mean-centered cloud is exactly 0) yields a
-                // null direction instead of an ANSI DIVIDE_BY_ZERO; the
-                // oracle mirrors with NULLIF (DegenerateProbe)
-                """transform(yv, v -> round(v / nullif(round(sqrt(
-                  |  aggregate(transform(yv, w -> w * w), CAST(0 AS DOUBLE),
-                  |    (a, b) -> a + b)), 6), CAST(0 AS DOUBLE)), 6))"""
-                  .stripMargin).as("x")))
-        }
+        val (muF, xF) = abttFit(s, e)
         def process(rows: org.apache.spark.sql.DataFrame) = rows
           .crossJoin(broadcast(muF)).crossJoin(broadcast(xF))
           .select(col("vec_id"), col("emb"), col("mu"), col("x"),
-            expr(dotX).as("dot"))
+            expr(abttDotX).as("dot"))
           .select(col("vec_id"), expr(
             "transform(sequence(0, 63), j -> (emb[j] - mu[j]) - dot * x[j])")
             .as("p"))
@@ -1628,40 +1520,17 @@ object VectorQueries extends QueryPack {
         res
         }
       },
-      Some {
-        def xiter(i: Int): String = {
-          val prev = s"x${i - 1}"
-          s"""d$i AS (SELECT e.emb, mu.mu,
-             |      list_reduce(list_prepend(0.0, list_transform(range(0, 64),
-             |        j -> (e.emb[j+1] - mu.mu[j+1]) * $prev.x[j+1])), (a, v) -> a + v) AS dot
-             |    FROM e, mu, $prev),
-             |y$i AS (SELECT j, CAST(CAST(SUM(dot * (emb[j] - mu[j])) AS REAL) AS DOUBLE) AS y
-             |    FROM d$i, (SELECT unnest(range(1, 65)) AS j) GROUP BY j),
-             |x$i AS (SELECT list_transform(yv, v -> ROUND(v / NULLIF(ROUND(sqrt(
-             |      list_reduce(list_prepend(0.0, list_transform(yv, w -> w*w)),
-             |        (a,b) -> a+b)), 6), 0.0), 6)) AS x
-             |    FROM (SELECT list(y ORDER BY j) AS yv FROM y$i))""".stripMargin
-        }
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-           |mu0 AS (SELECT j, CAST(CAST(AVG(emb[j]) AS REAL) AS DOUBLE) AS m
-           |        FROM e, (SELECT unnest(range(1, 65)) AS j) GROUP BY j),
-           |mu AS (SELECT list(m ORDER BY j) AS mu FROM mu0),
-           |x0 AS (SELECT list_transform(range(0, 64),
-           |         j -> CASE WHEN j = 0 THEN 1.0 ELSE 0.0 END) AS x),
-           |${xiter(1)},
-           |${xiter(2)},
-           |${xiter(3)},
-           |proc AS (SELECT e.vec_id,
-           |      list_transform(range(0, 64), j -> (e.emb[j+1] - mu.mu[j+1])
-           |        - (list_reduce(list_prepend(0.0, list_transform(range(0, 64),
-           |             k -> (e.emb[k+1] - mu.mu[k+1]) * x3.x[k+1])), (a, v) -> a + v))
-           |          * x3.x[j+1]) AS p
-           |    FROM e, mu, x3),
-           |q AS (SELECT p AS qp FROM proc WHERE vec_id = 0)
-           |SELECT proc.vec_id, ROUND(list_cosine_similarity(proc.p, q.qp), 6) + 0.0 AS sim
-           |FROM proc, q WHERE proc.vec_id <> 0
-           |ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin
-      },
+      Some(s"""WITH $abttFitCtes,
+              |proc AS (SELECT e.vec_id,
+              |      list_transform(range(0, 64), j -> (e.emb[j+1] - mu.mu[j+1])
+              |        - (list_reduce(list_prepend(0.0, list_transform(range(0, 64),
+              |             k -> (e.emb[k+1] - mu.mu[k+1]) * x3.x[k+1])), (a, v) -> a + v))
+              |          * x3.x[j+1]) AS p
+              |    FROM e, mu, x3),
+              |q AS (SELECT p AS qp FROM proc WHERE vec_id = 0)
+              |SELECT proc.vec_id, ROUND(list_cosine_similarity(proc.p, q.qp), 6) + 0.0 AS sim
+              |FROM proc, q WHERE proc.vec_id <> 0
+              |ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin),
       doc = "all-but-the-top step 2 (apply): exact cosine top-10 over " +
         "mean-centered, dominant-direction-removed embeddings — the fit " +
         "rides the q_e_top_component plan, the removal is a map-only " +
@@ -1713,18 +1582,8 @@ object VectorQueries extends QueryPack {
             col("jaccard"), col("negative"), col("neg_cosine"))
           .orderBy("anchor", "positive")
       },
-      Some(s"""WITH RECURSIVE ${DedupQueries.cappedShingleCtes(64)},
-              |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS cnt
-              |          FROM d a JOIN d b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              |          GROUP BY 1, 2),
-              |pairs AS (${DedupQueries.jaccardTail}),
-              |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-              |          UNION SELECT doc_b, doc_a FROM pairs),
-              |reach(node, lbl) AS (
-              |  SELECT src, src FROM edges
-              |  UNION
-              |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
-              |grp AS (SELECT node, MIN(lbl) AS group_id FROM reach GROUP BY node),
+      Some(s"""WITH RECURSIVE ${DedupQueries.minedPairsCtes},
+              |${DedupQueries.ccCtes("pairs", "doc_a", "doc_b", groups = true)},
               |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
               |lab AS (SELECT e.vec_id, e.emb, COALESCE(g.group_id, e.vec_id) AS grp
               |        FROM e LEFT JOIN grp g ON g.node = e.vec_id),

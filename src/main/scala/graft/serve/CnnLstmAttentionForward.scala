@@ -53,24 +53,7 @@ object CnnLstmAttentionForward {
   /** seqLen raw window values (ascending time) → P predictions. */
   def forward(window: Seq[Double]): Seq[Double] = {
     require(window.length == S, s"window must have $S values, got ${window.length}")
-    val feats = scaledFeatures(window.toArray)
-    val conv = Array.tabulate(S) { t =>
-      Array.tabulate(C) { c =>
-        var acc = d(bcvk(c))
-        var f = 0
-        while (f < F) {
-          var k = 0
-          while (k < K) {
-            val u = t - 1 + k
-            if (u >= 0 && u < S)
-              acc = acc + d(wcvk(c * F * K + f * K + k)) * feats(u)(f)
-            k += 1
-          }
-          f += 1
-        }
-        relu(acc)
-      }
-    }
+    val conv = convRelu(scaledFeatures(window.toArray), wcvk, bcvk, C, F, K)
     val pooled = Array.tabulate(S / 2)(t =>
       Array.tabulate(C)(c => math.max(conv(2 * t)(c), conv(2 * t + 1)(c))))
     val h = new Array[Double](H)
@@ -109,17 +92,8 @@ object CnnLstmAttentionForward {
   def oracleSql: String = {
     val sb = new StringBuilder
     sb ++= windowFeatureSql(S)
-    val cv = for (t <- 1 to S; c <- 0 until C) yield {
-      val terms = new StringBuilder(kLit(bcvk(c)))
-      for (f <- 0 until F; k <- 0 until K) {
-        val u = t - 1 + k
-        if (u >= 1 && u <= S) {
-          val colRef = if (f == 0) s"a$u" else s"d$u"
-          terms ++= s" + ${kLit(wcvk(c * F * K + f * K + k))} * $colRef"
-        }
-      }
-      s"${reluSql(s"($terms)")} AS rl${t}_$c"
-    }
+    val cv = for (t <- 1 to S; c <- 0 until C)
+      yield s"${reluSql(convSql(t, c, wcvk, bcvk, S, F, K))} AS rl${t}_$c"
     sb ++= s",\nrl AS (SELECT *, ${cv.mkString(", ")} FROM f1)"
     val pool = for (t <- 1 to S / 2; c <- 0 until C)
       yield s"GREATEST(rl${2 * t - 1}_$c, rl${2 * t}_$c) AS pl${t}_$c"

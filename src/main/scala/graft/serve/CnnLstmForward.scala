@@ -14,9 +14,8 @@ import LstmMath._
   * The head and LSTM cell are the exact shared machinery ([[LstmMath]]);
   * only the front end differs: a temporal convolution over the feature
   * sequence (zero-padded at both ends) instead of the per-step MLP.
-  * The conv fold order is pinned (channel → feature → kernel tap,
-  * out-of-range taps SKIPPED identically on both sides), so the
-  * generated SQL oracle replays it exactly.
+  * The conv fold order is pinned ([[LstmMath.convRelu]] and its SQL twin
+  * [[LstmMath.convSql]]), so the generated SQL oracle replays it exactly.
   *
   * Fixture dims: F=2, C=4 channels, H=4, S=8, P=3; weights from a
   * Lehmer stream seeded independently of LstmForward's.
@@ -50,25 +49,7 @@ object CnnLstmForward {
   /** seqLen raw window values (ascending time) → P predictions. */
   def forward(window: Seq[Double]): Seq[Double] = {
     require(window.length == S, s"window must have $S values, got ${window.length}")
-    val feats = scaledFeatures(window.toArray)
-    // temporal conv + ReLU: out(t)(c), zero-padded taps skipped
-    val conv = Array.tabulate(S) { t =>
-      Array.tabulate(C) { c =>
-        var acc = d(bcvk(c))
-        var f = 0
-        while (f < F) {
-          var k = 0
-          while (k < K) {
-            val u = t - 1 + k
-            if (u >= 0 && u < S)
-              acc = acc + d(wcvk(c * F * K + f * K + k)) * feats(u)(f)
-            k += 1
-          }
-          f += 1
-        }
-        relu(acc)
-      }
-    }
+    val conv = convRelu(scaledFeatures(window.toArray), wcvk, bcvk, C, F, K)
     val h = new Array[Double](H)
     val cs = new Array[Double](H)
     var t = 0
@@ -86,20 +67,9 @@ object CnnLstmForward {
   def oracleSql: String = {
     val sb = new StringBuilder
     sb ++= windowFeatureSql(S)
-    // conv: one CTE with all S×C pre-activation columns (1-based t;
-    // taps at u = t-1+k for k in 0..2, emitted only when 1 <= u <= S —
-    // the zero-padding convention, matching the Scala skip)
-    val cv = for (t <- 1 to S; c <- 0 until C) yield {
-      val terms = new StringBuilder(kLit(bcvk(c)))
-      for (f <- 0 until F; k <- 0 until K) {
-        val u = t - 1 + k
-        if (u >= 1 && u <= S) {
-          val colRef = if (f == 0) s"a$u" else s"d$u"
-          terms ++= s" + ${kLit(wcvk(c * F * K + f * K + k))} * $colRef"
-        }
-      }
-      s"($terms) AS cv${t}_$c"
-    }
+    // conv: one CTE with all S×C pre-activation columns
+    val cv = for (t <- 1 to S; c <- 0 until C)
+      yield s"${convSql(t, c, wcvk, bcvk, S, F, K)} AS cv${t}_$c"
     sb ++= s",\ncv AS (SELECT *, ${cv.mkString(", ")} FROM f1)"
     val rl = for (t <- 1 to S; c <- 0 until C)
       yield s"${reluSql(s"cv${t}_$c")} AS rl${t}_$c"

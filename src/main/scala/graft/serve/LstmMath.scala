@@ -299,6 +299,51 @@ private[serve] object LstmMath {
        |f1 AS (SELECT *, 0.0 AS d1, ${(2 to s)
           .map(t => s"a$t - a${t - 1} AS d$t").mkString(", ")} FROM f0)""".stripMargin
 
+  /** The CNN front end: temporal Conv1d(F→C, kernel K, padding 1) + ReLU
+    * over the scaled feature steps, conv weights [c][f][k] (the PyTorch
+    * [C_out, C_in, K] shape) → out(t)(c). Fold order pinned: bias, then
+    * feature → kernel tap ascending, zero-padded taps SKIPPED — the same
+    * terms, in the same order, as [[convSql]].
+    */
+  def convRelu(feats: Array[Array[Double]], wcvk: Array[Int],
+      bcvk: Array[Int], cDim: Int, fDim: Int, kDim: Int): Array[Array[Double]] = {
+    val sDim = feats.length
+    Array.tabulate(sDim) { t =>
+      Array.tabulate(cDim) { c =>
+        var acc = d(bcvk(c))
+        var f = 0
+        while (f < fDim) {
+          var k = 0
+          while (k < kDim) {
+            val u = t - 1 + k
+            if (u >= 0 && u < sDim)
+              acc = acc + d(wcvk(c * fDim * kDim + f * kDim + k)) * feats(u)(f)
+            k += 1
+          }
+          f += 1
+        }
+        relu(acc)
+      }
+    }
+  }
+
+  /** SQL twin of [[convRelu]]'s pre-activation for step t (1-based) and
+    * channel c over the [[windowFeatureSql]] columns: taps at u = t-1+k,
+    * emitted only when 1 <= u <= S (the zero-padding convention).
+    */
+  def convSql(t: Int, c: Int, wcvk: Array[Int], bcvk: Array[Int],
+      sDim: Int, fDim: Int, kDim: Int): String = {
+    val terms = new StringBuilder(kLit(bcvk(c)))
+    for (f <- 0 until fDim; k <- 0 until kDim) {
+      val u = t - 1 + k
+      if (u >= 1 && u <= sDim) {
+        val colRef = if (f == 0) s"a$u" else s"d$u"
+        terms ++= s" + ${kLit(wcvk(c * fDim * kDim + f * kDim + k))} * $colRef"
+      }
+    }
+    s"($terms)"
+  }
+
   /** Final fan-out: one row per horizon with target ts and the rounded
     * prediction, from CTE `hy`.
     */

@@ -289,8 +289,11 @@ object BucketedLayout {
       require(written.length == 1, s"expected one compacted file for bucket $b")
       val name = f"part-00000-${java.util.UUID.randomUUID()}_$b%05d" +
         ".c000.snappy.parquet"
-      fs.rename(written.head.getPath,
-        new org.apache.hadoop.fs.Path(loc, name))
+      val dst = new org.apache.hadoop.fs.Path(loc, name)
+      // a FileSystem may refuse a rename by returning false: the bucket's
+      // old files are its only copy until the compacted file is in place
+      require(fs.rename(written.head.getPath, dst),
+        s"bucket compaction: rename ${written.head.getPath} -> $dst returned false")
       old.foreach(f => fs.delete(f.getPath, false))
       fs.delete(tmp, true)
     }

@@ -41,8 +41,8 @@ import org.apache.spark.sql.functions._
   *    compact file-sink output only after the log is retired, or ingest
   *    into a table format whose OPTIMIZE is transactional;
   *  - on plain parquet the per-partition commit is as atomic as the
-  *    underlying FileSystem rename (same contract as the LWW upsert's
-  *    dynamic overwrite, SCALE.md).
+  *    underlying FileSystem rename (the LWW upsert's staged bucket swap
+  *    rests on the same rename and checks each rename's result, SCALE.md).
   */
 object Compaction {
 

@@ -114,4 +114,57 @@ class BucketLifecycleSpec extends AnyFunSuite {
     val again = sources.BucketedLayout.compactBuckets(spark, table)
     assert(again.partitionsCompacted == 0)
   }
+
+  test("compaction: a refused rename throws before any old bucket file is deleted") {
+    val t = "events_refused_rename_spec"
+    val ev = Tables(spark, dir, "events")
+      .select("event_id", "user_id", "ts", "value", "event_type")
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    val loc = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"), t)
+    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(loc)) fs.delete(loc, true)
+    ev.where(pmod(col("event_id"), lit(5)) =!= 0)
+      .repartition(sources.BucketedLayout.NBuckets, col("user_id"))
+      .write
+      .bucketBy(sources.BucketedLayout.NBuckets, "user_id")
+      .sortBy("user_id", "ts", "event_id")
+      .mode(SaveMode.Overwrite)
+      .saveAsTable(t)
+    sources.BucketedLayout.appendDelta(spark, t,
+      ev.where(pmod(col("event_id"), lit(5)) === 0))
+    def dataFiles(): Set[String] = fs.listStatus(loc)
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+        !f.getPath.getName.startsWith("."))
+      .map(_.getPath.getName).toSet
+    val before = dataFiles()
+    assert(sources.BucketedLayout.bucketState(spark, t).exists(_.nFiles > 1))
+
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.file.impl", classOf[CompactRenameRefusingFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    val err =
+      try intercept[IllegalArgumentException](
+        sources.BucketedLayout.compactBuckets(spark, t))
+      finally {
+        conf.unset("fs.file.impl")
+        conf.unset("fs.file.impl.disable.cache")
+      }
+    assert(err.getMessage.contains("returned false"), err.getMessage)
+    val lost = before -- dataFiles()
+    assert(lost.isEmpty, s"old bucket files deleted after a refused rename: $lost")
+    assert(sortedRows(spark.table(t)) == sortedRows(ev))
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+}
+
+/** The local FileSystem, except that it refuses (returns false for) the
+  * rename that moves a compacted bucket file out of its `.compact_tmp_`
+  * staging dir — the Hadoop contract lets any rename fail this way.
+  */
+class CompactRenameRefusingFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean =
+    if (src.getParent.getName.startsWith(".compact_tmp_")) false
+    else super.rename(src, dst)
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Dev-only: print the POST-EXECUTION (AQE-final) plan for named queries —
   * ExplainDump shows the initial plan; runtime ReusedExchange/
   * AQEShuffleRead decisions only appear here.
@@ -14,8 +12,7 @@ object FinalPlanProbe {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     args.foreach { q =>
       val df = SparkEntry.queries(q)(spark, dir)
-      df.select(xxhash64(df.columns.map(col): _*).as("__h"))
-        .agg(expr("bit_xor(__h)")).collect()
+      Bench.materialize(df)
       println(s"=== $q (final) ===")
       println(df.queryExecution.executedPlan.toString.take(12000))
       CacheScope.release(spark)

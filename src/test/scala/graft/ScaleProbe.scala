@@ -377,10 +377,7 @@ object ScaleProbe {
     // count() because the scrub expressions never ran (r9 lesson; same
     // trap the round-1 Bench hit).
     def run(f: String => DataFrame, dir: String): Long = {
-      val df = f(dir)
-      val n = df.select(xxhash64(df.columns.map(col): _*).as("__h"))
-        .agg(expr("bit_xor(__h)"), count(lit(1)).as("__n"))
-        .head.getLong(1)
+      val n = Bench.materialize(f(dir))
       CacheScope.release(spark)
       n
     }

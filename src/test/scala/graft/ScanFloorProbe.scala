@@ -19,12 +19,9 @@ object ScanFloorProbe {
     val spark = GraftSession.local(cpus, cpus)
     val dir = "/root/testdata/sf0.1"
 
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.select(xxhash64(df.columns.map(col): _*).as("__h"))
-        .agg(expr("bit_xor(__h)")).collect()
     def time(name: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-      val t0 = System.nanoTime(); force(df)
-      val t1 = System.nanoTime(); force(df)
+      val t0 = System.nanoTime(); Bench.materialize(df)
+      val t1 = System.nanoTime(); Bench.materialize(df)
       val t2 = System.nanoTime()
       println(f"$name%-44s run1 ${(t1 - t0) / 1e9}%6.2f  run2 ${(t2 - t1) / 1e9}%6.2f")
     }

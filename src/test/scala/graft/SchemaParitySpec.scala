@@ -31,7 +31,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `BucketedLayout.ensureEventsByUser`, which on a fresh session WRITES
   * the bucketed table (real Spark jobs) before the `s.sql` text can
   * resolve — a few seconds once per JVM, memoized for every later query
-  * against the same layout.
+  * against the same layout. The last case executes the seven sketch
+  * twins: `ApproxBounds.report` is their bound-check against the exact
+  * twin (their oracle stand-in), and must be `ok` for every one.
   */
 class SchemaParitySpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.session
@@ -178,5 +180,16 @@ class SchemaParitySpec extends AnyFunSuite {
         "(CAST ... AS DOUBLE at the output boundary)")
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("ApproxBounds.report: all seven sketch twins within their bounds at sf0.001") {
+    val verdicts = ApproxBounds.report(spark, dir)
+    CacheScope.release(spark)
+    assert(verdicts.map(_._1).toSet == Set("q_a2_distinct_approx",
+      "q_a4_quantiles_approx", "q_a5_robust_scaler_approx",
+      "q_a_active_users_approx", "q_p9_winsorize_approx",
+      "q_p_outlier_mad_approx", "q_s_curriculum_phases_approx"),
+      s"twins: ${verdicts.map(_._1)}")
+    verdicts.foreach { case (n, v) => assert(v.ok, s"$n: ${v.detail}") }
   }
 }

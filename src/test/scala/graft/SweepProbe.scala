@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, xxhash64, expr}
 
 /** Dev-only probe (r15): INTERLEAVED config A/B sweep. Separate-JVM bench
   * runs at sf0.1 showed ~30% run-to-run swing on subsets (JIT state, page
@@ -64,16 +63,11 @@ object SweepProbe {
     }
     println(s"[sweep] ${configs.size} configs x ${selected.size} queries x $reps reps at local[$cpus]")
 
-    // warmup: footer reads + JIT outside the measured region
-    Tables.all.foreach { t =>
-      try Tables(spark, sfDir, t).count() catch { case _: Throwable => () }
-    }
+    Bench.warmup(spark, sfDir)
 
     def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      val df = fn(spark, sfDir)
-      df.select(xxhash64(df.columns.map(col): _*).as("__h"))
-        .agg(expr("bit_xor(__h)")).collect()
+      Bench.materialize(fn(spark, sfDir))
       (System.nanoTime() - t0) / 1e9
     }
 
