@@ -44,24 +44,19 @@ package graft
   * `hdfs://`, `s3a://` and `file:` URIs size like bare local paths. No
   * session exists yet when the width is chosen, so a fresh Hadoop
   * `Configuration` resolves the path.
-  *
-  * `SPARK_GRAFT_SHUFFLE_PARTITIONS` overrides for cluster profiles
-  * (malformed value → ignored, derived width).
   */
 object SessionTuning {
   private val FineChunk = 2L * 1024 * 1024
   private val ScaleChunk = 256L * 1024 * 1024
 
-  def shufflePartitions(sfDir: String, cpus: Int): Int =
-    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-      .flatMap(_.toIntOption).getOrElse {
-      val bytes = Tables.contentBytes(sfDir,
-        new org.apache.hadoop.conf.Configuration()).getOrElse(0L)
-      if (bytes <= 0) cpus
-      else {
-        val fine = (bytes + FineChunk - 1) / FineChunk
-        val cap = math.max(cpus.toLong, (bytes + ScaleChunk - 1) / ScaleChunk)
-        math.max(1L, math.min(fine, cap)).toInt
-      }
+  def shufflePartitions(sfDir: String, cpus: Int): Int = {
+    val bytes = Tables.contentBytes(sfDir,
+      new org.apache.hadoop.conf.Configuration()).getOrElse(0L)
+    if (bytes <= 0) cpus
+    else {
+      val fine = (bytes + FineChunk - 1) / FineChunk
+      val cap = math.max(cpus.toLong, (bytes + ScaleChunk - 1) / ScaleChunk)
+      math.max(1L, math.min(fine, cap)).toInt
     }
+  }
 }

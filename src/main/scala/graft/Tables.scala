@@ -31,23 +31,12 @@ object Tables {
     */
   private val MaxPlanMemo = 64
   private val planMemo =
-    new java.util.LinkedHashMap[(SparkSession, String, Long, Int, Spread),
+    new java.util.LinkedHashMap[(SparkSession, String, Long, Int),
         DataFrame](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String, Long, Int, Spread),
+          e: java.util.Map.Entry[(SparkSession, String, Long, Int),
             DataFrame]): Boolean = size > MaxPlanMemo
     }
-
-  /** Effective spread configuration (part of the plan-memo key, r15: the
-    * spread width is baked into the built plan, so a session retuning
-    * `spark.graft.spread.*` must miss the memo, not serve a stale width).
-    */
-  private final case class Spread(chunkBytes: Option[String],
-      weights: Option[String])
-
-  private def spreadConf(spark: SparkSession): Spread =
-    Spread(spark.conf.getOption("spark.graft.spread.chunkBytes"),
-      spark.conf.getOption("spark.graft.spread.weights"))
 
   /** Test hook: current plan-memo population (bounded-by-construction). */
   private[graft] def planMemoSize: Int =
@@ -65,8 +54,7 @@ object Tables {
     if (spark.conf.get("spark.sql.session.timeZone") != "UTC")
       spark.conf.set("spark.sql.session.timeZone", "UTC")
     val memoKey = (spark, path, pathStamp(spark, path),
-      if (name == "embeddings") embeddingDim(spark) else 0,
-      spreadConf(spark))
+      if (name == "embeddings") embeddingDim(spark) else 0)
     val hit = planMemo.synchronized { planMemo.get(memoKey) }
     if (hit != null) return hit
     val raw = if (name == "events") {
@@ -238,8 +226,8 @@ object Tables {
     * and per-stage overhead scaled with the core count — the driver's r14
     * bench ran the whole sf0.1 suite 2.2× SLOWER at local[32] than at
     * local[8] (162.5 s vs 72.5 s), every per-query scaling ratio < 1.
-    * Now each spread task gets a floor of `spark.graft.spread.chunkBytes`
-    * (default 1 MiB of parquet) of input, weighted by the table's per-row
+    * Now each spread task gets a floor of [[SpreadChunkBytes]] (1 MiB of
+    * parquet) of input, weighted by the table's per-row
     * kernel cost class, and the width is capped at `defaultParallelism`:
     * width grows with DATA, not with cores. A table that fits one chunk
     * is not repartitioned at all (no exchange — a 2 KB dim table never
@@ -250,28 +238,14 @@ object Tables {
     * under-state: `documents` feeds shingling/MinHash/tokenize kernels
     * (orders of magnitude more CPU per byte than a columnar aggregate),
     * `embeddings` dense vector math, `events` JSON/regex parsing. Weights
-    * are deployment constants like [[EmbeddingDim]]; chunkBytes is conf so
-    * a cluster profile can retune without a rebuild. Measured at sf0.1
+    * and the chunk size are deployment constants like [[EmbeddingDim]]
+    * (tables without a weight count 1). Measured at sf0.1
     * (idle host, this round): bench total 119.2 s → see OPTIMIZATION_r15
     * for the after numbers at 32 and 8 cores.
     */
   private val workWeight = Map(
     "documents" -> 32L, "embeddings" -> 8L, "events" -> 4L)
-  private val DefaultSpreadChunkBytes = 1L << 20
-
-  /** Per-table weight override: `spark.graft.spread.weights` =
-    * "documents:16,events:4,..." (tables not listed fall back to
-    * [[workWeight]], then 1). One conf key so a cluster profile — or the
-    * width-sweep probe — can retune the cost classes without a rebuild.
-    */
-  private def effWeight(spark: SparkSession, name: String): Long =
-    try spark.conf.getOption("spark.graft.spread.weights")
-      .flatMap(_.split(',').map(_.split(':'))
-        .collectFirst { case Array(t, w) if t.trim == name => w.trim.toLong })
-      .getOrElse(workWeight.getOrElse(name, 1L))
-    catch { // malformed conf → built-in weights (cc.maxDriverEdges style)
-      case _: NumberFormatException => workWeight.getOrElse(name, 1L)
-    }
+  private val SpreadChunkBytes = 1L << 20
 
   private def maybeParallelize(spark: SparkSession, df: DataFrame,
       path: String): DataFrame = {
@@ -285,13 +259,9 @@ object Tables {
     if (bytes < 32L * 1024 * 1024) {
       import org.apache.spark.sql.functions.{col, xxhash64}
       val name = path.split('/').last.stripSuffix(".parquet")
-      val chunk =
-        try spark.conf.getOption("spark.graft.spread.chunkBytes")
-          .map(_.toLong).getOrElse(DefaultSpreadChunkBytes)
-        catch { case _: NumberFormatException => DefaultSpreadChunkBytes }
-      val eff = bytes * effWeight(spark, name)
+      val eff = bytes * workWeight.getOrElse(name, 1L)
       val n = math.min(spark.sparkContext.defaultParallelism.toLong,
-        math.max(1L, (eff + chunk - 1) / chunk)).toInt
+        math.max(1L, (eff + SpreadChunkBytes - 1) / SpreadChunkBytes)).toInt
       if (n <= 1) df // one chunk of work: spreading it is pure overhead
       else spreadKey.get(name).filter(df.columns.contains) match {
         case Some(k) => df.repartition(n, xxhash64(col(k)))
@@ -308,15 +278,10 @@ object Tables {
     all.foreach(n => apply(spark, sfDir, n).createOrReplaceTempView(n))
     graft.GraftExtensions.register(spark)
     registeredDir.synchronized {
-      registeredDir.put(spark, Registered(sfDir, spreadConf(spark)))
+      registeredDir.put(spark, sfDir)
     }
     registrations.incrementAndGet()
   }
-
-  /** What a session's views were registered from: the dir and the spread
-    * conf baked into their plans.
-    */
-  private final case class Registered(sfDir: String, spread: Spread)
 
   /** Test hook: `registerAll` calls in this JVM. */
   private[graft] val registrations = new java.util.concurrent.atomic.AtomicLong
@@ -325,24 +290,20 @@ object Tables {
   // session a long-lived multi-session service ever registered. Access is
   // synchronized on the map — WeakHashMap is not thread-safe.
   private val registeredDir =
-    new java.util.WeakHashMap[SparkSession, Registered]()
+    new java.util.WeakHashMap[SparkSession, String]()
 
   /** Once-per-session view registration — `registerAll` is idempotent but
     * re-resolves ten parquet footers per call, which the q_sql_* queries
     * would otherwise pay on every execution. Tracks the CURRENT dir per
-    * session (not a seen-set) plus the spread conf the views were built
-    * under (r15: the spread width is baked into the registered plans, so
-    * a session retuning `spark.graft.spread.*` — the width-sweep probe —
-    * must re-register, not serve stale-width views): switching either
-    * re-registers, so views always reflect the most recent call. A
+    * session (not a seen-set): switching it re-registers, so views always
+    * reflect the most recent call. A
     * sentinel `tableExists` probe catches a caller dropping the temp
     * views out from under the memo (registration is then redone, not
     * skipped).
     */
   def ensureRegistered(spark: SparkSession, sfDir: String): Unit = {
     val hit = registeredDir.synchronized {
-      Option(registeredDir.get(spark))
-        .contains(Registered(sfDir, spreadConf(spark)))
+      Option(registeredDir.get(spark)).contains(sfDir)
     }
     if (!hit || !spark.catalog.tableExists(all.head)) registerAll(spark, sfDir)
   }

@@ -523,11 +523,8 @@ object DedupQueries extends QueryPack {
         val banded = graft.CacheScope.retain(
           NearDup.bandedSignatures(d, "doc_id", "text", 3, 16, 4))
         val cand = graft.CacheScope.retain(
-          banded.alias("a").join(banded.alias("b"),
-              col("a.band") === col("b.band") &&
-                col("a.band_val") === col("b.band_val") &&
-                col("a.doc_id") < col("b.doc_id"))
-            .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+          NearDup.selfPairs(banded, Seq("band", "band_val"), "doc_id")(
+              (a, b) => Seq(a("doc_id").as("doc_a"), b("doc_id").as("doc_b")))
             .distinct())
         val hit = truth.join(cand, Seq("doc_a", "doc_b"), "left_semi")
         truth.agg(count(lit(1)).as("n_true"))
@@ -668,9 +665,8 @@ object DedupQueries extends QueryPack {
           .where(col("df") > 64).select("fp")
         val cold = graft.CacheScope.retain(
           fp.join(broadcast(hot), Seq("fp"), "left_anti"))
-        cold.alias("a").join(cold.alias("b"),
-            col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+        NearDup.selfPairs(cold, Seq("fp"), "doc_id")((a, b) =>
+            Seq(a("doc_id").as("doc_a"), b("doc_id").as("doc_b")))
           .groupBy("doc_a", "doc_b")
           .agg(count(lit(1)).as("n_shared"))
           .where(col("n_shared") >= 3)

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Query, QueryPack}
+import graft.dedup.NearDup
 import graft.multimodal.Multimodal
 import graft.vector.VectorSearch
 import org.apache.spark.sql.functions._
@@ -196,15 +197,12 @@ object MultimodalQueries extends QueryPack {
           .toDF()
         val banded = VectorSearch.withLshBands(feats, "embedding",
           nBands = 4, bitsPerBand = 8)
-        banded.alias("a").join(banded.alias("b"),
-            col("a.band") === col("b.band") &&
-              col("a.band_val") === col("b.band_val") &&
-              col("a.media_id") < col("b.media_id") &&
-              col("a.kind") === col("b.kind"))
-          .select(col("a.media_id").as("media_a"),
-            col("b.media_id").as("media_b"), col("a.kind").as("kind"),
-            (round(cosine_sim(col("a.embedding"), col("b.embedding")), 6)
-              + lit(0.0)).as("sim"))
+        // kind is a third bucket key: pairs never cross modalities
+        NearDup.selfPairs(banded, Seq("band", "band_val", "kind"),
+            "media_id")((a, b) => Seq(a("media_id").as("media_a"),
+            b("media_id").as("media_b"), a("kind").as("kind"),
+            (round(cosine_sim(a("embedding"), b("embedding")), 6)
+              + lit(0.0)).as("sim")))
           .dropDuplicates("media_a", "media_b")
           .where(col("sim") >= 0.999)
           .groupBy("kind").agg(count(lit(1)).as("n_pairs"))

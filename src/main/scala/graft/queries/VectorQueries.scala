@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Query, QueryPack, Tables}
+import graft.dedup.NearDup
 import graft.functions.VectorExpressions.lsh_signature
 import graft.vector.VectorSearch
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -122,13 +123,10 @@ object VectorQueries extends QueryPack {
     import graft.functions.VectorExpressions.cosine_sim
     val banded = VectorSearch.withLshBands(emb(s, dir), "embedding",
       nBands = 4, bitsPerBand = 12)
-    banded.alias("a").join(banded.alias("b"),
-        col("a.band") === col("b.band") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        (round(cosine_sim(col("a.embedding"), col("b.embedding")), 6) + lit(0.0))
-          .as("sim"))
+    NearDup.selfPairs(banded, Seq("band", "band_val"), "vec_id")((a, b) =>
+        Seq(a("vec_id").as("vec_a"), b("vec_id").as("vec_b"),
+          (round(cosine_sim(a("embedding"), b("embedding")), 6) + lit(0.0))
+            .as("sim")))
       .dropDuplicates("vec_a", "vec_b")
   }
 
@@ -493,7 +491,7 @@ object VectorQueries extends QueryPack {
           // component (transitive closure amplifies a loose pairwise
           // gate); dedup collapse wants tight clusters
           .where(col("sim") >= 0.45)
-        graft.dedup.NearDup.connectedComponents(pairs, "vec_a", "vec_b")
+        NearDup.connectedComponents(pairs, "vec_a", "vec_b")
           .select(col("node").as("vec_id"), col("group_id"))
           .orderBy("vec_id")
       },
@@ -893,7 +891,7 @@ object VectorQueries extends QueryPack {
           emb(s, dir), "vec_id", "embedding", 16)
         val pairs = VectorSearch.semDedupPairs(
           emb(s, dir), "vec_id", "embedding", cents, threshold = 0.45)
-        graft.dedup.NearDup.connectedComponents(pairs, "vec_a", "vec_b")
+        NearDup.connectedComponents(pairs, "vec_a", "vec_b")
           .select(col("node").as("vec_id"), col("group_id"),
             (col("node") === col("group_id")).as("keep"))
           .orderBy("vec_id")
@@ -1540,7 +1538,6 @@ object VectorQueries extends QueryPack {
     Query(
       "q_e_contrastive_pairs",
       (s, dir) => {
-        import graft.dedup.NearDup
         import graft.functions.VectorExpressions.cosine_sim
         import org.apache.spark.sql.expressions.Window
         // Contrastive training-pair export: (anchor, positive, negative)

@@ -1,5 +1,6 @@
 package graft.vector
 
+import graft.dedup.NearDup
 import graft.functions.VectorExpressions.{cosine_sim, lsh_signature}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -37,16 +38,14 @@ object VectorSearch extends Serializable {
     query.select(col(vecCol)).as[Seq[Float]].take(1).headOption
   }
 
-  /** Empty PQ result with the [[pqTopKWith]] output schema. */
-  private def emptyPqResult(vecs: DataFrame, idCol: String): DataFrame =
-    vecs.select(col(idCol), lit(0L).as("code0"), lit(0L).as("code1"),
-      lit(0.0).as("approx_ip"), lit(0.0).as("sim")).limit(0)
-
-  /** Empty IVF-PQ result with the [[ivfPqTopK]] output schema. */
-  private def emptyIvfPqResult(vecs: DataFrame, idCol: String): DataFrame =
-    vecs.select(col(idCol), lit(0L).as("cell"), lit(0L).as("code0"),
-      lit(0L).as("code1"), lit(0.0).as("approx_ip"), lit(0.0).as("sim"))
-      .limit(0)
+  /** Empty PQ-family result: `idCol`, the long `codeCols`, then
+    * `approx_ip` and `sim` — the [[pqTopKWith]] schema with code0/code1,
+    * the [[ivfPqTopK]] one with cell/code0/code1.
+    */
+  private def emptyCodedResult(vecs: DataFrame, idCol: String,
+      codeCols: String*): DataFrame =
+    vecs.select(col(idCol) +: codeCols.map(lit(0L).as(_)) :+
+      lit(0.0).as("approx_ip") :+ lit(0.0).as("sim"): _*).limit(0)
 
   /** Exact cosine top-k of `vecs` against the single row in `query`. */
   def cosineTopK(vecs: DataFrame, query: DataFrame, idCol: String,
@@ -129,18 +128,29 @@ object VectorSearch extends Serializable {
 
   // ---- IVF (inverted-file) ANN ------------------------------------------
 
-  /** Double cosine with ascending-index accumulation (same numeric
-    * contract as the codegen'd [[graft.functions.CosineSim]]).
+  /** Driver-side double cosine with ascending-index accumulation over
+    * `b`'s length (same numeric contract as the codegen'd
+    * [[graft.functions.CosineSim]]; zero norm → 0.0) — the probe picks.
     */
-  private def cosSeq(a: Seq[Float], b: Seq[Float]): Double = {
+  private def cosSeq(a: collection.Seq[Float], b: Array[Float]): Double = {
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
-    while (i < a.length) {
+    while (i < b.length) {
       val x = a(i).toDouble; val y = b(i).toDouble
       dot += x * y; na += x * x; nb += y * y
       i += 1
     }
     if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
+  }
+
+  /** Driver-side double dot product, the same ascending fold over `b`'s
+    * length — the ADC table entries, which DuckDB's list_reduce replays
+    * bit-exactly.
+    */
+  private def dotSeq(a: collection.Seq[Float], b: Array[Float]): Double = {
+    var s = 0.0; var i = 0
+    while (i < b.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
+    s
   }
 
   /** IVF ANN: coarse quantizer cells → probe the closest `nProbe` cells →
@@ -253,7 +263,7 @@ object VectorSearch extends Serializable {
       vecCol: String, k: Int, nCodes: Int, rerank: Int): DataFrame = {
     val qv0 = headVecOpt(query, vecCol) match {
       case Some(v) => v
-      case None => return emptyPqResult(vecs, idCol)
+      case None => return emptyCodedResult(vecs, idCol, "code0", "code1")
     }
     val dim0 = qv0.length
     require(dim0 % 2 == 0, s"PQ with 2 subspaces needs an even dim, got $dim0")
@@ -276,7 +286,7 @@ object VectorSearch extends Serializable {
       iters: Int): DataFrame = {
     val qv = headVecOpt(query, vecCol) match {
       case Some(v) => v
-      case None => return emptyPqResult(vecs, idCol)
+      case None => return emptyCodedResult(vecs, idCol, "code0", "code1")
     }
     val dim = qv.length
     require(dim % 2 == 0, s"PQ with 2 subspaces needs an even dim, got $dim")
@@ -345,22 +355,16 @@ object VectorSearch extends Serializable {
       cb0: Array[Array[Float]], cb1: Array[Array[Float]]): DataFrame = {
     val qv = headVecOpt(query, vecCol) match {
       case Some(v) if ids.nonEmpty => v
-      case _ => return emptyPqResult(vecs, idCol) // empty query or codebook
+      // empty query or codebook
+      case _ => return emptyCodedResult(vecs, idCol, "code0", "code1")
     }
     val dim = qv.length
     require(dim % 2 == 0, s"PQ with 2 subspaces needs an even dim, got $dim")
     val half = dim / 2
-    // ADC tables: ascending-index double fold (the cosSeq/CosineSim
-    // numeric contract) so DuckDB's list_reduce replays them bit-exactly
-    def dotD(a: Seq[Float], b: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < b.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-      s
-    }
     val q0 = qv.slice(0, half); val q1 = qv.slice(half, dim)
     def tableMap(cb: Array[Array[Float]], qh: Seq[Float]) =
       map(ids.zip(cb).flatMap { case (id, c) =>
-        Seq(lit(id), lit(dotD(qh, c))) }: _*)
+        Seq(lit(id), lit(dotSeq(qh, c))) }: _*)
     val enc = vecs
       .withColumn("code0", graft.functions.VectorExpressions.best_cell(
         slice(col(vecCol), 1, half), cb0, ids))
@@ -398,7 +402,7 @@ object VectorSearch extends Serializable {
       case None => return cosineTopK(vecs.limit(0), query.limit(0),
         idCol, vecCol, k)
     }
-    val probed = centroids.map { case (cid, c) => (cid, cosSeq(qv, c.toSeq)) }
+    val probed = centroids.map { case (cid, c) => (cid, cosSeq(qv, c)) }
       .sortBy { case (cid, s) => (-s, cid) }.take(nProbe).map(_._1)
 
     val cand = vecs
@@ -448,26 +452,17 @@ object VectorSearch extends Serializable {
     // assignment pass (the r3 CC 203× lesson)
     val asg = graft.CacheScope.retain(
       assignCells(vecs, idCol, vecCol, centroids))
-    def pairOf(a: String, b: String) = Seq(
-      col(s"$a.$idCol").as("vec_a"), col(s"$b.$idCol").as("vec_b"),
-      (round(cosine_sim(col(s"$a.$vecCol"), col(s"$b.$vecCol")), 6)
-        + lit(0.0)).as("sim"))
+    def cellPairs(df: DataFrame) =
+      NearDup.selfPairs(df, Seq("cell"), idCol)((a, b) => Seq(
+        a(idCol).as("vec_a"), b(idCol).as("vec_b"),
+        (round(cosine_sim(a(vecCol), b(vecCol)), 6) + lit(0.0)).as("sim")))
     val pairs = maxPerCell match {
-      case None =>
-        asg.alias("a").join(asg.alias("b"),
-            col("a.cell") === col("b.cell") &&
-              col(s"a.$idCol") < col(s"b.$idCol"))
-          .select(pairOf("a", "b"): _*)
+      case None => cellPairs(asg)
       case Some(c) =>
-        val stats = asg.groupBy("cell")
-          .agg(count(lit(1)).as("__n"), min(col(idCol)).as("__rep"))
-        val tagged = asg.join(broadcast(stats), Seq("cell"))
-        val cold = tagged.where(col("__n") <= c)
-        val full = cold.alias("a").join(cold.alias("b"),
-            col("a.cell") === col("b.cell") &&
-              col(s"a.$idCol") < col(s"b.$idCol"))
-          .select(pairOf("a", "b"): _*)
-        val hot = tagged.where(col("__n") > c)
+        // one stats row per cell: small, so broadcast
+        val (cold, hot) = NearDup.splitHot(asg, Seq("cell"), idCol, c,
+          broadcastStats = true)
+        val full = cellPairs(cold)
         // rep = min id of the cell, so vec_a = rep < member always holds
         val reps = hot.where(col(idCol) === col("__rep"))
           .select(col("cell"), col(idCol).as("__repid"),
@@ -537,17 +532,15 @@ object VectorSearch extends Serializable {
       .select(col(s"nw.$idCol").as("new_vec"), col(s"c.$idCol").as("dup_of"),
         (round(cosine_sim(col(s"nw.$vecCol"), col(s"c.$vecCol")), 6)
           + lit(0.0)).as("sim"))
+    // within-batch pairs: the later id is the new vector
+    def batchPairs(df: DataFrame) =
+      NearDup.selfPairs(df, Seq("cell"), idCol)((a, b) => Seq(
+        b(idCol).as("new_vec"), a(idCol).as("dup_of"),
+        (round(cosine_sim(b(vecCol), a(vecCol)), 6) + lit(0.0)).as("sim")))
     val cand = maxPerCell match {
       case None =>
         val asgD = assignCells(delta, idCol, vecCol, centroids)
-        val candBatch = asgD.alias("a").join(asgD.alias("b"),
-            col("a.cell") === col("b.cell") &&
-              col(s"a.$idCol") < col(s"b.$idCol"))
-          .select(col(s"b.$idCol").as("new_vec"),
-            col(s"a.$idCol").as("dup_of"),
-            (round(cosine_sim(col(s"b.$vecCol"), col(s"a.$vecCol")), 6)
-              + lit(0.0)).as("sim"))
-        probe(asgD).unionByName(candBatch)
+        probe(asgD).unionByName(batchPairs(asgD))
       case Some(c) =>
         // the delta is referenced by the stats agg, both self-join sides,
         // and the probe legs — retain it once (O(delta) by the gate's
@@ -555,22 +548,13 @@ object VectorSearch extends Serializable {
         // deliberately leaves to ReusedExchange)
         val asgD = graft.CacheScope.retain(
           assignCells(delta, idCol, vecCol, centroids))
-        val stats = asgD.groupBy("cell")
-          .agg(count(lit(1)).as("__n"), min(col(idCol)).as("__rep"))
-        val tagged = asgD.join(broadcast(stats), Seq("cell"))
-        val coldD = tagged.where(col("__n") <= c)
-          .select(col(idCol), col(vecCol), col("cell"))
-        val hotD = tagged.where(col("__n") > c)
+        val (cold, hotD) = NearDup.splitHot(asgD, Seq("cell"), idCol, c,
+          broadcastStats = true)
+        val coldD = cold.select(col(idCol), col(vecCol), col("cell"))
         val repsD = hotD.where(col(idCol) === col("__rep"))
         val membersD = hotD.where(col(idCol) =!= col("__rep"))
         // within-batch: cold cells all-pairs, hot cells star through rep
-        val candBatchCold = coldD.alias("a").join(coldD.alias("b"),
-            col("a.cell") === col("b.cell") &&
-              col(s"a.$idCol") < col(s"b.$idCol"))
-          .select(col(s"b.$idCol").as("new_vec"),
-            col(s"a.$idCol").as("dup_of"),
-            (round(cosine_sim(col(s"b.$vecCol"), col(s"a.$vecCol")), 6)
-              + lit(0.0)).as("sim"))
+        val candBatchCold = batchPairs(coldD)
         val repVecs = repsD
           .select(col("cell"), col(idCol).as("__repid"),
             col(vecCol).as("__repvec"))
@@ -691,31 +675,22 @@ object VectorSearch extends Serializable {
       rerank: Int): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
+    def empty = emptyCodedResult(vecs, idCol, "cell", "code0", "code1")
     // query guard BEFORE the seed collect: an empty query must not pay
     // the corpus scan the quantizer seed costs
     val qv = headVecOpt(query, vecCol) match {
       case Some(v) => v
-      case None => return emptyIvfPqResult(vecs, idCol)
+      case None => return empty
     }
     val coarse = seedCentroids(vecs, idCol, vecCol, nCells)
-    if (coarse.isEmpty) return emptyIvfPqResult(vecs, idCol)
+    if (coarse.isEmpty) return empty
     val dim = qv.length
     require(dim % 2 == 0, s"IVF-PQ with 2 subspaces needs an even dim, got $dim")
     val half = dim / 2
     val cIds = coarse.map(_._1)
     val cVecs = coarse.map(_._2)
-    // driver-side probe pick: the same ascending double-fold cosine the
-    // codegen'd expressions use (zero-norm -> 0.0)
-    def cosFF(a: Seq[Float], b: Array[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < b.length) {
-        val x = a(i).toDouble; val y = b(i).toDouble
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
-    }
     val probes = cIds.zip(cVecs)
-      .map { case (id, c) => (id, cosFF(qv, c)) }
+      .map { case (id, c) => (id, cosSeq(qv, c)) }
       .sortBy { case (id, s) => (-s, id) }.take(nProbe).map(_._1)
     val centMap = map(coarse.flatMap { case (id, c) =>
       Seq(lit(id), lit(c)) }: _*)
@@ -732,7 +707,7 @@ object VectorSearch extends Serializable {
     // no residual codebook rows (ids [nCodes, 2*nCodes) absent from the
     // slice): the oracle's NULL-code scalar subqueries produce no scored
     // candidates — degrade to the empty result, don't throw
-    if (cbRows.isEmpty) return emptyIvfPqResult(vecs, idCol)
+    if (cbRows.isEmpty) return empty
     val ids = cbRows.map(_._1)
     val cb0 = cbRows.map(_._2.slice(0, half).toArray)
     val cb1 = cbRows.map(_._2.slice(half, dim).toArray)
@@ -741,11 +716,6 @@ object VectorSearch extends Serializable {
         slice(col("__res"), 1, half), cb0, ids))
       .withColumn("code1", graft.functions.VectorExpressions.best_cell(
         slice(col("__res"), half + 1, half), cb1, ids))
-    def dotFD(a: Array[Float], b: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-      s
-    }
     val centById = coarse.toMap
     // ADC map keys pack (cell, code) as cell*stride + code. Codes are vec
     // ids in [nCodes, 2*nCodes), so the stride is derived from that range
@@ -757,7 +727,7 @@ object VectorSearch extends Serializable {
         val cent = centById(cid)
         val qr = Array.tabulate(dim)(i => qv(i) - cent(i)) // FLOAT sub
         ids.zip(cb).flatMap { case (code, cv) =>
-          Seq(lit(cid * stride + code), lit(dotFD(qr.slice(lo, hi), cv))) }
+          Seq(lit(cid * stride + code), lit(dotSeq(qr.slice(lo, hi), cv))) }
       }: _*)
     val t0 = adcTable(cb0, 0, half)
     val t1 = adcTable(cb1, half, dim)

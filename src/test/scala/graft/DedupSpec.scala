@@ -207,23 +207,20 @@ class DedupSpec extends AnyFunSuite {
 
   test("connectedComponents: driver union-find and distributed loop agree") {
     import spark.implicits._
-    // r14: pairs under spark.graft.cc.maxDriverEdges collapse via driver
-    // union-find; the label-propagation loop must produce the identical
-    // (node -> component-min) map on the same graph. Mixed shapes: a long
-    // chain (diameter stress), a star, an isolated pair, cross-links that
-    // merge two half-built components late in the pair order.
+    // r14: small pair lists collapse via driver union-find; the
+    // label-propagation loop must produce the identical (node ->
+    // component-min) map on the same graph. Mixed shapes: a long chain
+    // (diameter stress), a star, an isolated pair, cross-links that merge
+    // two half-built components late in the pair order.
     val pairs = ((1L to 12L).sliding(2).map(s => (s(0), s(1))).toSeq ++
       Seq((50L, 53L), (50L, 51L), (50L, 52L), (70L, 71L),
-        (53L, 12L), (51L, 50L))).toDF("doc_a", "doc_b")
-    def run(): Map[Long, Long] =
-      NearDup.connectedComponents(pairs, "doc_a", "doc_b")
-        .as[(Long, Long)].collect().toMap
-    val viaDriver = run() // default threshold: driver path
-    spark.conf.set("spark.graft.cc.maxDriverEdges", "0")
-    try {
-      val viaLoop = run() // forced loop path
-      assert(viaDriver == viaLoop)
-    } finally spark.conf.unset("spark.graft.cc.maxDriverEdges")
+        (53L, 12L), (51L, 50L))).toDF("src", "dst")
+    def collect(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.as[(Long, Long)].collect().toMap
+    val viaDriver = collect(NearDup.driverUnionFind(spark,
+      pairs.as[(Long, Long)].collect(), org.apache.spark.sql.types.LongType))
+    val viaLoop = collect(NearDup.labelPropagation(pairs, maxIter = 30))
+    assert(viaDriver == viaLoop)
     // chain 1..12 linked to the 50-star via (53,12): one component
     assert(viaDriver((12L)) == 1L && viaDriver(53L) == 1L &&
       viaDriver(70L) == 70L && viaDriver(71L) == 70L)

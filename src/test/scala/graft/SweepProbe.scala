@@ -19,7 +19,7 @@ import org.apache.spark.sql.SparkSession
   *   SPARK_GRAFT_ONLY        query filter, same semantics as Bench.
   *   SPARK_GRAFT_SWEEP_REPS  repetitions (default 3).
   *
-  * Run: SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SWEEP='base;narrow|spark.graft.spread.chunkBytes=1048576' \
+  * Run: SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SWEEP='base;aqe_off|spark.sql.adaptive.enabled=false' \
   *        sbt "Test/runMain graft.SweepProbe"
   */
 object SweepProbe {

@@ -83,13 +83,36 @@ class TablesMemoSpec extends AnyFunSuite {
     val before = Tables.registrations.get()
     Tables.ensureRegistered(spark, dir)
     assert(Tables.registrations.get() === before,
-      "the registration memo must hit for an unchanged dir and spread conf")
-    // a retuned spread conf is baked into the views: it must re-register
-    spark.conf.set("spark.graft.spread.chunkBytes", "1048576")
-    try {
-      Tables.ensureRegistered(spark, dir)
-      assert(Tables.registrations.get() === before + 1)
-    } finally spark.conf.unset("spark.graft.spread.chunkBytes")
+      "the registration memo must hit for an unchanged dir")
+  }
+
+  test("scan spread: one chunk stays put, documents widen by 32 per MiB") {
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionOperation
+    val dir = java.nio.file.Files.createTempDirectory("tspread").toString
+    def width(name: String): Option[Int] =
+      Tables(spark, dir, name).queryExecution.logical.collectFirst {
+        case r: RepartitionOperation => r.numPartitions
+      }
+    // a 2-row dimension table is far below one 1 MiB chunk
+    spark.range(2).selectExpr("id AS r_regionkey").write
+      .parquet(s"$dir/region.parquet")
+    assert(width("region").isEmpty, "one chunk of work must not be spread")
+    // ~45 KB of near-incompressible text: one chunk of bytes, but at the
+    // documents weight (32) several chunks of work
+    spark.range(450).selectExpr("id AS doc_id",
+        "concat_ws(' ', sha2(CAST(id AS STRING), 256), " +
+          "md5(CAST(id AS STRING))) AS text")
+      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+    val bytes = Tables.contentBytes(s"$dir/documents.parquet",
+      spark.sparkContext.hadoopConfiguration).get
+    val chunk = 1L << 20
+    assert(bytes < chunk && bytes * 32 > chunk,
+      s"fixture must sit between one chunk of bytes and of work: $bytes")
+    val want = math.min(spark.sparkContext.defaultParallelism.toLong,
+      (bytes * 32 + chunk - 1) / chunk).toInt
+    assert(want < spark.sparkContext.defaultParallelism,
+      s"fixture must need fewer tasks than cores, or the cap hides the rule")
+    assert(width("documents") === Some(want))
   }
 
   test("no source file carries a NUL byte") {
