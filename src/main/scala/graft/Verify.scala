@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query-name filter (dev iteration
-    // on a few queries without dumping all ~120 — driver passes 2 args)
+    // on a few queries without dumping all 215 — driver passes 2 args)
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None

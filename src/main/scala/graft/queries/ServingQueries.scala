@@ -73,6 +73,21 @@ object ServingQueries extends QueryPack {
        |      FROM p JOIN c ON c.event_type = p.event_type
        |                   AND c.bucket_start = p.base_ts + p.horizon * INTERVAL 1 HOUR)""".stripMargin
 
+  /** A U1 model-family query: the model's forward pass over the newest
+    * window per key in the UDF slot, one rounded prediction per horizon,
+    * checked against the model's generated oracle.
+    */
+  private def forwardQuery(name: String, m: graft.serve.ForwardModel,
+      fixtureTag: String, doc: String): Query =
+    Query(name,
+      (s, dir) =>
+        Serving.predictLatestWith(ev(s, dir), K, "ts", "event_id",
+          "value", m.S, 300, fixtureTag, m.forward)
+          .select(col(K), col("horizon"), col("target_ts"),
+            (round(col("predicted_price"), 6) + lit(0.0)).as("prediction"))
+          .orderBy(K, "horizon"),
+      Some(m.oracleSql), doc = doc)
+
   override def queries: Seq[Query] = Seq(
 
     // ---- W13: sliding training windows ----
@@ -138,24 +153,16 @@ object ServingQueries extends QueryPack {
         "oracle replays the fold bit-exactly"),
 
     // ---- U1: the REAL reimplemented model forward pass ----
-    Query(
-      "q_u1_real_forward",
-      (s, dir) =>
-        // The reference's actual model stack (lstm_model.py:16-44):
-        // Linear→GELU→LayerNorm→LSTM→Linear over the newest window per
-        // key, run as deterministic Scala linear algebra in the same UDF
-        // slot as the surrogate. Fixture dims (F=2,H=4,S=8,P=3) keep the
-        // oracle's fully-unrolled recurrence tractable; the SQL is
-        // GENERATED from the same weight arrays the UDF reads, so both
-        // engines replay identical constants and fold orders.
-        Serving.predictLatestWith(ev(s, dir), K, "ts", "event_id",
-          "value", graft.serve.LstmForward.S, 300, "lstm-fixture-v1",
-          graft.serve.LstmForward.forward)
-          .select(col(K), col("horizon"), col("target_ts"),
-            (round(col("predicted_price"), 6) + lit(0.0)).as("prediction"))
-          .orderBy(K, "horizon"),
-      Some(graft.serve.LstmForward.oracleSql),
-      doc = "SURVEY U1 (real model): Linear→GELU→LayerNorm→LSTM(1)→" +
+    // The reference's actual model stack (lstm_model.py:16-44):
+    // Linear→GELU→LayerNorm→LSTM→Linear over the newest window per
+    // key, run as deterministic Scala linear algebra in the same UDF
+    // slot as the surrogate. Fixture dims (F=2,H=4,S=8,P=3) keep the
+    // oracle's fully-unrolled recurrence tractable; the SQL is
+    // GENERATED from the same weight arrays the UDF reads, so both
+    // engines replay identical constants and fold orders.
+    forwardQuery("q_u1_real_forward", graft.serve.LstmForward,
+      "lstm-fixture-v1",
+      "SURVEY U1 (real model): Linear→GELU→LayerNorm→LSTM(1)→" +
         "Linear→LayerNorm→GELU→Linear forward pass (the reference's " +
         "lstm_model.py) as deterministic double-precision Scala in the " +
         "U1 UDF slot; tanh-GELU + k/1024 fixture weights; oracle is the " +
@@ -163,46 +170,29 @@ object ServingQueries extends QueryPack {
         "discipline), ROUND(·,6) absorbing libm-vs-JVM ulps"),
 
     // ---- U1: the CNN-LSTM model variant ----
-    Query(
-      "q_u1_cnn_forward",
-      (s, dir) =>
-        // Second model family from the reference (cnn_lstm_model.py):
-        // temporal Conv1d(kernel 3, zero pad)+ReLU front end into the
-        // same LSTM + head machinery — same fixture discipline, same
-        // UDF slot, independent Lehmer weight stream.
-        Serving.predictLatestWith(ev(s, dir), K, "ts", "event_id",
-          "value", graft.serve.CnnLstmForward.S, 300, "cnn-lstm-fixture-v1",
-          graft.serve.CnnLstmForward.forward)
-          .select(col(K), col("horizon"), col("target_ts"),
-            (round(col("predicted_price"), 6) + lit(0.0)).as("prediction"))
-          .orderBy(K, "horizon"),
-      Some(graft.serve.CnnLstmForward.oracleSql),
-      doc = "SURVEY U1 (CNN-LSTM variant): Conv1d(k=3, zero-pad)+ReLU -> " +
+    // Second model family from the reference (cnn_lstm_model.py):
+    // temporal Conv1d(kernel 3, zero pad)+ReLU front end into the
+    // same LSTM + head machinery — same fixture discipline, same
+    // UDF slot, independent Lehmer weight stream.
+    forwardQuery("q_u1_cnn_forward", graft.serve.CnnLstmForward,
+      "cnn-lstm-fixture-v1",
+      "SURVEY U1 (CNN-LSTM variant): Conv1d(k=3, zero-pad)+ReLU -> " +
         "LSTM -> Linear/LayerNorm/GELU/Linear head (the reference's " +
         "cnn_lstm_model.py) as deterministic Scala in the U1 UDF slot; " +
         "conv fold order pinned (channel->feature->tap, padded taps " +
         "skipped identically), oracle is the generated unrolled SQL"),
 
     // ---- U1: the LSTM-attention model variant ----
-    Query(
-      "q_u1_attention_forward",
-      (s, dir) =>
-        // Third model family from the reference registry
-        // (lstm_attention_model.py): input_proj + positional encoding ->
-        // 2-layer LSTM -> 3 causal self-attention layers -> constant-
-        // query cross-attention -> per-horizon head. The positional
-        // encodings and cross-attention queries are input-independent
-        // constants, computed once in Scala and emitted into the oracle
-        // as shortest-roundtrip literals.
-        Serving.predictLatestWith(ev(s, dir), K, "ts", "event_id",
-          "value", graft.serve.AttentionLstmForward.S, 300,
-          "lstm-attention-fixture-v1",
-          graft.serve.AttentionLstmForward.forward)
-          .select(col(K), col("horizon"), col("target_ts"),
-            (round(col("predicted_price"), 6) + lit(0.0)).as("prediction"))
-          .orderBy(K, "horizon"),
-      Some(graft.serve.AttentionLstmForward.oracleSql),
-      doc = "SURVEY U1 (LSTM-attention variant): input_proj + sin/cos " +
+    // Third model family from the reference registry
+    // (lstm_attention_model.py): input_proj + positional encoding ->
+    // 2-layer LSTM -> 3 causal self-attention layers -> constant-
+    // query cross-attention -> per-horizon head. The positional
+    // encodings and cross-attention queries are input-independent
+    // constants, computed once in Scala and emitted into the oracle
+    // as shortest-roundtrip literals.
+    forwardQuery("q_u1_attention_forward", graft.serve.AttentionLstmForward,
+      "lstm-attention-fixture-v1",
+      "SURVEY U1 (LSTM-attention variant): input_proj + sin/cos " +
         "positional encoding -> stacked LSTM(2) -> 3 causal multihead " +
         "self-attention layers (head_dim 1) -> cross-attention with " +
         "constant pos-encoded queries -> per-horizon head (the " +
@@ -210,23 +200,14 @@ object ServingQueries extends QueryPack {
         "replayed fold-for-fold in the generated unrolled oracle"),
 
     // ---- U1: the CNN-LSTM-attention model variant ----
-    Query(
-      "q_u1_cnn_attn_forward",
-      (s, dir) =>
-        // Fourth model family from the reference registry
-        // (cnn_lstm_attention_model.py): conv front end, MaxPool(2)
-        // halving the sequence, LSTM over the pooled steps, ADDITIVE
-        // attention pooling (score = w_s . tanh(W_a h_t + b_a), softmax
-        // over steps) instead of last-step readout, shared head.
-        Serving.predictLatestWith(ev(s, dir), K, "ts", "event_id",
-          "value", graft.serve.CnnLstmAttentionForward.S, 300,
-          "cnn-lstm-attn-fixture-v1",
-          graft.serve.CnnLstmAttentionForward.forward)
-          .select(col(K), col("horizon"), col("target_ts"),
-            (round(col("predicted_price"), 6) + lit(0.0)).as("prediction"))
-          .orderBy(K, "horizon"),
-      Some(graft.serve.CnnLstmAttentionForward.oracleSql),
-      doc = "SURVEY U1 (CNN-LSTM-attention variant): Conv1d+ReLU -> " +
+    // Fourth model family from the reference registry
+    // (cnn_lstm_attention_model.py): conv front end, MaxPool(2)
+    // halving the sequence, LSTM over the pooled steps, ADDITIVE
+    // attention pooling (score = w_s . tanh(W_a h_t + b_a), softmax
+    // over steps) instead of last-step readout, shared head.
+    forwardQuery("q_u1_cnn_attn_forward", graft.serve.CnnLstmAttentionForward,
+      "cnn-lstm-attn-fixture-v1",
+      "SURVEY U1 (CNN-LSTM-attention variant): Conv1d+ReLU -> " +
         "MaxPool1d(2) -> LSTM over pooled steps -> additive-attention " +
         "pooling (max-subtraction softmax) -> head (the reference's " +
         "cnn_lstm_attention_model.py); pairwise GREATEST pool and the " +
@@ -234,26 +215,17 @@ object ServingQueries extends QueryPack {
 
     // ---- U1: the `optimize` registry variant (r13 — the last runnable
     // architecture train.py:223-236 can dispatch) ----
-    Query(
-      "q_u1_optimize_forward",
-      (s, dir) =>
-        // Fifth model family (optimize_model.py): input_proj + PE ->
-        // stacked LSTM(2) + norm -> multi-scale temporal attention
-        // (scales 1/3/6: avg-pool, pointwise conv, full attention,
-        // nearest upsample; concat -> Linear -> LN -> GELU) + conv skip
-        // path -> softmax-weighted pooling -> residual norm -> one
-        // Linear head for all horizons. lstm_hybridattention, the only
-        // other registry name, is unrunnable as written (three shape
-        // inconsistencies — see OptimizedLstmForward's closing note).
-        Serving.predictLatestWith(ev(s, dir), K, "ts", "event_id",
-          "value", graft.serve.OptimizedLstmForward.S, 300,
-          "optimize-fixture-v1",
-          graft.serve.OptimizedLstmForward.forward)
-          .select(col(K), col("horizon"), col("target_ts"),
-            (round(col("predicted_price"), 6) + lit(0.0)).as("prediction"))
-          .orderBy(K, "horizon"),
-      Some(graft.serve.OptimizedLstmForward.oracleSql),
-      doc = "SURVEY U1 (`optimize` registry variant): the multi-scale " +
+    // Fifth model family (optimize_model.py): input_proj + PE ->
+    // stacked LSTM(2) + norm -> multi-scale temporal attention
+    // (scales 1/3/6: avg-pool, pointwise conv, full attention,
+    // nearest upsample; concat -> Linear -> LN -> GELU) + conv skip
+    // path -> softmax-weighted pooling -> residual norm -> one
+    // Linear head for all horizons. lstm_hybridattention, the only
+    // other registry name, is unrunnable as written (three shape
+    // inconsistencies — see OptimizedLstmForward's closing note).
+    forwardQuery("q_u1_optimize_forward", graft.serve.OptimizedLstmForward,
+      "optimize-fixture-v1",
+      "SURVEY U1 (`optimize` registry variant): the multi-scale " +
         "temporal-attention LSTM (optimize_model.py) as deterministic " +
         "Scala in the U1 UDF slot — avg-pool/pointwise-conv downsample, " +
         "per-scale full attention, nearest-neighbor upsample, conv skip " +

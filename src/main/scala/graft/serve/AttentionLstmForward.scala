@@ -19,21 +19,16 @@ import LstmMath._
   *   output_proj : Linear(d→2d) → LayerNorm(2d) → GELU → Linear(2d→1)
   *                 per horizon
   *
-  * Oracle notes on top of the shared [[LstmMath]] discipline:
+  * Oracle notes on top of the [[LstmMath]] blocks:
   *  - positional encodings and the constant cross-attention queries are
   *    computed once in Scala and emitted as shortest-roundtrip double
   *    literals ([[LstmMath.dLit]]) — DuckDB reparses them bit-exactly;
-  *  - softmax replays the max-subtraction form: m = max(scores),
-  *    e = exp(s−m), p = e/Σe, output = Σ p·v in ascending key order —
-  *    the same fold both sides;
-  *  - with head_dim = 1 the per-head q/k/v are scalars, so attention
-  *    scores are single products and the unrolled SQL stays tractable;
   *  - each attention layer's output CTE prunes to (keys, sequence), so
   *    the column width in flight stays bounded across the 3 layers.
   *
   * Fixture dims: F=2, d=4, heads=4, S=8, P=3; Lehmer stream seed 99991.
   */
-object AttentionLstmForward {
+object AttentionLstmForward extends ForwardModel {
 
   val F = 2
   val D = 4     // d_model
@@ -41,193 +36,36 @@ object AttentionLstmForward {
   val S = 8
   val P = 3
 
-  private val fixture = new LstmMath.LehmerFixture(99991L)
-  private def ints(n: Int): Array[Int] = fixture.ints(n)
-
-  private[serve] val wink = ints(D * F)
-  private[serve] val bink = ints(D)
-  private[serve] val gmink = ints(D)
-  private[serve] val btink = ints(D)
-  private[serve] val wihL1 = ints(4 * D * D)
-  private[serve] val whhL1 = ints(4 * D * D)
-  private[serve] val bihL1 = ints(4 * D)
-  private[serve] val bhhL1 = ints(4 * D)
-  private[serve] val wihL2 = ints(4 * D * D)
-  private[serve] val whhL2 = ints(4 * D * D)
-  private[serve] val bihL2 = ints(4 * D)
-  private[serve] val bhhL2 = ints(4 * D)
-  private[serve] val gmln = ints(D)
-  private[serve] val btln = ints(D)
-
-  /** Per-attention-module weights (3 self layers + 1 cross), in the
-    * PyTorch in_proj/out_proj shape.
-    */
-  private[serve] case class AttnW(wq: Array[Int], bq: Array[Int],
-      wk: Array[Int], bk: Array[Int], wv: Array[Int], bv: Array[Int],
-      wo: Array[Int], bo: Array[Int])
-
-  private[serve] val attnW: Array[AttnW] = Array.fill(4) {
-    AttnW(ints(D * D), ints(D), ints(D * D), ints(D), ints(D * D), ints(D),
-      ints(D * D), ints(D))
-  }
-  private[serve] val gman = ints(D) // attn_norm, shared by the 3 layers
-  private[serve] val btan = ints(D)
-  private[serve] val gmrn = ints(D) // residual_norm
-  private[serve] val btrn = ints(D)
-  private[serve] val w1o = ints(2 * D * D)
-  private[serve] val b1o = ints(2 * D)
-  private[serve] val gmo = ints(2 * D)
-  private[serve] val bto = ints(2 * D)
-  private[serve] val w2o = ints(2 * D)
-  private[serve] val b2o = ints(1)
-
-  /** Transformer sin/cos positional encoding value at 0-based position
-    * `t`, dimension `j` (PositionalEncoding, lstm_attention_model.py:7-18).
-    */
-  private[serve] def peVal(t: Int, j: Int): Double = {
-    val i = j / 2
-    val div = math.exp(-(math.log(10000.0) * (2 * i) / D))
-    if (j % 2 == 0) math.sin(t * div) else math.cos(t * div)
-  }
+  private val fx = new LehmerFixture(99991L)
+  private val inLin = fx.lin(D, F)
+  private val inLn = fx.ln(D)
+  private val lstms = Seq.fill(2)(fx.lstm(D, D))
+  private val lstmNorm = fx.ln(D)
+  // 3 self-attention modules + 1 cross, in the PyTorch in_proj/out_proj shape
+  private val attnW = Array.fill(4)(fx.attn(D))
+  private val attnNorm = fx.ln(D) // shared by the 3 self layers
+  private val resNorm = fx.ln(D)
+  private val out = fx.head(D, 2 * D, 1) // applied per horizon
 
   // constant cross-attention queries: pos-encoded zero vectors per horizon
-  private[serve] def yq(h: Int): Array[Double] =
-    Array.tabulate(D)(j => peVal(h, j))
-  private[serve] def qCross(h: Int): Array[Double] =
-    linear(yq(h), attnW(3).wq, attnW(3).bq, D, D)
+  private def yq(h: Int): Array[Double] = Array.tabulate(D)(j => peVal(h, j, D))
+  private def qCross(h: Int): Array[Double] = linear(yq(h), attnW(3).q)
 
-  // ---- forward pass ----
-
-  private def attention(xq: Array[Array[Double]], xkv: Array[Array[Double]],
-      w: AttnW, causal: Boolean): Array[Array[Double]] = {
-    val qs = xq.map(x => linear(x, w.wq, w.bq, D, D))
-    val ks = xkv.map(x => linear(x, w.wk, w.bk, D, D))
-    val vs = xkv.map(x => linear(x, w.wv, w.bv, D, D))
-    Array.tabulate(xq.length) { t =>
-      val lim = if (causal) t + 1 else xkv.length
-      val heads = Array.tabulate(Heads) { h =>
-        var m = qs(t)(h) * ks(0)(h)
-        var u = 1
-        while (u < lim) {
-          val s = qs(t)(h) * ks(u)(h)
-          if (s > m) m = s
-          u += 1
-        }
-        val es = Array.tabulate(lim)(u => math.exp(qs(t)(h) * ks(u)(h) - m))
-        var den = 0.0
-        u = 0
-        while (u < lim) { den = den + es(u); u += 1 }
-        var acc = 0.0
-        u = 0
-        while (u < lim) { acc = acc + (es(u) / den) * vs(u)(h); u += 1 }
-        acc
-      }
-      linear(heads, w.wo, w.bo, D, D)
-    }
-  }
+  private def addNorm(a: Array[Double], b: Array[Double], p: Ln): Array[Double] =
+    layerNormW(Array.tabulate(D)(j => a(j) + b(j)), p)
 
   /** seqLen raw window values (ascending time) → P predictions. */
   def forward(window: Seq[Double]): Seq[Double] = {
     require(window.length == S, s"window must have $S values, got ${window.length}")
-    val feats = scaledFeatures(window.toArray)
-    val xs = Array.tabulate(S) { t =>
-      val p = linear(feats(t), wink, bink, D, F)
-      val ln = layerNormW(p, gmink, btink, D)
-      Array.tabulate(D)(j => gelu(ln(j)) + peVal(t, j))
-    }
-    def lstmLayer(in: Array[Array[Double]], wih: Array[Int], whh: Array[Int],
-        bih: Array[Int], bhh: Array[Int]): Array[Array[Double]] = {
-      val h = new Array[Double](D)
-      val c = new Array[Double](D)
-      in.map { x => lstmStep(x, h, c, D, wih, whh, bih, bhh); h.clone() }
-    }
-    val l2 = lstmLayer(lstmLayer(xs, wihL1, whhL1, bihL1, bhhL1),
-      wihL2, whhL2, bihL2, bhhL2)
-    var xa = l2.map(h => layerNormW(h, gmln, btln, D))
-    var l = 0
-    while (l < 3) {
+    val xs = inputProj(scaledFeatures(window.toArray), inLin, inLn)
+    var xa = lstms.foldLeft(xs)(lstmLayer).map(layerNormW(_, lstmNorm))
+    for (l <- 0 until 3) {
       val res = attention(xa, xa, attnW(l), causal = true)
-      xa = Array.tabulate(S)(t => layerNormW(
-        Array.tabulate(D)(j => xa(t)(j) + res(t)(j)), gman, btan, D))
-      l += 1
+      xa = Array.tabulate(S)(t => addNorm(xa(t), res(t), attnNorm))
     }
     val yqs = Array.tabulate(P)(yq)
     val cross = attention(yqs, xa, attnW(3), causal = false)
-    Array.tabulate(P) { h =>
-      val rn = layerNormW(
-        Array.tabulate(D)(j => yqs(h)(j) + cross(h)(j)), gmrn, btrn, D)
-      val q1 = linear(rn, w1o, b1o, 2 * D, D)
-      val ge = layerNormW(q1, gmo, bto, 2 * D).map(gelu)
-      var acc = d(b2o(0))
-      var k = 0
-      while (k < 2 * D) { acc = acc + d(w2o(k)) * ge(k); k += 1 }
-      acc
-    }.toSeq
-  }
-
-  // ---- oracle: the whole stack unrolled as generated DuckDB SQL ----
-
-  /** Emits a linear projection of sequence columns: out alias
-    * `${out}_{t}_{j}` = W·(`${in}_{t}_*`) + b for every t.
-    */
-  private def projSeq(outPfx: String, inRef: (Int, Int) => String,
-      wk: Array[Int], bk: Array[Int], ts: Range): Seq[String] =
-    for (t <- ts; j <- 0 until D) yield {
-      val terms = new StringBuilder(kLit(bk(j)))
-      for (k <- 0 until D) terms ++= s" + ${kLit(wk(j * D + k))} * ${inRef(t, k)}"
-      s"($terms) AS ${outPfx}_${t}_$j"
-    }
-
-  /** One attention block (projections, causal/full softmax, out-proj,
-    * residual + LayerNorm) as CTEs; queries either come from sequence
-    * columns (self) or from constant literals (cross).
-    */
-  private def attnSql(l: Int, w: AttnW, inRef: (Int, Int) => String,
-      qLit: Option[(Int, Int) => String], tsQ: Range, tsKV: Range,
-      causal: Boolean, gmk: Array[Int], btk: Array[Int], outPfx: String,
-      residRef: (Int, Int) => String, from0: String): String = {
-    val sb = new StringBuilder
-    val proj = new StringBuilder
-    if (qLit.isEmpty)
-      proj ++= projSeq(s"q$l", inRef, w.wq, w.bq, tsQ).mkString(", ") + ", "
-    proj ++= projSeq(s"k$l", inRef, w.wk, w.bk, tsKV).mkString(", ") + ", "
-    proj ++= projSeq(s"v$l", inRef, w.wv, w.bv, tsKV).mkString(", ")
-    sb ++= s",\nqk$l AS (SELECT *, $proj FROM $from0)"
-    def qRef(t: Int, h: Int): String =
-      qLit.map(f => f(t, h)).getOrElse(s"q${l}_${t}_$h")
-    def lim(t: Int): Range = if (causal) tsKV.start to t else tsKV
-    val scores = for (h <- 0 until Heads; t <- tsQ; u <- lim(t))
-      yield s"${qRef(t, h)} * k${l}_${u}_$h AS s${l}_${h}_${t}_$u"
-    sb ++= s",\nsc$l AS (SELECT *, ${scores.mkString(", ")} FROM qk$l)"
-    val maxes = for (h <- 0 until Heads; t <- tsQ) yield {
-      val ss = lim(t).map(u => s"s${l}_${h}_${t}_$u")
-      val m = if (ss.size == 1) ss.head else s"GREATEST(${ss.mkString(", ")})"
-      s"$m AS m${l}_${h}_$t"
-    }
-    sb ++= s",\nmx$l AS (SELECT *, ${maxes.mkString(", ")} FROM sc$l)"
-    val exps = for (h <- 0 until Heads; t <- tsQ; u <- lim(t))
-      yield s"exp(s${l}_${h}_${t}_$u - m${l}_${h}_$t) AS e${l}_${h}_${t}_$u"
-    sb ++= s",\nex$l AS (SELECT *, ${exps.mkString(", ")} FROM mx$l)"
-    val dens = for (h <- 0 until Heads; t <- tsQ) yield
-      s"(${lim(t).map(u => s"e${l}_${h}_${t}_$u").mkString(" + ")}) AS den${l}_${h}_$t"
-    sb ++= s",\ndn$l AS (SELECT *, ${dens.mkString(", ")} FROM ex$l)"
-    val aos = for (h <- 0 until Heads; t <- tsQ) yield
-      s"(${lim(t).map(u =>
-        s"(e${l}_${h}_${t}_$u / den${l}_${h}_$t) * v${l}_${u}_$h")
-        .mkString(" + ")}) AS a${l}_${h}_$t"
-    sb ++= s",\nao$l AS (SELECT *, ${aos.mkString(", ")} FROM dn$l)"
-    val ops = for (t <- tsQ; j <- 0 until D) yield {
-      val terms = new StringBuilder(kLit(w.bo(j)))
-      for (h <- 0 until Heads) terms ++= s" + ${kLit(w.wo(j * D + h))} * a${l}_${h}_$t"
-      s"($terms) AS o${l}_${t}_$j"
-    }
-    sb ++= s",\nop$l AS (SELECT *, ${ops.mkString(", ")} FROM ao$l)"
-    val rs = for (t <- tsQ; j <- 0 until D)
-      yield s"${residRef(t, j)} + o${l}_${t}_$j AS r${l}_${t}_$j"
-    sb ++= s",\nrs$l AS (SELECT *, ${rs.mkString(", ")} FROM op$l)"
-    sb ++= lnSeqSql(s"r$l", (t, j) => s"r${l}_${t}_$j", outPfx, gmk, btk,
-      tsQ, s"rs$l", Some("event_type, last_ts"))
-    sb.toString
+    Array.tabulate(P)(h => head(addNorm(yqs(h), cross(h), resNorm), out)(0)).toSeq
   }
 
   /** Full oracle: front end, stacked LSTM, 3 causal attention layers,
@@ -235,62 +73,37 @@ object AttentionLstmForward {
     * the same weight arrays `forward` reads.
     */
   def oracleSql: String = {
+    val keys = "event_type, last_ts"
+    // one attention layer + residual + LayerNorm, out `${outPfx}_{t}_{j}`
+    def attnNormSql(l: Int, inRef: (Int, Int) => String,
+        qLit: Option[(Int, Int) => String], tsQ: Range, causal: Boolean,
+        p: Ln, outPfx: String, residRef: (Int, Int) => String,
+        from0: String): String = {
+      val rs = for (t <- tsQ; j <- 0 until D)
+        yield s"${residRef(t, j)} + o${l}_${t}_$j AS r${l}_${t}_$j"
+      attnSql(l, attnW(l), inRef, tsQ, 1 to S, causal, from0, qLit = qLit) +
+        s",\nrs$l AS (SELECT *, ${rs.mkString(", ")} FROM op$l)" +
+        lnSeqSql(s"r$l", (t, j) => s"r${l}_${t}_$j", outPfx, p, tsQ, s"rs$l", keys)
+    }
     val sb = new StringBuilder
     sb ++= windowFeatureSql(S)
-    // input_proj: Linear -> LN -> GELU, then + positional encoding
-    val ps = for (t <- 1 to S; j <- 0 until D) yield
-      s"(${kLit(bink(j))} + ${kLit(wink(j * F))} * a$t + ${kLit(wink(j * F + 1))} * d$t) AS pi_${t}_$j"
-    sb ++= s",\nip AS (SELECT *, ${ps.mkString(", ")} FROM f1)"
-    sb ++= lnSeqSql("i", (t, j) => s"pi_${t}_$j", "li", gmink, btink,
-      1 to S, "ip", None)
-    val xs = for (t <- 1 to S; j <- 0 until D) yield
-      s"${geluSql(s"li_${t}_$j")} + ${dLit(peVal(t - 1, j))} AS x0_${t}_$j"
-    sb ++= s",\nix AS (SELECT *, ${xs.mkString(", ")} FROM lni)"
-    // 2-layer LSTM
-    for (t <- 1 to S)
-      sb ++= lstmStepSql(t, D, D, k => s"x0_${t}_$k", wihL1, whhL1, bihL1,
-        bhhL1, if (t == 1) "ix" else s"sta${t - 1}", pfx = "a")
-    for (t <- 1 to S)
-      sb ++= lstmStepSql(t, D, D, k => s"ha${t}_$k", wihL2, whhL2, bihL2,
-        bhhL2, if (t == 1) "sta8" else s"stb${t - 1}", pfx = "b")
-    sb ++= lnSeqSql("n", (t, j) => s"hb${t}_$j", "xn0", gmln, btln,
-      1 to S, "stb8", Some("event_type, last_ts"))
+    sb ++= inputProjSql(S, inLin, inLn)
+    sb ++= lstmStackSql(S, lstms, (t, k) => s"x0_${t}_$k", "ix")
+    sb ++= lnSeqSql("n", (t, j) => s"hb${t}_$j", "xn0", lstmNorm, 1 to S,
+      s"stb$S", keys)
     // 3 causal self-attention layers (shared attn_norm)
-    for (l <- 0 until 3)
-      sb ++= attnSql(l, attnW(l), (t, j) => s"xn${l}_${t}_$j", None,
-        1 to S, 1 to S, causal = true, gman, btan, s"xn${l + 1}",
-        (t, j) => s"xn${l}_${t}_$j", if (l == 0) "lnn" else s"lnr${l - 1}")
+    for (l <- 0 until 3) {
+      def xn(t: Int, j: Int): String = s"xn${l}_${t}_$j"
+      sb ++= attnNormSql(l, xn, None, 1 to S, causal = true, attnNorm,
+        s"xn${l + 1}", xn, if (l == 0) "lnn" else s"lnr${l - 1}")
+    }
     // cross-attention: constant queries (pos-encoded zeros per horizon)
-    sb ++= attnSql(3, attnW(3), (t, j) => s"xn3_${t}_$j",
-      Some((hz, h) => dLit(qCross(hz - 1)(h))), 1 to P, 1 to S,
-      causal = false, gmrn, btrn, "xr",
-      (hz, j) => dLit(yq(hz - 1)(j)), "lnr2")
+    sb ++= attnNormSql(3, (t, j) => s"xn3_${t}_$j",
+      Some((hz, h) => dLit(qCross(hz - 1)(h))), 1 to P, causal = false,
+      resNorm, "xr", (hz, j) => dLit(yq(hz - 1)(j)), "lnr2")
     // output head per horizon: Linear(4->8) -> LayerNorm(8) -> GELU -> Linear(8->1)
-    val q1 = for (hz <- 1 to P; m <- 0 until 2 * D) yield {
-      val terms = new StringBuilder(kLit(b1o(m)))
-      for (k <- 0 until D) terms ++= s" + ${kLit(w1o(m * D + k))} * xr_${hz}_$k"
-      s"($terms) AS q1_${hz}_$m"
-    }
-    sb ++= s",\nhq1 AS (SELECT *, ${q1.mkString(", ")} FROM lnr3)"
-    val mus8 = (1 to P).map(hz => s"(${(0 until 2 * D)
-      .map(m => s"q1_${hz}_$m").mkString(" + ")}) / 8.0 AS mu8_$hz")
-    sb ++= s",\nhmu8 AS (SELECT *, ${mus8.mkString(", ")} FROM hq1)"
-    val vrs8 = (1 to P).map(hz => s"(${(0 until 2 * D)
-      .map(m => s"(q1_${hz}_$m - mu8_$hz) * (q1_${hz}_$m - mu8_$hz)")
-      .mkString(" + ")}) / 8.0 AS vr8_$hz")
-    sb ++= s",\nhvr8 AS (SELECT *, ${vrs8.mkString(", ")} FROM hmu8)"
-    val l8 = for (hz <- 1 to P; m <- 0 until 2 * D) yield
-      s"((q1_${hz}_$m - mu8_$hz) / sqrt(vr8_$hz + $Eps)) * ${gmLit(gmo(m))} + ${kLit(bto(m))} AS l8_${hz}_$m"
-    sb ++= s",\nhl8 AS (SELECT *, ${l8.mkString(", ")} FROM hvr8)"
-    val g8 = for (hz <- 1 to P; m <- 0 until 2 * D)
-      yield s"${geluSql(s"l8_${hz}_$m")} AS g8_${hz}_$m"
-    sb ++= s",\nhg8 AS (SELECT *, ${g8.mkString(", ")} FROM hl8)"
-    val ys = (1 to P).map { hz =>
-      val terms = new StringBuilder(kLit(b2o(0)))
-      for (k <- 0 until 2 * D) terms ++= s" + ${kLit(w2o(k))} * g8_${hz}_$k"
-      s"($terms) AS y_${hz - 1}"
-    }
-    sb ++= s",\nhy AS (SELECT event_type, last_ts, ${ys.mkString(", ")} FROM hg8)"
+    sb ++= headSql(out, Head2D, (1 to P).map(hz => s"_$hz"),
+      (g, k) => s"xr${g}_$k", "lnr3")
     sb ++= horizonSelectSql(P)
     sb.toString
   }

@@ -11,16 +11,14 @@ import LstmMath._
   *   lstm : LSTM(C→H), 1 layer, batch_first
   *   head : last timestep → Linear(H→H) → LayerNorm(H) → GELU → Linear(H→P)
   *
-  * The head and LSTM cell are the exact shared machinery ([[LstmMath]]);
-  * only the front end differs: a temporal convolution over the feature
-  * sequence (zero-padded at both ends) instead of the per-step MLP.
-  * The conv fold order is pinned ([[LstmMath.convRelu]] and its SQL twin
-  * [[LstmMath.convSql]]), so the generated SQL oracle replays it exactly.
+  * The head and LSTM layer are the shared [[LstmMath]] blocks; only the
+  * front end differs: a temporal convolution over the feature sequence
+  * (zero-padded at both ends) instead of the per-step MLP.
   *
   * Fixture dims: F=2, C=4 channels, H=4, S=8, P=3; weights from a
   * Lehmer stream seeded independently of LstmForward's.
   */
-object CnnLstmForward {
+object CnnLstmForward extends ForwardModel {
 
   val F = 2 // features per step
   val C = 4 // conv output channels (cnn_out_channels)
@@ -29,35 +27,16 @@ object CnnLstmForward {
   val P = 3 // prediction horizons
   val K = 3 // conv kernel size (padding 1)
 
-  private val fixture = new LstmMath.LehmerFixture(54321L)
-  private def ints(n: Int): Array[Int] = fixture.ints(n)
-
-  // conv weight layout [c][f][k] (the PyTorch [C_out, C_in, K] shape)
-  private[serve] val wcvk = ints(C * F * K)
-  private[serve] val bcvk = ints(C)
-  private[serve] val wihk = ints(4 * H * C)
-  private[serve] val whhk = ints(4 * H * H)
-  private[serve] val bihk = ints(4 * H)
-  private[serve] val bhhk = ints(4 * H)
-  private[serve] val w2k = ints(H * H)
-  private[serve] val b2k = ints(H)
-  private[serve] val gm2k = ints(H)
-  private[serve] val bt2k = ints(H)
-  private[serve] val w3k = ints(P * H)
-  private[serve] val b3k = ints(P)
+  private val fx = new LehmerFixture(54321L)
+  private val conv = fx.lin(C, F * K) // [c][f][k], the PyTorch [C_out, C_in, K] shape
+  private val lstm = fx.lstm(H, C)
+  private val out = fx.head(H, H, P)
 
   /** seqLen raw window values (ascending time) → P predictions. */
   def forward(window: Seq[Double]): Seq[Double] = {
     require(window.length == S, s"window must have $S values, got ${window.length}")
-    val conv = convRelu(scaledFeatures(window.toArray), wcvk, bcvk, C, F, K)
-    val h = new Array[Double](H)
-    val cs = new Array[Double](H)
-    var t = 0
-    while (t < S) {
-      lstmStep(conv(t), h, cs, H, wihk, whhk, bihk, bhhk)
-      t += 1
-    }
-    headForward(h, H, P, w2k, b2k, gm2k, bt2k, w3k, b3k)
+    val cv = conv1d(scaledFeatures(window.toArray), conv, K, relu)
+    head(lstmLayer(cv, lstm).last, out).toSeq
   }
 
   /** Generated DuckDB oracle: windowed features → unrolled conv+ReLU →
@@ -69,16 +48,13 @@ object CnnLstmForward {
     sb ++= windowFeatureSql(S)
     // conv: one CTE with all S×C pre-activation columns
     val cv = for (t <- 1 to S; c <- 0 until C)
-      yield s"${convSql(t, c, wcvk, bcvk, S, F, K)} AS cv${t}_$c"
+      yield s"${convSql(t, c, conv, S, K, featSql)} AS cv${t}_$c"
     sb ++= s",\ncv AS (SELECT *, ${cv.mkString(", ")} FROM f1)"
     val rl = for (t <- 1 to S; c <- 0 until C)
       yield s"${reluSql(s"cv${t}_$c")} AS rl${t}_$c"
     sb ++= s",\nrl AS (SELECT *, ${rl.mkString(", ")} FROM cv)"
-    for (t <- 1 to S)
-      sb ++= lstmStepSql(t, H, C, k => s"rl${t}_$k", wihk, whhk, bihk, bhhk,
-        if (t == 1) "rl" else s"st${t - 1}")
-    sb ++= headSql(H, P, k => s"h${S}_$k", w2k, b2k, gm2k, bt2k,
-      w3k, b3k, "event_type, last_ts", s"st$S")
+    sb ++= lstmStackSql(S, Seq(lstm), (t, k) => s"rl${t}_$k", "rl")
+    sb ++= headSql(out, HeadH, Seq(""), (_, k) => s"h${S}_$k", s"st$S")
     sb ++= horizonSelectSql(P)
     sb.toString
   }

@@ -16,25 +16,14 @@ import LstmMath._
   * reference's seq_len/d_model are config, so the fixture uses tiny dims
   * (F=2 features, H=4 hidden, S=8 steps, P=3 horizons) — small enough
   * that a SQL oracle can replay the recurrence fully unrolled, the same
-  * discipline used for the Lloyd rounds in the trained-IVF oracle.
-  *
-  * Determinism/oracle-parity rules (shared machinery: [[LstmMath]]):
-  *  - Weights are Lehmer-LCG ints quantized to k/1024 — exact dyadic
-  *    doubles, emitted into the SQL as `(k/1024.0)` so both engines
-  *    compute from bit-identical constants.
-  *  - GELU is the published tanh approximation with a shared √(2/π)
-  *    literal; tanh itself is composed from exp on BOTH sides (the
-  *    oracle engine ships no hyperbolics).
-  *  - Every reduction (dot products, LayerNorm mean/var) is a pinned
-  *    left-to-right fold, mirrored exactly in the generated SQL.
-  *  - Final predictions are ROUND(·, 6)+0.0 on both sides: libm-vs-JVM
-  *    exp ulps are absorbed by the rounding.
+  * discipline used for the Lloyd rounds in the trained-IVF oracle. The
+  * blocks and their lockstep rule are [[LstmMath]]'s.
   *
   * The gate layout follows the PyTorch convention: rows [0,H) input gate,
   * [H,2H) forget, [2H,3H) cell candidate, [3H,4H) output;
   * c_t = f⊙c_{t−1} + i⊙g, h_t = o⊙tanh(c_t).
   */
-object LstmForward {
+object LstmForward extends ForwardModel {
 
   val F = 2 // features per step: scaled value + first difference
   val H = 4 // hidden width
@@ -43,78 +32,40 @@ object LstmForward {
 
   // ---- fixture weights: one Lehmer stream, consumed in declaration order ----
 
-  private val fixture = new LstmMath.LehmerFixture(12345L)
-  private def ints(n: Int): Array[Int] = fixture.ints(n)
-
-  // integer weight units; double value = k/1024 (gamma = (1024+k)/1024)
-  private[serve] val w1k = ints(H * F)
-  private[serve] val b1k = ints(H)
-  private[serve] val gm1k = ints(H)
-  private[serve] val bt1k = ints(H)
-  private[serve] val wihk = ints(4 * H * H)
-  private[serve] val whhk = ints(4 * H * H)
-  private[serve] val bihk = ints(4 * H)
-  private[serve] val bhhk = ints(4 * H)
-  private[serve] val w2k = ints(H * H)
-  private[serve] val b2k = ints(H)
-  private[serve] val gm2k = ints(H)
-  private[serve] val bt2k = ints(H)
-  private[serve] val w3k = ints(P * H)
-  private[serve] val b3k = ints(P)
-
-  // ---- forward pass ----
+  private val fx = new LehmerFixture(12345L)
+  private val inLin = fx.lin(H, F)
+  private val inLn = fx.ln(H)
+  private val lstm = fx.lstm(H, H)
+  private val out = fx.head(H, H, P)
 
   /** seqLen raw window values (ascending time) → P predictions. */
   def forward(window: Seq[Double]): Seq[Double] = {
     require(window.length == S, s"window must have $S values, got ${window.length}")
-    val feats = scaledFeatures(window.toArray)
-    val h = new Array[Double](H)
-    val c = new Array[Double](H)
-    var t = 0
-    while (t < S) {
-      // input_net: Linear(F→H) → GELU → LayerNorm
-      val p = Array.tabulate(H) { j =>
-        d(b1k(j)) + d(w1k(j * F)) * feats(t)(0) + d(w1k(j * F + 1)) * feats(t)(1)
-      }
-      val xin = layerNorm4(p.map(gelu), gm1k, bt1k)
-      lstmStep(xin, h, c, H, wihk, whhk, bihk, bhhk)
-      t += 1
-    }
-    headForward(h, H, P, w2k, b2k, gm2k, bt2k, w3k, b3k)
+    // input_net: Linear(F→H) → GELU → LayerNorm
+    val xs = scaledFeatures(window.toArray)
+      .map(f => layerNormW(linear(f, inLin).map(gelu), inLn))
+    head(lstmLayer(xs, lstm).last, out).toSeq
   }
-
-  // ---- oracle: the recurrence unrolled as generated DuckDB SQL ----
 
   /** Full oracle SQL over the `events` table: per event_type, latest S
     * values (ordered by ts, event_id) → unrolled forward → one row per
     * horizon. Generated, not hand-written — every weight literal and
-    * fold order comes from the same arrays `forward` uses.
+    * fold order comes from the same arrays `forward` uses. Each step's
+    * input_net CTEs sit just before its LSTM step.
     */
   def oracleSql: String = {
     val sb = new StringBuilder
     sb ++= windowFeatureSql(S)
     for (t <- 1 to S) {
-      // input_net: Linear -> GELU -> LayerNorm
-      val p = (0 until H).map { j =>
-        s"(${kLit(b1k(j))} + ${kLit(w1k(j * F))} * a$t + ${kLit(w1k(j * F + 1))} * d$t) AS p${t}_$j"
-      }
+      val p = (0 until H).map(j => s"${linSql(inLin, j)(featSql(t, _))} AS p${t}_$j")
       sb ++= s",\np$t AS (SELECT *, ${p.mkString(", ")} FROM ${if (t == 1) "f1" else s"st${t - 1}"})"
       val g = (0 until H).map(j => s"${geluSql(s"p${t}_$j")} AS g${t}_$j")
       sb ++= s",\ng$t AS (SELECT *, ${g.mkString(", ")} FROM p$t)"
-      sb ++= s",\nm$t AS (SELECT *, (${(0 until H).map(j => s"g${t}_$j")
-        .mkString(" + ")}) / 4.0 AS mu$t FROM g$t)"
-      sb ++= s",\nw$t AS (SELECT *, (${(0 until H)
-        .map(j => s"(g${t}_$j - mu$t) * (g${t}_$j - mu$t)")
-        .mkString(" + ")}) / 4.0 AS vr$t FROM m$t)"
-      val xin = (0 until H).map { j =>
-        s"((g${t}_$j - mu$t) / sqrt(vr$t + $Eps)) * ${gmLit(gm1k(j))} + ${kLit(bt1k(j))} AS x${t}_$j"
-      }
-      sb ++= s",\nx$t AS (SELECT *, ${xin.mkString(", ")} FROM w$t)"
-      sb ++= lstmStepSql(t, H, H, k => s"x${t}_$k", wihk, whhk, bihk, bhhk,
-        s"x$t")
+      sb ++= layerNormSql(inLn, Seq(t), (t, j) => s"g${t}_$j", t => s"mu$t",
+        t => s"vr$t", (t, j) => s"x${t}_$j", Seq(s"m$t", s"w$t", s"x$t"), s"g$t")
+      sb ++= lstmStepSql(t, lstm, k => s"x${t}_$k", s"x$t")
     }
-    sb ++= headSql(H, P, k => s"h${S}_$k", w2k, b2k, gm2k, bt2k,
-      w3k, b3k, "event_type, last_ts", s"st$S")
+    sb ++= headSql(out, HeadH, Seq(""), (_, k) => s"h${S}_$k", s"st$S")
     sb ++= horizonSelectSql(P)
     sb.toString
   }

@@ -34,18 +34,17 @@ import LstmMath._
   * forward (optimize_model.py:124, cf. the forward at :149-178) — it is
   * deliberately absent here too.
   *
-  * Oracle discipline is the shared [[LstmMath]] one: k/1024 fixture
-  * weights from an independent Lehmer stream, tanh-approx GELU (same
-  * documented deviation as the other four families — the erf form has no
-  * portable SQL twin), max-subtraction softmax, every fold order pinned
-  * and replayed term-for-term in the generated DuckDB SQL.
+  * The blocks and their lockstep rule are [[LstmMath]]'s, with fixture
+  * weights from an independent Lehmer stream; GELU is the same tanh
+  * approximation as the other four families (the erf form has no
+  * portable SQL twin).
   *
   * Fixture dims: F=2, d=4, heads=4 (head_dim 1 ⇒ the 1/√head_dim score
   * scale is exactly 1), S=8, P=3. Scale lengths on S=8: L(1)=8, L(3)=2
   * (positions avg x1..3, avg x4..6 — x7, x8 dropped by the floor),
   * L(6)=1 (avg x1..6).
   */
-object OptimizedLstmForward {
+object OptimizedLstmForward extends ForwardModel {
 
   val F = 2
   val D = 4      // d_model
@@ -55,69 +54,23 @@ object OptimizedLstmForward {
   val K = 3      // skip-conv kernel (padding 1)
   val Scales: Seq[Int] = Seq(1, 3, 6)
 
-  private val fixture = new LstmMath.LehmerFixture(77773L)
-  private def ints(n: Int): Array[Int] = fixture.ints(n)
-
-  private[serve] val wink = ints(D * F)
-  private[serve] val bink = ints(D)
-  private[serve] val gmink = ints(D)
-  private[serve] val btink = ints(D)
-  private[serve] val wihL1 = ints(4 * D * D)
-  private[serve] val whhL1 = ints(4 * D * D)
-  private[serve] val bihL1 = ints(4 * D)
-  private[serve] val bhhL1 = ints(4 * D)
-  private[serve] val wihL2 = ints(4 * D * D)
-  private[serve] val whhL2 = ints(4 * D * D)
-  private[serve] val bihL2 = ints(4 * D)
-  private[serve] val bhhL2 = ints(4 * D)
-  private[serve] val gmln = ints(D)
-  private[serve] val btln = ints(D)
-
-  private[serve] case class AttnW(wq: Array[Int], bq: Array[Int],
-      wk: Array[Int], bk: Array[Int], wv: Array[Int], bv: Array[Int],
-      wo: Array[Int], bo: Array[Int])
-
+  private val fx = new LehmerFixture(77773L)
+  private val inLin = fx.lin(D, F)
+  private val inLn = fx.ln(D)
+  private val lstms = Seq.fill(2)(fx.lstm(D, D))
+  private val lstmNorm = fx.ln(D)
   // one attention module per scale (ModuleList order = Scales order)
-  private[serve] val attnW: Array[AttnW] = Array.fill(Scales.length) {
-    AttnW(ints(D * D), ints(D), ints(D * D), ints(D), ints(D * D), ints(D),
-      ints(D * D), ints(D))
-  }
+  private val attnW = Scales.map(_ => fx.attn(D))
   // pointwise conv after the avg-pool, scales 3 and 6 only
-  private[serve] val wdn3 = ints(D * D)
-  private[serve] val bdn3 = ints(D)
-  private[serve] val wdn6 = ints(D * D)
-  private[serve] val bdn6 = ints(D)
-  // aggregate: Linear(3d->d) + LayerNorm(d)
-  private[serve] val wagg = ints(D * 3 * D)
-  private[serve] val bagg = ints(D)
-  private[serve] val gmagg = ints(D)
-  private[serve] val btagg = ints(D)
-  // skip conv [out][in][tap] + pool_norm
-  private[serve] val wskip = ints(D * D * K)
-  private[serve] val bskip = ints(D)
-  private[serve] val gmpool = ints(D)
-  private[serve] val btpool = ints(D)
-  // residual Linear(d->d) + residual_norm
-  private[serve] val wres = ints(D * D)
-  private[serve] val bres = ints(D)
-  private[serve] val gmres = ints(D)
-  private[serve] val btres = ints(D)
+  private val down = Map(3 -> fx.lin(D, D), 6 -> fx.lin(D, D))
+  private val agg = fx.lin(D, 3 * D) // aggregate: Linear(3d->d) + LayerNorm(d)
+  private val aggLn = fx.ln(D)
+  private val skip = fx.lin(D, D * K) // skip conv [out][in][tap] + pool_norm
+  private val poolLn = fx.ln(D)
+  private val res = fx.lin(D, D) // residual Linear(d->d) + residual_norm
+  private val resLn = fx.ln(D)
   // head: Linear(d->2d) -> LayerNorm(2d) -> GELU -> Linear(2d->P)
-  private[serve] val w1o = ints(2 * D * D)
-  private[serve] val b1o = ints(2 * D)
-  private[serve] val gmo = ints(2 * D)
-  private[serve] val bto = ints(2 * D)
-  private[serve] val w2o = ints(P * 2 * D)
-  private[serve] val b2o = ints(P)
-
-  /** Sin/cos positional encoding (optimize_model.py:7-18, same form as
-    * the attention family's).
-    */
-  private[serve] def peVal(t: Int, j: Int): Double = {
-    val i = j / 2
-    val div = math.exp(-(math.log(10000.0) * (2 * i) / D))
-    if (j % 2 == 0) math.sin(t * div) else math.cos(t * div)
-  }
+  private val out = fx.head(D, 2 * D, P)
 
   /** Pooled (and, for scale>1, pointwise-conv'd) positions of a scale:
     * 0-based start p covers xn[p·s .. p·s+s−1]; floor semantics drop the
@@ -127,277 +80,108 @@ object OptimizedLstmForward {
 
   private def nearestIdx(t: Int, len: Int): Int = t * len / S
 
-  // ---- forward pass ----
-
-  private def attention(xs: Array[Array[Double]], w: AttnW)
-      : Array[Array[Double]] = {
-    val qs = xs.map(x => linear(x, w.wq, w.bq, D, D))
-    val ks = xs.map(x => linear(x, w.wk, w.bk, D, D))
-    val vs = xs.map(x => linear(x, w.wv, w.bv, D, D))
-    val n = xs.length
-    Array.tabulate(n) { t =>
-      val heads = Array.tabulate(Heads) { h =>
-        var m = qs(t)(h) * ks(0)(h)
-        var u = 1
-        while (u < n) {
-          val s = qs(t)(h) * ks(u)(h)
-          if (s > m) m = s
-          u += 1
-        }
-        val es = Array.tabulate(n)(u => math.exp(qs(t)(h) * ks(u)(h) - m))
-        var den = 0.0
-        u = 0
-        while (u < n) { den = den + es(u); u += 1 }
-        var acc = 0.0
-        u = 0
-        while (u < n) { acc = acc + (es(u) / den) * vs(u)(h); u += 1 }
-        acc
-      }
-      linear(heads, w.wo, w.bo, D, D)
-    }
-  }
-
   /** seqLen raw window values (ascending time) → P predictions. */
   def forward(window: Seq[Double]): Seq[Double] = {
     require(window.length == S, s"window must have $S values, got ${window.length}")
-    val feats = scaledFeatures(window.toArray)
-    val xs = Array.tabulate(S) { t =>
-      val p = linear(feats(t), wink, bink, D, F)
-      val ln = layerNormW(p, gmink, btink, D)
-      Array.tabulate(D)(j => gelu(ln(j)) + peVal(t, j))
-    }
-    def lstmLayer(in: Array[Array[Double]], wih: Array[Int], whh: Array[Int],
-        bih: Array[Int], bhh: Array[Int]): Array[Array[Double]] = {
-      val h = new Array[Double](D)
-      val c = new Array[Double](D)
-      in.map { x => lstmStep(x, h, c, D, wih, whh, bih, bhh); h.clone() }
-    }
-    val l2 = lstmLayer(lstmLayer(xs, wihL1, whhL1, bihL1, bhhL1),
-      wihL2, whhL2, bihL2, bhhL2)
-    val xn = l2.map(h => layerNormW(h, gmln, btln, D))
+    val xs = inputProj(scaledFeatures(window.toArray), inLin, inLn)
+    val xn = lstms.foldLeft(xs)(lstmLayer).map(layerNormW(_, lstmNorm))
 
     // multi-scale attention, upsampled back to S positions per scale
     val scaleOuts: Seq[Array[Array[Double]]] =
-      Scales.zipWithIndex.map { case (sc, si) =>
+      Scales.zip(attnW).map { case (sc, w) =>
         val positions: Array[Array[Double]] =
           if (sc == 1) xn
-          else {
-            val (wd, bd) = if (sc == 3) (wdn3, bdn3) else (wdn6, bdn6)
-            Array.tabulate(scaleLen(sc)) { p =>
-              val avg = Array.tabulate(D) { j =>
-                var acc = 0.0
-                var u = 0
-                while (u < sc) { acc = acc + xn(p * sc + u)(j); u += 1 }
-                acc / sc
-              }
-              linear(avg, wd, bd, D, D)
+          else Array.tabulate(scaleLen(sc)) { p =>
+            val avg = Array.tabulate(D) { j =>
+              var acc = 0.0
+              var u = 0
+              while (u < sc) { acc = acc + xn(p * sc + u)(j); u += 1 }
+              acc / sc
             }
+            linear(avg, down(sc))
           }
-        val att = attention(positions, attnW(si))
+        val att = attention(positions, positions, w, causal = false)
         Array.tabulate(S)(t => att(nearestIdx(t, positions.length)))
       }
 
     // concat + aggregate (Linear(3d->d) -> LayerNorm -> GELU)
     val ag = Array.tabulate(S) { t =>
       val catv = scaleOuts(0)(t) ++ scaleOuts(1)(t) ++ scaleOuts(2)(t)
-      layerNormW(linear(catv, wagg, bagg, D, 3 * D), gmagg, btagg, D)
-        .map(gelu)
+      layerNormW(linear(catv, agg), aggLn).map(gelu)
     }
     // skip conv over the normalized lstm output, GELU, pool_norm
-    val sk = Array.tabulate(S) { t =>
-      val pre = Array.tabulate(D) { j =>
-        var acc = d(bskip(j))
-        var c = 0
-        while (c < D) {
-          var k = 0
-          while (k < K) {
-            val u = t - 1 + k
-            if (u >= 0 && u < S)
-              acc = acc + d(wskip(j * D * K + c * K + k)) * xn(u)(c)
-            k += 1
-          }
-          c += 1
-        }
-        acc
-      }
-      layerNormW(pre.map(gelu), gmpool, btpool, D)
-    }
+    val sk = conv1d(xn, skip, K, gelu).map(layerNormW(_, poolLn))
     val at = Array.tabulate(S)(t =>
       Array.tabulate(D)(j => ag(t)(j) + sk(t)(j)))
 
     // attention-weighted pooling: softmax over t of the per-step mean
     val means = Array.tabulate(S)(t =>
       (at(t)(0) + at(t)(1) + at(t)(2) + at(t)(3)) / 4.0)
-    var m = means(0)
-    var t = 1
-    while (t < S) { if (means(t) > m) m = means(t); t += 1 }
-    val es = means.map(x => math.exp(x - m))
-    var den = 0.0
-    t = 0
-    while (t < S) { den = den + es(t); t += 1 }
-    val ctx = Array.tabulate(D) { j =>
-      var acc = 0.0
-      var u = 0
-      while (u < S) { acc = acc + (es(u) / den) * at(u)(j); u += 1 }
-      acc
-    }
+    val ctx = softmaxPool(means, D)(at(_)(_))
     // residual + residual_norm
-    val res = linear(ctx, wres, bres, D, D)
-    val rn = layerNormW(Array.tabulate(D)(j => ctx(j) + res(j)),
-      gmres, btres, D)
+    val rz = linear(ctx, res)
+    val rn = layerNormW(Array.tabulate(D)(j => ctx(j) + rz(j)), resLn)
     // head: all P horizons from one linear
-    val q1 = linear(rn, w1o, b1o, 2 * D, D)
-    val ge = layerNormW(q1, gmo, bto, 2 * D).map(gelu)
-    Array.tabulate(P) { p =>
-      var acc = d(b2o(p))
-      var k = 0
-      while (k < 2 * D) { acc = acc + d(w2o(p * 2 * D + k)) * ge(k); k += 1 }
-      acc
-    }.toSeq
-  }
-
-  // ---- oracle: the whole stack unrolled as generated DuckDB SQL ----
-
-  /** One full (non-causal) attention block over `ts` positions with
-    * prefix `s$si`: q/k/v projections, max-subtraction softmax per head,
-    * out-proj to `o${si}_{t}_{j}`, pruned to `keep`.
-    */
-  private def attnSql(si: Int, w: AttnW, inRef: (Int, Int) => String,
-      ts: Range, keep: String, from0: String): String = {
-    val sb = new StringBuilder
-    def proj(pfx: String, wk: Array[Int], bk: Array[Int]): String =
-      (for (t <- ts; j <- 0 until D) yield {
-        val terms = new StringBuilder(kLit(bk(j)))
-        for (k <- 0 until D) terms ++= s" + ${kLit(wk(j * D + k))} * ${inRef(t, k)}"
-        s"($terms) AS $pfx${si}_${t}_$j"
-      }).mkString(", ")
-    sb ++= s",\nqk$si AS (SELECT *, ${proj("q", w.wq, w.bq)}, " +
-      s"${proj("k", w.wk, w.bk)}, ${proj("v", w.wv, w.bv)} FROM $from0)"
-    val scores = for (h <- 0 until Heads; t <- ts; u <- ts)
-      yield s"q${si}_${t}_$h * k${si}_${u}_$h AS s${si}_${h}_${t}_$u"
-    sb ++= s",\nsc$si AS (SELECT *, ${scores.mkString(", ")} FROM qk$si)"
-    val maxes = for (h <- 0 until Heads; t <- ts) yield {
-      val ss = ts.map(u => s"s${si}_${h}_${t}_$u")
-      val m = if (ss.size == 1) ss.head else s"GREATEST(${ss.mkString(", ")})"
-      s"$m AS m${si}_${h}_$t"
-    }
-    sb ++= s",\nmx$si AS (SELECT *, ${maxes.mkString(", ")} FROM sc$si)"
-    val exps = for (h <- 0 until Heads; t <- ts; u <- ts)
-      yield s"exp(s${si}_${h}_${t}_$u - m${si}_${h}_$t) AS e${si}_${h}_${t}_$u"
-    sb ++= s",\nex$si AS (SELECT *, ${exps.mkString(", ")} FROM mx$si)"
-    val dens = for (h <- 0 until Heads; t <- ts) yield
-      s"(${ts.map(u => s"e${si}_${h}_${t}_$u").mkString(" + ")}) AS den${si}_${h}_$t"
-    sb ++= s",\ndn$si AS (SELECT *, ${dens.mkString(", ")} FROM ex$si)"
-    val aos = for (h <- 0 until Heads; t <- ts) yield
-      s"(${ts.map(u =>
-        s"(e${si}_${h}_${t}_$u / den${si}_${h}_$t) * v${si}_${u}_$h")
-        .mkString(" + ")}) AS a${si}_${h}_$t"
-    sb ++= s",\nao$si AS (SELECT *, ${aos.mkString(", ")} FROM dn$si)"
-    val ops = for (t <- ts; j <- 0 until D) yield {
-      val terms = new StringBuilder(kLit(w.bo(j)))
-      for (h <- 0 until Heads) terms ++= s" + ${kLit(w.wo(j * D + h))} * a${si}_${h}_$t"
-      s"($terms) AS o${si}_${t}_$j"
-    }
-    sb ++= s",\nop$si AS (SELECT $keep, ${ops.mkString(", ")} FROM ao$si)"
-    sb.toString
+    head(rn, out).toSeq
   }
 
   /** Full oracle, generated from the same weight arrays `forward` reads. */
   def oracleSql: String = {
-    val xnCols = (for (t <- 1 to S; j <- 0 until D)
-      yield s"xn_${t}_$j").mkString(", ")
-    def oCols(si: Int, ts: Range): String =
-      (for (t <- ts; j <- 0 until D) yield s"o${si}_${t}_$j").mkString(", ")
+    val keys = "event_type, last_ts"
+    def cols(pfx: String, ts: Range): String =
+      (for (t <- ts; j <- 0 until D) yield s"${pfx}_${t}_$j").mkString(", ")
+    val xnCols = cols("xn", 1 to S)
 
     val sb = new StringBuilder
     sb ++= windowFeatureSql(S)
-    // input_proj: Linear -> LN -> GELU, + positional encoding
-    val ps = for (t <- 1 to S; j <- 0 until D) yield
-      s"(${kLit(bink(j))} + ${kLit(wink(j * F))} * a$t + ${kLit(wink(j * F + 1))} * d$t) AS pi_${t}_$j"
-    sb ++= s",\nip AS (SELECT *, ${ps.mkString(", ")} FROM f1)"
-    sb ++= lnSeqSql("i", (t, j) => s"pi_${t}_$j", "li", gmink, btink,
-      1 to S, "ip", None)
-    val xs = for (t <- 1 to S; j <- 0 until D) yield
-      s"${geluSql(s"li_${t}_$j")} + ${dLit(peVal(t - 1, j))} AS x0_${t}_$j"
-    sb ++= s",\nix AS (SELECT *, ${xs.mkString(", ")} FROM lni)"
-    // 2-layer LSTM
-    for (t <- 1 to S)
-      sb ++= lstmStepSql(t, D, D, k => s"x0_${t}_$k", wihL1, whhL1, bihL1,
-        bhhL1, if (t == 1) "ix" else s"sta${t - 1}", pfx = "a")
-    for (t <- 1 to S)
-      sb ++= lstmStepSql(t, D, D, k => s"ha${t}_$k", wihL2, whhL2, bihL2,
-        bhhL2, if (t == 1) "sta8" else s"stb${t - 1}", pfx = "b")
-    sb ++= lnSeqSql("n", (t, j) => s"hb${t}_$j", "xn", gmln, btln,
-      1 to S, "stb8", Some("event_type, last_ts"))
+    sb ++= inputProjSql(S, inLin, inLn)
+    sb ++= lstmStackSql(S, lstms, (t, k) => s"x0_${t}_$k", "ix")
+    sb ++= lnSeqSql("n", (t, j) => s"hb${t}_$j", "xn", lstmNorm, 1 to S,
+      s"stb$S", keys)
 
     // scale 1: attention directly over xn
-    sb ++= attnSql(1, attnW(0), (t, j) => s"xn_${t}_$j", 1 to S,
-      s"event_type, last_ts, $xnCols", "lnn")
-    // scale 3: avg-pool pairs of 3 -> pointwise conv -> attention (2 pos)
+    sb ++= attnSql(1, attnW(0), (t, j) => s"xn_${t}_$j", 1 to S, 1 to S,
+      causal = false, "lnn", s"$keys, $xnCols")
+    // scales 3 and 6: avg-pool -> pointwise conv -> attention
     val l3 = scaleLen(3)
-    val pl3 = for (p <- 1 to l3; j <- 0 until D) yield
-      s"(${(0 until 3).map(u => s"xn_${(p - 1) * 3 + u + 1}_$j")
-        .mkString(" + ")}) / 3.0 AS pl3_${p}_$j"
-    sb ++= s",\npo3 AS (SELECT *, ${pl3.mkString(", ")} FROM op1)"
-    val cv3 = for (p <- 1 to l3; j <- 0 until D) yield {
-      val terms = new StringBuilder(kLit(bdn3(j)))
-      for (k <- 0 until D) terms ++= s" + ${kLit(wdn3(j * D + k))} * pl3_${p}_$k"
-      s"($terms) AS cv3_${p}_$j"
+    for ((sc, si, from0, keep) <- Seq(
+        (3, 1, "op1", s"$keys, $xnCols, ${cols("o1", 1 to S)}"),
+        (6, 2, "op3", s"$keys, $xnCols, ${cols("o1", 1 to S)}, ${cols("o3", 1 to l3)}"))) {
+      val ps = 1 to scaleLen(sc)
+      val pl = for (p <- ps; j <- 0 until D) yield
+        s"(${(0 until sc).map(u => s"xn_${(p - 1) * sc + u + 1}_$j")
+          .mkString(" + ")}) / ${sc.toDouble} AS pl${sc}_${p}_$j"
+      sb ++= s",\npo$sc AS (SELECT *, ${pl.mkString(", ")} FROM $from0)"
+      val cv = for (p <- ps; j <- 0 until D)
+        yield s"${linSql(down(sc), j)(k => s"pl${sc}_${p}_$k")} AS cv${sc}_${p}_$j"
+      sb ++= s",\ncp$sc AS (SELECT *, ${cv.mkString(", ")} FROM po$sc)"
+      sb ++= attnSql(sc, attnW(si), (p, j) => s"cv${sc}_${p}_$j", ps, ps,
+        causal = false, s"cp$sc", keep)
     }
-    sb ++= s",\ncp3 AS (SELECT *, ${cv3.mkString(", ")} FROM po3)"
-    sb ++= attnSql(3, attnW(1), (p, j) => s"cv3_${p}_$j", 1 to l3,
-      s"event_type, last_ts, $xnCols, ${oCols(1, 1 to S)}", "cp3")
-    // scale 6: one pooled position
-    val pl6 = (0 until D).map(j =>
-      s"(${(1 to 6).map(u => s"xn_${u}_$j").mkString(" + ")}) / 6.0 AS pl6_1_$j")
-    sb ++= s",\npo6 AS (SELECT *, ${pl6.mkString(", ")} FROM op3)"
-    val cv6 = (0 until D).map { j =>
-      val terms = new StringBuilder(kLit(bdn6(j)))
-      for (k <- 0 until D) terms ++= s" + ${kLit(wdn6(j * D + k))} * pl6_1_$k"
-      s"($terms) AS cv6_1_$j"
-    }
-    sb ++= s",\ncp6 AS (SELECT *, ${cv6.mkString(", ")} FROM po6)"
-    sb ++= attnSql(6, attnW(2), (p, j) => s"cv6_${p}_$j", 1 to 1,
-      s"event_type, last_ts, $xnCols, ${oCols(1, 1 to S)}, ${oCols(3, 1 to l3)}",
-      "cp6")
 
     // upsample (nearest) + concat + aggregate Linear(3d->d) -> LN -> GELU
     val agp = for (t <- 1 to S; j <- 0 until D) yield {
-      val terms = new StringBuilder(kLit(bagg(j)))
-      for (k <- 0 until D)
-        terms ++= s" + ${kLit(wagg(j * 3 * D + k))} * o1_${t}_$k"
       val p3 = nearestIdx(t - 1, l3) + 1
-      for (k <- 0 until D)
-        terms ++= s" + ${kLit(wagg(j * 3 * D + D + k))} * o3_${p3}_$k"
-      for (k <- 0 until D)
-        terms ++= s" + ${kLit(wagg(j * 3 * D + 2 * D + k))} * o6_1_$k"
-      s"($terms) AS agp_${t}_$j"
+      val in = (0 until D).map(k => s"o1_${t}_$k") ++
+        (0 until D).map(k => s"o3_${p3}_$k") ++ (0 until D).map(k => s"o6_1_$k")
+      s"${linSql(agg, j)(in)} AS agp_${t}_$j"
     }
     sb ++= s",\nagl AS (SELECT *, ${agp.mkString(", ")} FROM op6)"
-    sb ++= lnSeqSql("g", (t, j) => s"agp_${t}_$j", "lg", gmagg, btagg,
-      1 to S, "agl", Some(s"event_type, last_ts, $xnCols"))
+    sb ++= lnSeqSql("g", (t, j) => s"agp_${t}_$j", "lg", aggLn, 1 to S, "agl",
+      s"$keys, $xnCols")
     val ags = for (t <- 1 to S; j <- 0 until D)
       yield s"${geluSql(s"lg_${t}_$j")} AS ag_${t}_$j"
     sb ++= s",\nagg AS (SELECT *, ${ags.mkString(", ")} FROM lng)"
 
     // skip conv (kernel 3, zero pad — boundary taps skipped) -> GELU -> LN
-    val skp = for (t <- 1 to S; j <- 0 until D) yield {
-      val terms = new StringBuilder(kLit(bskip(j)))
-      for (c <- 0 until D; k <- 0 until K) {
-        val u = t - 1 + k // 1-based tap position u in 1..S
-        if (u >= 1 && u <= S)
-          terms ++= s" + ${kLit(wskip(j * D * K + c * K + k))} * xn_${u}_$c"
-      }
-      s"($terms) AS skp_${t}_$j"
-    }
+    val skp = for (t <- 1 to S; j <- 0 until D)
+      yield s"${convSql(t, j, skip, S, K, (u, c) => s"xn_${u}_$c")} AS skp_${t}_$j"
     sb ++= s",\nskc AS (SELECT *, ${skp.mkString(", ")} FROM agg)"
     val skg = for (t <- 1 to S; j <- 0 until D)
       yield s"${geluSql(s"skp_${t}_$j")} AS skg_${t}_$j"
     sb ++= s",\nskr AS (SELECT *, ${skg.mkString(", ")} FROM skc)"
-    sb ++= lnSeqSql("s", (t, j) => s"skg_${t}_$j", "sn", gmpool, btpool,
-      1 to S, "skr",
-      Some(s"event_type, last_ts, ${(for (t <- 1 to S; j <- 0 until D)
-        yield s"ag_${t}_$j").mkString(", ")}"))
+    sb ++= lnSeqSql("s", (t, j) => s"skg_${t}_$j", "sn", poolLn, 1 to S, "skr",
+      s"$keys, ${cols("ag", 1 to S)}")
     val ats = for (t <- 1 to S; j <- 0 until D)
       yield s"ag_${t}_$j + sn_${t}_$j AS at_${t}_$j"
     sb ++= s",\natt AS (SELECT *, ${ats.mkString(", ")} FROM lns)"
@@ -406,54 +190,18 @@ object OptimizedLstmForward {
     val mns = (1 to S).map(t => s"(${(0 until D).map(j => s"at_${t}_$j")
       .mkString(" + ")}) / 4.0 AS mn_$t")
     sb ++= s",\npm AS (SELECT *, ${mns.mkString(", ")} FROM att)"
-    sb ++= s",\npx AS (SELECT *, GREATEST(${(1 to S).map(t => s"mn_$t")
-      .mkString(", ")}) AS mmax FROM pm)"
-    val pes = (1 to S).map(t => s"exp(mn_$t - mmax) AS pe_$t")
-    sb ++= s",\npe AS (SELECT *, ${pes.mkString(", ")} FROM px)"
-    sb ++= s",\npd AS (SELECT *, (${(1 to S).map(t => s"pe_$t")
-      .mkString(" + ")}) AS pden FROM pe)"
-    val ctxs = (0 until D).map(j =>
-      s"(${(1 to S).map(t => s"(pe_$t / pden) * at_${t}_$j")
-        .mkString(" + ")}) AS ctx_$j")
-    sb ++= s",\npc AS (SELECT event_type, last_ts, ${ctxs.mkString(", ")} FROM pd)"
+    sb ++= softmaxPoolSql(Seq(SoftmaxSql(1 to S, t => s"mn_$t", "mmax",
+      t => s"pe_$t", "pden", (t, j) => s"at_${t}_$j", (0 until D).map(j => s"ctx_$j"))),
+      Seq("px", "pe", "pd", "pc"), "pm", keys)
 
     // residual + residual_norm (width 4, single vector)
-    val rzs = (0 until D).map { j =>
-      val terms = new StringBuilder(kLit(bres(j)))
-      for (k <- 0 until D) terms ++= s" + ${kLit(wres(j * D + k))} * ctx_$k"
-      s"ctx_$j + ($terms) AS rz_$j"
-    }
+    val rzs = (0 until D).map(j => s"ctx_$j + ${linSql(res, j)(k => s"ctx_$k")} AS rz_$j")
     sb ++= s",\nrz AS (SELECT *, ${rzs.mkString(", ")} FROM pc)"
-    sb ++= s",\nrm AS (SELECT *, (${(0 until D).map(j => s"rz_$j")
-      .mkString(" + ")}) / 4.0 AS rmu FROM rz)"
-    sb ++= s",\nrv AS (SELECT *, (${(0 until D)
-      .map(j => s"(rz_$j - rmu) * (rz_$j - rmu)").mkString(" + ")}) / 4.0 AS rvr FROM rm)"
-    val rns = (0 until D).map(j =>
-      s"((rz_$j - rmu) / sqrt(rvr + $Eps)) * ${gmLit(gmres(j))} + ${kLit(btres(j))} AS rn_$j")
-    sb ++= s",\nrn AS (SELECT *, ${rns.mkString(", ")} FROM rv)"
+    sb ++= layerNormSql(resLn, Seq(0), (_, j) => s"rz_$j", _ => "rmu",
+      _ => "rvr", (_, j) => s"rn_$j", Seq("rm", "rv", "rn"), "rz")
 
     // head: Linear(4->8) -> LayerNorm(8) -> GELU -> Linear(8->P)
-    val q1 = (0 until 2 * D).map { m =>
-      val terms = new StringBuilder(kLit(b1o(m)))
-      for (k <- 0 until D) terms ++= s" + ${kLit(w1o(m * D + k))} * rn_$k"
-      s"($terms) AS q1_$m"
-    }
-    sb ++= s",\nhq1 AS (SELECT *, ${q1.mkString(", ")} FROM rn)"
-    sb ++= s",\nhmu8 AS (SELECT *, (${(0 until 2 * D).map(m => s"q1_$m")
-      .mkString(" + ")}) / 8.0 AS mu8 FROM hq1)"
-    sb ++= s",\nhvr8 AS (SELECT *, (${(0 until 2 * D)
-      .map(m => s"(q1_$m - mu8) * (q1_$m - mu8)").mkString(" + ")}) / 8.0 AS vr8 FROM hmu8)"
-    val l8 = (0 until 2 * D).map(m =>
-      s"((q1_$m - mu8) / sqrt(vr8 + $Eps)) * ${gmLit(gmo(m))} + ${kLit(bto(m))} AS l8_$m")
-    sb ++= s",\nhl8 AS (SELECT *, ${l8.mkString(", ")} FROM hvr8)"
-    val g8 = (0 until 2 * D).map(m => s"${geluSql(s"l8_$m")} AS g8_$m")
-    sb ++= s",\nhg8 AS (SELECT *, ${g8.mkString(", ")} FROM hl8)"
-    val ys = (0 until P).map { p =>
-      val terms = new StringBuilder(kLit(b2o(p)))
-      for (k <- 0 until 2 * D) terms ++= s" + ${kLit(w2o(p * 2 * D + k))} * g8_$k"
-      s"($terms) AS y_$p"
-    }
-    sb ++= s",\nhy AS (SELECT event_type, last_ts, ${ys.mkString(", ")} FROM hg8)"
+    sb ++= headSql(out, Head2D, Seq(""), (_, k) => s"rn_$k", "rn")
     sb ++= horizonSelectSql(P)
     sb.toString
   }

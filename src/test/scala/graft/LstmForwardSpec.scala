@@ -1,6 +1,7 @@
 package graft
 
-import graft.serve.LstmForward
+import graft.serve.{AttentionLstmForward, CnnLstmAttentionForward,
+  CnnLstmForward, LstmForward, OptimizedLstmForward}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the reimplemented LSTM forward pass (U1) against values computed
@@ -13,24 +14,30 @@ class LstmForwardSpec extends AnyFunSuite {
 
   private val Tol = 1e-9
 
-  private def check(window: Seq[Double], expected: Seq[Double]): Unit = {
-    val got = LstmForward.forward(window)
-    assert(got.length == LstmForward.P)
+  private def check(forward: Seq[Double] => Seq[Double], p: Int,
+      window: Seq[Double], expected: Seq[Double]): Unit = {
+    val got = forward(window)
+    assert(got.length == p)
     got.zip(expected).zipWithIndex.foreach { case ((g, e), i) =>
       assert(math.abs(g - e) <= Tol, s"horizon ${i + 1}: got $g want $e")
     }
   }
 
   test("pinned outputs match the offline reference implementation") {
-    check(Seq(1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0),
+    check(LstmForward.forward, LstmForward.P,
+      Seq(1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0),
       Seq(-1.1965434991233093, -0.5221256821430448, 0.4404934261725578))
-    check(Seq(8.0, 7.0, 6.0, 5.0, 4.0, 3.0, 2.0, 1.0),
+    check(LstmForward.forward, LstmForward.P,
+      Seq(8.0, 7.0, 6.0, 5.0, 4.0, 3.0, 2.0, 1.0),
       Seq(-1.0858442052868695, -0.47283941522779643, 0.35737067936472844))
-    check(Seq(100.0, 101.5, 99.25, 102.75, 98.5, 103.0, 97.0, 104.5),
+    check(LstmForward.forward, LstmForward.P,
+      Seq(100.0, 101.5, 99.25, 102.75, 98.5, 103.0, 97.0, 104.5),
       Seq(-1.1575549645633216, -0.5215477461480299, 0.36455058289461684))
-    check(Seq(5.0, 5.0, 5.0, 5.0, 5.0, 5.0, 5.0, 5.0),
+    check(LstmForward.forward, LstmForward.P,
+      Seq(5.0, 5.0, 5.0, 5.0, 5.0, 5.0, 5.0, 5.0),
       Seq(-1.1426411973585093, -0.49422731088135896, 0.40072449415938777))
-    check(Seq(1.0, 8.0, 2.0, 7.0, 3.0, 6.0, 4.0, 5.0),
+    check(LstmForward.forward, LstmForward.P,
+      Seq(1.0, 8.0, 2.0, 7.0, 3.0, 6.0, 4.0, 5.0),
       Seq(-1.1648536172636215, -0.5046073118227354, 0.4169965248162983))
   }
 
@@ -57,24 +64,21 @@ class LstmForwardSpec extends AnyFunSuite {
     }
   }
 
-  private def checkCnn(window: Seq[Double], expected: Seq[Double]): Unit = {
-    val got = graft.serve.CnnLstmForward.forward(window)
-    assert(got.length == graft.serve.CnnLstmForward.P)
-    got.zip(expected).zipWithIndex.foreach { case ((g, e), i) =>
-      assert(math.abs(g - e) <= Tol, s"horizon ${i + 1}: got $g want $e")
-    }
-  }
-
   test("CNN-LSTM pinned outputs match the offline reference implementation") {
-    checkCnn(Seq(1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0),
+    check(CnnLstmForward.forward, CnnLstmForward.P,
+      Seq(1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0),
       Seq(0.2826277009949086, -0.09774357809551837, 0.31556666516802834))
-    checkCnn(Seq(8.0, 7.0, 6.0, 5.0, 4.0, 3.0, 2.0, 1.0),
+    check(CnnLstmForward.forward, CnnLstmForward.P,
+      Seq(8.0, 7.0, 6.0, 5.0, 4.0, 3.0, 2.0, 1.0),
       Seq(0.29189364654256933, -0.11396426983561231, 0.363404959742603))
-    checkCnn(Seq(100.0, 101.5, 99.25, 102.75, 98.5, 103.0, 97.0, 104.5),
+    check(CnnLstmForward.forward, CnnLstmForward.P,
+      Seq(100.0, 101.5, 99.25, 102.75, 98.5, 103.0, 97.0, 104.5),
       Seq(0.2948994370223147, -0.09388723872777428, 0.34298500675635696))
-    checkCnn(Seq(5.0, 5.0, 5.0, 5.0, 5.0, 5.0, 5.0, 5.0),
+    check(CnnLstmForward.forward, CnnLstmForward.P,
+      Seq(5.0, 5.0, 5.0, 5.0, 5.0, 5.0, 5.0, 5.0),
       Seq(0.29262452484015117, -0.1317186280091034, 0.3911592680448218))
-    checkCnn(Seq(1.0, 8.0, 2.0, 7.0, 3.0, 6.0, 4.0, 5.0),
+    check(CnnLstmForward.forward, CnnLstmForward.P,
+      Seq(1.0, 8.0, 2.0, 7.0, 3.0, 6.0, 4.0, 5.0),
       Seq(0.2911982314805034, -0.09372559099436174, 0.3325539736830362))
   }
 
@@ -84,69 +88,60 @@ class LstmForwardSpec extends AnyFunSuite {
     assert(LstmForward.forward(w) != graft.serve.CnnLstmForward.forward(w))
   }
 
-  private def checkAttn(window: Seq[Double], expected: Seq[Double]): Unit = {
-    val got = graft.serve.AttentionLstmForward.forward(window)
-    assert(got.length == graft.serve.AttentionLstmForward.P)
-    got.zip(expected).zipWithIndex.foreach { case ((g, e), i) =>
-      assert(math.abs(g - e) <= Tol, s"horizon ${i + 1}: got $g want $e")
-    }
-  }
-
   test("LSTM-attention pinned outputs match the offline reference " +
     "implementation") {
-    checkAttn(Seq(1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0),
+    check(AttentionLstmForward.forward, AttentionLstmForward.P,
+      Seq(1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0),
       Seq(-0.6074669950185156, -0.6811050170579659, -0.6620661142846668))
-    checkAttn(Seq(8.0, 7.0, 6.0, 5.0, 4.0, 3.0, 2.0, 1.0),
+    check(AttentionLstmForward.forward, AttentionLstmForward.P,
+      Seq(8.0, 7.0, 6.0, 5.0, 4.0, 3.0, 2.0, 1.0),
       Seq(-0.6073418312723824, -0.6809305571661745, -0.6615487429991339))
-    checkAttn(Seq(100.0, 101.5, 99.25, 102.75, 98.5, 103.0, 97.0, 104.5),
+    check(AttentionLstmForward.forward, AttentionLstmForward.P,
+      Seq(100.0, 101.5, 99.25, 102.75, 98.5, 103.0, 97.0, 104.5),
       Seq(-0.6075161961312393, -0.6811577405216749, -0.6621305718061159))
-    checkAttn(Seq(5.0, 5.0, 5.0, 5.0, 5.0, 5.0, 5.0, 5.0),
+    check(AttentionLstmForward.forward, AttentionLstmForward.P,
+      Seq(5.0, 5.0, 5.0, 5.0, 5.0, 5.0, 5.0, 5.0),
       Seq(-0.6073124864656682, -0.6809099633667732, -0.6616769594746866))
-    checkAttn(Seq(1.0, 8.0, 2.0, 7.0, 3.0, 6.0, 4.0, 5.0),
+    check(AttentionLstmForward.forward, AttentionLstmForward.P,
+      Seq(1.0, 8.0, 2.0, 7.0, 3.0, 6.0, 4.0, 5.0),
       Seq(-0.6073922216692135, -0.6809694907013158, -0.661603543859365))
-  }
-
-  private def checkCnnAttn(window: Seq[Double], expected: Seq[Double]): Unit = {
-    val got = graft.serve.CnnLstmAttentionForward.forward(window)
-    assert(got.length == graft.serve.CnnLstmAttentionForward.P)
-    got.zip(expected).zipWithIndex.foreach { case ((g, e), i) =>
-      assert(math.abs(g - e) <= Tol, s"horizon ${i + 1}: got $g want $e")
-    }
   }
 
   test("CNN-LSTM-attention pinned outputs match the offline reference " +
     "implementation") {
-    checkCnnAttn(Seq(1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0),
+    check(CnnLstmAttentionForward.forward, CnnLstmAttentionForward.P,
+      Seq(1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0),
       Seq(0.6306143422235251, 0.22945495076000746, -0.10848473665042613))
-    checkCnnAttn(Seq(8.0, 7.0, 6.0, 5.0, 4.0, 3.0, 2.0, 1.0),
+    check(CnnLstmAttentionForward.forward, CnnLstmAttentionForward.P,
+      Seq(8.0, 7.0, 6.0, 5.0, 4.0, 3.0, 2.0, 1.0),
       Seq(0.6264832926429771, 0.2225743717045875, -0.10360863663848381))
-    checkCnnAttn(Seq(100.0, 101.5, 99.25, 102.75, 98.5, 103.0, 97.0, 104.5),
+    check(CnnLstmAttentionForward.forward, CnnLstmAttentionForward.P,
+      Seq(100.0, 101.5, 99.25, 102.75, 98.5, 103.0, 97.0, 104.5),
       Seq(0.6231295531588039, 0.2106622353199845, -0.08960289455177273))
-    checkCnnAttn(Seq(5.0, 5.0, 5.0, 5.0, 5.0, 5.0, 5.0, 5.0),
+    check(CnnLstmAttentionForward.forward, CnnLstmAttentionForward.P,
+      Seq(5.0, 5.0, 5.0, 5.0, 5.0, 5.0, 5.0, 5.0),
       Seq(0.6459074576413117, 0.2755780708736641, -0.1547906338311517))
-    checkCnnAttn(Seq(1.0, 8.0, 2.0, 7.0, 3.0, 6.0, 4.0, 5.0),
+    check(CnnLstmAttentionForward.forward, CnnLstmAttentionForward.P,
+      Seq(1.0, 8.0, 2.0, 7.0, 3.0, 6.0, 4.0, 5.0),
       Seq(0.6204468106434212, 0.2042881152415029, -0.08320125987658718))
-  }
-
-  private def checkOpt(window: Seq[Double], expected: Seq[Double]): Unit = {
-    val got = graft.serve.OptimizedLstmForward.forward(window)
-    assert(got.length == graft.serve.OptimizedLstmForward.P)
-    got.zip(expected).zipWithIndex.foreach { case ((g, e), i) =>
-      assert(math.abs(g - e) <= Tol, s"horizon ${i + 1}: got $g want $e")
-    }
   }
 
   test("optimize-variant pinned outputs match the offline reference " +
     "implementation") {
-    checkOpt(Seq(1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0),
+    check(OptimizedLstmForward.forward, OptimizedLstmForward.P,
+      Seq(1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0),
       Seq(-0.6375929192473649, 0.16779299001858367, 0.0064880367190071064))
-    checkOpt(Seq(8.0, 7.0, 6.0, 5.0, 4.0, 3.0, 2.0, 1.0),
+    check(OptimizedLstmForward.forward, OptimizedLstmForward.P,
+      Seq(8.0, 7.0, 6.0, 5.0, 4.0, 3.0, 2.0, 1.0),
       Seq(-0.5904837093329887, 0.2082617708026827, -0.0103376844984443))
-    checkOpt(Seq(100.0, 101.5, 99.25, 102.75, 98.5, 103.0, 97.0, 104.5),
+    check(OptimizedLstmForward.forward, OptimizedLstmForward.P,
+      Seq(100.0, 101.5, 99.25, 102.75, 98.5, 103.0, 97.0, 104.5),
       Seq(-0.5471454679240628, 0.2497028121120799, -0.022394702492990748))
-    checkOpt(Seq(5.0, 5.0, 5.0, 5.0, 5.0, 5.0, 5.0, 5.0),
+    check(OptimizedLstmForward.forward, OptimizedLstmForward.P,
+      Seq(5.0, 5.0, 5.0, 5.0, 5.0, 5.0, 5.0, 5.0),
       Seq(-0.5385851767483698, 0.2510354668483253, -0.02121739331449296))
-    checkOpt(Seq(1.0, 8.0, 2.0, 7.0, 3.0, 6.0, 4.0, 5.0),
+    check(OptimizedLstmForward.forward, OptimizedLstmForward.P,
+      Seq(1.0, 8.0, 2.0, 7.0, 3.0, 6.0, 4.0, 5.0),
       Seq(-0.5174934666606477, 0.28391870522711893, -0.02670156195030876))
   }
 
