@@ -13,10 +13,9 @@ import LstmMath._
   *           softmax over steps, context = Σ αₜ·hₜ
   *   head  : Linear(H→H) → LayerNorm(H) → GELU → Linear(H→P)
   *
-  * Everything is [[LstmMath]] blocks; the two pieces of its own are the
-  * pairwise max pool (order-free exact — `GREATEST` both sides) and the
-  * additive attention scores, pooled by the shared max-subtraction
-  * softmax.
+  * The rest is [[LstmMath]] blocks; its own two pieces are the pairwise
+  * max pool (order-free exact — `GREATEST` both sides) and the additive
+  * attention scores, which the shared max-subtraction softmax pools.
   *
   * Fixture dims: F=2, C=4, H=4, A=4 (attn_dim), S=8 → 4 pooled steps,
   * P=3; Lehmer stream seed 77777.

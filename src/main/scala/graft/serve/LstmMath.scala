@@ -48,8 +48,8 @@ private[serve] object LstmMath {
 
   /** Dense layer, row-major `w` [dout][din] plus bias `b`. */
   final case class Lin(w: Array[Int], b: Array[Int]) {
-    def dout: Int = b.length
-    def din: Int = w.length / b.length
+    val dout: Int = b.length
+    val din: Int = w.length / dout
   }
   /** LayerNorm params: gamma = (1024+k)/1024, beta = k/1024. */
   final case class Ln(gm: Array[Int], bt: Array[Int])

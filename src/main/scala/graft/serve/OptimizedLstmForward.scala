@@ -115,8 +115,7 @@ object OptimizedLstmForward extends ForwardModel {
       Array.tabulate(D)(j => ag(t)(j) + sk(t)(j)))
 
     // attention-weighted pooling: softmax over t of the per-step mean
-    val means = Array.tabulate(S)(t =>
-      (at(t)(0) + at(t)(1) + at(t)(2) + at(t)(3)) / 4.0)
+    val means = at.map(_.reduceLeft(_ + _) / D)
     val ctx = softmaxPool(means, D)(at(_)(_))
     // residual + residual_norm
     val rz = linear(ctx, res)
@@ -188,7 +187,7 @@ object OptimizedLstmForward extends ForwardModel {
 
     // attention-weighted pooling
     val mns = (1 to S).map(t => s"(${(0 until D).map(j => s"at_${t}_$j")
-      .mkString(" + ")}) / 4.0 AS mn_$t")
+      .mkString(" + ")}) / ${D.toDouble} AS mn_$t")
     sb ++= s",\npm AS (SELECT *, ${mns.mkString(", ")} FROM att)"
     sb ++= softmaxPoolSql(Seq(SoftmaxSql(1 to S, t => s"mn_$t", "mmax",
       t => s"pe_$t", "pden", (t, j) => s"at_${t}_$j", (0 until D).map(j => s"ctx_$j"))),
